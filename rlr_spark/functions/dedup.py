@@ -64,7 +64,6 @@ def minhash_dup_pairs(
     salt_k: int = 16,
     max_block_size: int | None = 10_000,
     length_filter: bool = True,
-    collapse_duplicate_blocks: bool = False,
     verify_barrier: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs from LSH banding, verified by true token
@@ -79,14 +78,17 @@ def minhash_dup_pairs(
     NOT recall token-set-similar pairs (measurably: a corpus with 30k
     token-jac≥0.8 pairs had only 35 3-shingle near-dups) — if you raise
     ``shingle_k``, lower ``jaccard_threshold``'s meaning accordingly or
-    verify with a sequence-aware metric downstream."""
-    # emit_prefixes + emit_once_col: a pair colliding in many of the
-    # ``bands`` bands (the norm for true near-dups — expected shared
-    # bands ~ b*j^r) is generated from its FIRST colliding band only,
-    # which removes the O(bands)-fold duplicate pair emission and the
-    # pair-dedup shuffle entirely (pair_dedup=False: one salt per pair
-    # + first-band-only => unique by construction). Measured at sf0.1:
-    # the join's shuffle went 108M rows/849MB -> ~12M rows, wall -39%.
+    verify with a sequence-aware metric downstream.
+
+    Pairs are emitted from their FIRST colliding band only (band keys
+    carry ``emit_prefixes`` witnesses, consumed by ``block_pairs``'s
+    ``emit_once_col``), so no pair-dedup shuffle runs. Whether that pays
+    depends on duplication density: each keyed row carries ~bands/2
+    extra longs, and a pair colliding in m of the bands saves m-1
+    duplicate emissions. True near-dups collide in ~b*j^r bands, so on
+    a near-dup-heavy corpus it pays many times over (measured at sf0.1:
+    the join's shuffle went 108M rows/849MB -> ~12M rows, wall -39%);
+    on a corpus with almost no duplicates it is pure overhead."""
     keys = lsh_band_keys(
         df, id_col, text_col, shingle_k=shingle_k, bands=bands,
         rows_per_band=rows_per_band, emit_prefixes=True,
@@ -94,12 +96,12 @@ def minhash_dup_pairs(
     # Length filter INSIDE the join stage (the carry_cols/pair_filter
     # machinery): jaccard >= t forces |smaller| >= t * |larger| over the
     # distinct-token counts, so violating candidates are pruned BEFORE
-    # the pair-dedup shuffle — provably recall-free. This is the load-
+    # they leave the join stage — provably recall-free. This is the load-
     # bearing guard on template-heavy corpora: the permissive r=2
     # banding (chosen for recall ~1.0 at the stated threshold) makes a
     # T-doc boilerplate cluster emit ~T^2/2 candidates per band
     # (measured: 5k docs -> 169M raw candidates, 12.4M distinct, 30k
-    # true pairs; the filter cuts the dedup shuffle by the ratio of
+    # true pairs; the filter cuts the join output by the ratio of
     # size-compatible candidates).
     if length_filter:
         sized = df.select(
@@ -121,9 +123,7 @@ def minhash_dup_pairs(
         pass_name="minhash",
         carry_cols=carry,
         pair_filter=pfilter,
-        collapse_duplicate_blocks=collapse_duplicate_blocks,
-        emit_once_col=None if collapse_duplicate_blocks else "_pfx",
-        pair_dedup=collapse_duplicate_blocks,
+        emit_once_col="_pfx",
     )
     return _verify_token_jaccard(
         pairs, df, id_col, text_col, jaccard_threshold, barrier=verify_barrier

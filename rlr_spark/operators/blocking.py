@@ -397,7 +397,7 @@ def lsh_band_keys(
 
 
 # ---------------------------------------------------------------------------
-# Pair generation: salted self-join within blocking keys
+# Pair generation: one salted join within blocking keys
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -410,6 +410,108 @@ class BlockStats:
     n_dropped_rows: int
 
 
+# the emit-once witness repair inlines the dropped keys as an array
+# literal; past this many the self-join falls back to emit + dedup
+_MAX_REPAIR_KEYS = 4096
+
+
+def _cap_blocks(
+    sizes: DataFrame, max_block_size: int | None, pass_name: str, block_rows: Column
+) -> tuple[DataFrame, BlockStats]:
+    """Drop the blocks with more than ``max_block_size`` rows on either
+    side and log them. ``sizes``: (key, _ln, _rn) per block;
+    ``block_rows`` is the block's row count as :class:`BlockStats`
+    reports it (``_ln`` for a self-join, ``_ln + _rn`` for L x R)."""
+    if max_block_size is None:
+        return sizes, BlockStats(pass_name, -1, 0, 0)
+    over = F.greatest("_ln", "_rn") > max_block_size
+    agg = sizes.agg(
+        F.count("*").alias("nb"),
+        F.sum(F.when(over, 1).otherwise(0)).alias("nd"),
+        F.sum(F.when(over, block_rows).otherwise(0)).alias("nr"),
+    ).collect()[0]
+    stats = BlockStats(pass_name, int(agg.nb), int(agg.nd or 0), int(agg.nr or 0))
+    return sizes.where(~over), stats
+
+
+def _salted_join(
+    left: DataFrame,
+    right: DataFrame,
+    kept: DataFrame,
+    key_col: str,
+    l_id: str,
+    r_id: str,
+    l_cols: list[Column],
+    r_cols: list[Column],
+    salt_k: int,
+    salt_threshold: int,
+    cond: Column | None = None,
+    build_hint: str | None = None,
+) -> DataFrame:
+    """Join ``left`` x ``right`` within each key of ``kept`` (key, _ln,
+    _rn), salted so a hot key's quadratic work spreads over reducers.
+
+    Returns (key_col, _salt, *l_cols, *r_cols) filtered by ``cond``;
+    ``l_id``/``r_id`` name each side's id column (the salt hash).
+
+    Salt count PROPORTIONAL to block size: a block of T rows does
+    ~T*T/k probe emissions per salt, so a fixed k leaves per-reducer
+    work quadratic in the hottest block — measured as a 2.8x
+    p90/median task-time skew on the minhash pair join, exactly the
+    output-explosion skew AQE cannot see (its skew stats are shuffle
+    INPUT bytes, guide §2.5). ``ceil(T / salt_threshold)`` bounds
+    per-salt probe work at ~salt_threshold * T emissions, and
+    ``salt_k`` caps the replication; the long tail of small blocks
+    joins on salt 0 alone. T is the LARGER side's count: linkage blocks
+    are routinely lopsided (few customers per nation, many suppliers),
+    and that larger side is the one hash-salted — salting partitions
+    the salted side's rows across reducers, so salting the small side
+    of a 3 x 1M block would use <= 3 of the k salts — while the other
+    side replicates across the salt grid. The logical pair set is
+    invariant in the salts (tested).
+    """
+    kept = kept.select(
+        key_col,
+        F.least(
+            F.ceil(F.greatest("_ln", "_rn") / F.lit(salt_threshold)),
+            F.lit(max(salt_k, 1)),
+        ).cast("int").alias("_k"),
+        (F.col("_ln") >= F.col("_rn")).alias("_salt_l"),
+    )
+    grid = F.sequence(F.lit(0).cast("long"), (F.col("_k") - 1).cast("long"))
+
+    def salted(side: DataFrame, id_c: str, cols: list[Column], hashed: Column) -> DataFrame:
+        # one row (its hash salt) on the salted side; the full salt grid
+        # on the replicated side — a conditional ARRAY under a single
+        # explode, because generators can't nest inside CASE WHEN
+        own = F.array(F.pmod(F.xxhash64(F.col(id_c)), F.col("_k").cast("long")))
+        return side.join(kept, key_col).select(
+            key_col, *cols, F.explode(F.when(hashed, own).otherwise(grid)).alias("_salt")
+        )
+
+    # EXPLICIT repartition on the join keys: this join's input is a few
+    # MB of (key, salt) rows but its output is quadratic per block, and
+    # AQE (which sizes post-shuffle partitions from INPUT bytes, 1 MB
+    # minimum each) coalesced the join stage to 1-6 tasks — 62 s of
+    # join CPU serialized at 32 cores. A user-numbered repartition is
+    # not AQE-coalescible and satisfies the join's distribution
+    # requirement on both sides, so the stage runs at the session's
+    # parallelism. Scale-adaptive: defaultParallelism is the cluster's
+    # core budget, and at production input sizes the exchange would get
+    # that many partitions from AQE anyway.
+    join_par = left.sparkSession.sparkContext.defaultParallelism
+    l_salted = salted(left, l_id, l_cols, F.col("_salt_l")).repartition(
+        join_par, key_col, "_salt"
+    )
+    r_salted = salted(right, r_id, r_cols, ~F.col("_salt_l")).repartition(
+        join_par, key_col, "_salt"
+    )
+    if build_hint is not None:
+        l_salted = l_salted.hint(build_hint)
+    pairs = l_salted.join(r_salted, [key_col, "_salt"])
+    return pairs if cond is None else pairs.where(cond)
+
+
 def block_pairs(
     keyed: DataFrame,
     id_col: str,
@@ -420,10 +522,7 @@ def block_pairs(
     pass_name: str = "block",
     carry_cols: tuple[str, ...] = (),
     pair_filter: Column | None = None,
-    collapse_duplicate_blocks: bool = False,
-    collapse_min_size: int = 32,
     emit_once_col: str | None = None,
-    pair_dedup: bool = True,
 ) -> tuple[DataFrame, BlockStats]:
     """Canonical candidate pairs (l_id < r_id) within each blocking key.
 
@@ -437,40 +536,28 @@ def block_pairs(
     equality is a ~2^-64 accident per element pair (same budget the
     module already assigns to band-key collisions; here it could DROP
     one pair with probability ~bands^2/2^65 — negligible against the
-    LSH recall bound itself). With suppression on, a single-pass caller
-    may set ``pair_dedup=False``: each pair is emitted exactly once by
-    construction (one salt per pair; first colliding key only), so the
-    pair-dedup shuffle — O(bands) times the distinct pair count on
-    near-dup-heavy corpora — disappears entirely.
+    LSH recall bound itself). With suppression on, each pair is emitted
+    exactly once by construction (one salt per pair; first colliding
+    key only), so the pair-dedup shuffle — O(bands) times the distinct
+    pair count on near-dup-heavy corpora — is skipped entirely.
 
     Dropped-block interaction: when ``max_block_size`` drops a hot key,
     a later kept key must still emit the pair, so the dropped keys are
-    removed from every witness array first (they are collected for the
-    stats job anyway); if an absurd number of blocks were dropped the
-    repair would not fit a literal array, so suppression falls back to
-    the plain emit-everywhere + dedup path — same pair set either way.
+    removed from every witness array first. Past ``_MAX_REPAIR_KEYS``
+    dropped blocks (known from the stats, before anything is collected)
+    the repair would not fit a literal array, so suppression falls back
+    to the plain emit-everywhere + dedup path — same pair set either way.
 
-    Salting is *adaptive*: replicating the probe side ``salt_k``-fold is
-    pure shuffle overhead for the long tail of tiny blocks, so only
-    blocks larger than ``salt_threshold`` rows get the full salt grid —
-    the rest join on salt 0. The logical pair set is identical either
-    way (invariance tested); only the hot keys pay for, and benefit
-    from, the spread.
-
-    ``carry_cols`` travel with each side into the join (exposed as
-    ``l_<col>`` / ``r_<col>``) and ``pair_filter`` — a boolean Column
-    over those — prunes candidates INSIDE the join stage, before the
-    pair-dedup shuffle. This is how similarity joins apply their
-    length/positional filters (e.g. PPJoin's ``|x| >= t*|y|``) without
-    materializing the pruned pairs at all.
+    Salting and the join itself are :func:`_salted_join`'s; both sides
+    here are ``keyed``, so a block's two side counts are both its row
+    count. ``carry_cols`` travel with each side into the join
+    (exposed as ``l_<col>`` / ``r_<col>``) and ``pair_filter`` — a
+    boolean Column over those — prunes candidates INSIDE the join stage,
+    before the pair-dedup shuffle. This is how similarity joins apply
+    their length/positional filters (e.g. PPJoin's ``|x| >= t*|y|``)
+    without materializing the pruned pairs at all.
     """
     suppress = emit_once_col is not None
-    if suppress and collapse_duplicate_blocks:
-        raise ValueError(
-            "emit_once_col and collapse_duplicate_blocks are mutually "
-            "exclusive: collapsing removes the block a pair's first "
-            "collision may live in"
-        )
     wit_cols = (emit_once_col,) if suppress else ()
     keyed = keyed.select(id_col, key_col, *carry_cols, *wit_cols).where(
         F.col(key_col).isNotNull()
@@ -483,173 +570,60 @@ def block_pairs(
     # by the ContextCleaner when the returned plan is dropped, so
     # repeated standalone calls don't leak cached relations.
     keyed = keyed.localCheckpoint(eager=False)
-
-    # sizes feeds the stats collect, the kept-keys join, and (opt-in)
-    # the duplicate-block fingerprints — one groupBy shuffle for all
-    # (lazy-checkpointed so it happens once). The fingerprint is an
-    # order-insensitive 128-bit member-set id: two independent bit_xor
-    # lanes over per-member hashes, plus the exact count. The lanes are
-    # computed ONLY when collapse_duplicate_blocks consumes them: they
-    # cost 3 xxhash64 per keyed row plus 24 bytes per distinct key in
-    # this exchange — measured ~60% of the sizes-shuffle bytes — and the
-    # collapse is off by default (see the opt-in note below).
-    fp_aggs = []
-    if collapse_duplicate_blocks:
-        fp_aggs = [
-            F.bit_xor(F.xxhash64(F.col(id_col))).alias("_f1"),
-            F.bit_xor(F.xxhash64(F.col(id_col), F.lit(1))).alias("_f2"),
-            # xor cancels on duplicated (id, key) rows — a multiset
-            # {a,a,b} would xor to {b}'s lanes. The third lane is a SUM
-            # of 32-bit hash values (duplication-sensitive,
-            # overflow-free: 10^4 rows x 2^32 << 2^63), so
-            # duplicate-bearing blocks can't alias duplicate-free ones.
-            F.sum(
-                F.xxhash64(F.col(id_col), F.lit(2)).bitwiseAND(F.lit(0xFFFFFFFF))
-            ).alias("_f3"),
-        ]
-    sizes = keyed.groupBy(key_col).agg(
-        F.count("*").alias("_blk_n"), *fp_aggs
-    ).localCheckpoint(eager=False)
-    if max_block_size is not None:
-        kept_keys = sizes.where(F.col("_blk_n") <= max_block_size)
-        agg = sizes.agg(
-            F.count("*").alias("nb"),
-            F.sum(F.when(F.col("_blk_n") > max_block_size, 1).otherwise(0)).alias("nd"),
-            F.sum(F.when(F.col("_blk_n") > max_block_size, F.col("_blk_n")).otherwise(0)).alias(
-                "nr"
-            ),
-        ).collect()[0]
-        stats = BlockStats(pass_name, int(agg.nb), int(agg.nd or 0), int(agg.nr or 0))
-        # single-row blocks generate no pairs; pruning them up front keeps the
-        # replicated probe side small (most blocks are singletons at web scale)
-        kept_keys = kept_keys.where(F.col("_blk_n") >= 2)
-    else:
-        kept_keys = sizes.where(F.col("_blk_n") >= 2)
-        stats = BlockStats(pass_name, -1, 0, 0)
-    if suppress and stats.n_dropped_blocks > 0:
+    # ONE groupBy shuffle feeds the stats collect and the kept-keys join
+    # (lazy-checkpointed so it happens once)
+    sizes = (
+        keyed.groupBy(key_col)
+        .agg(F.count("*").alias("_ln"))
+        .localCheckpoint(eager=False)
+        .withColumn("_rn", F.col("_ln"))
+    )
+    kept, stats = _cap_blocks(sizes, max_block_size, pass_name, F.col("_ln"))
+    # single-row blocks generate no pairs; pruning them up front keeps the
+    # replicated probe side small (most blocks are singletons at web scale)
+    kept = kept.where(F.col("_ln") >= 2)
+    if suppress and stats.n_dropped_blocks > _MAX_REPAIR_KEYS:
+        suppress, wit_cols = False, ()
+    elif suppress and stats.n_dropped_blocks > 0:
         dropped = [
             r[0]
-            for r in sizes.where(F.col("_blk_n") > max_block_size)
-            .select(key_col)
-            .collect()
+            for r in sizes.where(F.col("_ln") > max_block_size).select(key_col).collect()
         ]
-        if len(dropped) <= 4096:
-            keyed = keyed.withColumn(
-                emit_once_col,
-                F.array_except(
-                    F.col(emit_once_col), F.array(*[F.lit(k) for k in dropped])
-                ),
-            )
-        else:  # repair too big for a literal — fall back to emit + dedup
-            suppress, pair_dedup, wit_cols = False, True, ()
-    # COLLAPSE DUPLICATE BLOCKS: keys holding the identical member set
-    # generate the identical pair set, so only one representative needs
-    # to join. This is THE guard against template clusters under
-    # multi-band LSH — a T-doc boilerplate cluster colliding in all B
-    # bands otherwise pays B * T^2/2 joined rows for one pair set
-    # (measured: 5k docs / 32 bands -> 169M joined rows, 12.4M distinct
-    # pairs; collapse cuts the join output ~B-fold). A 128-bit
-    # fingerprint collision (~2^-128 per block pair) could merge two
-    # DIFFERENT blocks and silently drop pairs, hence two lanes — the
-    # same budget the uid128 mode allocates to id collisions.
-    if collapse_duplicate_blocks:
-        # OPT-IN (measured off-by-default): on corpora whose big blocks
-        # are NEAR-duplicate clusters (differing member sets), the
-        # rep-groupBy + semi-join pays ~8s at sf0.1 and collapses
-        # nothing; the gated split below (~collapse_min_size) measured
-        # even worse (61s — the union breaks the single kept-keys join
-        # into a shape AQE won't broadcast). The scenario collapse
-        # guards — a T-doc EXACT-duplicate template cluster colliding
-        # identically in all B bands — is better handled by the
-        # standard composition: run exact dedup (dedup_exact) first,
-        # then minhash the survivors. Enable this only when exact dups
-        # must stay in the corpus through the LSH pass.
-        big = kept_keys.where(F.col("_blk_n") >= collapse_min_size)
-        rep = big.groupBy("_f1", "_f2", "_f3", "_blk_n").agg(
-            F.min(key_col).alias(key_col)
+        keyed = keyed.withColumn(
+            emit_once_col,
+            F.array_except(F.col(emit_once_col), F.array(*[F.lit(k) for k in dropped])),
         )
-        collapsed_big = big.join(rep.select(key_col), key_col, "left_semi")
-        kept_keys = kept_keys.where(
-            F.col("_blk_n") < collapse_min_size
-        ).unionByName(collapsed_big)
 
-    # salt count PROPORTIONAL to block size (was: fixed salt_k for every
-    # block over the threshold): a block of T rows does ~T*T/k probe
-    # emissions per salt, so a fixed k leaves per-reducer work quadratic
-    # in the hottest block — measured as a 2.8x p90/median task-time
-    # skew on the minhash pair join, exactly the output-explosion skew
-    # AQE cannot see (its skew stats are shuffle INPUT bytes, guide
-    # §2.5). ceil(T / salt_threshold) bounds per-salt probe work at
-    # ~salt_threshold * T emissions; salt_k remains the replication
-    # cap (the probe side is duplicated _k times). Logical pair set is
-    # invariant in _k (tested).
-    keyed = keyed.join(
-        kept_keys.select(key_col, "_blk_n"), key_col, "inner"
-    ).withColumn(
-        "_k",
-        F.least(
-            F.ceil(F.col("_blk_n") / F.lit(salt_threshold)),
-            F.lit(max(salt_k, 1)),
-        ).cast("int"),
-    )
+    def side(p: str) -> list[Column]:
+        return [
+            F.col(id_col).alias(p + "id"),
+            *[F.col(c).alias(p + c) for c in (*carry_cols, *wit_cols)],
+        ]
 
-    # build side: one deterministic salt per row; probe side: replicated
-    # _k ways (_k = 1 for the long tail of small blocks)
-    left = keyed.select(
-        F.col(key_col),
-        F.col(id_col).alias("l_id"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.col("_k").cast("long")).alias("_salt"),
-        *[F.col(c).alias("l_" + c) for c in (*carry_cols, *wit_cols)],
-    )
-    right = keyed.select(
-        F.col(key_col),
-        F.col(id_col).alias("r_id"),
-        F.explode(
-            F.sequence(F.lit(0).cast("long"), (F.col("_k") - 1).cast("long"))
-        ).alias("_salt"),
-        *[F.col(c).alias("r_" + c) for c in (*carry_cols, *wit_cols)],
-    )
-    # SHUFFLE_HASH over sort-merge: the per-(key, salt) build side is
-    # bounded (max_block_size caps members; salting splits hot keys), so
-    # hashing one side beats sorting BOTH sides of a multi-million-row
-    # self-join — the sorts were pure CPU on an exchange this stage pays
-    # anyway, and at 4 executors they sat inside the measured
-    # bandwidth-bound window (BENCH/shuffle_probe.py attribution).
-    #
-    # EXPLICIT repartition on the join keys: this join's input is a few
-    # MB of (key, salt) rows but its output is quadratic per block, and
-    # AQE (which sizes post-shuffle partitions from INPUT bytes, 1 MB
-    # minimum each) coalesced the join stage to 1-6 tasks — 62 s of
-    # join CPU serialized at 32 cores. A user-numbered repartition is
-    # not AQE-coalescible and satisfies the join's distribution
-    # requirement on both sides, so the stage runs at the session's
-    # parallelism. Scale-adaptive: defaultParallelism is the cluster's
-    # core budget, and at production input sizes the exchange would get
-    # that many partitions from AQE anyway.
-    join_par = keyed.sparkSession.sparkContext.defaultParallelism
-    left = left.repartition(join_par, key_col, "_salt")
-    right = right.repartition(join_par, key_col, "_salt")
-    pairs = left.hint("shuffle_hash").join(right, [key_col, "_salt"]).where(
-        F.col("l_id") < F.col("r_id")
-    )
+    cond = F.col("l_id") < F.col("r_id")
     if pair_filter is not None:
-        pairs = pairs.where(pair_filter)
+        cond = cond & pair_filter
     if suppress:
         # first-collision-only emission: drop the joined row when the
         # two witness arrays share an earlier key (codegen'd
         # arrays_overlap — NOT a higher-order function, which would run
         # interpreted on every joined row). NULL witness (e.g. the
         # domain pass of a multi-pass union) means "no earlier keys".
-        pairs = pairs.where(
-            ~F.coalesce(
-                F.arrays_overlap(
-                    F.col("l_" + emit_once_col), F.col("r_" + emit_once_col)
-                ),
-                F.lit(False),
-            )
+        cond = cond & ~F.coalesce(
+            F.arrays_overlap(F.col("l_" + emit_once_col), F.col("r_" + emit_once_col)),
+            F.lit(False),
         )
-    pairs = pairs.select("l_id", "r_id")
-    if pair_dedup:
+    # SHUFFLE_HASH over sort-merge: the per-(key, salt) build side is
+    # bounded (max_block_size caps members; salting splits hot keys), so
+    # hashing one side beats sorting BOTH sides of a multi-million-row
+    # self-join — the sorts were pure CPU on an exchange this stage pays
+    # anyway, and at 4 executors they sat inside the measured
+    # bandwidth-bound window (BENCH/shuffle_probe.py attribution).
+    pairs = _salted_join(
+        keyed, keyed, kept, key_col, id_col, id_col, side("l_"), side("r_"),
+        salt_k, salt_threshold, cond, build_hint="shuffle_hash",
+    ).select("l_id", "r_id")
+    if not suppress:
         # a pair sharing several keys (e.g. colliding in many LSH bands
         # without emit_once_col, or across passes of a multi-pass
         # union) would otherwise appear once per key — canonicalize
@@ -672,7 +646,6 @@ def block_pairs_lr(
     carry_cols_l: tuple[str, ...] | None = None,
     carry_cols_r: tuple[str, ...] | None = None,
     pair_filter: Column | None = None,
-    collapse_duplicate_blocks: bool = False,
     prune_right_by_left: bool = False,
 ) -> tuple[DataFrame, BlockStats]:
     """TWO-DATASET candidate pairs within blocking keys: L x R per key.
@@ -697,15 +670,11 @@ def block_pairs_lr(
     contains the left): self-pairs are dropped and each unordered pair
     is emitted once as (min, max), still in a single dedup shuffle.
 
-    Skew handling mirrors the self-join, but is TWO-SIDED: a block is
-    salted when EITHER side exceeds ``salt_threshold`` (linkage blocks
-    are routinely lopsided — few customers per nation, many suppliers —
-    and an L-side-only test would leave an _ln×_rn hot block on one
-    reducer whenever only R is big). The LARGER side of the block is
-    hash-salted (so its rows actually spread over the ``salt_k``
-    reducers) and the smaller side replicates across the grid. Blocks
-    with more than ``max_block_size`` rows on either side are dropped
-    AND logged via the returned :class:`BlockStats`.
+    Skew handling is :func:`_salted_join`'s, TWO-SIDED here: a block is
+    salted when EITHER side exceeds ``salt_threshold``, and the larger
+    side is the hash-salted one. Blocks with more than
+    ``max_block_size`` rows on either side are dropped AND logged via
+    the returned :class:`BlockStats`.
 
     ``carry_cols`` / ``pair_filter`` work exactly as in
     :func:`block_pairs`: the named columns travel with each side into
@@ -738,118 +707,26 @@ def block_pairs_lr(
         # distinct-key relation when it fits.
         right = right.join(left.select(key_col).distinct(), key_col, "left_semi")
     right = right.localCheckpoint(eager=False)
-
-    def _side_sizes(side: DataFrame, id_c: str, p: str) -> DataFrame:
-        # member-set fingerprint lanes per side — see block_pairs: two
-        # xor lanes + a duplication-sensitive 32-bit sum lane. Gated on
-        # collapse_duplicate_blocks exactly like block_pairs: they cost
-        # 3 xxhash64 per keyed row + ~60% of the sizes-shuffle bytes and
-        # the collapse is off by default — the streaming incremental
-        # pair join paid them every micro-batch for nothing.
-        fp = (
-            [
-                F.bit_xor(F.xxhash64(F.col(id_c))).alias(f"_{p}f1"),
-                F.bit_xor(F.xxhash64(F.col(id_c), F.lit(1))).alias(f"_{p}f2"),
-                F.sum(
-                    F.xxhash64(F.col(id_c), F.lit(2)).bitwiseAND(F.lit(0xFFFFFFFF))
-                ).alias(f"_{p}f3"),
-            ]
-            if collapse_duplicate_blocks
-            else []
-        )
-        return side.groupBy(key_col).agg(
-            F.count("*").alias(f"_{p}n"), *fp
-        )
-
-    l_sizes = _side_sizes(left, id_col_l, "l")
-    r_sizes = _side_sizes(right, id_col_r, "r")
     # keys present on both sides; checkpointed because BOTH the stats
     # aggregation and the kept-keys consumer below otherwise re-run the
-    # full two-sided size aggregation (block_pairs checkpoints its
-    # sizes for the same reason — this path had been paying the double
-    # computation every streaming micro-batch)
-    sizes = l_sizes.join(r_sizes, key_col, "inner").localCheckpoint(eager=False)
-    if max_block_size is not None:
-        agg = sizes.agg(
-            F.count("*").alias("nb"),
-            F.sum(
-                F.when(
-                    (F.col("_ln") > max_block_size) | (F.col("_rn") > max_block_size), 1
-                ).otherwise(0)
-            ).alias("nd"),
-            F.sum(
-                F.when(
-                    (F.col("_ln") > max_block_size) | (F.col("_rn") > max_block_size),
-                    F.col("_ln") + F.col("_rn"),
-                ).otherwise(0)
-            ).alias("nr"),
-        ).collect()[0]
-        stats = BlockStats(pass_name, int(agg.nb), int(agg.nd or 0), int(agg.nr or 0))
-        kept = sizes.where(
-            (F.col("_ln") <= max_block_size) & (F.col("_rn") <= max_block_size)
-        )
-    else:
-        stats = BlockStats(pass_name, -1, 0, 0)
-        kept = sizes
-
-    # collapse duplicate blocks (see block_pairs — same OPT-IN
-    # rationale: pays a rep-groupBy + semi-join over all kept keys and
-    # only ever collapses EXACT-duplicate member sets, which the
-    # standard exact-dedup pre-pass removes upstream)
-    if collapse_duplicate_blocks:
-        rep = kept.groupBy(
-            "_lf1", "_lf2", "_lf3", "_ln", "_rf1", "_rf2", "_rf3", "_rn"
-        ).agg(F.min(key_col).alias(key_col))
-        kept = kept.join(rep.select(key_col), key_col, "left_semi")
-    # consumed by both salted sides below — materialize the (small)
-    # kept-keys relation once instead of re-running the size groupBys
+    # full two-sided size aggregation
+    sizes = (
+        left.groupBy(key_col).agg(F.count("*").alias("_ln"))
+        .join(right.groupBy(key_col).agg(F.count("*").alias("_rn")), key_col, "inner")
+        .localCheckpoint(eager=False)
+    )
+    kept, stats = _cap_blocks(
+        sizes, max_block_size, pass_name, F.col("_ln") + F.col("_rn")
+    )
+    # consumed by both salted sides — materialize the (small) kept-keys
+    # relation once instead of re-running the size groupBys
     kept = kept.localCheckpoint(eager=False)
-    kept = kept.withColumn(
-        # salt count proportional to the bigger side (salt_k caps the
-        # replication) — same per-salt work bound as block_pairs
-        "_k",
-        F.least(
-            F.ceil(F.greatest(F.col("_ln"), F.col("_rn")) / F.lit(salt_threshold)),
-            F.lit(max(salt_k, 1)),
-        ).cast("int"),
-    ).withColumn(
-        # hash-salt the LARGER side: salting partitions the salted side's
-        # rows across reducers, so salting the small side of a lopsided
-        # block (3 customers x 1M suppliers) would use <=3 of the k salts
-        "_salt_l", F.col("_ln") >= F.col("_rn"),
-    ).select(key_col, "_k", "_salt_l")
-
-    def _hashed(id_c: str) -> Column:
-        return F.pmod(F.xxhash64(F.col(id_c)), F.col("_k").cast("long"))
-
-    _grid = F.sequence(F.lit(0).cast("long"), (F.col("_k") - 1).cast("long"))
-    # one row (its hash salt) on the salted side; the full salt grid on
-    # the replicated side — a conditional ARRAY under a single explode,
-    # because generators can't nest inside CASE WHEN
-    l_salted = left.join(kept, key_col).select(
-        key_col,
-        F.col(id_col_l),
-        F.explode(
-            F.when(F.col("_salt_l"), F.array(_hashed(id_col_l))).otherwise(_grid)
-        ).alias("_salt"),
-        *[F.col(c).alias("l_" + c) for c in ccl],
+    pairs = _salted_join(
+        left, right, kept, key_col, id_col_l, id_col_r,
+        [F.col(id_col_l), *[F.col(c).alias("l_" + c) for c in ccl]],
+        [F.col(id_col_r), *[F.col(c).alias("r_" + c) for c in ccr]],
+        salt_k, salt_threshold, pair_filter,
     )
-    r_salted = right.join(kept, key_col).select(
-        key_col,
-        F.col(id_col_r),
-        F.explode(
-            F.when(F.col("_salt_l"), _grid).otherwise(F.array(_hashed(id_col_r)))
-        ).alias("_salt"),
-        *[F.col(c).alias("r_" + c) for c in ccr],
-    )
-    # explicit join-key repartition — same AQE explode-join blind spot
-    # as block_pairs (see the comment there)
-    join_par = keyed_l.sparkSession.sparkContext.defaultParallelism
-    l_salted = l_salted.repartition(join_par, key_col, "_salt")
-    r_salted = r_salted.repartition(join_par, key_col, "_salt")
-    pairs = l_salted.join(r_salted, [key_col, "_salt"])
-    if pair_filter is not None:
-        pairs = pairs.where(pair_filter)
     if canonicalize:
         pairs = pairs.where(F.col(id_col_l) != F.col(id_col_r)).select(
             F.least(id_col_l, id_col_r).alias(id_col_l),

@@ -360,7 +360,7 @@ def test_block_pairs_lr_per_side_carry_cols(spark):
 
 
 def test_emit_once_pair_set_matches_dedup_path(spark):
-    """First-collision unique emission (emit_once_col + pair_dedup=False)
+    """First-collision unique emission (emit_once_col, no pair dedup)
     returns exactly the pair set of the emit-everywhere + dropDuplicates
     path, with zero duplicate rows."""
     docs = spark.createDataFrame(
@@ -374,7 +374,7 @@ def test_emit_once_pair_set_matches_dedup_path(spark):
     )
     once, _ = block_pairs(
         keys, "doc_id", salt_k=4, max_block_size=None,
-        emit_once_col="_pfx", pair_dedup=False,
+        emit_once_col="_pfx",
     )
     rows = [(r.l_id, r.r_id) for r in once.collect()]
     dedup, _ = block_pairs(
@@ -401,7 +401,7 @@ def test_emit_once_repairs_dropped_blocks(spark):
     # (100, 101) lives in 2-doc blocks and must survive
     once, stats = block_pairs(
         keys, "doc_id", salt_k=4, max_block_size=10,
-        emit_once_col="_pfx", pair_dedup=False,
+        emit_once_col="_pfx",
     )
     rows = [(r.l_id, r.r_id) for r in once.collect()]
     ref, _ = block_pairs(keys.drop("_pfx"), "doc_id", salt_k=4, max_block_size=10)
@@ -410,3 +410,33 @@ def test_emit_once_repairs_dropped_blocks(spark):
     assert len(rows) == len(set(rows))
     assert set(rows) == want
     assert (100, 101) in want
+
+
+def test_emit_once_falls_back_past_repair_cap(spark):
+    """More dropped blocks than the witness repair inlines: the emit-once
+    call falls back to emit + dedup and matches the plain path's pair
+    set and stats exactly."""
+    hot = [(3 * k + i, k, []) for k in range(4097) for i in range(3)]
+    # (0, 1) collides in two kept keys, the second naming the first as
+    # its witness; (3, 4) names a dropped hot key as its witness
+    small = [
+        (0, 100_000, []), (1, 100_000, []),
+        (0, 100_001, [100_000]), (1, 100_001, [100_000]),
+        (3, 100_002, [1]), (4, 100_002, [1]),
+        (6, 100_003, []), (9, 100_003, []),
+    ]
+    keyed = spark.createDataFrame(
+        hot + small, "id long, blk_key long, _pfx array<long>"
+    )
+    once, once_stats = block_pairs(
+        keyed, "id", salt_k=4, max_block_size=2, emit_once_col="_pfx"
+    )
+    rows = [(r.l_id, r.r_id) for r in once.collect()]
+    plain, plain_stats = block_pairs(keyed.drop("_pfx"), "id", salt_k=4, max_block_size=2)
+    assert plain_stats.n_dropped_blocks == 4097
+    assert plain_stats.n_dropped_rows == 3 * 4097
+    assert once_stats == plain_stats
+    assert len(rows) == len(set(rows))
+    assert set(rows) == {(r.l_id, r.r_id) for r in plain.collect()} == {
+        (0, 1), (3, 4), (6, 9)
+    }

@@ -1,19 +1,19 @@
 """Reference-parity harness (SURVEY.md §5.2): run the *actual* reference
-rlr class (pandas, /root/reference) on the firm fixtures and assert the
+rlr class (pandas; a ``reference`` checkout next to this repo, or
+``$RLR_REFERENCE_BACKEND``) on the firm fixtures and assert the
 Spark operators produce identical semantics — comparison-vector bits,
 review-column init, existence flags, label counts, grouped projections.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import warnings
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/reference/backend")
 
 from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
 from rlr_spark.operators.compare import comparison_vectors, grouped_projection
@@ -24,10 +24,26 @@ from rlr_spark.operators.review import (
     upsert_labels,
 )
 
+# the reference checkout sits next to this repo's checkout by default
+REFERENCE_BACKEND = os.environ.get(
+    "RLR_REFERENCE_BACKEND",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        "reference",
+        "backend",
+    ),
+)
+
 
 @pytest.fixture(scope="module")
 def reference():
     """The reference engine loaded with the firm fixtures."""
+    if not os.path.isfile(os.path.join(REFERENCE_BACKEND, "rlr.py")):
+        pytest.skip(
+            f"reference engine not found: no rlr.py under {REFERENCE_BACKEND} "
+            "(set RLR_REFERENCE_BACKEND to the reference's backend/ directory)"
+        )
+    sys.path.insert(0, REFERENCE_BACKEND)
     import rlr as ref_mod
 
     data_l, data_r, pairs = generate_firm_fixtures()

@@ -281,3 +281,59 @@ def test_clk_positions_stay_codegen_no_udf(spark):
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
     assert "Exchange" not in plan
+
+
+# ---------------------------------------------------------------------------
+# Job counts of the salted-join callers: plan building and one count()
+# ---------------------------------------------------------------------------
+
+def test_salted_join_job_counts(spark, web_pages_small):
+    """Every Spark job is a fixed cost (a scheduling round-trip and a task
+    wave) that no timing test would notice creeping up. Pinned as
+    (jobs to build the plan, jobs for one count()) per salted-join
+    caller; a change may lower a count, never raise it."""
+    from rlr_spark.functions.dedup import minhash_dup_pairs
+    from rlr_spark.operators.blocking import block_pairs, block_pairs_lr, candidate_pairs
+    from rlr_spark.plans import count_jobs
+    from rlr_spark.streaming.ingest import incremental_pairs_batch
+
+    pages, _ = web_pages_small
+    # 2,000 rows: one 600-row hot key (salted at the default 512
+    # threshold, dropped at a 500-row cap) plus a tail of 97 small keys
+    keyed = spark.range(2000).select(
+        F.col("id").cast("string").alias("id"),
+        F.when(F.col("id") < 600, F.lit(-1)).otherwise(F.col("id") % 97).alias("blk_key"),
+    )
+    left = keyed.select(F.col("id").alias("l_id"), "blk_key")
+    right = keyed.where(F.col("id").cast("long") % 3 == 0).select(
+        F.col("id").alias("r_id"), "blk_key"
+    )
+    stream_keys = keyed.select(F.col("id").alias("url"), "blk_key")
+    docs = pages.select(F.col("url").alias("doc_id"), "text")
+    calls = {
+        "block_pairs capped": lambda: block_pairs(keyed, "id", max_block_size=500)[0],
+        "block_pairs uncapped": lambda: block_pairs(keyed, "id", max_block_size=None)[0],
+        "block_pairs_lr capped": lambda: block_pairs_lr(left, right, max_block_size=500)[0],
+        "block_pairs_lr uncapped": lambda: block_pairs_lr(left, right)[0],
+        "candidate_pairs": lambda: candidate_pairs(pages, salt_k=2)[0],
+        "minhash_dup_pairs": lambda: minhash_dup_pairs(docs),
+        "incremental_pairs_batch": lambda: incremental_pairs_batch(
+            stream_keys.where(F.col("id").cast("long") >= 1800),
+            stream_keys.where(F.col("id").cast("long") < 1800),
+        )[0],
+    }
+    got = {}
+    for name, build in calls.items():
+        build_jobs, df = count_jobs(spark.sparkContext, build)
+        action_jobs, _ = count_jobs(spark.sparkContext, df.count)
+        got[name] = (build_jobs, action_jobs)
+    want = {
+        "block_pairs capped": (3, 6),
+        "block_pairs uncapped": (1, 6),
+        "block_pairs_lr capped": (5, 7),
+        "block_pairs_lr uncapped": (3, 7),
+        "candidate_pairs": (4, 6),
+        "minhash_dup_pairs": (11, 2),
+        "incremental_pairs_batch": (7, 8),
+    }
+    assert got == want, "; ".join(f"{k}={v}" for k, v in got.items())

@@ -3,7 +3,7 @@
 Evidence artifact: shows pushdown, pruning, join strategies, salt keys,
 and codegen spans for each stage of the ER pipeline at a small scale.
 
-Usage: python tools/dump_plans.py [out_md=/root/repo/PLANS.md]
+Usage: python tools/dump_plans.py [out_md=PLANS.md at the repo root]
 """
 
 from __future__ import annotations
@@ -13,7 +13,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def formatted(df) -> str:
@@ -24,7 +25,7 @@ def formatted(df) -> str:
 
 
 def main() -> None:
-    out_md = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/PLANS.md"
+    out_md = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "PLANS.md")
 
     import tempfile
 
@@ -32,11 +33,13 @@ def main() -> None:
 
     from rlr_spark.catalog import Catalog
     from rlr_spark.datagen import write_web_pages
-    from rlr_spark.operators.blocking import candidate_pairs
+    from rlr_spark.functions.dedup import minhash_dup_pairs
+    from rlr_spark.operators.blocking import candidate_pairs, lsh_band_keys
     from rlr_spark.operators.compare import text_pair_similarity
     from rlr_spark.operators.extract import extract_text
     from rlr_spark.pipeline import Pipeline, PipelineConfig
     from rlr_spark.session import get_spark
+    from rlr_spark.streaming.ingest import incremental_pairs_batch
 
     spark = get_spark(app_name="dump_plans", master="local[4]", shuffle_partitions=4)
     tmp = tempfile.mkdtemp(prefix="rlr_plans_")
@@ -47,6 +50,12 @@ def main() -> None:
 
     extracted = pipe.catalog.read("extract")
     pairs = pipe.catalog.read("pairs")
+    # the streaming probe's shape: one micro-batch's band keys against
+    # the keys accumulated before it
+    stream_keys = lsh_band_keys(
+        extracted, "url", "text", shingle_k=1, bands=32, rows_per_band=2
+    )
+    is_new = F.pmod(F.xxhash64("url"), F.lit(10)) == 0
 
     sections = {
         "extract (html -> text, Arrow UDF; narrow, no shuffle)": formatted(
@@ -54,6 +63,19 @@ def main() -> None:
         ),
         "blocking + salted pair generation": formatted(
             candidate_pairs(extracted, id_col="uid", url_col="url")[0]
+        ),
+        "minhash near-dup pairs (salted self-join, emit-once witnesses)": formatted(
+            # without the verify barrier: it checkpoints the candidates,
+            # which would hide the pair join behind a scan
+            minhash_dup_pairs(
+                extracted.select(F.col("uid").alias("doc_id"), "text"),
+                verify_barrier=False,
+            )
+        ),
+        "streaming incremental pairs (salted L x R, new vs accumulated)": formatted(
+            incremental_pairs_batch(
+                stream_keys.where(is_new), stream_keys.where(~is_new)
+            )[0]
         ),
         "similarity scoring (pairs x records, hashed token sets)": formatted(
             text_pair_similarity(pairs, extracted, id_col="uid")
