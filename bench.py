@@ -16,7 +16,7 @@ Self-honesty rules (the artifact is the number):
   where fixed per-job cost is amortized.
 
     SPARK_GRAFT_SF_DIR     default /root/testdata/sf0.1
-    SPARK_GRAFT_CPUS       default 32 (local[N])
+    SPARK_GRAFT_CPUS       default: cores this process may run on (local[N])
     RLR_BENCH_PAGES        override pipeline corpus size
     RLR_BENCH_BIG_PAGES    override big-corpus size (0 disables)
     RLR_BENCH_TRIALS       override trials per section (default 2)
@@ -36,7 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 TRIALS = int(os.environ.get("RLR_BENCH_TRIALS", "2"))
 
 # corpus size for the pipeline benchmark: ~sf * 400k pages

@@ -8,7 +8,7 @@ Usage:
                                                # to plans/r07/<q>_<tag>.txt
 Env:
     SPARK_GRAFT_SF_DIR   default /root/testdata/sf0.1
-    SPARK_GRAFT_CPUS     default 32
+    SPARK_GRAFT_CPUS     default: cores this process may run on
     RLR_BENCH_TRIALS     default 2 (min-of-N)
     RLR_PLAN_TAG         suffix for plan files (default "before")
     RLR_STAGE_METRICS=1  pull per-stage metrics from the UI REST API
@@ -27,7 +27,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 TRIALS = int(os.environ.get("RLR_BENCH_TRIALS", "2"))
 TAG = os.environ.get("RLR_PLAN_TAG", "before")
 STAGE_METRICS = os.environ.get("RLR_STAGE_METRICS", "0") == "1"

@@ -14,10 +14,15 @@ classpath; to enable it for real, start the session with
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: per-table schema sidecar of parquet mode (see :meth:`Catalog.write`)
+_SCHEMA_FILE = "_schema.json"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -64,33 +69,44 @@ class Catalog:
         return f"{self.iceberg_catalog}.{self.namespace}.{name}"
 
     # -- IO -------------------------------------------------------------------
-    def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        if self.iceberg_catalog:
-            writer = df.writeTo(self._ident(name))
-            if partition_by:
-                from pyspark.sql import functions as F
+    def write(self, df: DataFrame, name: str) -> None:
+        """Overwrite table ``name`` with ``df``.
 
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            if mode == "overwrite":
-                writer.createOrReplace()
-            else:
-                writer.append()
+        Parquet mode also records ``df.schema`` as ``_schema.json`` in the
+        table directory (Spark's reader skips ``_``-prefixed files), so
+        :meth:`read` need not infer it. The sidecar lands via tmp +
+        ``os.replace``: a killed write leaves no torn file, only a
+        missing one, and the overwrite deletes any older sidecar first.
+        """
+        if self.iceberg_catalog:
+            df.writeTo(self._ident(name)).createOrReplace()
             return
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
+        p = self.path(name)
+        df.write.mode("overwrite").parquet(p)
+        tmp = os.path.join(p, _SCHEMA_FILE + ".tmp")
+        with open(tmp, "w") as f:
+            f.write(df.schema.json())
+        os.replace(tmp, os.path.join(p, _SCHEMA_FILE))
 
     def read(self, name: str) -> DataFrame:
+        """Table ``name`` as a DataFrame, with no Spark job in parquet mode
+        when the schema sidecar is present.
+
+        A bare ``spark.read.parquet`` runs one job to infer the schema
+        from file footers; given ``.schema(s)`` it runs none. Tables
+        without a readable sidecar (written before it existed, or by
+        another writer) take the inferring read. Iceberg's
+        ``read.table`` infers nothing.
+        """
         if self.iceberg_catalog:
             return self.spark.read.table(self._ident(name))
-        return self.spark.read.parquet(self.path(name))
+        p = self.path(name)
+        try:
+            with open(os.path.join(p, _SCHEMA_FILE)) as f:
+                schema = StructType.fromJson(json.load(f))
+        except (OSError, ValueError, TypeError, KeyError):
+            return self.spark.read.parquet(p)
+        return self.spark.read.schema(schema).parquet(p)
 
     def exists(self, name: str) -> bool:
         if self.iceberg_catalog:
@@ -122,7 +138,7 @@ class Catalog:
             return None
         files = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
         if not files:
-            # e.g. a partition_by write nests files in subdirectories;
+            # e.g. a partitioned write nests files in subdirectories;
             # None (not []) makes the caller fall back to a real
             # aggregation instead of silently recording rows=0
             return None

@@ -190,8 +190,13 @@ class CLReviewer:
             upd_row[REV_LABEL_COL] = label
         if note is not None:
             upd_row[REV_NOTE_COL] = note
-        upd = self.session.spark.createDataFrame(
-            [upd_row], schema=self.pairs.select(*upd_row.keys()).schema
+        # one partition, like _write_stage's lineage rows: a local list
+        # defaults to defaultParallelism slices, and upsert_labels'
+        # limit(1) label check then scans them over several jobs
+        spark = self.session.spark
+        upd = spark.createDataFrame(
+            spark.sparkContext.parallelize([upd_row], 1),
+            self.pairs.select(*upd_row.keys()).schema,
         )
         self.pairs = upsert_labels(
             self.pairs, upd, self.key_cols, list(self.packet.label_choices)
@@ -208,14 +213,18 @@ class CLReviewer:
 
     def _persist(self) -> None:
         """Autosave (rlr.py:743-744): rewrite the pair table, re-read so
-        the session's plan is a clean scan of the saved state."""
+        the session's plan is a clean scan of the saved state.
+
+        Both re-reads pass the schema just written: an inferring
+        ``read.parquet`` would cost a footer-reading job each."""
         spark = self.session.spark
         if self.comp_pairs_path.endswith(".parquet"):
+            schema = self.pairs.schema
             tmp = self.comp_pairs_path + ".tmp"
             self.pairs.write.mode("overwrite").parquet(tmp)
-            saved = spark.read.parquet(tmp)
+            saved = spark.read.schema(schema).parquet(tmp)
             saved.write.mode("overwrite").parquet(self.comp_pairs_path)
-            self.pairs = spark.read.parquet(self.comp_pairs_path)
+            self.pairs = spark.read.schema(schema).parquet(self.comp_pairs_path)
         else:
             # CSV keeps no timestamp precision promises; used for parity
             # with the reference's to_csv autosave (rlr.py:692)

@@ -139,6 +139,11 @@ class Pipeline:
         shuffle outputs at the session parallelism unless partitions are
         tiny), and stage INPUTS are rebalanced in ``run()`` where the
         probe is a metadata-only file-scan split count.
+
+        The read-back after the write runs no job: ``Catalog.read``
+        passes the schema sidecar the write just left (parquet mode) or
+        reads the Iceberg table, so neither infers a schema. The same
+        holds for the stage reads in ``run()``, including resumed runs.
         """
         self.catalog.write(df, stage)
         out = self.catalog.read(stage)

@@ -22,12 +22,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env; default the
+    number of cores this process may run on, ``os.sched_getaffinity``).
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster this would be ~2-3x total executor cores instead.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
         master = f"local[{cpus}]"
 
     # Python workers unpickle our pandas UDFs, so the package root must be

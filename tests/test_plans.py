@@ -10,6 +10,7 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _plan(df) -> str:
@@ -337,3 +338,103 @@ def test_salted_join_job_counts(spark, web_pages_small):
         "incremental_pairs_batch": (7, 8),
     }
     assert got == want, "; ".join(f"{k}={v}" for k, v in got.items())
+
+
+# ---------------------------------------------------------------------------
+# Read-backs of what the engine just wrote: no schema-inference jobs
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("uid_bits", [64, 128])
+def test_catalog_read_back_runs_no_job(spark, tmp_path, web_pages_small, uid_bits):
+    """A bare ``read.parquet`` runs one job to infer the schema from file
+    footers. Every stage table read back through the catalog uses the
+    schema sidecar its write left, so it runs none, and that schema is
+    the one inference would give (struct uid at 128 bits, the score
+    stage's ``rlr_modified`` timestamp)."""
+    from rlr_spark.catalog import Catalog
+    from rlr_spark.pipeline import STAGES, Pipeline, PipelineConfig
+    from rlr_spark.plans import count_jobs
+
+    pages, _ = web_pages_small
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    Pipeline(spark, cat, PipelineConfig(salt_k=2, uid_bits=uid_bits)).run(pages)
+    for s in STAGES:
+        jobs, df = count_jobs(spark.sparkContext, lambda: cat.read(s))
+        assert jobs == 0, s
+        assert df.schema == spark.read.parquet(cat.path(s)).schema, s
+    assert isinstance(cat.read("extract").schema["uid"].dataType, T.StructType) == (
+        uid_bits == 128
+    )
+    assert isinstance(cat.read("score").schema["rlr_modified"].dataType, T.TimestampType)
+
+
+def test_catalog_read_falls_back_to_inference(spark, tmp_path):
+    """Tables with no sidecar (written by raw Spark, or before the
+    sidecar existed) and tables with a torn sidecar read through the
+    inferring reader. A raw overwrite of a catalog table deletes its
+    sidecar with the old files, so no stale schema survives it."""
+    import os
+
+    from rlr_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame([(1, "a", 0.5), (2, "b", None)], "id long, s string, x double")
+    cat.write(spark.range(3), "raw")
+    df.write.mode("overwrite").parquet(cat.path("raw"))
+    cat.write(df, "torn")
+    sidecar = os.path.join(cat.path("torn"), "_schema.json")
+    with open(sidecar) as f:
+        text = f.read()
+    with open(sidecar, "w") as f:
+        f.write(text[: len(text) // 2])
+    want = sorted(df.collect())
+    for name in ("raw", "torn"):
+        got = cat.read(name)
+        assert got.schema == spark.read.parquet(cat.path(name)).schema, name
+        assert sorted(got.collect()) == want, name
+
+
+def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
+    """Total Spark jobs of a forced warm ``Pipeline.run`` and of one
+    review render and one label save (with autosave to parquet). A
+    change may lower a count, never raise it."""
+    from rlr_spark.catalog import Catalog
+    from rlr_spark.cli import CLReviewer
+    from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
+    from rlr_spark.pipeline import Pipeline, PipelineConfig
+    from rlr_spark.plans import count_jobs
+    from rlr_spark.sources.packet import ReviewPacket, ReviewSession
+
+    sc = spark.sparkContext
+    pages, _ = web_pages_small
+    pipe = Pipeline(spark, Catalog(spark, str(tmp_path / "wh")), PipelineConfig(salt_k=2))
+    pipe.run(pages, force=True)
+    run_jobs, _ = count_jobs(sc, lambda: pipe.run(pages, force=True))
+
+    data_l, data_r, pairs = generate_firm_fixtures()
+    pairs = pairs.drop_duplicates().query("ein != 999").reset_index(drop=True)
+    paths = {n: str(tmp_path / f"{n}.parquet") for n in ("L", "R", "pairs")}
+    for n, pdf in zip(paths, (data_l, data_r, pairs)):
+        spark.createDataFrame(pdf).write.parquet(paths[n])
+    packet = ReviewPacket(
+        file_L=paths["L"],
+        file_L_ids=["ein"],
+        file_R=paths["R"],
+        file_R_ids=["ui_num"],
+        file_comps=paths["pairs"],
+        var_group_schema=VAR_SCHEMA_FIRM,
+        label_choices=["Match", "Not a Match", "Maybe a Match"],
+    )
+    reviewer = CLReviewer(
+        ReviewSession(spark, packet),
+        comp_pairs_path=str(tmp_path / "reviewed.parquet"),
+        print_fn=lambda _text: None,
+    )
+    # warm: the first save replaces the packet's scan with the saved table
+    reviewer.render_current()
+    reviewer.process_choice("1")
+    reviewer.process_choice("n")
+    render_jobs, _ = count_jobs(sc, reviewer.render_current)
+    save_jobs, _ = count_jobs(sc, lambda: reviewer.process_choice("2"))
+    got = {"pipeline_run": run_jobs, "review_render": render_jobs, "review_save": save_jobs}
+    assert got == {"pipeline_run": 25, "review_render": 3, "review_save": 6}, got

@@ -107,7 +107,7 @@ def test_file_row_counts_nested_files_fall_back(spark, tmp_path):
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, part string")
-    cat.write(df, "nested", partition_by=["part"])
+    df.write.partitionBy("part").parquet(cat.path("nested"))
     assert cat.file_row_counts("nested") is None
     cat.write(df, "flat")
     counts = cat.file_row_counts("flat")
