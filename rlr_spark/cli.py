@@ -5,7 +5,7 @@ Reimplements the reference's REPL (``CL_review_comparisons`` /
 over the Spark-backed :class:`~rlr_spark.sources.packet.ReviewSession`:
 
   - render the current pair as a grouped three-column table
-    (operators.compare.grouped_projection + report.render_pair);
+    (operators.compare.grouped_values + report.render_pair);
   - digit choices assign a label (0 clears), ``a`` sets a note,
     ``p``/``n``/``g`` move the cursor, ``s`` prints the label summary,
     ``e`` exits (rlr.py:607-645);
@@ -15,9 +15,9 @@ over the Spark-backed :class:`~rlr_spark.sources.packet.ReviewSession`:
 
 Driver-side by design: a review slice is human-sized, so the ordered
 pair *keys* are collected once (the reference collects the entire table
-into pandas); each render and each label write stays a Spark point
-query / keyed merge, so the same loop works unchanged when the pair
-table is a big catalog table.
+into pandas); each render is one key-filtered scan and each label write
+one projected rewrite of the pair table — one Spark job each — so the
+same loop works unchanged when the pair table is a big catalog table.
 
 ``input_fn`` / ``print_fn`` are injectable for tests (monkeypatched
 stdin is how the loop is driven under pytest).
@@ -26,14 +26,15 @@ stdin is how the loop is driven under pytest).
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-from rlr_spark import REV_LABEL_COL, REV_NOTE_COL
-from rlr_spark.operators.compare import grouped_projection
-from rlr_spark.operators.review import upsert_labels
+from rlr_spark import REV_DATE_COL, REV_LABEL_COL, REV_NOTE_COL
+from rlr_spark.operators.compare import grouped_values
+from rlr_spark.operators.review import check_label, label_update_columns
 from rlr_spark.report import render_label_summary, render_pair
 from rlr_spark.sources.packet import ReviewSession
 from rlr_spark.sources.writers import write_csv
@@ -47,6 +48,15 @@ ADDTL_OPTIONS = [
     ("s", "Summary"),
     ("e", "Exit"),
 ]
+
+
+def _key_match(cols: list[str], values) -> Column:
+    """``cols == values`` column by column (NULL matches nothing, like
+    the equi-join of upsert_labels and grouped_projection)."""
+    cond = F.lit(True)
+    for c, v in zip(cols, values):
+        cond = cond & (F.col(c) == F.lit(v))
+    return cond
 
 
 class CLReviewer:
@@ -117,30 +127,42 @@ class CLReviewer:
         ]
         self.n = len(self.keys)
 
-    # -- point queries ---------------------------------------------------------
-    def _key_filter(self, idx: int):
+    # -- the current pair: one key-filtered scan ------------------------------
+    def _grouped_row(self, idx: int) -> Row | None:
+        """The pair at ``idx`` as an ``operators.compare.grouped_projection``
+        row (its ``grp_*`` values, label and note), in ONE Spark job: the
+        pair row, the L record and the R record are key-filtered scans,
+        each projected to a string map, collected as one union — no
+        join, no exchange. ``None`` when the pair key is not in the
+        table."""
         key = self.keys[idx]
-        cond = F.lit(True)
-        for c, v in zip(self.key_cols, key):
-            cond = cond & (F.col(c) == F.lit(v))
-        return cond
+        schema = self.packet.var_group_schema
 
-    def _pair_slice(self, idx: int) -> DataFrame:
-        return self.pairs.where(self._key_filter(idx))
+        def scan(side: str, df: DataFrame, cols: list[str], values, fields) -> DataFrame:
+            # values cast to string exactly as grouped_projection casts them
+            vals = F.create_map(
+                *[x for c in fields for x in (F.lit(c), F.col(c).cast("string"))]
+            ).cast("map<string,string>")
+            return df.where(_key_match(cols, values)).select(
+                F.lit(side).alias("side"), vals.alias("vals")
+            )
 
-    def _grouped_row(self, idx: int):
-        g = grouped_projection(
-            self._pair_slice(idx),
-            self.session.data_l,
-            self.session.data_r,
-            self.packet.file_L_ids,
-            self.packet.file_R_ids,
-            self.packet.var_group_schema,
-            l_pair_col=self.packet.file_L_ids,
-            r_pair_col=self.packet.file_R_ids,
+        ids_l, ids_r = self.packet.file_L_ids, self.packet.file_R_ids
+        lvars = sorted({c for g in schema for c in g["lvars"]})
+        rvars = sorted({c for g in schema for c in g["rvars"]})
+        union = (
+            scan("pair", self.pairs, self.key_cols, key, [REV_LABEL_COL, REV_NOTE_COL])
+            .unionAll(scan("l", self.session.data_l, ids_l, key[: len(ids_l)], lvars))
+            .unionAll(scan("r", self.session.data_r, ids_r, key[len(ids_l):], rvars))
         )
-        rows = g.collect()
-        return rows[0] if rows else None
+        found: dict[str, dict] = {}
+        for r in union.collect():
+            found.setdefault(r.side, r.vals)
+        if "pair" not in found:
+            return None
+        return Row(
+            **found["pair"], **grouped_values(found.get("l"), found.get("r"), schema)
+        )
 
     # -- rendering (fresh implementations of the CL_* surfaces) ----------------
     def render_current(self) -> str:
@@ -156,10 +178,10 @@ class CLReviewer:
             lines.append("**** pair key not found in the pair table ****")
             return "\n".join(lines)
         lines.append(render_pair(row, self.packet.var_group_schema, width=self.width))
-        note = row[REV_NOTE_COL] if REV_NOTE_COL in row.__fields__ else ""
+        note = row[REV_NOTE_COL]
         if note:
             lines.append(f"Note: {note}")
-        cur_label = row[REV_LABEL_COL] if REV_LABEL_COL in row.__fields__ else ""
+        cur_label = row[REV_LABEL_COL]
         lines.append(self._options_text(cur_label))
         return "\n".join(lines)
 
@@ -183,28 +205,25 @@ class CLReviewer:
 
     # -- persistence -----------------------------------------------------------
     def _save(self, idx: int, label: str | None = None, note: str | None = None) -> None:
-        """save_label_or_note (rlr.py:698-744): keyed merge + stamp + autosave."""
-        key = self.keys[idx]
-        upd_row = dict(zip(self.key_cols, key))
-        if label is not None:
-            upd_row[REV_LABEL_COL] = label
-        if note is not None:
-            upd_row[REV_NOTE_COL] = note
-        # one partition, like _write_stage's lineage rows: a local list
-        # defaults to defaultParallelism slices, and upsert_labels'
-        # limit(1) label check then scans them over several jobs
-        spark = self.session.spark
-        upd = spark.createDataFrame(
-            spark.sparkContext.parallelize([upd_row], 1),
-            self.pairs.select(*upd_row.keys()).schema,
-        )
-        self.pairs = upsert_labels(
-            self.pairs, upd, self.key_cols, list(self.packet.label_choices)
+        """save_label_or_note (rlr.py:698-744) for one known key: the
+        :func:`upsert_labels` column rules applied under the key
+        predicate — a projection of the pair table, no join — then
+        autosave."""
+        check_label(label, list(self.packet.label_choices))
+        hit = _key_match(self.key_cols, self.keys[idx])
+
+        def new(v: str | None) -> Column:
+            return F.lit(None).cast("string") if v is None else F.when(hit, F.lit(v))
+
+        # key columns first, the column order upsert_labels' join emits
+        rest = [c for c in self.pairs.columns if c not in self.key_cols]
+        self.pairs = self.pairs.select(*self.key_cols, *rest).withColumns(
+            label_update_columns(new(label), new(note), F.current_timestamp())
         )
         if self.autosave:
             self._persist()
         else:
-            # truncate the upsert lineage so a long session doesn't grow
+            # truncate the update lineage so a long session doesn't grow
             # an unbounded plan
             self.pairs = self.pairs.localCheckpoint(eager=True)
         if self.packet_path:
@@ -212,32 +231,35 @@ class CLReviewer:
             self.session.save_packet(self.packet_path)
 
     def _persist(self) -> None:
-        """Autosave (rlr.py:743-744): rewrite the pair table, re-read so
-        the session's plan is a clean scan of the saved state.
+        """Autosave (rlr.py:743-744): write the pair table ONCE to
+        ``<path>.tmp``, swap directories (``<path>`` -> ``.old``,
+        ``.tmp`` -> ``<path>``, delete ``.old``), then re-read it with
+        the schema just written — an inferring read would cost a job.
 
-        Both re-reads pass the schema just written: an inferring
-        ``read.parquet`` would cost a footer-reading job each."""
+        A save killed mid-swap leaves ``.tmp`` and/or ``.old`` behind;
+        the next save overwrites the one and removes the other. Only the
+        writer and the reader depend on the format."""
         spark = self.session.spark
-        if self.comp_pairs_path.endswith(".parquet"):
-            schema = self.pairs.schema
-            tmp = self.comp_pairs_path + ".tmp"
+        path = self.comp_pairs_path
+        tmp, old = path + ".tmp", path + ".old"
+        schema = self.pairs.schema
+        if path.endswith(".parquet"):
             self.pairs.write.mode("overwrite").parquet(tmp)
-            saved = spark.read.schema(schema).parquet(tmp)
-            saved.write.mode("overwrite").parquet(self.comp_pairs_path)
-            self.pairs = spark.read.schema(schema).parquet(self.comp_pairs_path)
+            read = spark.read.schema(schema).parquet
         else:
             # CSV keeps no timestamp precision promises; used for parity
             # with the reference's to_csv autosave (rlr.py:692)
             out = self.pairs.withColumn(
-                "rlr_modified", F.date_format("rlr_modified", "yyyy-MM-dd HH:mm:ss")
+                REV_DATE_COL, F.date_format(REV_DATE_COL, "yyyy-MM-dd HH:mm:ss")
             )
-            write_csv(out, self.comp_pairs_path, mode="overwrite")
-            schema = self.pairs.schema
-            self.pairs = (
-                spark.read.option("header", "true")
-                .schema(schema)
-                .csv(self.comp_pairs_path)
-            )
+            write_csv(out, tmp, mode="overwrite")
+            read = spark.read.option("header", "true").schema(schema).csv
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        self.pairs = read(path)
 
     # -- the loop ----------------------------------------------------------------
     def _valid_choices(self) -> list[str]:

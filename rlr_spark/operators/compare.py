@@ -29,6 +29,9 @@ from rlr_spark.functions.similarity import jaro_winkler, levenshtein_sim, token_
 #: ``str(np.nan)`` == "nan" (reference renders values via str(),
 #: pages/02:139-140), so parity demands the same token.
 _NAN_TOKEN = "nan"
+#: a value whose record id was not found (rlr.py:335-336: ``dict.get(var,
+#: "no data found")`` over an empty record dict)
+_NO_DATA_TOKEN = "no data found"
 
 
 def _group_concat(cols: list[str], prefix: str) -> Column:
@@ -140,7 +143,7 @@ def grouped_projection(
     )
     joined = pairs.join(lh, lp, "left").join(rh, rp, "left")
 
-    missing = F.lit("no data found")
+    missing = F.lit(_NO_DATA_TOKEN)
     out_cols = []
     for g in var_schema:
         name = g["name"].lower().replace(" ", "_")
@@ -163,6 +166,27 @@ def grouped_projection(
         out_cols.append(lvals.alias(f"grp_{name}_lvals"))
         out_cols.append(rvals.alias(f"grp_{name}_rvals"))
     return joined.select(*[pairs[c] for c in pairs.columns], *out_cols)
+
+
+def grouped_values(
+    l_record: dict | None, r_record: dict | None, var_schema: list[dict]
+) -> dict[str, list[str]]:
+    """Driver-side twin of :func:`grouped_projection` for ONE pair whose
+    records are already collected as ``{column: value cast to string}``
+    (``None`` = id not found): the same ``grp_<name>_lvals/rvals``
+    values, NULL -> ``"nan"``, absent record -> ``"no data found"``."""
+
+    def vals(record: dict | None, cols: list[str]) -> list[str]:
+        if record is None:
+            return [_NO_DATA_TOKEN] * len(cols)
+        return [_NAN_TOKEN if record.get(c) is None else record[c] for c in cols]
+
+    out = {}
+    for g in var_schema:
+        name = g["name"].lower().replace(" ", "_")
+        out[f"grp_{name}_lvals"] = vals(l_record, g["lvars"])
+        out[f"grp_{name}_rvals"] = vals(r_record, g["rvars"])
+    return out
 
 
 def text_pair_similarity(

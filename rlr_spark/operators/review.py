@@ -12,8 +12,10 @@ Reproduces, column-for-column, the reference's review contract:
   - label counts with the "Unlabeled" bucket and the total-consistency
     invariant (``get_label_counts``, rlr.py:341-368);
   - label/note upsert with choice validation + ``rlr_modified`` stamping
-    (``save_label_or_note``, rlr.py:698-744) as a merge (anti-join ∪
-    updated) — ``MERGE INTO`` when an Iceberg catalog is live;
+    (``save_label_or_note``, rlr.py:698-744): one set of column rules,
+    applied after a keyed left join (bulk) or under a key predicate (the
+    reviewer's one-pair save) — ``MERGE INTO`` when an Iceberg catalog
+    is live;
   - cursor navigation (next/prev/goto/next-unlabeled, rlr.py:615-633,
     pages/02:25-54) as filter+orderBy+limit point queries.
 """
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rlr_spark import (
@@ -161,6 +163,29 @@ def completion(pairs: DataFrame) -> tuple[int, int]:
     return int(row.labeled), int(row.total)
 
 
+def check_label(label: str | None, label_choices: list[str]) -> None:
+    """The rlr.py:729 assert: a label is "" (clear) or one of the choices."""
+    if label and label not in label_choices:
+        raise ValueError(f"Label {label!r} not in {label_choices}")
+
+
+def label_update_columns(new_label: Column, new_note: Column, ts: Column) -> dict[str, Column]:
+    """The save_label_or_note column rules (rlr.py:731-740) for rows
+    whose update is ``new_label`` / ``new_note`` (NULL = leave as is):
+    label and note take the new value, the indicator follows the
+    resulting label, and rlr_modified is stamped with ``ts`` when
+    either value is set."""
+    label = F.coalesce(new_label, F.col(REV_LABEL_COL))
+    return {
+        REV_LABEL_COL: label,
+        REV_LABEL_IND_COL: F.when(label != "", 1).otherwise(0),
+        REV_DATE_COL: F.when(new_label.isNotNull() | new_note.isNotNull(), ts).otherwise(
+            F.col(REV_DATE_COL)
+        ),
+        REV_NOTE_COL: F.coalesce(new_note, F.col(REV_NOTE_COL)),
+    }
+
+
 def upsert_labels(
     pairs: DataFrame,
     updates: DataFrame,
@@ -173,9 +198,10 @@ def upsert_labels(
     stamp rlr_modified (rlr.py:740).
 
     ``updates``: key_cols + optional ``rlr_label`` / ``rlr_note``.
-    Merge emulation (anti-join ∪ updated rows); with a live Iceberg
-    catalog this is a single ``MERGE INTO``. ``stamp_ts`` pins the
-    timestamp for deterministic tests; None -> current_timestamp().
+    Merge emulation (left join, then :func:`label_update_columns`); with
+    a live Iceberg catalog this is a single ``MERGE INTO``. ``stamp_ts``
+    pins the timestamp for deterministic tests; None ->
+    current_timestamp().
     """
     if REV_LABEL_COL in updates.columns:
         bad = (
@@ -186,7 +212,7 @@ def upsert_labels(
             .collect()
         )
         if bad:
-            raise ValueError(f"Label {bad[0][REV_LABEL_COL]!r} not in {label_choices}")
+            check_label(bad[0][REV_LABEL_COL], label_choices)
 
     ts = F.to_timestamp(F.lit(stamp_ts)) if stamp_ts else F.current_timestamp()
     upd = updates
@@ -198,24 +224,11 @@ def upsert_labels(
         F.col(REV_LABEL_COL).alias("_new_label"),
         F.col(REV_NOTE_COL).alias("_new_note"),
     )
-
-    merged = (
+    return (
         pairs.join(upd, key_cols, "left")
-        .withColumn(
-            REV_DATE_COL,
-            F.when(
-                F.col("_new_label").isNotNull() | F.col("_new_note").isNotNull(), ts
-            ).otherwise(F.col(REV_DATE_COL)),
-        )
-        .withColumn(REV_LABEL_COL, F.coalesce(F.col("_new_label"), F.col(REV_LABEL_COL)))
-        .withColumn(REV_NOTE_COL, F.coalesce(F.col("_new_note"), F.col(REV_NOTE_COL)))
-        .withColumn(
-            REV_LABEL_IND_COL,
-            F.when(F.col(REV_LABEL_COL) != "", 1).otherwise(0),
-        )
+        .withColumns(label_update_columns(F.col("_new_label"), F.col("_new_note"), ts))
         .drop("_new_label", "_new_note")
     )
-    return merged
 
 
 # -- navigation (N1-N3): point queries over the ordered pair table ----------

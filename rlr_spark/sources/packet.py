@@ -118,9 +118,7 @@ class ReviewSession:
         ]
         if missing:
             raise AssertionError(f"Pair file missing id columns: {missing}")
-        n = pairs.count()
-        n_distinct = pairs.select(*packet.file_L_ids, *packet.file_R_ids).distinct().count()
-        if n != n_distinct:
+        if not ids_uniquely_identify(pairs, packet.file_L_ids + packet.file_R_ids):
             # warn-only, like rlr.py:151-155
             warnings.warn("Pair ids do not uniquely identify pair rows", stacklevel=2)
         pairs = init_review_columns(pairs)

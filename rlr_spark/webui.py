@@ -6,8 +6,9 @@ mismatch highlighting, a label radio, a note box, prev/next/goto, and a
 progress summary). Streamlit is not installable in this environment, so
 the same surface is served with the standard library's ``http.server``
 over the SAME session machinery the CLI reviewer uses
-(:class:`~rlr_spark.cli.CLReviewer` — point queries, keyed label merge,
-autosave, packet-cursor persistence). No JavaScript framework, no
+(:class:`~rlr_spark.cli.CLReviewer` — one key-filtered scan per render,
+one projected rewrite per label save, autosave, packet-cursor
+persistence). No JavaScript framework, no
 dependency: plain HTML forms, one POST per action.
 
 The server is single-threaded ON PURPOSE: review is a one-human
@@ -97,8 +98,8 @@ class WebReviewer:
                     f"<td>{_esc(' | '.join(map(str, rv)))}</td></tr>"
                 )
             body.append("</table>")
-            cur_label = row[REV_LABEL_COL] if REV_LABEL_COL in row.__fields__ else ""
-            note = row[REV_NOTE_COL] if REV_NOTE_COL in row.__fields__ else ""
+            cur_label = row[REV_LABEL_COL]
+            note = row[REV_NOTE_COL]
 
         # label radio (0 = No Label), current selection marked
         body.append('<form method="post" class="labels">')

@@ -14,11 +14,12 @@ from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
 from rlr_spark.sources.packet import ReviewPacket, ReviewSession
 
 
-@pytest.fixture()
-def packet_session(spark, tmp_path):
+def _firm_session(spark, tmp_path, keep_missing_id: bool = False):
     data_l, data_r, pairs = generate_firm_fixtures()
-    # drop the duplicated + missing-id rows: this is the clean review slice
-    pairs = pairs.drop_duplicates().query("ein != 999").reset_index(drop=True)
+    pairs = pairs.drop_duplicates().reset_index(drop=True)
+    if not keep_missing_id:
+        # the clean review slice: no pair whose L id is absent
+        pairs = pairs.query("ein != 999").reset_index(drop=True)
     l_path = str(tmp_path / "dataL.parquet")
     r_path = str(tmp_path / "dataR.parquet")
     p_path = str(tmp_path / "pairs.parquet")
@@ -37,6 +38,11 @@ def packet_session(spark, tmp_path):
     packet_path = str(tmp_path / "packet.json")
     packet.save(packet_path)
     return ReviewSession(spark, packet), packet_path, str(tmp_path)
+
+
+@pytest.fixture()
+def packet_session(spark, tmp_path):
+    return _firm_session(spark, tmp_path)
 
 
 def _scripted(inputs: list[str]):
@@ -172,3 +178,163 @@ def test_reviewer_refuses_oversized_pair_table(spark, packet_session):
     # explicit raise of the limit re-enables the same table
     r = CLReviewer(session, packet_path=packet_path, max_pairs=1_000)
     assert r.n > 2
+
+
+def _by_key(rows, key_cols):
+    return {tuple(r[c] for c in key_cols): r for r in rows}
+
+
+def test_render_equals_grouped_projection(spark, tmp_path):
+    """The one-scan render returns exactly grouped_projection's grp_*
+    values, label and note: a found pair, a pair whose L id is absent
+    ("no data found") and a pair with a NULL field ("nan")."""
+    from rlr_spark.operators.compare import grouped_projection
+
+    session, _, _ = _firm_session(spark, tmp_path, keep_missing_id=True)
+    r = CLReviewer(session, autosave=False, print_fn=lambda _t: None)
+    r._save(0, label="Match")
+    r._save(0, note="seen")
+    want = _by_key(
+        grouped_projection(
+            r.pairs, session.data_l, session.data_r, ["ein"], ["ui_num"],
+            VAR_SCHEMA_FIRM, l_pair_col=["ein"], r_pair_col=["ui_num"],
+        ).collect(),
+        r.key_cols,
+    )
+    fields = ["rlr_label", "rlr_note"] + [
+        f"grp_{g['name'].lower()}_{side}vals" for g in VAR_SCHEMA_FIRM for side in "lr"
+    ]
+    for key in [(100, 500), (999, 507), (105, 505)]:
+        got = r._grouped_row(r.keys.index(key))
+        assert {f: got[f] for f in fields} == {f: want[key][f] for f in fields}, key
+    rows = {k: r._grouped_row(r.keys.index(k)) for k in [(100, 500), (999, 507), (105, 505)]}
+    assert (rows[(100, 500)].rlr_label, rows[(100, 500)].rlr_note) == ("Match", "seen")
+    assert rows[(999, 507)].grp_name_lvals == ["no data found"]
+    assert rows[(105, 505)].grp_address_rvals == ["nan", "il"]
+
+
+def test_point_save_equals_upsert_labels(spark, packet_session):
+    """A label, a clear ("0") and a note saved by the reviewer give the
+    table upsert_labels gives (same columns in the same order, same
+    types, same rows with rlr_modified set aside); an invalid label
+    raises upsert_labels' ValueError and leaves the saved table as it
+    was."""
+    import os
+
+    from rlr_spark.operators.review import upsert_labels
+
+    session, _, root = packet_session
+    out_path = root + "/reviewed.parquet"
+    r = CLReviewer(session, comp_pairs_path=out_path, print_fn=lambda _t: None)
+    choices = list(session.packet.label_choices)
+    want = session.pairs
+    for idx, label, note in [(0, "Match", None), (0, "", None), (1, None, "call back"), (2, "Maybe a Match", None)]:
+        r._save(idx, label=label, note=note)
+        upd = {c: v for c, v in zip(r.key_cols, r.keys[idx])}
+        if label is not None:
+            upd["rlr_label"] = label
+        if note is not None:
+            upd["rlr_note"] = note
+        want = upsert_labels(
+            want,
+            spark.createDataFrame([upd], want.select(*upd).schema),
+            r.key_cols,
+            choices,
+        ).localCheckpoint()
+        saved = spark.read.parquet(out_path)
+        assert [(f.name, f.dataType) for f in saved.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+
+        def rows(df):
+            return sorted(
+                tuple(v for k, v in x.asDict().items() if k != "rlr_modified")
+                + (x.rlr_modified is not None,)
+                for x in df.collect()
+            )
+
+        assert rows(saved) == rows(want), (idx, label, note)
+
+    before = sorted(os.listdir(out_path)), sorted(spark.read.parquet(out_path).collect())
+    bad = spark.createDataFrame([(100, 500, "Bogus")], "ein long, ui_num long, rlr_label string")
+    with pytest.raises(ValueError) as upsert_err:
+        upsert_labels(want, bad, r.key_cols, choices)
+    with pytest.raises(ValueError) as save_err:
+        r._save(0, label="Bogus")
+    assert str(save_err.value) == str(upsert_err.value)
+    assert (sorted(os.listdir(out_path)), sorted(spark.read.parquet(out_path).collect())) == before
+
+
+def test_default_csv_autosave_survives_repeated_saves(spark, packet_session):
+    """The default comp_pairs_path (file_comps + ".reviewed") is CSV; it
+    takes the same write-then-swap path as parquet and keeps every row
+    and every label over consecutive saves."""
+    import os
+
+    session, _, _ = packet_session
+    r = CLReviewer(session, print_fn=lambda _t: None)
+    assert r.comp_pairs_path == session.packet.file_comps + ".reviewed"
+    for choice in ("1", "2", "3"):
+        r.process_choice(choice)
+        r.process_choice("n")
+    saved = (
+        spark.read.option("header", "true").schema(r.pairs.schema).csv(r.comp_pairs_path)
+    )
+    # CSV does not tell "" from NULL: an unlabeled row reads back NULL
+    got = {(x.ein, x.ui_num): (x.rlr_label or "", x.rlr_label_ind) for x in saved.collect()}
+    assert len(got) == r.n == 7
+    assert [got[k] for k in r.keys[:3]] == [("Match", 1), ("Not a Match", 1), ("Maybe a Match", 1)]
+    assert all(v == ("", 0) for k, v in got.items() if k not in r.keys[:3])
+    assert not any(os.path.exists(r.comp_pairs_path + s) for s in (".tmp", ".old"))
+
+
+def test_swap_leftovers_from_an_interrupted_save(spark, packet_session):
+    """A process killed mid-swap leaves ``.tmp`` and ``.old`` directories
+    (and possibly no final directory); the next save still lands and
+    cleans them up."""
+    import os
+    import shutil
+
+    session, _, root = packet_session
+    out_path = root + "/reviewed.parquet"
+    CLReviewer(session, comp_pairs_path=out_path, print_fn=lambda _t: None).process_choice("1")
+    # killed after final -> .old, with a half-written .tmp beside it
+    os.rename(out_path, out_path + ".old")
+    os.makedirs(out_path + ".tmp")
+    with open(out_path + ".tmp/part-00000-torn.parquet", "wb") as f:
+        f.write(b"PAR1 torn")
+    r = CLReviewer(
+        ReviewSession(spark, session.packet), comp_pairs_path=out_path, print_fn=lambda _t: None
+    )
+    r.process_choice("2")
+    assert not any(os.path.exists(out_path + s) for s in (".tmp", ".old"))
+    # killed after .tmp -> final, before .old was deleted
+    shutil.copytree(out_path, out_path + ".old")
+    r.process_choice("n")
+    r.process_choice("3")
+    got = {(x.ein, x.ui_num): x.rlr_label for x in spark.read.parquet(out_path).collect()}
+    assert len(got) == r.n
+    assert [got[k] for k in r.keys[:3]] == ["Not a Match", "Maybe a Match", ""]
+    assert not any(os.path.exists(out_path + s) for s in (".tmp", ".old"))
+
+
+def test_reread_after_swaps_lists_fresh_files(spark, packet_session):
+    """Every swap replaces the table's files; the re-read after each of
+    several swaps must scan the files now in the directory, never a
+    stale cached listing of an earlier one."""
+    import os
+
+    session, _, root = packet_session
+    out_path = root + "/reviewed.parquet"
+    r = CLReviewer(session, comp_pairs_path=out_path, print_fn=lambda _t: None)
+    seen: set[str] = set()
+    for i, choice in enumerate(["1", "2", "3", "0"]):
+        r.process_choice(choice)
+        on_disk = {f for f in os.listdir(out_path) if f.endswith(".parquet")}
+        listed = {os.path.basename(f) for f in r.pairs.inputFiles()}
+        assert listed == on_disk, i
+        assert not listed & seen, i
+        seen |= listed
+        want = ["Match", "Not a Match", "Maybe a Match", ""][i]
+        row = r.pairs.where(F.col("ein") == r.keys[0][0]).collect()
+        assert [x.rlr_label for x in row] == [want], i

@@ -437,4 +437,4 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     render_jobs, _ = count_jobs(sc, reviewer.render_current)
     save_jobs, _ = count_jobs(sc, lambda: reviewer.process_choice("2"))
     got = {"pipeline_run": run_jobs, "review_render": render_jobs, "review_save": save_jobs}
-    assert got == {"pipeline_run": 25, "review_render": 3, "review_save": 6}, got
+    assert got == {"pipeline_run": 25, "review_render": 1, "review_save": 1}, got

@@ -66,6 +66,29 @@ def test_review_session_loads_and_flags(spark, packet_env):
     assert "rlr_label" in sess.pairs.columns
 
 
+def test_review_session_warns_on_duplicate_pair_keys(spark, packet_env, tmp_path):
+    """The pair-key duplicate warning (rlr.py:151-155, warn-only) with
+    NULL as a key value: two rows with the same NULL-bearing key are
+    duplicates, distinct NULL-bearing keys are not."""
+    import warnings
+
+    pkt_path, _ = packet_env
+    cases = {
+        "dup": ([(100, 500), (100, 500), (101, 501)], True),
+        "null_dup": ([(None, 500), (None, 500), (101, 501)], True),
+        "null_distinct": ([(None, 500), (None, 501), (100, 500)], False),
+    }
+    for name, (rows, want) in cases.items():
+        packet = ReviewPacket.load(pkt_path)
+        packet.file_comps = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, "ein long, ui_num long").write.parquet(packet.file_comps)
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            ReviewSession(spark, packet)
+        got = any("do not uniquely identify pair rows" in str(x.message) for x in w)
+        assert got == want, name
+
+
 def test_review_session_rejects_overlapping_ids(spark, packet_env, tmp_path):
     pkt_path, _ = packet_env
     p = ReviewPacket.load(pkt_path)
