@@ -1289,7 +1289,6 @@ _EXTENDED = (
     "cluster_bcubed",
     "linkage_waterfall",
     "hll_tokens",
-    "bpe_merges",
     "cluster_ari",
     "group_links",
     "graph_kcore",
@@ -1601,20 +1600,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "n_docs",
                 F.expr("n_docs * (n_docs - 1) DIV 2").alias("n_pairs"),
             )
-        )
-
-    # -- BPE merge learning (functions/bpe.py): iterative greedy argmax
-    # over the vocabulary table — genuinely non-SQL-expressible, so this
-    # is a rows-only entry; the hard check is tests/test_bpe.py's
-    # independent pure-Python reference spec ---------------------------------
-    def bpe_merges(spark, sf_dir):
-        from rlr_spark.functions.bpe import learn_bpe
-
-        d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 120)
-        merges, _vocab = learn_bpe(d, n_merges=8)
-        return spark.createDataFrame(
-            [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
-            "rank int, a string, b string",
         )
 
     # -- CCNet-style perplexity terciles over the bigram LM score ------------
@@ -2019,7 +2004,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_tokens": hll_tokens,
         "tfidf_cosine": tfidf_cosine,
         "phonetic_blocks": phonetic_blocks,
-        "bpe_merges": bpe_merges,
         "ppl_buckets": ppl_buckets,
         "cluster_ari": cluster_ari,
         "group_links": group_links,
@@ -2044,7 +2028,7 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def extended_oracle_sql() -> dict[str, str]:
     # entries absent from the oracle dict (iterative / non-SQL ops,
-    # e.g. bpe_merges) get the rows-only check in tools/check_oracles.py
+    # e.g. graph_kcore) get the rows-only check in tools/check_oracles.py
     full = _oracle_sql_full()
     return {k: full[k] for k in _EXTENDED if k in full}
 
@@ -2547,11 +2531,14 @@ def _oracle_sql_full() -> dict[str, str]:
             SELECT doc_id, {lang_case} AS lang_guess FROM documents
         """,
         "emb_topk_cosine": """
-            WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 3),
+            -- DOUBLE[] like the query's array<double> cast: cosine and
+            -- round on FLOAT lists leave float noise past 4 places
+            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+            q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 3),
             scored AS (
               SELECT q.query_id, e.vec_id,
-                     list_cosine_similarity(q.qv, e.embedding) AS cs
-              FROM embeddings e CROSS JOIN q),
+                     list_cosine_similarity(q.qv, e.v) AS cs
+              FROM e CROSS JOIN q),
             ranked AS (
               SELECT query_id, vec_id, round(cs, 4) AS cos_sim,
                      row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, vec_id) AS rank

@@ -86,7 +86,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("RLR_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("RLR_DRIVER_MEM")
+            or _driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.ui.enabled", "false")
         # binary html columns can make fat rows; keep broadcasts conservative
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -115,6 +121,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _driver_memory(phys_bytes: int) -> str:
+    """Default ``spark.driver.memory``: 16g, or half of physical memory
+    on a smaller host, so the driver heap never claims the whole box
+    (``RLR_DRIVER_MEM`` overrides)."""
+    return f"{min(16 * 1024, phys_bytes // 2**20 // 2)}m"
 
 
 def _master_cores(master: str) -> int:

@@ -129,48 +129,6 @@ def test_windowed_event_counts(spark, tmp_path):
     assert got[("2024-01-01 00:05:00", "view")] == (1, 5.0)
 
 
-def test_stateful_first_seen_dedup(spark, tmp_path):
-    """applyInPandasWithState: only the first doc per content hash passes;
-    later exact duplicates are counted into state, across micro-batches."""
-    from rlr_spark.streaming.stateful import first_seen_dedup_stream
-
-    # two files -> two micro-batches (maxFilesPerTrigger=1)
-    src = str(tmp_path / "dedup_src")
-    b1 = spark.createDataFrame(
-        [("u1", "h1"), ("u2", "h2"), ("u3", "h1")], "url string, text_md5 string"
-    )
-    b2 = spark.createDataFrame(
-        [("u4", "h1"), ("u5", "h3")], "url string, text_md5 string"
-    )
-    b1.coalesce(1).write.parquet(src + "/f1")
-    b2.coalesce(1).write.parquet(src + "/f2")
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("url string, text_md5 string")
-        .option("maxFilesPerTrigger", 1)
-        .load(src + "/*")
-    )
-    out = first_seen_dedup_stream(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("first_seen_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM first_seen_out").collect()
-    per_hash = {}
-    for r in rows:
-        per_hash.setdefault(r.text_md5, []).append(r.url)
-    # each hash emitted exactly once, with its first-seen url
-    assert all(len(v) == 1 for v in per_hash.values())
-    assert set(per_hash) == {"h1", "h2", "h3"}
-
-
 def test_incremental_neardup_stream(spark, tmp_path):
     """foreachBatch incremental MinHash-LSH: a near-dup arriving in a
     later micro-batch pairs with its batch-1 original exactly once."""

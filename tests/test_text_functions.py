@@ -282,3 +282,27 @@ def test_chunk_documents(spark):
     from rlr_spark.plans.inspect import physical_plan
 
     assert "Exchange" not in physical_plan(chunk_documents(df))
+
+
+def test_perplexity_buckets_tercile_shape(spark):
+    """Repetitive docs land in head (our bigram LM loves determinism);
+    each tercile is nonempty and ordered by score."""
+    from rlr_spark.functions.text import perplexity_buckets
+
+    rows = []
+    for i in range(12):
+        if i % 3 == 0:
+            rows.append((i, "a b a b a b a b a b"))       # very predictable
+        elif i % 3 == 1:
+            rows.append((i, f"a b c d e f g h i{i} j{i}"))  # mixed
+        else:
+            rows.append((i, f"q{i} w{i} e{i} r{i} t{i} y{i}"))  # unique bigrams
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = perplexity_buckets(df).collect()
+    assert len(out) == 12
+    by_bucket = {}
+    for r in out:
+        by_bucket.setdefault(r.bucket, []).append(r.avg_logprob2)
+    assert set(by_bucket) == {"head", "middle", "tail"}
+    assert min(by_bucket["head"]) >= max(by_bucket["middle"])
+    assert min(by_bucket["middle"]) >= max(by_bucket["tail"])
