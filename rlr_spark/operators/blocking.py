@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -417,21 +417,36 @@ _MAX_REPAIR_KEYS = 4096
 
 def _cap_blocks(
     sizes: DataFrame, max_block_size: int | None, pass_name: str, block_rows: Column
-) -> tuple[DataFrame, BlockStats]:
-    """Drop the blocks with more than ``max_block_size`` rows on either
-    side and log them. ``sizes``: (key, _ln, _rn) per block;
-    ``block_rows`` is the block's row count as :class:`BlockStats`
-    reports it (``_ln`` for a self-join, ``_ln + _rn`` for L x R)."""
+) -> tuple[DataFrame, DataFrame, BlockStats]:
+    """Checkpoint the per-block sizes, drop the blocks with more than
+    ``max_block_size`` rows on either side and log them.
+
+    ``sizes``: (key, _ln, _rn) per block, consumed by the stats and by
+    every later reader, so it is checkpointed here. ``block_rows`` is
+    the block's row count as :class:`BlockStats` reports it (``_ln``
+    for a self-join, ``_ln + _rn`` for L x R). Returns (kept, dropped,
+    stats).
+
+    With a cap the stats ride the checkpoint: an observation on
+    ``sizes`` is filled by the eager ``localCheckpoint`` that
+    materializes it, so they cost no job of their own and are known
+    before anything downstream is planned. Without a cap nothing is
+    counted and the checkpoint stays lazy.
+    """
     if max_block_size is None:
-        return sizes, BlockStats(pass_name, -1, 0, 0)
+        sizes = sizes.localCheckpoint(eager=False)
+        return sizes, sizes.limit(0), BlockStats(pass_name, -1, 0, 0)
     over = F.greatest("_ln", "_rn") > max_block_size
-    agg = sizes.agg(
+    obs = Observation()
+    sizes = sizes.observe(
+        obs,
         F.count("*").alias("nb"),
         F.sum(F.when(over, 1).otherwise(0)).alias("nd"),
         F.sum(F.when(over, block_rows).otherwise(0)).alias("nr"),
-    ).collect()[0]
-    stats = BlockStats(pass_name, int(agg.nb), int(agg.nd or 0), int(agg.nr or 0))
-    return sizes.where(~over), stats
+    ).localCheckpoint(eager=True)
+    got = obs.get
+    stats = BlockStats(pass_name, int(got["nb"]), int(got["nd"] or 0), int(got["nr"] or 0))
+    return sizes.where(~over), sizes.where(over), stats
 
 
 def _salted_join(
@@ -562,36 +577,32 @@ def block_pairs(
     keyed = keyed.select(id_col, key_col, *carry_cols, *wit_cols).where(
         F.col(key_col).isNotNull()
     )
-    # the keyed relation is consumed by three jobs (sizes agg, stats
-    # collect, pair join); localCheckpoint (lazy) materializes it once —
-    # the stats collect below triggers it — so an expensive upstream
+    # the keyed relation is consumed by two jobs (the sizes checkpoint
+    # and the pair join); localCheckpoint (lazy) materializes it once —
+    # the sizes checkpoint triggers it — so an expensive upstream
     # (e.g. the 48-permutation minhash) never recomputes. Unlike
     # .persist(), the blocks live outside the CacheManager and are freed
     # by the ContextCleaner when the returned plan is dropped, so
     # repeated standalone calls don't leak cached relations.
     keyed = keyed.localCheckpoint(eager=False)
-    # ONE groupBy shuffle feeds the stats collect and the kept-keys join
-    # (lazy-checkpointed so it happens once)
+    # ONE groupBy shuffle feeds the stats and the kept-keys join
+    # (checkpointed by _cap_blocks so it happens once)
     sizes = (
         keyed.groupBy(key_col)
         .agg(F.count("*").alias("_ln"))
-        .localCheckpoint(eager=False)
         .withColumn("_rn", F.col("_ln"))
     )
-    kept, stats = _cap_blocks(sizes, max_block_size, pass_name, F.col("_ln"))
+    kept, dropped, stats = _cap_blocks(sizes, max_block_size, pass_name, F.col("_ln"))
     # single-row blocks generate no pairs; pruning them up front keeps the
     # replicated probe side small (most blocks are singletons at web scale)
     kept = kept.where(F.col("_ln") >= 2)
     if suppress and stats.n_dropped_blocks > _MAX_REPAIR_KEYS:
         suppress, wit_cols = False, ()
     elif suppress and stats.n_dropped_blocks > 0:
-        dropped = [
-            r[0]
-            for r in sizes.where(F.col("_ln") > max_block_size).select(key_col).collect()
-        ]
+        keys = [r[0] for r in dropped.select(key_col).collect()]
         keyed = keyed.withColumn(
             emit_once_col,
-            F.array_except(F.col(emit_once_col), F.array(*[F.lit(k) for k in dropped])),
+            F.array_except(F.col(emit_once_col), F.array(*[F.lit(k) for k in keys])),
         )
 
     def side(p: str) -> list[Column]:
@@ -707,15 +718,13 @@ def block_pairs_lr(
         # distinct-key relation when it fits.
         right = right.join(left.select(key_col).distinct(), key_col, "left_semi")
     right = right.localCheckpoint(eager=False)
-    # keys present on both sides; checkpointed because BOTH the stats
-    # aggregation and the kept-keys consumer below otherwise re-run the
-    # full two-sided size aggregation
-    sizes = (
-        left.groupBy(key_col).agg(F.count("*").alias("_ln"))
-        .join(right.groupBy(key_col).agg(F.count("*").alias("_rn")), key_col, "inner")
-        .localCheckpoint(eager=False)
+    # keys present on both sides; _cap_blocks checkpoints them because
+    # BOTH the stats and the kept-keys consumer below otherwise re-run
+    # the full two-sided size aggregation
+    sizes = left.groupBy(key_col).agg(F.count("*").alias("_ln")).join(
+        right.groupBy(key_col).agg(F.count("*").alias("_rn")), key_col, "inner"
     )
-    kept, stats = _cap_blocks(
+    kept, _, stats = _cap_blocks(
         sizes, max_block_size, pass_name, F.col("_ln") + F.col("_rn")
     )
     # consumed by both salted sides — materialize the (small) kept-keys

@@ -28,7 +28,7 @@ beforehand (:func:`cluster_pairs`) because 8-byte shuffle keys beat
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,7 +87,9 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
 def _local_components(edges: DataFrame) -> DataFrame:
     """Driver-side connected components for edge sets that fit in memory.
 
-    Arrow collect (toPandas), then fully-vectorized min-label
+    ``edges`` may be raw: duplicates, both orientations and self-loops
+    give the same assignment as their :func:`_canonical` form. Arrow
+    collect (toPandas), then fully-vectorized min-label
     propagation in numpy: hook every edge endpoint to the min label,
     pointer-jump (``L = L[L]``) to a fixpoint, repeat until every edge
     is monochrome. entity_id = min node id of the component --
@@ -99,10 +101,15 @@ def _local_components(edges: DataFrame) -> DataFrame:
 
     spark = edges.sparkSession
     pdf = edges.toPandas()
-    if pdf.empty:
-        return spark.createDataFrame([], "node long, entity_id long")
     u = pdf["u"].to_numpy(np.int64, copy=False)
     v = pdf["v"].to_numpy(np.int64, copy=False)
+    # raw edges are fine: propagation ignores duplicates and orientation;
+    # a self-loop alone must not make a node appear (as in _canonical)
+    loop = u == v
+    if loop.any():
+        u, v = u[~loop], v[~loop]
+    if len(u) == 0:
+        return spark.createDataFrame([], "node long, entity_id long")
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     ui, vi = inv[: len(u)], inv[len(u):]
     label = np.arange(len(nodes), dtype=np.int64)
@@ -127,6 +134,7 @@ def connected_components(
     max_iter: int = 50,
     rounds_per_check: int = 2,
     local_threshold: int = 8_000_000,
+    edge_count: int | None = None,
 ) -> DataFrame:
     """edges(u long, v long) -> assignment(node long, entity_id long).
 
@@ -145,12 +153,24 @@ def connected_components(
     — the 10^12-row regime where the match graph has billions of edges
     — the distributed large-star/small-star loop runs.
 
+    Known-count path: ``edge_count`` is the raw row count of ``edges``
+    when the caller has already measured it (the pipeline observes the
+    score write's label mix, so the Match count arrives with no job).
+    The raw count bounds the deduped one from above, so when it is at
+    most ``local_threshold`` the local path is certain and runs on the
+    raw edges directly: one Arrow collect, with no ``_canonical``
+    shuffle, checkpoint or fingerprint job. Over the threshold, or with
+    no count, the edges are deduped and measured as above. Either way
+    the assignment is the same.
+
     ``rounds_per_check`` star-rounds run between checkpoints/convergence
     fingerprints: each fingerprint is a driver round-trip, and the loop
     is latency-bound, so batching rounds per job halves the fixed cost;
     star rounds on a converged graph are idempotent, so the possible
     extra round is harmless.
     """
+    if edge_count is not None and edge_count <= local_threshold:
+        return _local_components(edges)
     spark = edges.sparkSession
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
 
@@ -199,6 +219,29 @@ def connected_components(
     )
 
 
+def key_counts(df: DataFrame, key: str) -> tuple[int, int]:
+    """(rows, distinct non-NULL ``key`` values) of ``df``, exactly.
+
+    The one copy of the engine's hash-collision check: the uid check of
+    the pipeline's extract stage and :func:`node_dictionary` both call
+    it. One exchange: ``groupBy(key).count()`` with its map-side partial
+    count, drained through the ``noop`` sink while an observation sums
+    the group sizes and counts the groups. A fused
+    ``count``/``countDistinct`` aggregate plans two exchanges.
+    """
+    obs = Observation()
+    (
+        df.groupBy(key)
+        .count()
+        .observe(obs, F.sum("count").alias("n"), F.count(key).alias("nk"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    got = obs.get
+    return int(got["n"] or 0), int(got["nk"])
+
+
 def _dense_ids(ids: DataFrame) -> DataFrame:
     """Exact dense dictionary (_id, _nid): DISTRIBUTED range-sort +
     zipWithIndex — deterministic given the global sort order.
@@ -221,23 +264,17 @@ def node_dictionary(ids: DataFrame) -> DataFrame:
 
     Integral ids pass through (the id IS the node: no hash, no check,
     zero extra jobs). Anything else — strings, 128-bit uid structs —
-    gets xxhash64 labels with ONE fused count/countDistinct collision
-    check (a hash collision would MERGE two entities, so the dictionary
-    must be exact) and the sorted ``_dense_ids`` fallback on the ~never
+    gets xxhash64 labels with one :func:`key_counts` collision check (a
+    hash collision would MERGE two entities, so the dictionary must be
+    exact) and the sorted ``_dense_ids`` fallback on the ~never
     collision. Shared by :func:`cluster_pairs` and the pipeline's
-    128-bit-uid cluster stage — one copy of a correctness-critical
-    check.
+    128-bit-uid cluster stage.
     """
     if isinstance(ids.schema["_id"].dataType, (T.LongType, T.IntegerType)):
         return ids.select("_id", F.col("_id").cast("long").alias("_nid"))
     hashed = ids.select("_id", F.xxhash64("_id").alias("_nid"))
-    # ONE pass over the dictionary (count + countDistinct fuse into a
-    # single aggregation job) — at 10^12 ids a second full scan just to
-    # detect the ~never collision would double the cost
-    counts = hashed.agg(
-        F.count("*").alias("n"), F.countDistinct("_nid").alias("nh")
-    ).collect()[0]
-    if int(counts.nh) != int(counts.n):
+    n, nh = key_counts(hashed, "_nid")
+    if nh != n:
         return _dense_ids(ids)
     return hashed
 

@@ -20,13 +20,13 @@ import os
 import time
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rlr_spark import LABEL_MATCH
+from rlr_spark import LABEL_MATCH, LABEL_NONMATCH, LABEL_UNCERTAIN
 from rlr_spark.catalog import Catalog
 from rlr_spark.operators.blocking import candidate_pairs
-from rlr_spark.operators.cluster import connected_components
+from rlr_spark.operators.cluster import connected_components, key_counts
 from rlr_spark.operators.compare import text_pair_similarity
 from rlr_spark.operators.extract import extract_text
 from rlr_spark.operators.review import init_review_columns
@@ -121,8 +121,14 @@ class Pipeline:
         t0: float,
         extra: dict | None = None,
         validate=None,
+        observed: dict[str, list[Column]] | None = None,
     ) -> None:
         """Materialize + manifest + per-partition metrics (lineage table).
+
+        ``observed`` maps a manifest key to aggregate Columns: a
+        ``DataFrame.observe`` on the written plan evaluates them as the
+        write's own job produces the rows, so these data counters cost
+        no job. Each key lands in the manifest as {alias: value}.
 
         ``validate(out)`` runs on the materialized output BEFORE the
         manifest exists: if it raises, a restarted run re-enters the
@@ -145,24 +151,18 @@ class Pipeline:
         reads the Iceberg table, so neither infers a schema. The same
         holds for the stage reads in ``run()``, including resumed runs.
         """
+        observations = {}
+        for key, cols in (observed or {}).items():
+            observations[key] = Observation()
+            df = df.observe(observations[key], *cols)
         self.catalog.write(df, stage)
         out = self.catalog.read(stage)
-        validated = None
-        part_rows: list[tuple[int, int]] | None = None
-        if validate is not None:
-            v = validate(out)
-            # a validator may return (tag, per-partition rows) to donate
-            # the metrics it already computed — one job instead of two
-            if isinstance(v, tuple):
-                validated, part_rows = v
-            else:
-                validated = v
-        if part_rows is None:
-            # per-file lineage counts straight from table METADATA
-            # (parquet footers / Iceberg manifests) — zero Spark jobs.
-            # A full read-back aggregation per stage was re-scanning the
-            # entire stage output just to count rows.
-            part_rows = self.catalog.file_row_counts(stage)
+        validated = validate(out) if validate is not None else None
+        # per-file lineage counts straight from table METADATA (parquet
+        # footers / Iceberg manifests) — zero Spark jobs. A full
+        # read-back aggregation per stage was re-scanning the entire
+        # stage output just to count rows.
+        part_rows = self.catalog.file_row_counts(stage)
         if part_rows is None:
             part_rows = [
                 (int(r._pid), int(r.rows))
@@ -201,6 +201,7 @@ class Pipeline:
             "config_fingerprint": self.config.fingerprint(),
             "n_partitions": out.rdd.getNumPartitions(),
             **({"validated": validated} if validated is not None else {}),
+            **{key: obs.get for key, obs in observations.items()},
             **(extra or {}),
         }
         tmp = self._manifest_path(stage) + ".tmp"
@@ -270,20 +271,17 @@ class Pipeline:
             # 64-bit mode: the check runs BEFORE the manifest is written —
             # a collision aborts the stage and a restarted run re-checks,
             # instead of resuming past a 'complete' manifest with
-            # colliding uids. One job; partial (map-side) aggregation
-            # keeps the shuffle to a handful of rows.
+            # colliding uids. One exchange (key_counts, shared with the
+            # node dictionary); the map-side partial count keeps the
+            # shuffle to one row per uid.
             # 128-bit mode: NO validator job — the birthday bound at
             # 10^12 rows is ~1e-15, below any hardware error rate, so a
             # corpus-wide aggregation to check it would be pure cost.
             def _check_uid_collisions(out: DataFrame) -> str:
-                counts = out.agg(
-                    F.count("*").alias("n"), F.countDistinct("uid").alias("nu")
-                ).collect()[0]
-                if counts.n != counts.nu:
-                    raise RuntimeError(
-                        f"uid hash collision: {counts.n} rows, {counts.nu} distinct uids"
-                    )
-                return f"uid_unique:{counts.n}"
+                n, nu = key_counts(out, "uid")
+                if n != nu:
+                    raise RuntimeError(f"uid hash collision: {n} rows, {nu} distinct uids")
+                return f"uid_unique:{n}"
 
             self._write_stage(
                 "extract",
@@ -335,7 +333,20 @@ class Pipeline:
             labeled = init_review_columns(
                 score_and_label(simmed, weights)
             ).withColumn("rlr_modified", F.current_timestamp())
-            self._write_stage("score", labeled, t0)
+            # the label mix rides the write; the cluster stage sizes its
+            # connected components from the Match count
+            label = F.col("rlr_label")
+            self._write_stage(
+                "score",
+                labeled,
+                t0,
+                observed={
+                    "label_counts": [
+                        F.count_if(label == lab).alias(lab)
+                        for lab in (LABEL_MATCH, LABEL_NONMATCH, LABEL_UNCERTAIN)
+                    ]
+                },
+            )
         scored = self.catalog.read("score")
 
         # cluster: transitive closure of Match pairs over all extracted ids
@@ -345,6 +356,13 @@ class Pipeline:
                 F.col("l_id").alias("u"), F.col("r_id").alias("v")
             )
             ids = extracted.select("uid", cfg.id_col)
+            # the Match count the score write observed (None in a
+            # manifest written without label_counts: CC then sizes the
+            # edge set itself). The 128-bit dictionary join below maps
+            # each edge to exactly one edge, so the count holds there too.
+            n_match = (self.read_manifest("score").get("label_counts") or {}).get(
+                LABEL_MATCH
+            )
             if cfg.uid_bits == 128:
                 # CC needs long node ids; the dictionary is built over
                 # MATCHED nodes only (nodes appearing in edges) — orders
@@ -371,7 +389,7 @@ class Pipeline:
                     .join(hashed.withColumnRenamed("_id", "v"), "v")
                     .select(F.col("un").alias("u"), F.col("_nid").alias("v"))
                 )
-                assign_n = connected_components(edges_l)
+                assign_n = connected_components(edges_l, edge_count=n_match)
                 # component label -> representative node's struct uid
                 rep = hashed.select(
                     F.col("_nid").alias("entity_id"), F.col("_id").alias("_rep_uid")
@@ -392,19 +410,19 @@ class Pipeline:
             else:
                 # edges are already longs (uid): CC runs on 16-byte
                 # edges; urls only rejoin for the final output table
-                assign = connected_components(edges)
+                assign = connected_components(edges, edge_count=n_match)
+            # entity_key = min member url: a window over one exchange,
+            # not a groupBy joined back (two exchanges of the same rows)
             clusters = (
                 ids.join(assign, ids["uid"] == assign["node"], "left")
                 .select(
                     cfg.id_col,
                     F.coalesce(F.col("entity_id"), F.col("uid")).alias("entity_id"),
                 )
-            )
-            min_key = clusters.groupBy("entity_id").agg(
-                F.min(cfg.id_col).alias("entity_key")
-            )
-            clusters = clusters.join(min_key, "entity_id").select(
-                cfg.id_col, "entity_id", "entity_key"
+                .withColumn(
+                    "entity_key",
+                    F.min(cfg.id_col).over(Window.partitionBy("entity_id")),
+                )
             )
             self._write_stage("cluster", clusters, t0)
         clusters = self.catalog.read("cluster")

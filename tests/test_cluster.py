@@ -60,6 +60,53 @@ def test_distributed_path_matches_local(spark, n):
     assert set(dist.values()) == {0, 100}
 
 
+_RAW_EDGE_SETS = {
+    "duplicates": [(1, 2), (1, 2), (2, 3), (2, 3), (2, 3), (7, 8), (7, 8)],
+    "reversed": [(2, 1), (1, 2), (3, 2), (9, 8), (8, 9), (4, 9)],
+    "self_loops": [(3, 3), (1, 2), (2, 2), (5, 5), (6, 7), (7, 7)],
+    # a long chain in mixed orientation: the worst case for propagation
+    "long_chain": [(i, i + 1) if i % 3 else (i + 1, i) for i in range(300)],
+    "only_self_loops": [(4, 4), (9, 9)],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RAW_EDGE_SETS))
+def test_known_edge_count_matches_sizing_path(spark, name):
+    """``edge_count`` (a measured raw row count) skips the dedup shuffle,
+    checkpoint and fingerprint: the raw edges go straight to one Arrow
+    collect. The assignment must be the sizing path's on raw edges with
+    duplicates, both orientations and self-loops, and over the
+    threshold the count must fall back to the sizing path."""
+    from rlr_spark.plans import count_jobs
+
+    edges = _RAW_EDGE_SETS[name]
+    df = spark.createDataFrame(edges, "u long, v long")
+    want = _cc(spark, edges)
+    jobs, known = count_jobs(
+        spark.sparkContext, lambda: connected_components(df, edge_count=len(edges))
+    )
+    assert jobs == 1
+    assert {r.node: r.entity_id for r in known.collect()} == want
+    over = _cc(spark, edges, local_threshold=len(edges) - 1, edge_count=len(edges))
+    assert over == want
+
+
+def test_key_counts_detects_duplicates(spark):
+    """The shared collision check: exact (rows, distinct keys), NULL keys
+    counted as rows but not as keys (countDistinct's rule), empty input
+    (0, 0)."""
+    from rlr_spark.operators.cluster import key_counts
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (2, "c"), (3, "d"), (None, "e")], "k long, x string"
+    )
+    assert key_counts(df, "k") == (5, 3)
+    assert key_counts(df.where("k != 2"), "k") == (2, 2)
+    assert key_counts(df.limit(0), "k") == (0, 0)
+    want = df.agg(F.count("*").alias("n"), F.countDistinct("k").alias("nk")).collect()[0]
+    assert key_counts(df.repartition(3), "k") == (want.n, want.nk)
+
+
 def test_dense_ids_fallback_deterministic(spark):
     """The collision fallback dictionary: dense 0..N-1, ordered by id,
     distributed (no single-partition window)."""

@@ -85,6 +85,92 @@ def test_resume_skips_completed_stages(spark, pipeline_out, run_dir):
     assert out2["cluster"].count() > 0
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_cluster_stage_resumes_with_and_without_label_counts(pipeline_out, monkeypatch):
+    """The cluster stage hands CC the Match count the score write
+    observed. A resumed cluster stage reads that count from the score
+    manifest and writes the same table. A score manifest with no
+    ``label_counts`` (as written before the count existed) makes CC
+    size the edges itself, and the table is still the same."""
+    import rlr_spark.pipeline as pl
+
+    pipe, _, _ = pipeline_out
+    want = _rows(pipe.catalog.read("cluster"))
+    score_path = pipe._manifest_path("score")
+    with open(score_path) as f:
+        score_manifest = json.load(f)
+    seen = []
+    real = pl.connected_components
+
+    def spy(edges, **kw):
+        seen.append(kw.get("edge_count"))
+        return real(edges, **kw)
+
+    monkeypatch.setattr(pl, "connected_components", spy)
+    try:
+        os.remove(pipe._manifest_path("cluster"))
+        assert _rows(pipe.run(pipe.catalog.read("extract"))["cluster"]) == want
+        with open(score_path, "w") as f:
+            json.dump({k: v for k, v in score_manifest.items() if k != "label_counts"}, f)
+        os.remove(pipe._manifest_path("cluster"))
+        assert _rows(pipe.run(pipe.catalog.read("extract"))["cluster"]) == want
+    finally:
+        with open(score_path, "w") as f:
+            json.dump(score_manifest, f)
+    assert seen == [score_manifest["label_counts"]["Match"], None]
+
+
+def test_score_manifest_label_counts(spark, pipeline_out, tmp_path):
+    """The score manifest carries the label mix: all three labels, summing
+    to the manifest's rows, equal to a count of the table. Observed
+    counters ride the write's own job: ``_write_stage`` runs as many
+    jobs with them as without."""
+    from pyspark.sql import functions as F
+
+    from rlr_spark import LABEL_MATCH, LABEL_NONMATCH, LABEL_UNCERTAIN
+    from rlr_spark.plans import count_jobs
+
+    pipe, _, _ = pipeline_out
+    m = pipe.read_manifest("score")
+    counts = m["label_counts"]
+    assert set(counts) == {LABEL_MATCH, LABEL_NONMATCH, LABEL_UNCERTAIN}
+    assert sum(counts.values()) == m["rows"]
+    scored = pipe.catalog.read("score")
+    got = {r.rlr_label: r["count"] for r in scored.groupBy("rlr_label").count().collect()}
+    assert got == {k: v for k, v in counts.items() if v}
+
+    probe = Pipeline(spark, Catalog(spark, str(tmp_path / "wh")), pipe.config)
+    df = scored.repartition(3, "l_id")
+    sc = spark.sparkContext
+    plain, _ = count_jobs(sc, lambda: probe._write_stage("probe", df, 0.0))
+    observed, _ = count_jobs(
+        sc,
+        lambda: probe._write_stage(
+            "probe", df, 0.0, observed={"n": [F.count("*").alias("rows")]}
+        ),
+    )
+    assert observed == plain
+    assert probe.read_manifest("probe")["n"] == {"rows": m["rows"]}
+
+
+def test_uid_collision_aborts_extract_and_rechecks(spark, tmp_path, web_pages_small):
+    """Two pages with the same url get the same uid. The extract stage's
+    uid check must abort the run before the extract manifest exists, so
+    a rerun checks again instead of resuming past the collision."""
+    pages, _ = web_pages_small
+    dup = pages.unionByName(pages.limit(1))
+    pipe = Pipeline(
+        spark, Catalog(spark, str(tmp_path / "wh")), PipelineConfig(salt_k=2)
+    )
+    for _ in range(2):
+        with pytest.raises(RuntimeError, match="uid hash collision"):
+            pipe.run(dup)
+        assert pipe.read_manifest("extract") is None
+
+
 def test_config_change_invalidates(spark, pipeline_out, run_dir):
     pipe, _, _ = pipeline_out
     cfg = PipelineConfig(salt_k=2, max_block_size=None, upper=3.5)

@@ -329,13 +329,13 @@ def test_salted_join_job_counts(spark, web_pages_small):
         action_jobs, _ = count_jobs(spark.sparkContext, df.count)
         got[name] = (build_jobs, action_jobs)
     want = {
-        "block_pairs capped": (3, 6),
+        "block_pairs capped": (2, 6),
         "block_pairs uncapped": (1, 6),
-        "block_pairs_lr capped": (5, 7),
+        "block_pairs_lr capped": (4, 7),
         "block_pairs_lr uncapped": (3, 7),
-        "candidate_pairs": (4, 6),
-        "minhash_dup_pairs": (11, 2),
-        "incremental_pairs_batch": (7, 8),
+        "candidate_pairs": (3, 6),
+        "minhash_dup_pairs": (10, 2),
+        "incremental_pairs_batch": (6, 8),
     }
     assert got == want, "; ".join(f"{k}={v}" for k, v in got.items())
 
@@ -395,13 +395,16 @@ def test_catalog_read_falls_back_to_inference(spark, tmp_path):
 
 
 def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
-    """Total Spark jobs of a forced warm ``Pipeline.run`` and of one
-    review render and one label save (with autosave to parquet). A
-    change may lower a count, never raise it."""
+    """Total Spark jobs of a forced warm ``Pipeline.run``, of each stage
+    run alone (its manifest deleted, so the resumed run re-enters that
+    stage only), and of one review render and one label save (with
+    autosave to parquet). A change may lower a count, never raise it."""
+    import os
+
     from rlr_spark.catalog import Catalog
     from rlr_spark.cli import CLReviewer
     from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
-    from rlr_spark.pipeline import Pipeline, PipelineConfig
+    from rlr_spark.pipeline import STAGES, Pipeline, PipelineConfig
     from rlr_spark.plans import count_jobs
     from rlr_spark.sources.packet import ReviewPacket, ReviewSession
 
@@ -410,6 +413,14 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     pipe = Pipeline(spark, Catalog(spark, str(tmp_path / "wh")), PipelineConfig(salt_k=2))
     pipe.run(pages, force=True)
     run_jobs, _ = count_jobs(sc, lambda: pipe.run(pages, force=True))
+    # extract: write 2 + uid check 2; pairs: blocking checkpoint 2 +
+    # write 5; score: write 3; cluster: CC collect 1 + write 3
+    stage_jobs = {}
+    for s in STAGES:
+        os.remove(pipe._manifest_path(s))
+        stage_jobs[s], _ = count_jobs(sc, lambda: pipe.run(pages))
+    assert stage_jobs == {"extract": 4, "pairs": 7, "score": 3, "cluster": 4}, stage_jobs
+    assert sum(stage_jobs.values()) == run_jobs
 
     data_l, data_r, pairs = generate_firm_fixtures()
     pairs = pairs.drop_duplicates().query("ein != 999").reset_index(drop=True)
@@ -437,4 +448,4 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     render_jobs, _ = count_jobs(sc, reviewer.render_current)
     save_jobs, _ = count_jobs(sc, lambda: reviewer.process_choice("2"))
     got = {"pipeline_run": run_jobs, "review_render": render_jobs, "review_save": save_jobs}
-    assert got == {"pipeline_run": 25, "review_render": 1, "review_save": 1}, got
+    assert got == {"pipeline_run": 18, "review_render": 1, "review_save": 1}, got
