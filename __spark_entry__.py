@@ -6,8 +6,8 @@ J1-J2, C1-C3, A1-A3, U1, N2) plus the north-rule pipeline stages
 (blocking, similarity, FS scoring, connected components) and the
 training-data operators (exact/ngram/minhash/simhash dedup, text
 analysis, embedding similarity). ``oracle_sql()`` gives the DuckDB
-equivalent for each; genuinely non-SQL ops (hash-seeded MinHash/SimHash,
-LSH-bucketed ANN) are exposed without an oracle (rows-only check).
+equivalent for each; ``extended_oracle_sql()`` does the same for the
+extended set, except the learned ``blocking_scheme`` (rows-only check).
 
 Every computed column is aliased identically on both sides; doubles are
 rounded to 6 places on both sides so the value hash is stable.
@@ -543,7 +543,7 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # -- hash-seeded ops, now value-checked: each oracle is an independent
     # reimplementation of the SAME deterministic math in DuckDB SQL (md5
-    # simhash bits, integer-formula hyperplanes, first-k IVF quantizer),
+    # simhash bits, first-k IVF quantizer),
     # or an exact brute-force the LSH output must equal at full recall ----
     def dedup_minhash(spark, sf_dir):
         # the banding must hash the SAME similarity the verify filter
@@ -581,24 +581,7 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # (registry budget: emb_ann_ivf's untrained n_iter=0 probe is subsumed
     # by emb_ann_ivf_trained's driver row — same assignment/probe/top-k
-    # path plus Lloyd iterations; lsh_topk's hyperplane bucketing is
-    # value-checked through emb_neardup, which shares the bucket machinery)
-
-    # -- embedding-cosine near-dup pairs: hyperplane-LSH-bucketed
-    # candidates, exact cosine >= threshold (the semantic-dedup shape:
-    # same-bucket join only, never all-pairs) ---------------------------
-    def emb_neardup(spark, sf_dir):
-        from rlr_spark.functions.embeddings import embedding_dup_pairs
-
-        e = _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        dim = len(e.select("embedding").first()[0])
-        # threshold sized to the synthetic table's cosine distribution
-        # (max pairwise sim ~0.49): 0.4 yields a real, non-vacuous result
-        return embedding_dup_pairs(e, dim=dim, threshold=0.4, n_planes=4).select(
-            "l_id", "r_id", F.round(F.col("cos_sim"), 4).alias("cos_sim")
-        )
+    # path plus Lloyd iterations)
 
     # -- two-dataset linkage: blocked L x R pairs + similarity (the
     # reference's primary workload shape: dataL vs dataR) ------------------
@@ -696,17 +679,6 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         d = _t(spark, sf_dir, "documents")
         return repetition_stats(d, line_sep=r"\s+")
-
-    # -- substring-level cross-document dedup: ≥k-token spans repeated
-    # across documents (boilerplate the document-level dedup family
-    # cannot see). Spark hashes span identities; the oracle uses the
-    # span STRINGS — identical counts modulo 64-bit collisions (none
-    # at oracle scale), the same contract as the LSH oracles ----------
-    def text_substring_dedup(spark, sf_dir):
-        from rlr_spark.functions.text import substring_dedup_stats
-
-        d = _t(spark, sf_dir, "documents")
-        return substring_dedup_stats(d, k=8, min_docs=2)
 
     # -- streaming replay == batch equivalence: documents split into 3
     # deterministic files, replayed through the foreachBatch incremental
@@ -835,35 +807,7 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf_dir, "documents")
         return neardup_clusters(d, jaccard_threshold=0.8)
 
-    # -- URL canonicalization dedup: deterministic raw-URL variants
-    # built from customer keys (scheme case, www, :80, trailing /,
-    # utm params, param order, fragment), grouped by canonical form ---------
-    def url_dedup(spark, sf_dir):
-        from rlr_spark.functions.web import canonical_url
-
-        c = _t(spark, sf_dir, "customer")
-        k = F.col("c_custkey")
-        raw = F.concat(
-            F.when(k % 2 == 0, F.lit("HTTP://")).otherwise(F.lit("http://")),
-            F.when(k % 5 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-            F.lit("shop-"), (k % 7).cast("string"), F.lit(".Example.COM"),
-            F.when(k % 3 == 0, F.lit(":80")).otherwise(F.lit("")),
-            F.lit("/item/"), (k % 10).cast("string"),
-            F.when(k % 4 == 0, F.lit("/")).otherwise(F.lit("")),
-            F.lit("?utm_source=mail&b="), (k % 2).cast("string"), F.lit("&a=1"),
-            F.when(k % 6 == 0, F.lit("#frag")).otherwise(F.lit("")),
-        )
-        return (
-            c.select(raw.alias("raw_url"))
-            .select("raw_url", canonical_url(F.col("raw_url")).alias("canonical_url"))
-            .groupBy("canonical_url")
-            .agg(
-                F.count("*").alias("n_pages"),
-                F.countDistinct("raw_url").alias("n_variants"),
-            )
-        )
-
-    # deterministic PII planting shared by text_pii and corpus_filter
+    # deterministic PII planting for corpus_filter
     # (the corpus itself is clean word soup)
     def _planted_pii_text() -> F.Column:
         did = F.col("doc_id")
@@ -883,20 +827,6 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     (did % 250 + 1).cast("string"),
                 ),
             ).otherwise(F.lit("")),
-        )
-
-    # -- PII scan + redaction over documents with deterministically
-    # planted emails/phones/IPs; redacted text value-checked via md5 --------
-    def text_pii(spark, sf_dir):
-        from rlr_spark.functions.text import pii_counts, pii_redact
-
-        d = _t(spark, sf_dir, "documents")
-        planted = _planted_pii_text()
-        p = pii_counts(planted)
-        return d.select(
-            "doc_id",
-            *[col.alias(name) for name, col in p.items()],
-            F.md5(pii_redact(planted)).alias("redacted_md5"),
         )
 
     # -- the composed corpus filter — the decision a training-data
@@ -945,16 +875,6 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         edges = synthetic_link_edges(d, out_degree=4)
         return pagerank(nodes, edges, out_degree=4, n_iter=10).select(
             F.col("node").alias("doc_id"), "rank"
-        )
-
-    # -- per-node triangle counts on the same link graph: degree-ordered
-    # wedge join (each wedge enumerated once, at its min-degree corner) ---
-    def graph_triangles(spark, sf_dir):
-        from rlr_spark.functions.graph import synthetic_link_edges, triangle_counts
-
-        d = _t(spark, sf_dir, "documents")
-        return triangle_counts(synthetic_link_edges(d, out_degree=4)).select(
-            F.col("node").alias("doc_id"), "n_tri"
         )
 
     # -- sampling, union-tagged into one driver row (registry budget):
@@ -1095,11 +1015,9 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return out.orderBy(F.desc("n_docs"), "tok").limit(50)
 
-    # -- interpolated bigram LM (interpolates with the unigram MLE, so
-    # one driver row value-checks BOTH LM surfaces — registry budget;
-    # the standalone unigram scorer keeps its pytest + oracle-tool
-    # coverage): token order matters, so vocabulary-plausible gibberish
-    # separates out -----------------------------------------------------
+    # -- interpolated bigram LM (backed off to the corpus unigram MLE):
+    # token order matters, so vocabulary-plausible gibberish separates
+    # out -----------------------------------------------------------------
     def text_bigram_lm(spark, sf_dir):
         from rlr_spark.functions.text import bigram_logprob
 
@@ -1225,24 +1143,19 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_minhash": dedup_minhash,
         "dedup_prefix_join": dedup_prefix_join,
         "dedup_simhash": dedup_simhash,
-        "emb_neardup": emb_neardup,
         "lr_linkage": lr_linkage,
         "em_weights": em_weights,
         "text_quality": text_quality,
         "packet_roundtrip": packet_roundtrip,
         "decontaminate": decontaminate,
         "text_repetition": text_repetition,
-        "text_substring_dedup": text_substring_dedup,
         "stream_neardup_replay": stream_neardup_replay,
         "stream_entities": stream_entities,
         "emb_ann_ivf_trained": emb_ann_ivf_trained,
         "dedup_clusters": dedup_clusters,
-        "url_dedup": url_dedup,
-        "text_pii": text_pii,
         "corpus_filter": corpus_filter,
         "vocab_stats": vocab_stats,
         "graph_pagerank": graph_pagerank,
-        "graph_triangles": graph_triangles,
         "samples": samples,
         "bm25_topk": bm25_topk,
         "events_sessionize": events_sessionize,
@@ -1268,30 +1181,23 @@ DRIVER_QUERY_BUDGET = 50
 # representatives — they keep full oracle coverage here.
 _EXTENDED = (
     "dedup_ngram",
-    "text_unigram_lm",
     "emb_ann_ivf",
-    "emb_ann_lsh",
     "entity_history",
     # round-6 rotation: newest/least-proven operators take the driver's
     # 50 checked rows (review_uncertainty, threshold_sweep,
     # blocking_quality promoted; meta_blocking, monge_elkan, dsir_sample
-    # new); these six are r5-driver-green with their families still
+    # new); these three are r5-driver-green with their families still
     # represented in the driver window, so they keep full oracle
     # coverage here (tools/check_oracles.py checks BOTH sets each round)
-    "text_pii",
-    "url_dedup",
     "vocab_stats",
     "text_repetition",
-    "emb_neardup",
     "text_quality",
     # new this round, defined in the secondary builder
     "fs_tf_score",
     "cluster_bcubed",
     "linkage_waterfall",
-    "hll_tokens",
     "cluster_ari",
     "group_links",
-    "graph_kcore",
     "fs_patterns",
     # rotated OUT of the driver window (families keep a driver row:
     # a3_completion / emb_ann_ivf_trained / ppl_buckets subsumes the
@@ -1303,7 +1209,7 @@ _EXTENDED = (
     "text_bigram_lm",
     # round-6 session-2 rotation: five new ER operators (c2_damerau,
     # link_cascade, fs_null_levels, cluster_vmeasure, unlinkables) take
-    # driver rows; these five are r5-DRIVER-green with their families
+    # driver rows; these four are r5-DRIVER-green with their families
     # still in the window (dedup_minhash+dedup_clusters for near-dup,
     # j1 for pair joins, graph_pagerank for graph, c3_fs_score+
     # fs_null_levels for FS fitting), and keep full three-way coverage
@@ -1311,22 +1217,17 @@ _EXTENDED = (
     "dedup_prefix_join",
     "dedup_simhash",
     "j2_grouped_projection",
-    "graph_triangles",
     "em_weights",
     # (same rotation, batch 2: clk_dice + soft_tfidf + graph_adamic_adar
     # take driver rows; near-dup family keeps dedup_exact/dedup_minhash
     # in-window, text family keeps text_stats/corpus_filter)
     "dedup_clusters",
-    "text_substring_dedup",
     "text_lang_id",
     # (batch 3: token_sort + cluster_stability take driver rows —
     # text_stats' column ops re-exercised by corpus_filter/text_chunks,
-    # lr_linkage's LR blocking shape by link_cascade + clk_dice;
-    # rrf_fusion starts in the extended set, retrieval family keeps
-    # bm25_topk in-window)
+    # lr_linkage's LR blocking shape by link_cascade + clk_dice)
     "text_stats",
     "lr_linkage",
-    "rrf_fusion",
     # c2_numeric starts extended (comparator family well-repped in-window)
     "c2_numeric",
     "transitivity_audit",
@@ -1351,7 +1252,6 @@ def extended_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from rlr_spark.functions.dedup import ngram_jaccard
-    from rlr_spark.functions.embeddings import lsh_topk
 
     # -- dedup: char-3-gram Jaccard over sampled pairs ------------------------
     def dedup_ngram(spark, sf_dir):
@@ -1365,14 +1265,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "ngram_jaccard"
             ),
         )
-
-    # -- corpus unigram LM scoring: per-doc average token log-prob under
-    # the corpus unigram distribution (standalone; the registry row
-    # text_bigram_lm interpolates with this distribution) ----------------
-    def text_unigram_lm(spark, sf_dir):
-        from rlr_spark.functions.text import unigram_logprob
-
-        return unigram_logprob(_t(spark, sf_dir, "documents"))
 
     def emb_ann_ivf(spark, sf_dir):
         from rlr_spark.functions.embeddings import ivf_topk, train_ivf_centroids
@@ -1388,18 +1280,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # whole IVF probe path (assignment, n_probe cells, in-cell top-k).
         centroids = train_ivf_centroids(e, k=8, n_iter=0)
         return ivf_topk(e, q, centroids, k=5, n_probe=3).select(
-            "query_id", "vec_id", F.round(F.col("cos_sim"), 4).alias("cos_sim"), "rank"
-        )
-
-    def emb_ann_lsh(spark, sf_dir):
-        e = _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        q = e.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        dim = len(e.select("embedding").first()[0])
-        return lsh_topk(e, q, dim=dim, k=5, n_planes=4).select(
             "query_id", "vec_id", F.round(F.col("cos_sim"), 4).alias("cos_sim"), "rank"
         )
 
@@ -1555,25 +1435,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [("exact_text", exact), ("jaccard_0.3", fuzzy)], score_col="score"
         )
 
-    # -- deterministic HyperLogLog: per-lang distinct-token estimate
-    # next to the exact count (functions/sketches.py — md5-derived,
-    # exact-in-IEEE fold, so DuckDB rebuilds the identical estimate) ---------
-    def hll_tokens(spark, sf_dir):
-        from rlr_spark.functions.sketches import hll_distinct
-        from rlr_spark.functions.similarity import norm_tokens
-
-        toks = (
-            _t(spark, sf_dir, "documents")
-            .select("lang", F.explode(norm_tokens(F.col("text"))).alias("tok"))
-        )
-        est = hll_distinct(toks, ["lang"], "tok", p=6)
-        exact = toks.groupBy("lang").agg(
-            F.countDistinct("tok").alias("exact_distinct")
-        )
-        return est.join(exact, "lang").select(
-            "lang", "hll_estimate", "exact_distinct"
-        )
-
     # -- sparse TF-IDF cosine all-pairs (functions/tfidf.py): the
     # weighted lexical similarity join between PPJoin (set overlap) and
     # embedding ANN (dense); exact mode so the oracle is unconditional --------
@@ -1680,21 +1541,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return group_linkage(links, lsz, rsz).select(
             "l_group", "r_group", "n_matched", "group_sim"
         )
-
-    # -- k-core of the synthetic link graph (functions/graph.py):
-    # iterative peeling — not recursive-CTE-expressible, so rows-only
-    # here; the hard check is test_graph_retrieval.py's independent
-    # peeling reference on random graphs -------------------------------------
-    def graph_kcore(spark, sf_dir):
-        from rlr_spark.functions.graph import kcore, synthetic_link_edges
-
-        d = _t(spark, sf_dir, "documents")
-        edges = synthetic_link_edges(d, out_degree=4).select(
-            F.col("src").alias("u"), F.col("dst").alias("v")
-        )
-        # k=5 peels a nontrivial boundary (486/500 at sf0.01) without
-        # the full cascade-to-empty of k>=6 on this 4-out-degree graph
-        return kcore(edges, k=5)
 
     # -- FS agreement-pattern diagnostics (operators/scoring.py): the
     # observed-vs-model-expected pattern table; gammas decoded from the
@@ -1901,16 +1747,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return cluster_stability(sc, thresholds=[0.0, 5.0, 8.0])
 
-    # -- reciprocal-rank fusion (functions/retrieval.py): per-record
-    # shortlist fused from incomparable comparator scales --------------------
-    def rrf_fusion(spark, sf_dir):
-        from rlr_spark.functions.retrieval import rrf_fuse
-
-        sc = _fs_scored_pairs(spark, sf_dir).select(
-            "l_id", "r_id", "jaccard", "fs_score"
-        )
-        return rrf_fuse(sc, by=["jaccard", "fs_score"], k=60, top=3)
-
     # -- numeric tolerance levels (functions/similarity.py): Splink-style
     # amount comparator over blocked customer-supplier balances --------------
     def c2_numeric(spark, sf_dir):
@@ -1990,9 +1826,7 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     return {
         "dedup_ngram": dedup_ngram,
-        "text_unigram_lm": text_unigram_lm,
         "emb_ann_ivf": emb_ann_ivf,
-        "emb_ann_lsh": emb_ann_lsh,
         "review_uncertainty": review_uncertainty,
         "threshold_sweep": threshold_sweep,
         "blocking_quality": blocking_quality,
@@ -2001,13 +1835,11 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cluster_bcubed": cluster_bcubed,
         "match_one_to_one": match_one_to_one,
         "linkage_waterfall": waterfall,
-        "hll_tokens": hll_tokens,
         "tfidf_cosine": tfidf_cosine,
         "phonetic_blocks": phonetic_blocks,
         "ppl_buckets": ppl_buckets,
         "cluster_ari": cluster_ari,
         "group_links": group_links,
-        "graph_kcore": graph_kcore,
         "fs_patterns": fs_patterns,
         "c2_damerau": c2_damerau,
         "link_cascade": link_cascade,
@@ -2019,7 +1851,6 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_adamic_adar": graph_adamic_adar,
         "token_sort": token_sort,
         "cluster_stability": cluster_stability_q,
-        "rrf_fusion": rrf_fusion,
         "c2_numeric": c2_numeric,
         "transitivity_audit": transitivity_audit_q,
         "blocking_scheme": blocking_scheme,
@@ -2027,8 +1858,8 @@ def _secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def extended_oracle_sql() -> dict[str, str]:
-    # entries absent from the oracle dict (iterative / non-SQL ops,
-    # e.g. graph_kcore) get the rows-only check in tools/check_oracles.py
+    # entries absent from the oracle dict (the learned blocking_scheme)
+    # get the rows-only check in tools/check_oracles.py
     full = _oracle_sql_full()
     return {k: full[k] for k in _EXTENDED if k in full}
 
@@ -2088,48 +1919,10 @@ def _fs_patterns_oracle() -> str:
     )
 
 
-def _hll_tokens_oracle() -> str:
-    """Per-lang HLL distinct-token estimate + exact, via the generated
-    sketch SQL (functions/sketches.py hll_sql — same constants as the
-    Spark plan). Token CTE mirrors norm_tokens: trim+lower, \\s+ split,
-    per-doc distinct, empty/NULL text yields no rows."""
-    from rlr_spark.functions.sketches import hll_sql
-
-    toks = (
-        "(SELECT lang, unnest(list_distinct("
-        "string_split_regex(trim(lower(text)), '\\s+'))) AS tok "
-        "FROM documents "
-        "WHERE text IS NOT NULL AND trim(lower(text)) <> '') t"
-    )
-    inner = hll_sql(toks, ["lang"], "tok", p=6)
-    return f"""
-        WITH est AS ({inner}),
-        exact AS (
-          SELECT lang, count(DISTINCT tok) AS exact_distinct
-          FROM {toks}2 GROUP BY lang)
-        SELECT est.lang, hll_estimate, exact_distinct
-        FROM est JOIN exact USING (lang)
-    """
-
-
 def _bm25_oracle() -> str:
     from rlr_spark.functions.retrieval import bm25_topk_sql
 
     return bm25_topk_sql(["spark", "hash", "window"], topk=20)
-
-
-def _triangles_oracle() -> str:
-    from rlr_spark.functions.graph import triangle_counts_sql
-
-    edges = """
-        SELECT doc_id AS src,
-               ('0x' || substr(md5(doc_id::VARCHAR || ':' || j::VARCHAR), 1, 8))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst
-        FROM documents, range(4) t(j)
-    """
-    return (
-        f"SELECT node AS doc_id, n_tri FROM ({triangle_counts_sql(edges)})"
-    )
 
 
 def _samples_oracle() -> str:
@@ -2223,18 +2016,6 @@ def _oracle_sql_full() -> dict[str, str]:
             "THEN (1::BIGINT << b) ELSE 0 END))::BIGINT"
         )
 
-    # deterministic hyperplane j over dim=64 (mirrors embeddings._plane)
-    def _plane(j: int) -> str:
-        return (
-            "list_transform(range(64), i -> "
-            f"((i * 2654435761 + {j} * 40503 + 7) % 1021 - 510)::DOUBLE)"
-        )
-
-    _bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, {_plane(j)}) >= 0 THEN {1 << (3 - j)} ELSE 0 END)"
-        for j in range(4)
-    )
-
     _BRUTE_JAC_SQL = """
         WITH d AS (
           SELECT doc_id,
@@ -2257,9 +2038,6 @@ def _oracle_sql_full() -> dict[str, str]:
     from rlr_spark.functions.text import EMAIL_RE as _EMAIL_RE
     from rlr_spark.functions.text import IPV4_RE as _IPV4_RE
     from rlr_spark.functions.text import PHONE_RE as _PHONE_RE
-    from rlr_spark.functions.web import canonical_url_sql
-
-    _canon_url_sql = canonical_url_sql("raw_url")
 
     ngram = (
         "list_distinct(list_transform(range(1, greatest(length(lower({c}))-2, 0)+1), "
@@ -2576,38 +2354,6 @@ def _oracle_sql_full() -> dict[str, str]:
             FROM s a JOIN s b ON a.doc_id < b.doc_id
             WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3
         """,
-        "emb_ann_lsh": f"""
-            -- independent SQL reimplementation of the deterministic
-            -- hyperplane bucketing (embeddings._plane / hyperplane_bucket):
-            -- same integer plane formula, same sign bits (plane 0 = MSB),
-            -- bucket-restricted exact cosine top-5
-            WITH b AS (
-              SELECT vec_id, embedding::DOUBLE[] AS v,
-                     ({_bucket}) AS bucket
-              FROM embeddings),
-            q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 3),
-            scored AS (
-              SELECT q.query_id, c.vec_id, list_cosine_similarity(q.qv, c.v) AS cs
-              FROM b c JOIN q ON c.bucket = q.bucket),
-            ranked AS (
-              SELECT query_id, vec_id, round(cs, 4) AS cos_sim,
-                     row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, vec_id) AS rank
-              FROM scored)
-            SELECT query_id, vec_id, cos_sim, rank::INTEGER AS rank
-            FROM ranked WHERE rank <= 5
-        """,
-        "emb_neardup": f"""
-            -- same hyperplane bucketing as emb_ann_lsh; near-dup pairs =
-            -- same-bucket candidates with exact cosine >= 0.4
-            WITH b AS (
-              SELECT vec_id, embedding::DOUBLE[] AS v,
-                     ({_bucket}) AS bucket
-              FROM embeddings)
-            SELECT l.vec_id AS l_id, r.vec_id AS r_id,
-                   round(list_cosine_similarity(l.v, r.v), 4) AS cos_sim
-            FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-            WHERE list_cosine_similarity(l.v, r.v) >= 0.4
-        """,
         "emb_ann_ivf": """
             -- independent SQL reimplementation of the IVF probe with the
             -- first-k quantizer (train_ivf_centroids n_iter=0): centroid c =
@@ -2809,35 +2555,6 @@ def _oracle_sql_full() -> dict[str, str]:
                               ELSE 2.0 * t2.top_cnt::DOUBLE / b.n_tok::DOUBLE END, 6) AS top2gram_mass
             FROM base b LEFT JOIN top2 t2 USING (doc_id)
         """,
-        "text_substring_dedup": r"""
-            -- same window construction as the Spark side (8-token
-            -- sliding spans over whitespace tokens, distinct per doc);
-            -- identity is the span string here vs its hash there
-            WITH toks AS (
-              SELECT doc_id,
-                     CASE WHEN trim(coalesce(text, '')) = '' THEN []::VARCHAR[]
-                          ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-              FROM documents),
-            spans0 AS (
-              SELECT doc_id, unnest(CASE WHEN len(t) >= 8
-                       THEN list_transform(range(1, len(t) - 6),
-                              i -> array_to_string(list_slice(t, i, i + 7), ' '))
-                       ELSE []::VARCHAR[] END) AS w
-              FROM toks),
-            spans AS (SELECT DISTINCT doc_id, w FROM spans0),
-            freq AS (SELECT w, count(*) AS d FROM spans GROUP BY w),
-            per AS (
-              SELECT s.doc_id, count(*) AS n_spans,
-                     sum(CASE WHEN f.d >= 2 THEN 1 ELSE 0 END) AS n_shared
-              FROM spans s JOIN freq f USING (w) GROUP BY s.doc_id)
-            SELECT d.doc_id,
-                   coalesce(p.n_spans, 0)::BIGINT AS n_spans,
-                   coalesce(p.n_shared, 0)::BIGINT AS n_shared_spans,
-                   round(CASE WHEN coalesce(p.n_spans, 0) = 0 THEN 0.0
-                              ELSE p.n_shared::DOUBLE / p.n_spans::DOUBLE
-                         END, 6) AS shared_span_frac
-            FROM documents d LEFT JOIN per p USING (doc_id)
-        """,
         "stream_neardup_replay": _BRUTE_JAC_SQL,
         "stream_entities": f"""
             WITH RECURSIVE p AS ({_BRUTE_JAC_SQL}),
@@ -2868,39 +2585,6 @@ def _oracle_sql_full() -> dict[str, str]:
             cl AS (SELECT node AS doc_id, min(comp) AS cluster_id
                    FROM walk GROUP BY node)
             SELECT doc_id, cluster_id, (doc_id = cluster_id) AS keep FROM cl
-        """,
-        "url_dedup": f"""
-            WITH raws AS (
-              SELECT (CASE WHEN c_custkey % 2 = 0 THEN 'HTTP://' ELSE 'http://' END)
-                  || (CASE WHEN c_custkey % 5 = 0 THEN 'WWW.' ELSE '' END)
-                  || 'shop-' || (c_custkey % 7)::VARCHAR || '.Example.COM'
-                  || (CASE WHEN c_custkey % 3 = 0 THEN ':80' ELSE '' END)
-                  || '/item/' || (c_custkey % 10)::VARCHAR
-                  || (CASE WHEN c_custkey % 4 = 0 THEN '/' ELSE '' END)
-                  || '?utm_source=mail&b=' || (c_custkey % 2)::VARCHAR || '&a=1'
-                  || (CASE WHEN c_custkey % 6 = 0 THEN '#frag' ELSE '' END) AS raw_url
-              FROM customer)
-            SELECT {_canon_url_sql} AS canonical_url,
-                   count(*)::BIGINT AS n_pages,
-                   count(DISTINCT raw_url)::BIGINT AS n_variants
-            FROM raws GROUP BY 1
-        """,
-        "text_pii": f"""
-            WITH t AS (
-              SELECT doc_id, {planted_sql} AS pt
-              FROM documents)
-            SELECT doc_id,
-                   len(regexp_extract_all(pt, '{_EMAIL_RE}'))::INTEGER AS n_emails,
-                   len(regexp_extract_all(pt, '{_PHONE_RE}'))::INTEGER AS n_phones,
-                   len(regexp_extract_all(pt, '{_IPV4_RE}'))::INTEGER AS n_ipv4,
-                   (len(regexp_extract_all(pt, '{_EMAIL_RE}'))
-                    + len(regexp_extract_all(pt, '{_PHONE_RE}'))
-                    + len(regexp_extract_all(pt, '{_IPV4_RE}'))) > 0 AS has_pii,
-                   md5(regexp_replace(regexp_replace(regexp_replace(pt,
-                       '{_EMAIL_RE}', '[EMAIL]', 'g'),
-                       '{_PHONE_RE}', '[PHONE]', 'g'),
-                       '{_IPV4_RE}', '[IP]', 'g')) AS redacted_md5
-            FROM t
         """,
         "emb_ann_ivf_trained": """
             -- one Lloyd round mirrored exactly: first-8 init, strict->
@@ -2995,7 +2679,6 @@ def _oracle_sql_full() -> dict[str, str]:
         """,
         "graph_pagerank": _pagerank_oracle(),
         "bm25_topk": _bm25_oracle(),
-        "graph_triangles": _triangles_oracle(),
         "samples": _samples_oracle(),
         "events_sessionize": _sessionize_oracle(),
         "events_asof": _asof_oracle(),
@@ -3048,21 +2731,6 @@ def _oracle_sql_full() -> dict[str, str]:
             FROM stats, total
             ORDER BY n_docs DESC, tok
             LIMIT 50
-        """,
-        "text_unigram_lm": """
-            WITH tok AS (
-              SELECT doc_id, unnest(string_split(trim(lower(text)), ' ')) AS tok
-              FROM documents WHERE trim(lower(text)) <> ''),
-            dt AS (
-              SELECT doc_id, tok, count(*)::BIGINT AS cnt
-              FROM tok GROUP BY doc_id, tok),
-            occ AS (SELECT tok, sum(cnt)::BIGINT AS n_occ FROM dt GROUP BY tok),
-            total AS (SELECT sum(n_occ)::DOUBLE AS n FROM occ)
-            SELECT doc_id, sum(cnt)::BIGINT AS n_tokens,
-                   round(sum(cnt::DOUBLE * ln(n_occ::DOUBLE / total.n))
-                         / sum(cnt)::DOUBLE, 6) AS avg_logprob
-            FROM dt JOIN occ USING (tok), total
-            GROUP BY doc_id
         """,
         "text_bigram_lm": _BIGRAM_SQL,
         "pack_sequences": """
@@ -3423,7 +3091,6 @@ def _oracle_sql_full() -> dict[str, str]:
               FROM u)
             SELECT l_id, r_id, score, pass_name, pass_rank FROM rn WHERE rn = 1
         """,
-        "hll_tokens": _hll_tokens_oracle(),
         "tfidf_cosine": _tfidf_cosine_oracle(),
         "phonetic_blocks": _phonetic_blocks_oracle(),
         # true Damerau-Levenshtein (functions/similarity.py) — DuckDB's
@@ -3679,31 +3346,6 @@ def _oracle_sql_full() -> dict[str, str]:
                    coalesce(nl, 0)::BIGINT AS n_linked_records,
                    coalesce(mx, 0)::BIGINT AS max_cluster_size
             FROM th LEFT JOIN agg ON agg.t = th.t
-        """,
-        # RRF fusion (functions/retrieval.py): per-left-record rank
-        # windows, ties on r_id asc in both engines
-        "rrf_fusion": f"""
-            WITH sc AS (
-              SELECT l_id, r_id, jaccard, fs_score FROM ({_FS_SQL})),
-            rk AS (
-              SELECT l_id, r_id,
-                row_number() OVER (PARTITION BY l_id
-                  ORDER BY jaccard DESC, r_id ASC) AS r1,
-                row_number() OVER (PARTITION BY l_id
-                  ORDER BY fs_score DESC, r_id ASC) AS r2
-              FROM sc),
-            fused AS (
-              SELECT l_id, r_id,
-                     1.0::DOUBLE / (60 + r1) + 1.0::DOUBLE / (60 + r2) AS s
-              FROM rk),
-            cut AS (
-              SELECT l_id, r_id, s,
-                row_number() OVER (PARTITION BY l_id
-                  ORDER BY s DESC, r_id ASC) AS fused_rank
-              FROM fused)
-            SELECT l_id, r_id, round(s, 6) AS rrf_score,
-                   fused_rank::INTEGER AS fused_rank
-            FROM cut WHERE fused_rank <= 3
         """,
         # numeric tolerance gamma (functions/similarity.py): identical
         # IEEE double arithmetic in both engines

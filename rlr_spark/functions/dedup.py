@@ -1,10 +1,10 @@
 """Deduplication operators for training-data pipelines.
 
 Exact (hash-groupBy), MinHash-LSH (reusing the blocking machinery),
-SimHash (vectorized pandas UDF), character-n-gram Jaccard, and
-embedding-cosine near-dup. Each is a DataFrame-in/DataFrame-out operator
-designed for the 100 TB case: hash-partitioned groupBys, LSH banding to
-avoid all-pairs, and no driver-side loops.
+SimHash (vectorized pandas UDF) and character-n-gram Jaccard. Each is
+a DataFrame-in/DataFrame-out operator designed for the 100 TB case:
+hash-partitioned groupBys, LSH banding to avoid all-pairs, and no
+driver-side loops.
 """
 
 from __future__ import annotations
@@ -40,13 +40,6 @@ def exact_dup_groups(
     return hashed.join(groups, "text_md5").select(
         id_col, "text_md5", "dup_group_min_id", "group_size"
     )
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the min-id representative of each exact-duplicate group."""
-    groups = exact_dup_groups(df, id_col, text_col)
-    keep = groups.where(F.col(id_col) == F.col("dup_group_min_id")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -414,23 +407,3 @@ def ngram_jaccard(l: Column, r: Column, n: int = 3) -> Column:
     union = F.size(F.array_union(lg, rg)).cast("double")
     inter = F.size(F.array_intersect(lg, rg)).cast("double")
     return F.coalesce(F.try_divide(inter, union), F.lit(0.0))
-
-
-def ngram_dup_pairs(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Verify candidate (l_id, r_id) pairs by character-n-gram Jaccard."""
-    lh = df.select(F.col(id_col).alias("l_id"), F.col(text_col).alias("_lt"))
-    rh = df.select(F.col(id_col).alias("r_id"), F.col(text_col).alias("_rt"))
-    return (
-        pairs.join(lh, "l_id")
-        .join(rh, "r_id")
-        .withColumn("ngram_jaccard", ngram_jaccard(F.col("_lt"), F.col("_rt"), n))
-        .where(F.col("ngram_jaccard") >= threshold)
-        .select("l_id", "r_id", "ngram_jaccard")
-    )

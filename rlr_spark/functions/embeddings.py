@@ -1,10 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the exact baseline (pure column ops:
-``zip_with`` dot products inside codegen), and a deterministic
-random-hyperplane LSH bucketing as the scale path — at 10^9 vectors the
-cross join is infeasible; LSH reduces each probe to one bucket's worth
-of candidates.
+``zip_with`` dot products inside codegen), and an IVF probe (coarse
+k-means cells) as the scale path — at 10^9 vectors the cross join is
+infeasible; IVF reduces each probe to a few cells' worth of candidates.
 """
 
 from __future__ import annotations
@@ -50,59 +49,6 @@ def brute_force_topk(
         query_id_col,
         id_col,
         cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-# ---------------------------------------------------------------------------
-# Hyperplane-LSH ANN
-# ---------------------------------------------------------------------------
-
-def _plane(dim: int, j: int) -> list[float]:
-    """Deterministic pseudo-random hyperplane j: a fixed integer formula
-    (no RNG state, reproducible across engines/sessions)."""
-    return [float(((i * 2654435761 + j * 40503 + 7) % 1021) - 510) for i in range(dim)]
-
-
-def hyperplane_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
-    """Sign-bit bucket id from n deterministic hyperplanes."""
-    bits = []
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(x) for x in _plane(dim, j)])
-        bits.append(F.when(dot(vec, plane) >= 0, F.lit(1)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket * 2 + b
-    return bucket
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's hyperplane
-    bucket, then exact cosine within it. Trades recall for a
-    2^n_planes-fold candidate reduction; at cluster scale the corpus is
-    written bucket-partitioned so a probe scans one partition."""
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_cv"),
-        hyperplane_bucket(F.col(vec_col), dim, n_planes).alias("_bucket"),
-    )
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("_qv"),
-        hyperplane_bucket(F.col(vec_col), dim, n_planes).alias("_bucket"),
-    )
-    scored = c.join(F.broadcast(q), "_bucket").select(
-        query_id_col, id_col, cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
@@ -207,33 +153,3 @@ def ivf_topk(
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def embedding_dup_pairs(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ threshold, LSH-bucketed
-    (same-bucket candidates only). Returns (l_id, r_id, cos_sim)."""
-    keyed = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_bucket(F.col(vec_col), dim, n_planes).alias("_bucket"),
-    )
-    l = keyed.select(
-        F.col(id_col).alias("l_id"), F.col(vec_col).alias("_lv"), "_bucket"
-    )
-    r = keyed.select(
-        F.col(id_col).alias("r_id"), F.col(vec_col).alias("_rv"), "_bucket"
-    )
-    return (
-        l.join(r, "_bucket")
-        .where(F.col("l_id") < F.col("r_id"))
-        .withColumn("cos_sim", cosine(F.col("_lv"), F.col("_rv")))
-        .where(F.col("cos_sim") >= threshold)
-        .select("l_id", "r_id", "cos_sim")
-    )

@@ -175,156 +175,6 @@ def pagerank_sql(
     )
 
 
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle counts over an undirected simple graph.
-
-    ``edges``: (src, dst) — multi-edges and self-loops are removed, each
-    undirected edge canonicalized to one (lo, hi) row.
-
-    The join is DEGREE-ORDERED (the standard scalable form): orient each
-    edge from its lower-degree endpoint to the higher (ties by id), so
-    every wedge is enumerated exactly once at its lowest-degree vertex.
-    A star hub of degree D — the web-graph reality — contributes zero
-    wedges from the hub itself (all its edges point INTO it), bounding
-    the wedge set by sum(min_deg(u,v)) ≈ m^1.5 instead of sum(deg^2),
-    which is what makes this runnable at crawl scale.
-
-    Returns (node, n_tri) for every node appearing in an edge, zeros
-    included. One aggregation + two shuffle joins on edge keys.
-    """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("lo").alias("node"))
-        .unionAll(und.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    dl = deg.select(F.col("node").alias("lo"), F.col("deg").alias("_dl"))
-    dr = deg.select(F.col("node").alias("hi"), F.col("deg").alias("_dh"))
-    # orient lower-degree -> higher-degree (ties: smaller id first)
-    fwd = (
-        und.join(dl, "lo")
-        .join(dr, "hi")
-        .select(
-            F.when(
-                (F.col("_dl") < F.col("_dh"))
-                | ((F.col("_dl") == F.col("_dh")) & (F.col("lo") < F.col("hi"))),
-                F.struct(F.col("lo").alias("u"), F.col("hi").alias("v")),
-            )
-            .otherwise(F.struct(F.col("hi").alias("u"), F.col("lo").alias("v")))
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-    )
-    # wedges at u: (u->v1, u->v2), v1 < v2; closed iff (v1,v2) is an edge
-    w1 = fwd.select(F.col("u"), F.col("v").alias("v1"))
-    w2 = fwd.select(F.col("u"), F.col("v").alias("v2"))
-    wedges = w1.join(w2, "u").where(F.col("v1") < F.col("v2"))
-    tri = wedges.join(
-        und.select(F.col("lo").alias("v1"), F.col("hi").alias("v2")),
-        ["v1", "v2"],
-    )
-    per_corner = (
-        tri.select(F.col("u").alias("node"))
-        .unionAll(tri.select(F.col("v1").alias("node")))
-        .unionAll(tri.select(F.col("v2").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_tri"))
-    )
-    return (
-        deg.select("node")
-        .join(per_corner, "node", "left")
-        .select("node", F.coalesce(F.col("n_tri"), F.lit(0)).alias("n_tri"))
-    )
-
-
-def triangle_counts_sql(edges_sql: str) -> str:
-    """DuckDB oracle for :func:`triangle_counts` — an independent
-    formulation: count triangles directly over canonical (lo, hi) edges
-    with a < b < c ordering, then credit all three corners."""
-    return f"""
-        WITH und AS (
-          SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi
-          FROM ({edges_sql}) WHERE src <> dst),
-        nodes AS (
-          SELECT lo AS node FROM und UNION SELECT hi FROM und),
-        tri AS (
-          SELECT e1.lo AS a, e1.hi AS b, e2.hi AS c
-          FROM und e1
-          JOIN und e2 ON e2.lo = e1.hi
-          JOIN und e3 ON e3.lo = e1.lo AND e3.hi = e2.hi),
-        corners AS (
-          SELECT a AS node FROM tri
-          UNION ALL SELECT b FROM tri
-          UNION ALL SELECT c FROM tri),
-        cnt AS (SELECT node, count(*) AS n_tri FROM corners GROUP BY node)
-        SELECT n.node, coalesce(c.n_tri, 0)::BIGINT AS n_tri
-        FROM nodes n LEFT JOIN cnt c USING (node)
-    """
-
-
-def kcore(
-    edges: DataFrame,
-    k: int,
-    max_iter: int = 100,
-) -> DataFrame:
-    """Nodes of the k-core (maximal subgraph where every node has
-    degree >= k) with their in-core degree.
-
-    The standard web-graph denoiser: link-spam farms and boilerplate
-    nav structures melt out of low cores, and dense communities (the
-    entity-resolution "hub" suspects) survive high ones. Algorithm is
-    distributed peeling: repeatedly drop nodes whose CURRENT degree is
-    below k — each round is one degree aggregation + two anti-joins,
-    and the loop always terminates in <= |V| rounds (each round
-    removes >= 1 node or stops). Real graphs converge in tens of
-    rounds; ``max_iter`` bounds the pathological chain case.
-
-    Input: undirected edges (u, v), self-loops ignored, duplicate
-    edges counted once. Output: (node, core_degree).
-
-    Scale shape: degree = one map-side-combinable groupBy over the
-    shrinking edge set; removals apply as anti-joins (broadcast when
-    the peel set is small — AQE's call). The peel set and the edge set
-    are EAGERLY localCheckpoint-ed each round: the loop is inherently
-    sequential, so deferring materialization only re-runs the whole
-    prior cascade at every action (measured: the lazy variant turned a
-    10-round peel into minutes). The only driver-side signals are the
-    1-row peel count and the final result.
-    """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    lo, hi = F.least("u", "v"), F.greatest("u", "v")
-    g = (
-        edges.where(F.col("u") != F.col("v"))
-        .select(lo.alias("a"), hi.alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        deg = (
-            g.select(F.col("a").alias("node"))
-            .unionAll(g.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        low = deg.where(F.col("deg") < k).select("node").localCheckpoint(eager=True)
-        if low.isEmpty():
-            return deg.select("node", F.col("deg").alias("core_degree"))
-        g = (
-            g.join(low, g["a"] == low["node"], "left_anti")
-            .join(low, g["b"] == low["node"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-    raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
-
-
 def adamic_adar(
     edges: DataFrame,
     l_col: str = "u",
@@ -345,7 +195,7 @@ def adamic_adar(
 
     Scale shape: distinct-edges dedup, one degree groupBy, then the
     wedge enumeration is a self-join on the RIGHT node — work is
-    Σ_s deg(s)^2, the same hub-quadratic bound as triangle counting,
+    Σ_s deg(s)^2, the hub-quadratic bound of every wedge enumeration,
     so hub right-nodes must be capped/blocked upstream the same way
     blocking caps hot keys (deg(s) = 1 right-nodes drop out before the
     join: they generate no wedges and would divide by ln(1) = 0).

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def bm25_topk(
@@ -131,56 +130,3 @@ def bm25_topk_sql(
         ORDER BY score DESC, {id_col}
         LIMIT {topk}
     """
-
-
-def rrf_fuse(
-    pairs: DataFrame,
-    by: list[str],
-    group_col: str = "l_id",
-    cand_col: str = "r_id",
-    k: int = 60,
-    top: int = 3,
-    round_to: int = 6,
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack, Clarke & Buettcher 2009) of
-    several candidate rankings per left record:
-
-        rrf(c) = Σ_m 1 / (k + rank_m(c))
-
-    — the standard way to combine comparators with incomparable scales
-    (a Jaccard and an FS log-weight can't be averaged, but their RANKS
-    can) without training a weighting. Per left record the top ``top``
-    fused candidates are kept: this is the shortlist generator feeding
-    1:1 assignment or human review.
-
-    Scale shape: every window — one per metric plus the final cut — is
-    partitioned by ``group_col``, so this is ONE exchange on the left
-    id reused across windows (rank within a record's candidate list,
-    never a global sort). Ties break on ``cand_col`` ascending,
-    deterministically.
-    """
-    w = Window.partitionBy(group_col)
-    out = pairs
-    terms = []
-    for m in by:
-        rank_col = f"_rank_{m}"
-        out = out.withColumn(
-            rank_col,
-            F.row_number().over(w.orderBy(F.col(m).desc(), F.col(cand_col).asc())),
-        )
-        terms.append(F.lit(1.0) / (F.lit(k) + F.col(rank_col)))
-    rrf = terms[0]
-    for t in terms[1:]:
-        rrf = rrf + t
-    out = out.withColumn("rrf_score", rrf).withColumn(
-        "fused_rank",
-        F.row_number().over(
-            w.orderBy(F.col("rrf_score").desc(), F.col(cand_col).asc())
-        ),
-    )
-    return out.where(F.col("fused_rank") <= top).select(
-        group_col,
-        cand_col,
-        F.round("rrf_score", round_to).alias("rrf_score"),
-        "fused_rank",
-    )

@@ -151,17 +151,6 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def pii_redact(text: Column) -> Column:
-    """Replace every PII span with a typed placeholder. Order matters
-    (emails first, so their dotted domains are gone before the IPv4
-    pass); replacement is global on both engines."""
-    t = F.coalesce(text, F.lit(""))
-    t = F.regexp_replace(t, EMAIL_RE, "[EMAIL]")
-    t = F.regexp_replace(t, PHONE_RE, "[PHONE]")
-    t = F.regexp_replace(t, IPV4_RE, "[IP]")
-    return t
-
-
 def repetition_stats(
     df,
     id_col: str = "doc_id",
@@ -308,80 +297,6 @@ def repetition_stats(
     )
 
 
-def substring_dedup_stats(
-    df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_docs: int = 2,
-):
-    """Cross-document repeated-substring statistics, per document.
-
-    Training pipelines remove ≥k-token substrings repeated ACROSS
-    documents (boilerplate paragraphs, license headers, navigation
-    chrome) — a span-level signal the document-level dedup family
-    (functions/dedup.py) cannot see: two otherwise-distinct pages
-    sharing one boilerplate paragraph are nowhere near each other in
-    whole-document Jaccard.
-
-    A *span* is a sliding window of ``k`` whitespace tokens (distinct
-    per doc). A span is *shared* when it occurs in at least
-    ``min_docs`` distinct documents. Returns per doc:
-
-    - ``n_spans`` — distinct k-token spans in the doc,
-    - ``n_shared_spans`` — of those, how many are shared,
-    - ``shared_span_frac`` — their ratio (0.0 for docs with < k tokens).
-
-    Scale shape (100 TB): span identities are 8-byte hashes of the
-    token-hash slice (never strings — blocking.py:60's trick), so the
-    whole computation is explode → groupBy(span) → same-key join →
-    groupBy(doc): three shuffles on evenly-distributed hash keys,
-    O(docs × tokens) total, no pairs anywhere. A 64-bit span collision
-    can only ADD a shared flag (recall-safe, like LSH keys).
-    """
-    toks = tokens(F.col(text_col))
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    spans = F.when(
-        F.size(th) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(th) - (k - 1)),
-                lambda i: F.xxhash64(F.slice(th, i, k)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-    per_doc_spans = df.select(F.col(id_col), F.explode(spans).alias("_w"))
-    # spans are distinct within a doc, so count(*) per span == the
-    # number of distinct docs containing it (no countDistinct shuffle)
-    doc_freq = per_doc_spans.groupBy("_w").agg(F.count("*").alias("_d"))
-    per_doc = (
-        per_doc_spans.join(doc_freq, "_w")  # same key as the groupBy
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_spans"),
-            F.sum((F.col("_d") >= min_docs).cast("long")).alias("n_shared_spans"),
-        )
-    )
-    n = F.coalesce(F.col("n_spans"), F.lit(0)).cast("long")
-    s = F.coalesce(F.col("n_shared_spans"), F.lit(0)).cast("long")
-    return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")  # docs with < k tokens: zeros
-        .select(
-            F.col(id_col),
-            n.alias("n_spans"),
-            s.alias("n_shared_spans"),
-            F.round(
-                F.when(n == 0, F.lit(0.0)).otherwise(
-                    s.cast("double") / n.cast("double")
-                ),
-                6,
-            ).alias("shared_span_frac"),
-        )
-    )
-
-
 def bigram_logprob(
     df,
     id_col: str = "doc_id",
@@ -389,11 +304,11 @@ def bigram_logprob(
     lam: float = 0.7,
 ):
     """Per-document average bigram log-probability under an
-    interpolated corpus bigram model — the backoff upgrade of
-    :func:`unigram_logprob`: ``p(b|a) = lam * c(a,b)/c(a,·) +
-    (1-lam) * n_occ(b)/N``. Token order now matters, so shuffled
-    boilerplate and gibberish with corpus-typical vocabulary (which a
-    unigram LM scores identically to fluent text) separate out.
+    interpolated corpus bigram model, backed off to the corpus unigram
+    distribution: ``p(b|a) = lam * c(a,b)/c(a,·) + (1-lam) *
+    n_occ(b)/N``. Token order matters, so shuffled boilerplate and
+    gibberish with corpus-typical vocabulary (which a unigram LM scores
+    identically to fluent text) separate out.
 
     Returns (id, n_bigrams, avg_logprob2) over docs with >= 2 tokens,
     ``avg_logprob2 = sum(cnt_ab * ln(p(b|a))) / n_bigrams`` over the
@@ -402,12 +317,12 @@ def bigram_logprob(
     bigram has a strictly positive backbone probability and the
     interpolation never needs an OOV branch.
 
-    Scale: one extra explode at 2-gram granularity over
-    :func:`unigram_logprob`'s shape — distinct (doc,a,b) pre-collapse
-    before the probability joins, all groupBys/joins on evenly-hashed
-    token keys, corpus totals as 1-row broadcasts. The bigram vocab is
-    larger than unigram (~10x at web scale) but the relation stays
-    O(corpus tokens) and AQE's skew split covers the Zipf head.
+    Scale: one explode at 2-gram granularity — distinct (doc,a,b)
+    pre-collapse before the probability joins, all groupBys/joins on
+    evenly-hashed token keys, corpus totals as 1-row broadcasts. The
+    bigram vocab is larger than unigram (~10x at web scale) but the
+    relation stays O(corpus tokens) and AQE's skew split covers the
+    Zipf head.
     """
     t = F.trim(F.lower(F.col(text_col)))
     d = df.where(t != "").select(F.col(id_col), F.split(t, r"\s+").alias("ts"))
@@ -502,58 +417,6 @@ def fingerprint_sql(col: str = "text") -> str:
         f"list_reduce(list_prepend(0::BIGINT, list_transform(range(1, length({col})+1), "
         f"i -> ascii(substr({col}, i::INTEGER, 1)))), "
         f"(acc, ch) -> (acc * {_FP_BASE} + ch) % {_FP_MOD})"
-    )
-
-
-def unigram_logprob(
-    df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Per-document average token log-probability under the CORPUS
-    unigram distribution — the classic perplexity-proxy quality signal
-    (docs full of corpus-typical tokens score high; gibberish,
-    boilerplate-heavy, or off-distribution docs score low; the cheap
-    stand-in for a KenLM filter in LLM-data pipelines).
-
-    Returns (id, n_tokens, avg_logprob) with ``avg_logprob =
-    sum(cnt_t * ln(n_occ_t / N)) / n_tokens`` over the doc's distinct
-    tokens t (lower-cased whitespace tokens; empty docs are excluded).
-    MLE, no smoothing: every scored token exists in the corpus by
-    construction.
-
-    Scale: tokenization is one explode + two groupBys on evenly-hashed
-    keys; the probability join runs on DISTINCT (doc, token) pairs —
-    collapsing per-doc repeats first cuts the Zipf head ("the" in every
-    doc) by its in-doc multiplicity before the join shuffle, and AQE's
-    skew-join split handles the residual head. The vocab relation is
-    |vocab| rows (~1e7-1e8 at web scale — broadcastable when hashed;
-    left to the optimizer here). The corpus total N is a 1-row
-    broadcast, never a driver collect.
-    """
-    t = F.trim(F.lower(F.col(text_col)))
-    tok = df.where(t != "").select(
-        F.col(id_col), F.explode(F.split(t, r"\s+")).alias("tok")
-    )
-    # distinct (doc, token) with in-doc multiplicity
-    dt = tok.groupBy(id_col, "tok").agg(F.count("*").alias("cnt"))
-    dt = dt.localCheckpoint(eager=False)  # consumed twice (occ + join)
-    occ = dt.groupBy("tok").agg(F.sum("cnt").alias("n_occ"))
-    total = occ.agg(F.sum("n_occ").alias("N"))
-    probs = occ.crossJoin(F.broadcast(total)).select(
-        "tok", (F.col("n_occ").cast("double") / F.col("N").cast("double")).alias("p")
-    )
-    return (
-        dt.join(probs, "tok")
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("n_tokens"),
-            F.round(
-                F.sum(F.col("cnt").cast("double") * F.log("p"))
-                / F.sum("cnt").cast("double"),
-                6,
-            ).alias("avg_logprob"),
-        )
     )
 
 

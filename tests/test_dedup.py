@@ -1,12 +1,8 @@
-import math
-
 from pyspark.sql import functions as F
 
 from rlr_spark.functions.dedup import (
-    exact_dedup,
     exact_dup_groups,
     minhash_dup_pairs,
-    ngram_dup_pairs,
     ngram_jaccard,
     simhash_dup_pairs,
     simhash64_udf,
@@ -36,9 +32,6 @@ def test_exact_dup_groups(spark):
     assert groups[3][1] == 1
     assert groups[4][1] == 1 and groups[5][1] == 1
 
-    kept = sorted(r.doc_id for r in exact_dedup(docs).collect())
-    assert kept == [1, 3, 4, 5]
-
 
 def test_minhash_dup_pairs(spark):
     got = {(r.l_id, r.r_id) for r in minhash_dup_pairs(_docs(spark), jaccard_threshold=0.7).collect()}
@@ -64,15 +57,6 @@ def test_ngram_jaccard(spark):
     rows = df.select(ngram_jaccard(F.col("l"), F.col("r")).alias("j")).collect()
     assert rows[0].j == 1.0
     assert rows[1].j == 0.0
-
-
-def test_ngram_dup_pairs(spark):
-    docs = _docs(spark)
-    pairs = spark.createDataFrame([(1, 2), (1, 3), (1, 4)], "l_id long, r_id long")
-    got = {(r.l_id, r.r_id): r.ngram_jaccard for r in ngram_dup_pairs(pairs, docs, threshold=0.5).collect()}
-    assert math.isclose(got[(1, 2)], 1.0, abs_tol=1e-9)
-    assert (1, 3) in got
-    assert (1, 4) not in got
 
 
 def test_minhash_recall_vs_bruteforce(spark, web_pages_small):

@@ -2,13 +2,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from rlr_spark.functions.embeddings import (
-    brute_force_topk,
-    cosine,
-    embedding_dup_pairs,
-    hyperplane_bucket,
-    lsh_topk,
-)
+from rlr_spark.functions.embeddings import brute_force_topk, cosine
 
 
 def test_cosine(spark):
@@ -45,37 +39,6 @@ def test_brute_force_topk_exact(spark):
     top1 = {r.query_id: r for r in rows if r.rank == 1}
     for qid, r in top1.items():
         assert r.vec_id == qid and math.isclose(r.cos_sim, 1.0, abs_tol=1e-9)
-
-
-def test_lsh_topk_contains_self_and_subsets_bucket(spark):
-    corpus = _corpus(spark)
-    queries = corpus.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = lsh_topk(corpus, queries, dim=8, k=5, n_planes=4).collect()
-    top1 = {r.query_id: r for r in out if r.rank == 1}
-    for qid, r in top1.items():
-        assert r.vec_id == qid  # self always shares its own bucket
-
-
-def test_bucket_deterministic(spark):
-    corpus = _corpus(spark)
-    a = corpus.select(hyperplane_bucket(F.col("embedding"), 8, 6).alias("b")).collect()
-    b = corpus.select(hyperplane_bucket(F.col("embedding"), 8, 6).alias("b")).collect()
-    assert [r.b for r in a] == [r.b for r in b]
-    assert all(0 <= r.b < 64 for r in a)
-
-
-def test_embedding_dup_pairs(spark):
-    base = [1.0, 0.0, 0.0, 0.0]
-    near = [0.999, 0.01, 0.0, 0.0]
-    far = [0.0, 1.0, 0.0, 0.0]
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], "vec_id long, embedding array<double>"
-    )
-    got = {(r.l_id, r.r_id) for r in embedding_dup_pairs(df, dim=4, threshold=0.99, n_planes=2).collect()}
-    assert (1, 2) in got
-    assert (1, 3) not in got
 
 
 def test_ivf_topk(spark):

@@ -359,8 +359,10 @@ def test_compaction_cadence_bounds_rounds(spark, tmp_path):
     # UID space (string order is irrelevant): rank candidate nodes by
     # their uid and feed them largest-first — every merge then re-roots
     # the one growing cluster onto the new (smaller-uid) node, deepening
-    # the alias chain by one per batch
-    n_batches = 50
+    # the alias chain by one per batch. 15 batches is the smallest depth
+    # at which both bounds below discriminate: linear growth would reach
+    # 14 rounds, twice the log bound, and the chain still needs 4 rounds
+    n_batches = 15
     cand = [f"n{i:03d}" for i in range(n_batches + 10)]
     uid_of = {
         r.node: r.uid
@@ -375,7 +377,7 @@ def test_compaction_cadence_bounds_rounds(spark, tmp_path):
         upd(i, ids[i], (ids[i], ids[i - 1]))
         rounds_log.append(st.last_resolve_rounds)
 
-    # log-depth growth, not linear: 49 adversarial merges stay within
+    # log-depth growth, not linear: 14 adversarial merges stay within
     # ceil(log2(depth)) + 1 rounds, and rounds are monotone-ish
     assert max(rounds_log) <= 7, rounds_log
     assert rounds_log[-1] >= 4, rounds_log  # deep chain really did build

@@ -43,10 +43,10 @@ def test_no_orphan_oracles():
     assert not orphans, f"oracle_sql entries with no query: {sorted(orphans)}"
 
 
-# iterative / non-SQL-expressible extended entries: rows-only check in
-# tools/check_oracles.py, hard check lives in pytest (test_graph_retrieval.py
-# re-derives k-core; test_schemes.py pins the learned scheme)
-_EXTENDED_NO_ORACLE_OK = {"graph_kcore", "blocking_scheme"}
+# non-SQL-expressible extended entries: rows-only check in
+# tools/check_oracles.py, hard check lives in pytest (test_schemes.py pins
+# the learned scheme)
+_EXTENDED_NO_ORACLE_OK = {"blocking_scheme"}
 
 
 def test_extended_registries_are_consistent():
@@ -67,16 +67,11 @@ _ENTRY_GLOBS = [
 ]
 _ENTRY_MODULES = ["rlr_spark.pipeline", "rlr_spark.cli", "rlr_spark.webui"]
 
-# unreached on purpose: name/address standardisation is on-mission
-# linkage preprocessing, but no driver query reaches it yet (ROADMAP
-# oracle debt: "standardize.py has no registry row"); registering it or
-# deleting it is a decision of its own.
 # Unreached and still to delete (ROADMAP direction 1): the image-codec
 # subsystem. No linkage stage decodes an image; its removal, with its
 # ~100 tests, is split off into changes of its own. Drop each name here
 # as its module goes.
 _UNREACHED_OK = {
-    "rlr_spark.functions.standardize",
     "rlr_spark.functions.gif",
     "rlr_spark.functions.jpeg",
     "rlr_spark.functions.multimodal",
@@ -145,3 +140,64 @@ def test_every_module_is_reached():
         f"modules no entry point reaches: {sorted(unreached - _UNREACHED_OK)}; "
         f"now reached, drop from _UNREACHED_OK: {sorted(_UNREACHED_OK - unreached)}"
     )
+
+
+# named by no caller on purpose: the unreached codec modules (see
+# _UNREACHED_OK), and the numpy reference hash that test_blocking.py
+# checks Spark's xxhash64 against (a test oracle: only tests call it)
+_UNNAMED_OK = {"rlr_spark.functions.xxh64_np.xxhash64_longs"}
+
+
+def _names_used(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Names a tree refers to (``Name`` ids, ``Attribute`` attrs and the
+    names ``from ... import`` brings in), leaving out the subtree ``skip``."""
+    names = set()
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            names.update(a.name for a in node.names)
+        todo.extend(ast.iter_child_nodes(node))
+    return names
+
+
+def test_every_public_function_is_reached():
+    """Every public top-level def/class in rlr_spark/functions is named
+    outside its own definition by a non-test file: a function only its
+    tests call is dead code, as a module nothing imports is. The walk
+    parses source only; it imports nothing and starts no Spark."""
+    mods = _package_modules()
+    # what only the unreached codec modules name is dead too
+    files = {path for m, path in mods.items() if m not in _UNREACHED_OK} | {
+        os.path.join(_ROOT, p)
+        for pattern in _ENTRY_GLOBS
+        for p in glob.glob(pattern, root_dir=_ROOT)
+        if not os.path.basename(p).startswith("test_")
+    }
+    trees = {}
+    for path in files:
+        with open(path) as f:
+            trees[path] = ast.parse(f.read(), path)
+    used = {path: _names_used(tree) for path, tree in trees.items()}
+
+    unnamed = []
+    for mod, path in mods.items():
+        if not mod.startswith("rlr_spark.functions.") or mod in _UNREACHED_OK:
+            continue
+        for node in trees[path].body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            if node.name.startswith("_") or f"{mod}.{node.name}" in _UNNAMED_OK:
+                continue
+            # its own module counts only outside the definition itself
+            if node.name in _names_used(trees[path], skip=node):
+                continue
+            if not any(node.name in names for p, names in used.items() if p != path):
+                unnamed.append(f"{mod}.{node.name}")
+    assert not unnamed, f"public functions only tests name: {sorted(unnamed)}"

@@ -116,32 +116,6 @@ def test_bm25_matches_hand_computation(spark):
     assert out[2] == pytest.approx(0.0)
 
 
-def test_triangle_counts_known_graph(spark):
-    from rlr_spark.functions.graph import triangle_counts
-
-    # K4 on {1,2,3,4} (4 triangles, 3 per node) + pendant 5-1 + isolated
-    # edge 6-7; duplicate/reversed edges and a self-loop must be ignored
-    edges = [
-        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
-        (2, 1), (3, 3), (5, 1), (6, 7),
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.n_tri for r in triangle_counts(df).collect()}
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 0, 6: 0, 7: 0}
-
-
-def test_triangle_counts_star_has_none(spark):
-    """A star (hub + leaves) has wedges but zero triangles — the case
-    the degree-ordered orientation is designed to keep cheap."""
-    from pyspark.sql import functions as F
-
-    from rlr_spark.functions.graph import triangle_counts
-
-    df = spark.range(1, 9).select(F.lit(0).alias("src"), F.col("id").alias("dst"))
-    out = triangle_counts(df).collect()
-    assert all(r.n_tri == 0 for r in out) and len(out) == 9
-
-
 def test_weighted_sample_is_deterministic_and_weighted(spark):
     from pyspark.sql import functions as F
 
@@ -167,65 +141,3 @@ def test_weighted_sample_excludes_nonpositive(spark):
     ids = {r.doc_id for r in weighted_sample(df, k=10, weight=F.col("w")).collect()}
     assert ids == {1, 5}
 
-
-# ---------------------------------------------------------------------------
-# k-core
-# ---------------------------------------------------------------------------
-
-
-def _ref_kcore(edges: list[tuple[int, int]], k: int) -> dict[int, int]:
-    """Independent peeling reference: iterate removing deg<k nodes."""
-    es = {tuple(sorted(e)) for e in edges if e[0] != e[1]}
-    while True:
-        deg: dict[int, int] = {}
-        for a, b in es:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        low = {n for n, d in deg.items() if d < k}
-        if not low:
-            return deg
-        es = {(a, b) for a, b in es if a not in low and b not in low}
-
-
-def test_kcore_triangle_with_tail(spark):
-    from rlr_spark.functions.graph import kcore
-
-    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
-    df = spark.createDataFrame(edges, "u long, v long")
-    got = {r.node: r.core_degree for r in kcore(df, 2).collect()}
-    assert got == _ref_kcore(edges, 2) == {1: 2, 2: 2, 3: 2}
-
-
-def test_kcore_cascade_peel(spark):
-    """Chain 1-2-3-4-5: 2-core empty (peeling cascades end-in)."""
-    from rlr_spark.functions.graph import kcore
-
-    edges = [(1, 2), (2, 3), (3, 4), (4, 5)]
-    df = spark.createDataFrame(edges, "u long, v long")
-    assert kcore(df, 2).count() == 0
-
-
-def test_kcore_matches_reference_on_random_graph(spark):
-    import random
-
-    from rlr_spark.functions.graph import kcore
-
-    rng = random.Random(99)
-    edges = list({
-        tuple(sorted((rng.randrange(40), rng.randrange(40))))
-        for _ in range(160)
-    })
-    edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "u long, v long")
-    for k in (2, 3, 4):
-        got = {r.node: r.core_degree for r in kcore(df, k).collect()}
-        assert got == _ref_kcore(edges, k), f"k={k}"
-
-
-def test_kcore_ignores_self_loops_and_duplicates(spark):
-    from rlr_spark.functions.graph import kcore
-
-    edges = [(1, 1), (1, 2), (2, 1), (2, 3), (1, 3)]
-    df = spark.createDataFrame(edges, "u long, v long")
-    got = {r.node: r.core_degree for r in kcore(df, 2).collect()}
-    assert got == {1: 2, 2: 2, 3: 2}

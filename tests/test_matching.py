@@ -1,12 +1,9 @@
-"""1:1 assignment + linkage waterfall (operators/matching.py) and the
-deterministic HLL sketch (functions/sketches.py)."""
+"""1:1 assignment, linkage waterfall and group linkage
+(operators/matching.py)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
 from rlr_spark.operators.matching import (
     linkage_waterfall,
@@ -104,82 +101,6 @@ def test_waterfall_single_exchange_plan(spark):
         [("a", p1), ("b", p2), ("c", p3)], score_col="score"
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
-
-
-# ---------------------------------------------------------------------------
-# HLL sketch
-# ---------------------------------------------------------------------------
-
-
-def test_hll_estimate_accuracy(spark):
-    from rlr_spark.functions.sketches import hll_distinct
-
-    n = 5000
-    df = spark.range(n).select(
-        F.lit("g").alias("g"), F.concat(F.lit("v"), F.col("id")).alias("v")
-    )
-    est = hll_distinct(df, ["g"], "v", p=6).collect()[0].hll_estimate
-    # m=64 -> standard error 1.04/sqrt(64) = 13%; assert within 3 sigma
-    assert abs(est - n) / n < 0.39
-
-
-def test_hll_small_range_linear_counting(spark):
-    from rlr_spark.functions.sketches import hll_distinct
-
-    df = spark.range(10).select(
-        F.lit("g").alias("g"), F.concat(F.lit("x"), F.col("id")).alias("v")
-    )
-    est = hll_distinct(df, ["g"], "v", p=6).collect()[0].hll_estimate
-    # linear-counting regime: very tight at 10/64 load
-    assert abs(est - 10) <= 2
-
-
-def test_hll_sketch_merge_is_max(spark):
-    """Union of two sketch tables re-aggregated == sketch of the union."""
-    from rlr_spark.functions.sketches import hll_estimate, hll_sketch
-
-    a = spark.range(0, 800).select(
-        F.lit("g").alias("g"), F.col("id").cast("string").alias("v")
-    )
-    b = spark.range(400, 1200).select(
-        F.lit("g").alias("g"), F.col("id").cast("string").alias("v")
-    )
-    merged = (
-        hll_sketch(a, ["g"], "v")
-        .unionByName(hll_sketch(b, ["g"], "v"))
-        .groupBy("g", "hll_bucket")
-        .agg(F.max("hll_max_rank").alias("hll_max_rank"))
-    )
-    est_merged = hll_estimate(merged, ["g"]).collect()[0].hll_estimate
-    est_direct = (
-        hll_estimate(hll_sketch(a.unionByName(b), ["g"], "v"), ["g"])
-        .collect()[0]
-        .hll_estimate
-    )
-    assert est_merged == est_direct  # bit-identical, not just close
-
-
-def test_hll_matches_duckdb_bit_for_bit(spark, tmp_path):
-    """The engine-portability claim: DuckDB rebuilds the same estimate."""
-    import duckdb
-
-    from rlr_spark.functions.sketches import hll_distinct, hll_sql
-
-    df = spark.range(3000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        F.concat(F.lit("tok"), F.col("id")).alias("v"),
-    )
-    p = str(tmp_path / "vals.parquet")
-    df.write.parquet(p)
-    spark_rows = {
-        r.g: r.hll_estimate for r in hll_distinct(df, ["g"], "v").collect()
-    }
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW vals AS SELECT * FROM read_parquet('{p}/*.parquet')")
-    duck_rows = dict(con.execute(hll_sql("vals", ["g"], "v")).fetchall())
-    assert spark_rows == duck_rows
-    for g in spark_rows:
-        assert not math.isnan(spark_rows[g])
 
 
 # ---------------------------------------------------------------------------

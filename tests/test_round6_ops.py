@@ -281,7 +281,7 @@ def test_adamic_adar_known_graph(spark):
 
 
 # ---------------------------------------------------------------------------
-# token-sort ratio / cluster stability / RRF fusion
+# token-sort ratio / cluster stability
 # ---------------------------------------------------------------------------
 
 def test_token_sort_order_free(spark):
@@ -314,24 +314,6 @@ def test_cluster_stability_regimes(spark):
     assert rows[1.0] == (1, 3, 3)
     assert rows[5.0] == (1, 2, 2)
     assert rows[9.0] == (0, 0, 0)  # empty edge set still yields a row
-
-
-def test_rrf_fusion_per_record_shortlist(spark):
-    from rlr_spark.functions.retrieval import rrf_fuse
-
-    # metric a prefers r=10, metric b prefers r=11 -> fused ranks blend
-    pairs = spark.createDataFrame(
-        [(1, 10, 0.9, 1.0), (1, 11, 0.8, 5.0), (1, 12, 0.1, 0.1)],
-        ["l_id", "r_id", "a", "b"],
-    )
-    rows = rrf_fuse(pairs, by=["a", "b"], k=60, top=2).collect()
-    got = {(r["l_id"], r["r_id"]): r["fused_rank"] for r in rows}
-    assert len(got) == 2  # top cut applied
-    assert (1, 12) not in got  # worst on both metrics
-    # 10: ranks (1, 2) -> 1/61+1/62 ; 11: ranks (2, 1) -> same sum; tie
-    # breaks on r_id asc
-    assert got[(1, 10)] == 1
-    assert got[(1, 11)] == 2
 
 
 def test_numeric_levels(spark):

@@ -81,6 +81,30 @@ def test_fingerprint_matches_duckdb_oracle(spark):
     ).fetchone()[0] == 97 * 31 + 98
 
 
+def test_pii_counts(spark):
+    from rlr_spark.functions.text import pii_counts
+
+    df = spark.createDataFrame(
+        [
+            (1, "mail a.b-c%x@foo-bar.co.uk or x@y.io, call +1 555-123-4567"),
+            (2, "server at 192.168.0.1 and 10.0.0.255"),
+            (3, "clean text only"),
+            (4, "bare form 555-123-4567 works too"),
+        ],
+        "id long, text string",
+    )
+    p = pii_counts(F.col("text"))
+    rows = {
+        r.id: r
+        for r in df.select("id", *[c.alias(n) for n, c in p.items()]).collect()
+    }
+    assert rows[1].n_emails == 2 and rows[1].n_phones == 1 and rows[1].has_pii
+    assert rows[2].n_ipv4 == 2
+    assert rows[3].has_pii is False
+    # country code optional: the bare NANP form counts
+    assert rows[4].n_phones == 1
+
+
 def test_repetition_stats_newline_corpus(spark):
     from rlr_spark.functions.text import repetition_stats
 
@@ -120,25 +144,6 @@ def test_repetition_stats_newline_corpus(spark):
     assert r4.top2gram_count == 0 and r4.top2gram_mass == 0.0
 
 
-def test_unigram_logprob(spark):
-    """Hand-computed MLE unigram log-probs: corpus 'a a b' + 'a c' has
-    p(a)=3/5, p(b)=p(c)=1/5; doc 1 avg = (2*ln(3/5)+ln(1/5))/3."""
-    import math
-
-    from rlr_spark.functions.text import unigram_logprob
-
-    df = spark.createDataFrame(
-        [(1, "a a b"), (2, "a c"), (3, "   ")], "doc_id long, text string"
-    )
-    got = {r.doc_id: r for r in unigram_logprob(df).collect()}
-    assert set(got) == {1, 2}  # blank doc excluded
-    assert got[1].n_tokens == 3 and got[2].n_tokens == 2
-    exp1 = (2 * math.log(3 / 5) + math.log(1 / 5)) / 3
-    exp2 = (math.log(3 / 5) + math.log(1 / 5)) / 2
-    assert abs(got[1].avg_logprob - round(exp1, 6)) < 1e-9
-    assert abs(got[2].avg_logprob - round(exp2, 6)) < 1e-9
-
-
 def test_bigram_logprob(spark):
     """Hand-computed interpolated bigram log-probs on corpus
     'a b' + 'a b a' + 'solo': bigrams ab(x2), ba(x1); c(a,.)=2,
@@ -166,51 +171,17 @@ def test_bigram_logprob(spark):
 
 def test_bigram_logprob_separates_shuffled_text(spark):
     """The motivating property: a doc whose tokens are corpus-typical
-    but order-scrambled scores LOWER under the bigram model than the
-    fluent original, while the unigram model cannot tell them apart."""
-    from rlr_spark.functions.text import bigram_logprob, unigram_logprob
+    but order-scrambled (the same token multiset, which a unigram model
+    scores identically) scores LOWER under the bigram model than the
+    fluent original."""
+    from rlr_spark.functions.text import bigram_logprob
 
     fluent = "the quick brown fox jumps over the lazy dog"
     rows = [(i, fluent) for i in range(1, 9)]
     rows.append((9, "dog the lazy jumps fox over brown the quick"))  # shuffled
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uni = {r.doc_id: r.avg_logprob for r in unigram_logprob(df).collect()}
     bi = {r.doc_id: r.avg_logprob2 for r in bigram_logprob(df).collect()}
-    assert uni[9] == uni[1]  # unigram: identical token multiset
     assert bi[9] < bi[1] - 0.5  # bigram: scrambled order clearly worse
-
-
-def test_substring_dedup_finds_planted_boilerplate(spark):
-    """Two otherwise-distinct docs share one boilerplate paragraph: the
-    shared ≥k-token span must flag in BOTH docs, unique docs stay clean,
-    and a doc shorter than k tokens reports zeros (not a dropped row)."""
-    from rlr_spark.functions.text import substring_dedup_stats
-
-    boiler = "all rights reserved contact us for licensing terms and conditions apply"
-    rows = [
-        (1, "completely original article about distributed query engines . " + boiler),
-        (2, boiler + " . totally different prose describing marine biology research"),
-        (3, "a unique document with no shared content whatsoever in any span here"),
-        (4, "short doc"),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in substring_dedup_stats(df, k=8).collect()}
-    assert len(out) == 5
-    # the 11-token boilerplate yields 4 shared 8-token spans in each host
-    assert out[1].n_shared_spans == 4 and out[2].n_shared_spans == 4
-    assert out[1].n_spans > out[1].n_shared_spans  # original content unshared
-    assert out[3].n_shared_spans == 0 and out[3].n_spans > 0
-    assert out[4].n_spans == 0 and out[4].shared_span_frac == 0.0
-    assert out[5].n_spans == 0 and out[5].n_shared_spans == 0
-    # repeated span INSIDE one doc only does not count as shared
-    solo = spark.createDataFrame(
-        [(1, " ".join(["alpha beta gamma delta eps zeta eta theta"] * 3)),
-         (2, "nothing in common with the first document at all in these words")],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r for r in substring_dedup_stats(solo, k=8).collect()}
-    assert got[1].n_shared_spans == 0
 
 
 def test_pack_offsets_concat_and_chunk(spark):
