@@ -95,7 +95,6 @@ def pagerank(
     size-invariant "times uniform" form — readable and roundable at any
     corpus size, where raw 1/N-scale probabilities are not).
     """
-    spark = nodes.sparkSession
     n = nodes.select(F.count("*").alias("_n"))
     ranks = nodes.crossJoin(F.broadcast(n)).select(
         "node", (F.lit(1.0) / F.col("_n")).alias("r")

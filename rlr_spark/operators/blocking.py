@@ -9,6 +9,10 @@ column ops (xxhash64 inside ``transform`` lambdas — JVM-side, codegen,
 deterministic seeds) rather than ``pyspark.ml.feature.MinHashLSH``, whose
 ``approxSimilarityJoin`` hides salting and determinism (SURVEY.md §4.2).
 
+The two passes are one keyed relation, not a union: the domain key is
+band −1 of the LSH kernel, and a pair is emitted only from the first key
+its two pages share (:func:`candidate_pairs`).
+
 Pair materialization is a *salted self-join*: within a blocking key the
 pair set is quadratic, so a hot key (one mega-domain holding 30% of rows)
 would pin a single reducer. Each row gets a deterministic salt in
@@ -88,16 +92,23 @@ def minhash_signature(shingles: Column, num_perm: int) -> list[Column]:
 
 
 def _arrow_minhash_kernel(
-    shingle_k: int, bands: int, rows_per_band: int, emit_prefixes: bool = False
+    shingle_k: int,
+    bands: int,
+    rows_per_band: int,
+    emit_prefixes: bool = False,
+    lead_key: bool = False,
 ):
     """Build the mapInArrow generator computing per-row LSH band keys.
 
-    Input batches: (id, _th: array<long>) — token xxhash64 values, hashed
-    JVM-side (string hashing stays in codegen; fixed-width hashing comes
-    here).  Output batches: (id, blk_key: long), ``bands`` rows per input
-    row, bit-identical to the JVM struct-fold path (tested): a window's
-    shingle identity is the chained ``hashLong`` fold over its k token
-    hashes from seed 42 (== ``xxhash64(slice(th, i, k))``), permutation
+    Input batches: (id, _th: array<long>[, _lk: long]) — token xxhash64
+    values, hashed JVM-side (string hashing stays in codegen;
+    fixed-width hashing comes here), and with ``lead_key`` the row's
+    leading key.  Output batches: (id, blk_key: long[, _pfx]),
+    ``bands`` rows per input row (``1 + bands`` with ``lead_key``: the
+    leading key's own row first), bit-identical to the JVM struct-fold
+    path (tested): a window's shingle identity is the chained
+    ``hashLong`` fold over its k token hashes from seed 42
+    (== ``xxhash64(slice(th, i, k))``), permutation
     j is ``hash_int(j, hash_long(identity, 42))`` (== ``xxhash64(id,
     lit(j))``), and band key b chains ``hash_int(b, 42)`` through that
     band's ``rows_per_band`` minima (== ``xxhash64(lit(b), m...)``).
@@ -195,25 +206,40 @@ def _arrow_minhash_kernel(
                     h = hash_long(Mu[:, b * rows_per_band + r], h)
                 K[:, b] = h.view(np.int64)
 
-            idx = pa.array(np.repeat(np.arange(n, dtype=np.int64), bands))
-            cols = [ids.take(idx), pa.array(K.reshape(-1))]
+            # --- the leading key is band -1: column 0 of K ----------------
+            null = None  # where K holds a NULL (only a leading key can)
+            if lead_key:
+                lk = batch.column(2)
+                K = np.hstack([np.asarray(lk.fill_null(0), dtype=np.int64)[:, None], K])
+                if lk.null_count:
+                    null = np.zeros(K.shape, dtype=bool)
+                    null[:, 0] = ~np.asarray(lk.is_valid())
+            nk = K.shape[1]
+            idx = pa.array(np.repeat(np.arange(n, dtype=np.int64), nk))
+            cols = [
+                ids.take(idx),
+                pa.array(K.reshape(-1), mask=None if null is None else null.reshape(-1)),
+            ]
             names = [batch.schema.names[0], "blk_key"]
             if emit_prefixes:
-                # band-b row carries that doc's band keys [0, b) — the
-                # "was there an earlier colliding band" witness for
+                # key-c row carries that doc's keys [0, c) — the "was
+                # there an earlier colliding key" witness for
                 # first-collision unique pair emission (block_pairs
-                # lsh_prefix_col). Values laid out (i0 b0..b{B-1},
-                # i1 ...) to match the key rows above; row (i, b)'s
-                # slice is K[i, :b] via a lower-triangular mask.
-                tri = np.tril(np.ones((bands, bands), dtype=bool), k=-1)
-                vals = np.broadcast_to(K[:, None, :], (n, bands, bands))[
-                    :, tri
-                ].reshape(-1)
-                lens = np.tile(np.arange(bands, dtype=np.int64), n)
-                offs32 = np.zeros(n * bands + 1, dtype=np.int32)
+                # emit_once_col). Values laid out (i0 k0..k{nk-1},
+                # i1 ...) to match the key rows above; row (i, c)'s
+                # slice is K[i, :c] via a lower-triangular mask.
+                tri = np.tril(np.ones((nk, nk), dtype=bool), k=-1)
+
+                def prefixes(a):
+                    return np.broadcast_to(a[:, None, :], (n, nk, nk))[:, tri].reshape(-1)
+
+                lens = np.tile(np.arange(nk, dtype=np.int64), n)
+                offs32 = np.zeros(n * nk + 1, dtype=np.int32)
                 np.cumsum(lens, out=offs32[1:])
-                pfx = pa.ListArray.from_arrays(pa.array(offs32), pa.array(vals))
-                cols.append(pfx)
+                vals = pa.array(
+                    prefixes(K), mask=None if null is None else prefixes(null)
+                )
+                cols.append(pa.ListArray.from_arrays(pa.array(offs32), vals))
                 names.append("_pfx")
             return pa.RecordBatch.from_arrays(cols, names=names)
 
@@ -230,12 +256,13 @@ def lsh_band_keys(
     rebalance_input: bool | None = None,
     signature_impl: str = "arrow",
     emit_prefixes: bool = False,
+    lead_key: Column | None = None,
 ) -> DataFrame:
     """(id, blk_key) with blk_key = xxhash64(band_id, band row sigs) — LONG.
 
     ``emit_prefixes=True`` adds ``_pfx`` — the doc's band keys for bands
     BEFORE this row's band — enabling first-collision unique pair
-    emission in :func:`block_pairs` (``lsh_prefix_col``): a pair is
+    emission in :func:`block_pairs` (``emit_once_col``): a pair is
     emitted only from the first band where it collides, which removes
     the O(bands)-fold duplicate pair generation (and with it the pair
     dedup shuffle) that multi-band LSH otherwise pays on near-dup-heavy
@@ -243,6 +270,15 @@ def lsh_band_keys(
     row (quadratic in ``bands`` per doc), the right trade whenever
     duplicate candidate emissions dominate — i.e. whenever near-dup
     density is what motivated LSH dedup in the first place.
+
+    ``lead_key`` (a LONG Column over ``df``) is one more blocking key
+    per doc, ordered as band −1: each doc emits its own row first
+    (``_pfx`` empty), and every band row's witness starts with it
+    (``[lead, band_0 … band_{b-1}]``). A pair sharing the lead key is
+    then emitted from that row alone — how :func:`candidate_pairs`
+    folds its domain pass into this one keyed relation. A NULL lead
+    key gives a NULL-key row (no block) and a NULL witness element
+    (never an overlap).
 
     ``signature_impl``: "arrow" (default) computes window identities,
     permutation minima and band keys in a vectorized numpy kernel over
@@ -309,6 +345,7 @@ def lsh_band_keys(
         par = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < max(par // 3, 4):
             df = df.repartition(par)
+    lead = [] if lead_key is None else [lead_key.cast("long").alias("_lk")]
     if signature_impl == "arrow":
         # Arrow kernel (default, measured ~3x on the 300k key job): the
         # JVM hashes token STRINGS (codegen — variable-width hashing
@@ -321,6 +358,7 @@ def lsh_band_keys(
         shipped = df.select(
             F.col(id_col),
             F.transform(toks, lambda t: F.xxhash64(t)).alias("_th"),
+            *lead,
         )
         from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -330,13 +368,18 @@ def lsh_band_keys(
         out = StructType(fields)
         return shipped.mapInArrow(
             _arrow_minhash_kernel(
-                shingle_k, bands, rows_per_band, emit_prefixes=emit_prefixes
+                shingle_k,
+                bands,
+                rows_per_band,
+                emit_prefixes=emit_prefixes,
+                lead_key=lead_key is not None,
             ),
             out,
         )
     shingled = df.select(
         F.col(id_col),
         hashed_shingle_col(F.col(text_col), shingle_k).alias("_sh"),
+        *lead,
     )
     init = F.struct(
         *[F.lit((1 << 63) - 1).cast("long").alias(f"m{j}") for j in range(num_perm)]
@@ -350,10 +393,11 @@ def lsh_band_keys(
             ]
         )
 
+    lead_cols = [F.col("_lk")] if lead else []
     sigged = shingled.select(
-        F.col(id_col), F.aggregate("_sh", init, _fold).alias("_m")
+        F.col(id_col), F.aggregate("_sh", init, _fold).alias("_m"), *lead_cols
     )
-    band_cols = [
+    key_cols = lead_cols + [
         F.xxhash64(
             F.lit(b),
             *[
@@ -374,14 +418,14 @@ def lsh_band_keys(
                 F.array(
                     *[
                         F.struct(
-                            band_cols[b].alias("blk_key"),
+                            key.alias("blk_key"),
                             (
-                                F.array(*band_cols[:b])
-                                if b
+                                F.array(*key_cols[:c])
+                                if c
                                 else F.array().cast("array<bigint>")
                             ).alias("_pfx"),
                         )
-                        for b in range(bands)
+                        for c, key in enumerate(key_cols)
                     ]
                 )
             ).alias("_e"),
@@ -392,7 +436,7 @@ def lsh_band_keys(
             F.col("_e._pfx").alias("_pfx"),
         )
     return sigged.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("blk_key")
+        F.col(id_col), F.explode(F.array(*key_cols)).alias("blk_key")
     )
 
 
@@ -618,8 +662,8 @@ def block_pairs(
         # first-collision-only emission: drop the joined row when the
         # two witness arrays share an earlier key (codegen'd
         # arrays_overlap — NOT a higher-order function, which would run
-        # interpreted on every joined row). NULL witness (e.g. the
-        # domain pass of a multi-pass union) means "no earlier keys".
+        # interpreted on every joined row). A NULL witness means "no
+        # earlier keys".
         cond = cond & ~F.coalesce(
             F.arrays_overlap(F.col("l_" + emit_once_col), F.col("r_" + emit_once_col)),
             F.lit(False),
@@ -636,8 +680,7 @@ def block_pairs(
     ).select("l_id", "r_id")
     if not suppress:
         # a pair sharing several keys (e.g. colliding in many LSH bands
-        # without emit_once_col, or across passes of a multi-pass
-        # union) would otherwise appear once per key — canonicalize
+        # without emit_once_col) would otherwise appear once per key
         pairs = pairs.dropDuplicates(["l_id", "r_id"])
     return pairs, stats
 
@@ -758,32 +801,46 @@ def candidate_pairs(
     lsh_rows: int = 3,
     shingle_k: int = 3,
 ) -> tuple[DataFrame, list[BlockStats]]:
-    """Multi-pass union: domain pass ∪ LSH pass, deduped, canonicalized.
+    """Domain pass ∪ LSH pass, each pair emitted once, canonicalized.
 
     Mirrors the reference's comp_df contract — one row per candidate
     pair, unique on the pair key (backend/rlr.py:151-157) — but the pair
     id is the canonical ``(l_id, r_id)`` tuple, never a positional index
     (SURVEY.md §1.3: determinism at scale).
-    """
-    # both passes emit LONG keys namespaced inside the hash itself: the
-    # domain pass hashes ("domain", host), the LSH pass hashes
-    # (band_id, sigs) — disjoint argument shapes, so cross-pass
-    # collisions are ~2^-64 per key pair and only ever ADD candidates
-    domain_keyed = pages.select(
-        F.col(id_col),
-        F.xxhash64(F.lit("domain"), normalized_domain(F.col(url_col))).alias("blk_key"),
-    )
-    lsh_keyed = lsh_band_keys(
-        pages, id_col, text_col, shingle_k=shingle_k, bands=lsh_bands, rows_per_band=lsh_rows
-    )
 
-    # ONE salted self-join over the namespaced union of both passes'
-    # keys: a single shuffle + dedup replaces two pass-local joins plus
-    # a cross-pass union-dedup — at 4 executors the serial job chain was
-    # costing more than the pair computation itself.
-    keyed = domain_keyed.unionByName(lsh_keyed)
+    Both passes are ONE keyed relation: the domain key is band −1 of
+    :func:`lsh_band_keys` (``lead_key``), so each page's keys are
+    ``[domain, band_0 … band_{B-1}]`` and every key row carries the
+    keys before it as its witness (``_pfx``). :func:`block_pairs` with
+    ``emit_once_col`` then emits a pair only from the first key the two
+    pages share: no union, and no pair-dedup shuffle. When
+    ``max_block_size`` drops blocks, the dropped keys are struck from
+    every witness first, so a pair whose first shared key was dropped
+    is emitted from its next kept one; past ``_MAX_REPAIR_KEYS`` dropped
+    blocks the join falls back to emit-everywhere + dedup. The pair set
+    is the union's either way (tested).
+    """
+    # LONG keys namespaced inside the hash itself: the domain key hashes
+    # ("domain", host), a band key hashes (band_id, sigs) — disjoint
+    # argument shapes, so cross-pass collisions are ~2^-64 per key pair
+    # and only ever ADD candidates
+    keyed = lsh_band_keys(
+        pages,
+        id_col,
+        text_col,
+        shingle_k=shingle_k,
+        bands=lsh_bands,
+        rows_per_band=lsh_rows,
+        emit_prefixes=True,
+        lead_key=F.xxhash64(F.lit("domain"), normalized_domain(F.col(url_col))),
+    )
     pairs, stats = block_pairs(
-        keyed, id_col, salt_k=salt_k, max_block_size=max_block_size, pass_name="domain+lsh"
+        keyed,
+        id_col,
+        salt_k=salt_k,
+        max_block_size=max_block_size,
+        pass_name="domain+lsh",
+        emit_once_col="_pfx",
     )
     return pairs, [stats]
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -232,12 +232,6 @@ class Pipeline:
                 if os.path.exists(p):
                     os.remove(p)
 
-        # a compact parquet stage output can land in fewer splits than we
-        # have cores (one 300 MB file -> 3 tasks); on a real cluster the
-        # same is tuned with spark.sql.files.maxPartitionBytes. Rebalance
-        # reads to the session's parallelism before CPU-bound stages.
-        par = self.spark.sparkContext.defaultParallelism
-
         # extract: recover text from html bytes; drop the fat binary column.
         # Also mint ``uid = xxhash64(url)`` — every downstream shuffle keys
         # on 8-byte longs instead of ~100-byte urls (at 10^12 rows the url
@@ -249,11 +243,15 @@ class Pipeline:
             df = pages
             if cfg.langs:
                 df = df.where(F.col("lang").isin(cfg.langs))
-            # rebalance only REAL under-partitioning (one fat file -> 3
-            # tasks). `< par` was too eager: a data-driven split count
+            # a compact input can land in fewer splits than we have
+            # cores (on a real cluster that is tuned with
+            # spark.sql.files.maxPartitionBytes). Rebalance only REAL
+            # under-partitioning (one fat 300 MB file -> 3 tasks).
+            # `< par` was too eager: a data-driven split count
             # just below the core count (38 splits, 48 cores) triggered
             # a full shuffle of the html bytes that cost more than the
             # imbalance it fixed.
+            par = self.spark.sparkContext.defaultParallelism
             if df.rdd.getNumPartitions() < max(par // 3, 4):
                 df = df.repartition(par)
             if cfg.uid_bits == 128:
@@ -291,7 +289,7 @@ class Pipeline:
             )
         extracted = self.catalog.read("extract")
 
-        # pairs: multi-pass blocking, salted, capped, deduped — keyed on uid
+        # pairs: domain + LSH blocking, salted, capped, each pair once — keyed on uid
         if not self._stage_done("pairs"):
             t0 = time.time()
             pairs, stats = candidate_pairs(
@@ -313,11 +311,11 @@ class Pipeline:
         # score: similarity vector + FS label, with reference rlr_* columns
         if not self._stage_done("score"):
             t0 = time.time()
-            pairs_in = pairs
-            if pairs_in.rdd.getNumPartitions() < max(par // 3, 4):
-                pairs_in = pairs_in.repartition(par)
+            # no input repartition: the pairs table lands in the pair
+            # join's defaultParallelism files (blocking emits each pair
+            # once, so no dedup exchange coalesces it first)
             simmed = text_pair_similarity(
-                pairs_in, extracted, id_col="uid", text_col=cfg.text_col
+                pairs, extracted, id_col="uid", text_col=cfg.text_col
             )
             weights = cfg.weights()
             if cfg.weights_mode == "em":

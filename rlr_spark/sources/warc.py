@@ -28,7 +28,7 @@ from __future__ import annotations
 import zlib
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

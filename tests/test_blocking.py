@@ -1,10 +1,10 @@
+import pytest
 from pyspark.sql import functions as F
 
 from rlr_spark.operators.blocking import (
     block_pairs,
     candidate_pairs,
     lsh_band_keys,
-    normalized_domain,
     with_domain_key,
 )
 
@@ -261,39 +261,89 @@ def test_block_pairs_lr_carry_cols_and_pair_filter(spark):
 
 def test_arrow_signature_bit_identical_to_fold(spark):
     """The numpy/Arrow minhash kernel must emit EXACTLY the fold path's
-    (id, blk_key) set — same hashes, not just same recall — across both
-    LSH configs in use (3-shingle b16r3, word-level b32r2) and the edge
-    rows (short docs, single token, empty text, NULL text, whitespace)."""
+    rows — same hashes, not just same recall — across both LSH configs
+    in use (3-shingle b16r3, word-level b32r2), the pipeline's form
+    (b16r3 with a leading key as band −1 and ``_pfx`` witnesses) and
+    the edge rows (short docs, single token, empty text, NULL text,
+    whitespace, a NULL leading key)."""
     rows = [
-        ("a", "the quick brown fox jumps over the lazy dog"),
-        ("b", "the quick brown fox jumps over the lazy cat"),
-        ("c", "one two"),
-        ("d", "single"),
-        ("e", ""),
-        ("f", None),
-        ("g", "  leading and trailing   spaces  here   "),
+        ("a", "the quick brown fox jumps over the lazy dog", 7),
+        ("b", "the quick brown fox jumps over the lazy cat", 7),
+        ("c", "one two", 8),
+        ("d", "single", 8),
+        ("e", "", 9),
+        ("f", None, 9),
+        ("g", "  leading and trailing   spaces  here   ", None),
     ] + [
         # > TILE_ROWS rows in one partition so the kernel's zero-copy
         # cache-tiling slices (round 6) are exercised, including a NULL
         # and an empty doc landing mid-tile
-        (f"x{i}", " ".join(f"tok{(i * 7 + t) % 50}" for t in range(40)))
+        (f"x{i}", " ".join(f"tok{(i * 7 + t) % 50}" for t in range(40)), i % 13)
         for i in range(2600)
     ]
-    rows[1500] = ("mid_null", None)
-    rows[2100] = ("mid_empty", "")
-    df = spark.createDataFrame(rows, "id string, text string").coalesce(1)
-    for k, b, r in [(3, 16, 3), (1, 32, 2)]:
-        fold = lsh_band_keys(
+    rows[1500] = ("mid_null", None, 1)
+    rows[2100] = ("mid_empty", "", 2)
+    df = spark.createDataFrame(rows, "id string, text string, lk long").coalesce(1)
+
+    def keys(impl, k, b, r, lead):
+        out = lsh_band_keys(
             df, "id", "text", shingle_k=k, bands=b, rows_per_band=r,
-            rebalance_input=False, signature_impl="fold",
+            rebalance_input=False, signature_impl=impl,
+            emit_prefixes=lead, lead_key=F.col("lk") if lead else None,
         )
-        arrow = lsh_band_keys(
-            df, "id", "text", shingle_k=k, bands=b, rows_per_band=r,
-            rebalance_input=False, signature_impl="arrow",
-        )
-        sf = {(row.id, row.blk_key) for row in fold.collect()}
-        sa = {(row.id, row.blk_key) for row in arrow.collect()}
-        assert sf == sa, (k, b, r)
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in row)
+            for row in out.collect()
+        }
+
+    for k, b, r, lead in [(3, 16, 3, False), (1, 32, 2, False), (3, 16, 3, True)]:
+        fold = keys("fold", k, b, r, lead)
+        assert keys("arrow", k, b, r, lead) == fold, (k, b, r, lead)
+        assert len(fold) == len(rows) * (b + lead)
+    # the leading key's own row has no witness; every band row's
+    # witness starts with it and grows by one key per band
+    wits = {key: pfx for i, key, pfx in fold if i == "a"}
+    assert wits[7] == ()
+    assert sorted(len(p) for p in wits.values()) == list(range(17))
+    assert all(p[0] == 7 for p in wits.values() if p)
+
+
+def _union_dedup_pairs(pages, **kw):
+    """The two-pass candidate set as built before the domain key joined
+    the minhash kernel: domain keys ∪ band keys, every shared key
+    emitting, one dropDuplicates."""
+    domain = with_domain_key(pages).select(
+        "url", F.xxhash64(F.lit("domain"), "blk_key").alias("blk_key")
+    )
+    keyed = domain.unionByName(lsh_band_keys(pages, "url", "text"))
+    return block_pairs(keyed, "url", pass_name="domain+lsh", **kw)
+
+
+@pytest.mark.parametrize(
+    "max_block_size,repair_cap",
+    [(None, None), (6, None), (6, 2)],
+    ids=["uncapped", "dropped_blocks_repaired", "past_repair_cap"],
+)
+def test_candidate_pairs_match_union_dedup(
+    web_pages_small, monkeypatch, max_block_size, repair_cap
+):
+    """candidate_pairs emits each pair once from one keyed relation and
+    returns exactly the pair set and stats of the union + dedup path:
+    uncapped, with dropped blocks (witness repair), and with more
+    dropped blocks than the repair inlines (the emit + dedup fallback)."""
+    import rlr_spark.operators.blocking as blocking
+
+    if repair_cap is not None:
+        monkeypatch.setattr(blocking, "_MAX_REPAIR_KEYS", repair_cap)
+    pages, _ = web_pages_small
+    pairs, [stats] = candidate_pairs(pages, salt_k=2, max_block_size=max_block_size)
+    rows = [(r.l_id, r.r_id) for r in pairs.collect()]
+    ref, ref_stats = _union_dedup_pairs(pages, salt_k=2, max_block_size=max_block_size)
+    assert stats == ref_stats
+    if max_block_size is not None:
+        assert stats.n_dropped_blocks > (repair_cap or 0)
+    assert len(rows) == len(set(rows)), "candidate_pairs emitted a pair twice"
+    assert set(rows) == {(r.l_id, r.r_id) for r in ref.collect()}
 
 
 def test_xxh64_np_matches_spark(spark):

@@ -409,14 +409,18 @@ def test_auto_compaction_bounds_rounds(spark, tmp_path):
     st = EntityState(spark, str(tmp_path / "auto"), buckets=4)
     assert st.auto_compact_rounds == 1
 
-    cand = [f"n{i:03d}" for i in range(40)]
+    # 7 batches is the smallest run in which the bound below
+    # discriminates: without the auto trigger, the 6th adversarial
+    # merge already needs 3 rounds (rounds 0, 1, 1, 2, 2, 3)
+    n_batches = 7
+    cand = [f"n{i:03d}" for i in range(n_batches)]
     uid_of = {
         r.node: r.uid
         for r in spark.createDataFrame([(c,) for c in cand], "node string")
         .select("node", F.xxhash64("node").alias("uid"))
         .collect()
     }
-    ids = sorted(cand, key=lambda n: -uid_of[n])[:30]
+    ids = sorted(cand, key=lambda n: -uid_of[n])
     pairs = []
     st.update(
         spark.createDataFrame([(ids[0],)], "node string"),
@@ -424,7 +428,7 @@ def test_auto_compaction_bounds_rounds(spark, tmp_path):
         0,
     )
     rounds_log = []
-    for i in range(1, 30):
+    for i in range(1, n_batches):
         st.update(
             spark.createDataFrame([(ids[i],)], "node string"),
             spark.createDataFrame([(ids[i], ids[i - 1])], "l_id string, r_id string"),
@@ -437,4 +441,4 @@ def test_auto_compaction_bounds_rounds(spark, tmp_path):
     # compaction fires right after, so depth never compounds: no batch
     # ever exceeds trigger+1 and the tail stays at the flattened bound
     assert max(rounds_log) <= st.auto_compact_rounds + 1, rounds_log
-    assert _got(st) == _batch_truth(spark, set(ids[:30]), pairs)
+    assert _got(st) == _batch_truth(spark, set(ids), pairs)

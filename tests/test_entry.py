@@ -201,3 +201,46 @@ def test_every_public_function_is_reached():
             if not any(node.name in names for p, names in used.items() if p != path):
                 unnamed.append(f"{mod}.{node.name}")
     assert not unnamed, f"public functions only tests name: {sorted(unnamed)}"
+
+
+def _unused_imports(path: str) -> list[str]:
+    """Top-level imports of ``path`` whose bound name the file never
+    reads. ``__all__`` entries count as read; ``from __future__`` and a
+    ``# noqa`` on the import's lines are exempt."""
+    with open(path) as f:
+        src = f.read()
+    tree = ast.parse(src, path)
+    lines = src.splitlines()
+    read = {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            read.update(ast.literal_eval(node.value))
+    unused = []
+    for node in tree.body:
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if any("# noqa" in line for line in lines[node.lineno - 1 : node.end_lineno]):
+            continue
+        for alias in node.names:
+            # ``import a.b`` binds ``a``
+            name = alias.asname or alias.name.split(".")[0]
+            if name != "*" and name not in read:
+                unused.append(f"{os.path.relpath(path, _ROOT)}:{node.lineno} {name}")
+    return unused
+
+
+def test_no_unused_top_level_imports():
+    """No linter runs on this tree, so this is the check: a top-level
+    import that nothing in its file reads is dead weight (and, in a
+    library module, a load-time cost for every importer)."""
+    unused = [
+        u
+        for pattern in ("rlr_spark/**/*.py", "tests/**/*.py", "tools/**/*.py")
+        for p in sorted(glob.glob(pattern, root_dir=_ROOT, recursive=True))
+        for u in _unused_imports(os.path.join(_ROOT, p))
+    ]
+    assert not unused, f"unused top-level imports: {unused}"

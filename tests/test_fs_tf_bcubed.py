@@ -7,7 +7,6 @@ import math
 from collections import Counter, defaultdict
 
 import pytest
-from pyspark.sql import functions as F
 
 from rlr_spark.operators.evaluate import bcubed
 from rlr_spark.operators.scoring import fs_score_tf

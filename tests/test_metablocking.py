@@ -12,7 +12,6 @@ import math
 from collections import defaultdict
 
 import pytest
-from pyspark.sql import functions as F
 
 from rlr_spark.operators.metablocking import (
     blocking_graph,

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rlr_spark.functions.similarity import jaro_winkler_py, monge_elkan_scores
 

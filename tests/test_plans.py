@@ -333,7 +333,7 @@ def test_salted_join_job_counts(spark, web_pages_small):
         "block_pairs uncapped": (1, 6),
         "block_pairs_lr capped": (4, 7),
         "block_pairs_lr uncapped": (3, 7),
-        "candidate_pairs": (3, 6),
+        "candidate_pairs": (3, 5),
         "minhash_dup_pairs": (10, 2),
         "incremental_pairs_batch": (6, 8),
     }
@@ -414,12 +414,12 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     pipe.run(pages, force=True)
     run_jobs, _ = count_jobs(sc, lambda: pipe.run(pages, force=True))
     # extract: write 2 + uid check 2; pairs: blocking checkpoint 2 +
-    # write 5; score: write 3; cluster: CC collect 1 + write 3
+    # write 4; score: write 3; cluster: CC collect 1 + write 3
     stage_jobs = {}
     for s in STAGES:
         os.remove(pipe._manifest_path(s))
         stage_jobs[s], _ = count_jobs(sc, lambda: pipe.run(pages))
-    assert stage_jobs == {"extract": 4, "pairs": 7, "score": 3, "cluster": 4}, stage_jobs
+    assert stage_jobs == {"extract": 4, "pairs": 6, "score": 3, "cluster": 4}, stage_jobs
     assert sum(stage_jobs.values()) == run_jobs
 
     data_l, data_r, pairs = generate_firm_fixtures()
@@ -448,4 +448,4 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     render_jobs, _ = count_jobs(sc, reviewer.render_current)
     save_jobs, _ = count_jobs(sc, lambda: reviewer.process_choice("2"))
     got = {"pipeline_run": run_jobs, "review_render": render_jobs, "review_save": save_jobs}
-    assert got == {"pipeline_run": 18, "review_render": 1, "review_save": 1}, got
+    assert got == {"pipeline_run": 17, "review_render": 1, "review_save": 1}, got

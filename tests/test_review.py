@@ -1,7 +1,6 @@
 import warnings
 
 import pytest
-from pyspark.sql import functions as F
 
 from rlr_spark import REVIEW_COLUMNS
 from rlr_spark.operators.review import (

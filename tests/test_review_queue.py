@@ -11,7 +11,6 @@ per-partition heaps, never a global sort).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rlr_spark.operators.scoring import review_queue
 

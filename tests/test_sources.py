@@ -1,10 +1,9 @@
 import json
-import os
 
 import pytest
 
 from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
-from rlr_spark.sources.packet import REQUIRED_KEYS, ReviewPacket, ReviewSession
+from rlr_spark.sources.packet import ReviewPacket, ReviewSession
 from rlr_spark.sources.readers import read_csv, from_pandas
 from rlr_spark.sources.writers import merge_upsert, write_csv
 

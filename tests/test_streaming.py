@@ -377,9 +377,11 @@ def _nd_batch(spark, rows):
 
 
 def test_streaming_state_compaction(spark, tmp_path):
-    """>=10 micro-batches, then compact_state: file/partition count is
+    """Micro-batches, then compact_state: file/partition count is
     bounded, logical content is identical, and a post-compaction epoch
-    still finds cross-epoch pairs (state probing intact)."""
+    still finds cross-epoch pairs (state probing intact). Two
+    pre-compaction batches are the fewest that give a cross-batch pair
+    and a fold of more than one source."""
     import os
 
     from rlr_spark.streaming.ingest import compact_state, incremental_neardup_stream
@@ -387,13 +389,10 @@ def test_streaming_state_compaction(spark, tmp_path):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     near = base.replace("kappa", "lambda")
     src = str(tmp_path / "cmp_src")
-    for i in range(11):
-        text = base if i == 0 else f"doc {i} " + " ".join(
-            f"w{i}{j}" for j in range(8)
-        )
-        _nd_batch(spark, [(f"u{i}", text)]).coalesce(1).write.parquet(f"{src}/f{i:02d}")
-    # one near-dup arriving in the last pre-compaction batch
-    _nd_batch(spark, [("u_near", near)]).coalesce(1).write.parquet(f"{src}/f11")
+    _nd_batch(spark, [("u0", base)]).coalesce(1).write.parquet(f"{src}/f00")
+    # the near-dup arrives in the last pre-compaction batch
+    _nd_batch(spark, [("u_near", near)]).coalesce(1).write.parquet(f"{src}/f01")
+    n_batches = 2
 
     work = str(tmp_path / "cmp_work")
     q = incremental_neardup_stream(spark, src + "/*", work, jaccard_threshold=0.8)
@@ -421,10 +420,10 @@ def test_streaming_state_compaction(spark, tmp_path):
 
     before = {t: snapshot(t) for t in ("keys", "docs", "pairs")}
     assert [p[:2] for p in before["pairs"]] == [("u0", "u_near")]
-    assert len(set(batch_dirs("docs"))) == 12  # one partition per batch
+    assert len(set(batch_dirs("docs"))) == n_batches  # one partition per batch
 
     res = compact_state(spark, work)
-    assert res["docs"]["sources"] == 12 and res["docs"]["cid"] == -1
+    assert res["docs"]["sources"] == n_batches and res["docs"]["cid"] == -1
     for t in ("keys", "docs", "pairs"):
         assert snapshot(t) == before[t], t  # logical content untouched
     for t in ("keys", "docs"):
@@ -446,7 +445,7 @@ def test_streaming_state_compaction(spark, tmp_path):
     # --- post-compaction epoch: accumulated state must still probe -----
     _nd_batch(
         spark, [("u_post", base.replace("alpha", "omega"))]
-    ).coalesce(1).write.parquet(f"{src}/f12")
+    ).coalesce(1).write.parquet(f"{src}/f02")
     q2 = incremental_neardup_stream(spark, src + "/*", work, jaccard_threshold=0.8)
     try:
         q2.processAllAvailable()
@@ -460,7 +459,7 @@ def test_streaming_state_compaction(spark, tmp_path):
     # second compaction folds the consolidated partition + the new epoch
     res3 = compact_state(spark, work)
     assert res3["docs"]["cid"] == -2
-    assert res3["pairs"]["sources"] == 2  # batch-11 pairs + batch-12 pairs
+    assert res3["pairs"]["sources"] == 2  # batch-1 pairs + batch-2 pairs
     assert parquet_files("pairs") == 1
     assert {(r.l_id, r.r_id) for r in spark.read.parquet(f"{work}/pairs").collect()} == got
 

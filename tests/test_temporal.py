@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 
 def _ev(spark, rows):
     return spark.createDataFrame(

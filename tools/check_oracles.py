@@ -89,7 +89,10 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from rlr_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+    # get_spark's defaults size the session to this host: one task
+    # slot and one shuffle partition per core it may run on
+    # (os.sched_getaffinity, or SPARK_GRAFT_CPUS)
+    spark = get_spark(app_name="oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
