@@ -4,23 +4,18 @@ Image/audio/video payloads are carried as ``binary`` columns with a
 typed metadata struct; decode / feature-extract / resize / frame-sample
 run as Arrow-batched ``mapInPandas`` operators.
 
-Decode is REAL for the web's dominant image formats and uncompressed
-audio — binary P6 PPM and RIFF/PCM WAV parse with pure Python + numpy
-(header structs + ``np.frombuffer``), PNG decodes with stdlib ``zlib``
+Decode is REAL for binary P6 PPM, PNG, lossless WebP and uncompressed
+audio: PPM and RIFF/PCM WAV parse with pure Python + numpy (header
+structs + ``np.frombuffer``), PNG decodes with stdlib ``zlib``
 (deflate) plus per-scanline un-filtering (None/Sub/Up/Average/Paeth)
 across the full layout matrix (grey 1/2/4/8/16-bit, RGB/RGBA 8/16,
-palette 1/2/4/8, Adam7 interlacing), GIF decodes via pure-Python LZW,
-and JFIF/JPEG — baseline, non-interleaved multi-scan, AND progressive
-(SOF2 with spectral selection + successive approximation) — decodes
-through a pure-numpy Huffman + IDCT pipeline
-(:mod:`rlr_spark.functions.jpeg`) — so ``image_stats`` /
+palette 1/2/4/8, Adam7 interlacing), and lossless WebP (VP8L) decodes
+through a pure-Python Huffman + LZ77 + spatial-transform pipeline
+(:mod:`rlr_spark.functions.vp8l`) — so ``image_stats`` /
 ``audio_stats`` / ``resize_nearest`` run end-to-end on real bytes.
-Lossless WebP (VP8L) decodes through a pure-Python Huffman + LZ77 +
-spatial-transform pipeline (:mod:`rlr_spark.functions.vp8l`). The
-remaining codecs (lossy-WebP VP8/AVIF/MP3/H.264) stay a clearly-marked
-``NotImplementedError`` — the sandbox ships no codec library — with
-the dispatch sniffing magic bytes so dropping in PIL/libsndfile
-upgrades those branches without touching the operators.
+Every other format (JPEG, GIF, lossy-WebP VP8, AVIF, MP3, H.264)
+raises ``NotImplementedError``, which ``image_stats`` turns into
+``decoded = false``.
 """
 
 from __future__ import annotations
@@ -490,42 +485,30 @@ def decode_png(payload: bytes) -> "np.ndarray":
 
 
 def decode_image(payload: bytes) -> "np.ndarray":
-    """Dispatch on magic bytes: P6 PPM, PNG, GIF, JPEG (baseline AND
-    progressive), and lossless WebP all decode for real (PPM is a
-    header parse; PNG is stdlib zlib + per-scanline un-filtering; GIF
-    is pure-Python LZW; JPEG is a pure-numpy Huffman + IDCT pipeline,
-    :mod:`rlr_spark.functions.jpeg`; VP8L is pure-Python Huffman +
-    LZ77 + spatial transforms, :mod:`rlr_spark.functions.vp8l`); the
-    remaining formats (lossy WebP/AVIF/...) raise until a codec
-    library is dropped in — everything downstream (batch shape,
-    schema, partitioning) already handles the real thing."""
+    """Dispatch on magic bytes: P6 PPM (a header parse), PNG (stdlib
+    zlib + per-scanline un-filtering) and lossless WebP (pure-Python
+    Huffman + LZ77 + spatial transforms,
+    :mod:`rlr_spark.functions.vp8l`) decode for real; every other
+    format (JPEG, GIF, lossy WebP, AVIF, ...) raises
+    ``NotImplementedError``."""
     if payload.startswith(b"P6"):
         return decode_ppm(payload)
     if payload.startswith(PNG_SIG):
         return decode_png(payload)
-    if payload.startswith(b"\xff\xd8"):
-        from rlr_spark.functions.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from rlr_spark.functions.gif import decode_gif
-
-        return decode_gif(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
         # Lossless (VP8L) decodes natively; lossy VP8 (boolean
         # arithmetic coder + prediction DSP) is out of pure-Python
         # scope and raises inside decode_webp. The VP8L 2D distance
         # map is the one spec table with no independent local
         # cross-check — validation boundary documented in
-        # rlr_spark/functions/vp8l.py (same class as progressive JPEG).
+        # rlr_spark/functions/vp8l.py.
         from rlr_spark.functions.vp8l import decode_webp
 
         return decode_webp(payload)
     raise NotImplementedError(
-        "image codec not available for this format (avif/...); "
-        "P6 PPM, PNG (all depths/color types incl. palette and Adam7), "
-        "JPEG (baseline + progressive + multi-scan), GIF (incl. "
-        "animations), and lossless WebP (VP8L) decode natively"
+        "image codec not available for this format (jpeg/gif/avif/...); "
+        "P6 PPM, PNG (all depths/color types incl. palette and Adam7) "
+        "and lossless WebP (VP8L) decode natively"
     )
 
 
@@ -582,10 +565,10 @@ IMAGE_STATS_SCHEMA = T.StructType(
 
 
 def image_stats(media: DataFrame) -> DataFrame:
-    """Decode image payloads (real for P6 PPM) and emit per-image
-    dimensions + channel means; undecodable payloads yield nulls with
-    ``decoded = false`` — never a task failure. Arrow-batched
-    ``mapInPandas``, no shuffle."""
+    """Decode image payloads (real for P6 PPM, PNG and lossless WebP)
+    and emit per-image dimensions + channel means; undecodable payloads
+    yield nulls with ``decoded = false`` — never a task failure.
+    Arrow-batched ``mapInPandas``, no shuffle."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -612,70 +595,6 @@ def image_stats(media: DataFrame) -> DataFrame:
 
     return media.where(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
         op, schema=IMAGE_STATS_SCHEMA
-    )
-
-
-ANIMATION_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), True),
-        T.StructField("delay_ms", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("mean_r", T.DoubleType(), True),
-        T.StructField("mean_g", T.DoubleType(), True),
-        T.StructField("mean_b", T.DoubleType(), True),
-        T.StructField("decoded", T.BooleanType(), False),
-    ]
-)
-
-
-def animation_frame_stats(media: DataFrame, max_frames: int = 16) -> DataFrame:
-    """REAL frame sampling for animated payloads (GIF): decode up to
-    ``max_frames`` composited frames per animation and emit one row per
-    (media_id, frame_idx) with the frame's delay and channel means —
-    the materialized form of :func:`frame_sample_plan`'s timestamp
-    grid, for the formats the sandbox can decode. Same shape as every
-    media operator here: Arrow-batched ``mapInPandas``, no shuffle.
-    Payloads without a GIF signature emit NO rows (they are not
-    animations — a 6-byte check, no per-row exception); a payload that
-    claims GIF but is malformed yields one decoded=false row, never a
-    task failure. ``max_frames`` bounds per-row work — the decoder stops
-    reading the stream after that many frames, so sampling never pays
-    for a long animation's tail."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rlr_spark.functions.gif import GIF_MAGICS, decode_gif_frames
-
-        cols = [f.name for f in ANIMATION_FRAMES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                if b[:6] not in GIF_MAGICS:
-                    # not an animation container at all — emit nothing,
-                    # so decoded=false keeps meaning "malformed
-                    # animation", and non-GIF payloads (the bulk of a
-                    # real media table) skip on a 6-byte check instead
-                    # of paying a Python exception each
-                    continue
-                try:
-                    frames, delays = decode_gif_frames(b, max_frames=max_frames)
-                    for k in range(frames.shape[0]):
-                        m = frames[k].reshape(-1, 3).mean(axis=0)
-                        rows.append(
-                            (mid, k, delays[k], frames.shape[2], frames.shape[1],
-                             round(float(m[0]), 6), round(float(m[1]), 6),
-                             round(float(m[2]), 6), True)
-                        )
-                except Exception:  # noqa: BLE001 — same contract as image_stats
-                    rows.append((mid, None, None, None, None, None, None, None, False))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (
-        media.where(F.col("kind").isin("image", "video"))
-        .select("media_id", "payload")
-        .mapInPandas(op, schema=ANIMATION_FRAMES_SCHEMA)
     )
 
 

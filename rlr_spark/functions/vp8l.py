@@ -1,12 +1,10 @@
 """Pure-Python WebP-lossless (VP8L) codec — decoder AND encoder.
 
-Closes the last tractable gap in the web-common image matrix
-(JPEG baseline+progressive, PNG full layout matrix, GIF incl.
-animations — see :mod:`rlr_spark.functions.jpeg` / ``decode_png`` /
-:mod:`rlr_spark.functions.gif`): VP8L is Huffman + LZ77 + four spatial
-transforms, no DCT and no arithmetic coder, so it is pure-Python
-tractable the same way GIF's LZW is. Lossy VP8 (boolean arithmetic
-coder + prediction DSP) remains out of scope and still raises.
+Sits next to P6 PPM and PNG (``decode_png``) in
+:func:`rlr_spark.functions.multimodal.decode_image`: VP8L is Huffman +
+LZ77 + four spatial transforms, no DCT and no arithmetic coder, so it
+is pure-Python tractable. Lossy VP8 (boolean arithmetic coder +
+prediction DSP) remains out of scope and still raises.
 
 Format (public: "WebP Lossless Bitstream Specification", Google):
 
@@ -27,8 +25,7 @@ Format (public: "WebP Lossless Bitstream Specification", Google):
   SUBTRACT_GREEN, COLOR_INDEXING (palette, with sub-byte pixel
   bundling for palettes <= 16 entries).
 
-Validation boundary (same class as progressive JPEG, see
-README.md "honest boundaries"): no libwebp and no wild WebP bytes
+Validation boundary: no libwebp and no wild WebP bytes
 exist in this sandbox, so the decoder is validated against (a) this
 module's own encoder across the full feature matrix — a symmetric
 convention bug would survive that, and is documented as the residual

@@ -348,20 +348,6 @@ def incremental_neardup_stream(
         return state.where(F.col(bucket_col).isin(buckets))
 
     def _process(batch_df: DataFrame, raw_batch_id: int) -> None:
-        # opt-in per-phase wall clock (RLR_STREAM_PHASE_TIMING=1): the
-        # batch is ~a dozen sequential jobs and optimizing it needs
-        # attribution, not just the total (bench evidence artifact)
-        import time as _time
-
-        _phases: list[tuple[str, float]] = []
-        _t_last = _time.time()
-
-        def _mark(name: str) -> None:
-            nonlocal _t_last
-            now = _time.time()
-            _phases.append((name, round(now - _t_last, 2)))
-            _t_last = now
-
         # map the checkpoint-scoped raw id to a state-lifetime-unique
         # effective id (survives checkpoint wipes: a new checkpoint
         # generation offsets past the watermark — streaming/state.py)
@@ -389,7 +375,6 @@ def incremental_neardup_stream(
             .agg(F.min("text").alias("text"))
             .localCheckpoint(eager=True)
         )
-        _mark("raw_dedup")
         acc_docs = _read_or_empty(
             docs_dir, "url string, text string", "_ub int, _batch_id int"
         )
@@ -402,12 +387,10 @@ def incremental_neardup_stream(
                 _pruned(acc_docs, "_ub", batch_ubs).select("url"), "url", "left_anti"
             ).localCheckpoint(eager=True)
         )
-        _mark("anti_join_new")
         new_keys = lsh_band_keys(
             batch, "url", "text", shingle_k=shingle_k, bands=bands,
             rows_per_band=rows_per_band,
         ).localCheckpoint(eager=True)
-        _mark("band_keys")
         acc_keys = _read_or_empty(
             keys_dir, "url string, blk_key long", "_kb int, _batch_id int"
         )
@@ -426,7 +409,6 @@ def incremental_neardup_stream(
                 file=sys.stderr,
             )
         cand = cand.localCheckpoint(eager=True)
-        _mark("pair_gen")
         # the verify join needs the text of every candidate endpoint —
         # prune the docs scan to the buckets those urls hash to
         cand_ubs = _buckets_of(
@@ -442,7 +424,6 @@ def incremental_neardup_stream(
             .select("url", "text")
             .unionByName(batch.select("url", "text"))
         )
-        _mark("cand_buckets")
         verified = _verify_token_jaccard(
             cand, all_docs, "url", "text", jaccard_threshold
         )
@@ -456,37 +437,24 @@ def incremental_neardup_stream(
             # after its marker, the replayed update is a no-op while the
             # near-dup writes complete
             verified = verified.localCheckpoint(eager=True)
-            _mark("verify")
             entity_state.update(
                 batch.select(F.col("url").alias("node")), verified, batch_id
             )
-            _mark("entity_update")
         _overwrite_batch_partition(verified, pairs_dir, batch_id)
-        _mark("write_pairs")
         _overwrite_batch_partition(
             new_keys.withColumn("_kb", _key_bucket(F.col("blk_key"))),
             keys_dir,
             batch_id,
         )
-        _mark("write_keys")
         _overwrite_batch_partition(
             batch.select("url", "text").withColumn("_ub", _url_bucket(F.col("url"))),
             docs_dir,
             batch_id,
         )
-        _mark("write_docs")
         _write_marker(applied_dir, f"batch_{batch_id}")  # atomic: kill-safe
         # watermark lives in the STATE dir (shares fate with keys/docs/
         # pairs, survives a checkpoint wipe) — see _guard_renumbered
         _advance_wm(work_dir, batch_id)
-        import os as _os
-
-        if _os.environ.get("RLR_STREAM_PHASE_TIMING") == "1":
-            print(
-                f"[phase-timing] batch {batch_id}: "
-                + " ".join(f"{n}={s_}" for n, s_ in _phases),
-                file=sys.stderr,
-            )
         # AUTO-COMPACTION (opt-in): per-batch partitions make the
         # parquet listing grow ~linearly with batch count (measured
         # ~1.5 s/batch at 64 buckets — bench.py streaming section);
@@ -506,7 +474,6 @@ def incremental_neardup_stream(
                         live.add(int(d.split("=")[1]))
             if len(live) >= compact_every:
                 compact_state(batch_df.sparkSession, work_dir)
-                _mark("auto_compact")
 
     return (
         spark.readStream.format("parquet")

@@ -1,4 +1,5 @@
-"""Adversarial robustness of the image codecs on corrupted bytes.
+"""Adversarial robustness of the image codecs (P6 PPM, PNG, lossless
+WebP) on corrupted bytes.
 
 The `image_stats` contract (multimodal.py): a malformed payload yields
 ``decoded = false``, NEVER a task failure — which requires every codec
@@ -14,7 +15,9 @@ single-bit flips across the file, and random tails behind a valid
 magic — and assert decode either succeeds (returning a well-formed
 HxWx3/HxWx4-range uint8 array) or raises, within a wall-clock bound
 (signal.alarm guards against entropy-decoder infinite loops, the
-classic failure mode of hand-rolled Huffman/LZ77/LZW readers).
+classic failure mode of hand-rolled Huffman/LZ77 readers). The JPEG
+and GIF magics in ``test_zero_and_tiny_payloads`` have no decoder: they
+pin that a retired format falls through to ``NotImplementedError``.
 """
 
 from __future__ import annotations
@@ -25,8 +28,6 @@ import zlib
 import numpy as np
 import pytest
 
-from rlr_spark.functions.gif import encode_gif
-from rlr_spark.functions.jpeg import encode_jpeg
 from rlr_spark.functions.multimodal import (
     decode_image,
     encode_png,
@@ -42,8 +43,6 @@ _IMG = _RNG.integers(0, 256, (13, 17, 3), dtype=np.uint8)
 _VALID = {
     "ppm": encode_ppm(_IMG),
     "png": encode_png(_IMG),
-    "jpeg": encode_jpeg(_IMG),
-    "gif": encode_gif(_IMG),
     "vp8l": encode_webp_lossless(_IMG, use_lz77=True, cache_bits=3),
     "vp8l_pred": encode_webp_lossless(
         _IMG, subtract_green=True, predictor_mode=None, meta_bits=3

@@ -69,11 +69,9 @@ _ENTRY_MODULES = ["rlr_spark.pipeline", "rlr_spark.cli", "rlr_spark.webui"]
 
 # Unreached and still to delete (ROADMAP direction 1): the image-codec
 # subsystem. No linkage stage decodes an image; its removal, with its
-# ~100 tests, is split off into changes of its own. Drop each name here
-# as its module goes.
+# tests, is split off into changes of its own. Drop each name here as
+# its module goes.
 _UNREACHED_OK = {
-    "rlr_spark.functions.gif",
-    "rlr_spark.functions.jpeg",
     "rlr_spark.functions.multimodal",
     "rlr_spark.functions.vp8l",
 }

@@ -266,8 +266,8 @@ def test_png_palette_subbyte_16bit_adam7():
 
 def test_image_stats_decodes_real_png(spark):
     """The operator path: planted 8-bit RGB PNGs decode inside the
-    mapInPandas batch with golden channel means; a JPEG payload still
-    lands decoded=false (honest stub)."""
+    mapInPandas batch with golden channel means; a JPEG payload (no
+    decoder) lands decoded=false instead of failing the task."""
     import numpy as np
 
     from rlr_spark.functions.multimodal import MEDIA_SCHEMA, encode_png, image_stats
@@ -283,424 +283,3 @@ def test_image_stats_decodes_real_png(spark):
     assert got[1].decoded and (got[1].width, got[1].height) == (6, 4)
     assert (got[1].mean_r, got[1].mean_g, got[1].mean_b) == (200.0, 100.0, 50.0)
     assert not got[2].decoded
-
-
-def test_jpeg_roundtrip_within_quantization():
-    """Baseline JPEG decode is a real Huffman+IDCT pipeline: a flat
-    image round-trips exactly; a noisy gradient lands within lossy
-    quantization distance; odd sizes exercise edge padding."""
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import decode_jpeg, encode_jpeg
-    from rlr_spark.functions.multimodal import decode_image
-
-    flat = np.full((16, 24, 3), (200, 100, 50), dtype=np.uint8)
-    assert np.array_equal(decode_jpeg(encode_jpeg(flat, quality=90)), flat)
-
-    rng = np.random.default_rng(3)
-    grad = (
-        np.linspace(0, 255, 32 * 40 * 3).reshape(32, 40, 3)
-        + rng.normal(0, 8, (32, 40, 3))
-    ).clip(0, 255).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(grad, quality=95))
-    err = np.abs(out.astype(int) - grad.astype(int))
-    assert err.mean() < 5 and err.max() < 32
-
-    odd = rng.integers(0, 255, (13, 19, 3), dtype=np.uint8)
-    assert decode_jpeg(encode_jpeg(odd, quality=95)).shape == (13, 19, 3)
-
-    # dispatch: magic bytes route to the real decoder
-    assert np.array_equal(decode_image(encode_jpeg(flat, quality=90)), flat)
-
-
-def test_jpeg_unsupported_and_truncated():
-    import numpy as np
-    import pytest as _pytest
-
-    from rlr_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    img = np.zeros((8, 8, 3), dtype=np.uint8)
-    payload = bytearray(encode_jpeg(img))
-    # flip SOF0 -> SOF9 (arithmetic coding): explicit NotImplementedError
-    i = payload.find(b"\xff\xc0")
-    payload[i + 1] = 0xC9
-    with _pytest.raises(NotImplementedError, match="SOF"):
-        decode_jpeg(bytes(payload))
-    # flip SOF0 -> SOF2: now parsed as progressive, whose scan rules the
-    # baseline-shaped scan header violates -> ValueError, never garbage
-    payload[i + 1] = 0xC2
-    with _pytest.raises(ValueError, match="progressive|spectral|Se"):
-        decode_jpeg(bytes(payload))
-    # truncated entropy data: ValueError (image_stats maps to decoded=false)
-    with _pytest.raises(ValueError):
-        decode_jpeg(bytes(encode_jpeg(img))[:40] + b"\xff\xd9")
-
-
-def test_image_stats_decodes_real_jpeg(spark):
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import encode_jpeg
-    from rlr_spark.functions.multimodal import MEDIA_SCHEMA, image_stats
-
-    img = np.full((8, 8, 3), (120, 60, 30), dtype=np.uint8)
-    rows = [
-        (1, "image", bytearray(encode_jpeg(img, quality=90)), (8, 8, None, "image/jpeg")),
-        (2, "image", bytearray(b"RIFF....WEBP"), (0, 0, None, "image/webp")),
-    ]
-    got = {
-        r.media_id: r
-        for r in image_stats(spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()
-    }
-    assert got[1].decoded and (got[1].width, got[1].height) == (8, 8)
-    assert (got[1].mean_r, got[1].mean_g, got[1].mean_b) == (120.0, 60.0, 30.0)
-    assert not got[2].decoded  # webp stays an honest stub
-
-
-def test_jpeg_420_subsampling_and_restart_markers():
-    """The decoder's 4:2:0 (2x2 chroma) and RSTn restart paths, driven
-    with real bytes from the encoder's matching options."""
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    flat = np.full((20, 28, 3), (180, 90, 45), dtype=np.uint8)
-    for sub in ("444", "420"):
-        for ri in (0, 2):
-            out = decode_jpeg(
-                encode_jpeg(flat, quality=90, subsampling=sub, restart_interval=ri)
-            )
-            assert np.array_equal(out, flat), (sub, ri)
-
-    rng = np.random.default_rng(5)
-    grad = (
-        np.linspace(0, 255, 33 * 41 * 3).reshape(33, 41, 3)
-        + rng.normal(0, 6, (33, 41, 3))
-    ).clip(0, 255).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(grad, quality=95, subsampling="420", restart_interval=3))
-    err = np.abs(out.astype(int) - grad.astype(int))
-    # chroma decimation adds error on color edges but stays bounded
-    assert err.mean() < 7 and err.max() < 48
-
-
-def test_jpeg_fill_bytes_before_markers():
-    """0xFF fill bytes before a marker are legal (T.81 B.1.1.2) and
-    emitted by some encoder stacks — the parser must skip them."""
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    img = np.full((8, 8, 3), (90, 150, 210), dtype=np.uint8)
-    payload = encode_jpeg(img, quality=90)
-    # inject fill bytes before the DQT marker
-    i = payload.find(b"\xff\xdb")
-    padded = payload[:i] + b"\xff\xff\xff" + payload[i:]
-    assert np.array_equal(decode_jpeg(padded), img)
-
-
-def test_jpeg_422_and_grayscale_roundtrip():
-    """The decoder's 4:2:2 and 1-component paths, driven with real
-    encoder bytes (every claimed sampling layout is now exercised)."""
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    flat = np.full((20, 28, 3), (180, 90, 45), dtype=np.uint8)
-    for sub in ("444", "422", "420"):
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg(flat, quality=90, subsampling=sub)), flat
-        ), sub
-
-    rng = np.random.default_rng(5)
-    grad = (
-        np.linspace(0, 255, 33 * 41 * 3).reshape(33, 41, 3)
-        + rng.normal(0, 6, (33, 41, 3))
-    ).clip(0, 255).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(grad, quality=95, subsampling="422", restart_interval=2))
-    err = np.abs(out.astype(int) - grad.astype(int))
-    assert err.mean() < 7 and err.max() < 48
-
-    grey = (np.arange(20 * 28, dtype=np.uint8).reshape(20, 28)) % 251
-    g = decode_jpeg(encode_jpeg(grey, quality=95, grayscale=True))
-    assert g.shape == (20, 28, 3)
-    assert (g[:, :, 0] == g[:, :, 1]).all() and (g[:, :, 1] == g[:, :, 2]).all()
-    assert np.abs(g[:, :, 0].astype(int) - grey.astype(int)).max() <= 8
-
-
-def test_jpeg_sos_order_differs_from_sof_order():
-    """T.81 allows the scan to interleave components in SOS order, which
-    may differ from SOF order — the decoder must follow the SOS list
-    (a shared-order round-trip can't catch this, so the encoder writes a
-    genuinely reordered scan). Non-interleaved multi-scan baseline
-    (ns != nc) must raise, never decode wrong pixels."""
-    import numpy as np
-    import pytest
-
-    from rlr_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    flat = np.full((16, 24, 3), (90, 140, 200), dtype=np.uint8)
-    ident = decode_jpeg(encode_jpeg(flat, quality=90))
-    for order in [(3, 2, 1), (2, 1, 3)]:
-        out = decode_jpeg(encode_jpeg(flat, quality=90, sos_order=order))
-        assert np.array_equal(out, ident), order
-
-    grad = np.zeros((16, 16, 3), dtype=np.uint8)
-    grad[..., 0] = np.arange(16, dtype=np.uint8)[None, :] * 12
-    grad[..., 1] = np.arange(16, dtype=np.uint8)[:, None] * 9
-    grad[..., 2] = 77
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(grad, quality=95, sos_order=(3, 1, 2))),
-        decode_jpeg(encode_jpeg(grad, quality=95)),
-    )
-
-    # ns != nc with entropy data that still encodes 3 interleaved
-    # components: corrupt — must raise, never return pixels silently
-    payload = bytearray(encode_jpeg(flat, quality=90))
-    i = payload.find(bytes([0xFF, 0xDA]))
-    assert i > 0
-    # SOS body: [len16][ns][cid tids]*ns [ss se ah/al] — shrink to ns=1
-    payload[i + 2 : i + 4] = (8).to_bytes(2, "big")
-    payload[i + 4] = 1
-    del payload[i + 7 : i + 11]  # drop comps 2 and 3 entries
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(payload))
-
-
-def test_jpeg_progressive_and_multiscan():
-    """Progressive (SOF2) decode is real: the default coarse-to-fine
-    script (DC at Al=1, banded luma AC at Al=2, chroma AC at Al=1, then
-    DC/AC refinement scans with EOB runs) must reconstruct EXACTLY the
-    same pixels as the baseline encoding of the same image — the
-    quantized coefficients are identical, only the entropy serialization
-    differs. Likewise the non-interleaved multi-scan baseline layout."""
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_multiscan_baseline,
-        encode_jpeg_progressive,
-    )
-    from rlr_spark.functions.multimodal import decode_image
-
-    rng = np.random.default_rng(11)
-    grad = (
-        rng.integers(0, 60, (24, 33, 3)) + np.linspace(0, 195, 33)[None, :, None]
-    ).astype(np.uint8)
-    noise = rng.integers(0, 256, (40, 56, 3), dtype=np.uint8)
-
-    for img, q in [(grad, 85), (noise, 30), (noise, 95)]:
-        for sub in ("444", "422", "420"):
-            base = decode_jpeg(encode_jpeg(img, quality=q, subsampling=sub))
-            prog = decode_jpeg(
-                encode_jpeg_progressive(img, quality=q, subsampling=sub)
-            )
-            assert np.array_equal(prog, base), (q, sub, "progressive")
-            ms = decode_jpeg(
-                encode_jpeg_multiscan_baseline(img, quality=q, subsampling=sub)
-            )
-            assert np.array_equal(ms, base), (q, sub, "multiscan")
-
-    # grayscale progressive
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(grad, quality=85, grayscale=True)),
-        decode_jpeg(encode_jpeg(grad, quality=85, grayscale=True)),
-    )
-    # restart markers inside progressive and multi-scan files
-    for ri in (1, 3, 7):
-        base = decode_jpeg(
-            encode_jpeg(noise, quality=60, subsampling="420", restart_interval=ri)
-        )
-        assert np.array_equal(
-            decode_jpeg(
-                encode_jpeg_progressive(
-                    noise, quality=60, subsampling="420", restart_interval=ri
-                )
-            ),
-            base,
-        ), ri
-        assert np.array_equal(
-            decode_jpeg(
-                encode_jpeg_multiscan_baseline(
-                    noise, quality=60, subsampling="420", restart_interval=ri
-                )
-            ),
-            base,
-        ), ri
-    # spectral-selection-only script (no successive approximation)
-    script = (
-        ((0, 1, 2), 0, 0, 0, 0),
-        ((0,), 1, 20, 0, 0),
-        ((0,), 21, 63, 0, 0),
-        ((1,), 1, 63, 0, 0),
-        ((2,), 1, 63, 0, 0),
-    )
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(grad, quality=85, scans=script)),
-        decode_jpeg(encode_jpeg(grad, quality=85)),
-    )
-    # dispatch: magic bytes route progressive payloads to the decoder too
-    assert np.array_equal(
-        decode_image(encode_jpeg_progressive(grad, quality=85)),
-        decode_jpeg(encode_jpeg(grad, quality=85)),
-    )
-
-
-def test_gif_roundtrip_exact():
-    """GIF is palette-exact: encode->decode must reproduce every pixel,
-    across flat, structured, 256-color, interlaced, and dictionary-reset
-    (>4096 LZW entries) images."""
-    import numpy as np
-
-    from rlr_spark.functions.gif import decode_gif, encode_gif
-
-    flat = np.full((9, 13, 3), (10, 200, 30), dtype=np.uint8)
-    assert np.array_equal(decode_gif(encode_gif(flat)), flat)
-
-    # structured image with a few colors (real dictionary usage)
-    pat = np.zeros((32, 48, 3), dtype=np.uint8)
-    pat[::2, :, 0] = 255
-    pat[:, ::3, 1] = 128
-    pat[8:16, 8:40, 2] = 77
-    assert np.array_equal(decode_gif(encode_gif(pat)), pat)
-    assert np.array_equal(decode_gif(encode_gif(pat, interlace=True)), pat)
-
-    # 256 distinct colors + enough entropy to overflow the 4096-entry
-    # dictionary and force mid-stream clear codes
-    rng = np.random.RandomState(7)
-    noisy = rng.randint(0, 256, (64, 96), dtype=np.uint8)
-    noise = np.stack([noisy, noisy // 2, 255 - noisy], axis=-1).astype(np.uint8)
-    assert len(np.unique(noise.reshape(-1, 3), axis=0)) == 256
-    assert np.array_equal(decode_gif(encode_gif(noise)), noise)
-    # odd sizes exercise width bookkeeping on non-byte-aligned ends
-    odd = pat[:15, :17]
-    assert np.array_equal(decode_gif(encode_gif(odd)), odd)
-
-
-def test_gif_unsupported_and_invalid():
-    import numpy as np
-    import pytest
-
-    from rlr_spark.functions.gif import decode_gif, encode_gif
-
-    img = np.full((8, 8, 3), (1, 2, 3), dtype=np.uint8)
-    payload = encode_gif(img)
-    with pytest.raises(ValueError):
-        decode_gif(b"NOTGIF" + payload[6:])
-    with pytest.raises(ValueError):  # truncated mid-stream
-        decode_gif(payload[: len(payload) // 2])
-    # >256 colors: encoder refuses (no quantizer), loudly
-    rng = np.random.RandomState(3)
-    many = rng.randint(0, 256, (32, 32, 3), dtype=np.uint8)
-    assert len(np.unique(many.reshape(-1, 3), axis=0)) > 256
-    with pytest.raises(ValueError, match="256"):
-        encode_gif(many)
-
-
-def test_image_stats_decodes_real_gif(spark):
-    import numpy as np
-
-    from rlr_spark.functions.gif import encode_gif
-    from rlr_spark.functions.multimodal import MEDIA_SCHEMA, decode_image, image_stats
-
-    img = np.zeros((10, 20, 3), dtype=np.uint8)
-    img[..., 0] = 200
-    img[..., 1] = 100
-    assert np.array_equal(decode_image(encode_gif(img)), img)
-    rows = [(1, "image", bytearray(encode_gif(img)), (20, 10, None, "image/gif"))]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = image_stats(df).collect()[0]
-    assert got.decoded and (got.height, got.width) == (10, 20)
-    assert abs(got.mean_r - 200.0) < 1e-6
-    assert abs(got.mean_g - 100.0) < 1e-6
-    assert abs(got.mean_b - 0.0) < 1e-6
-
-
-def test_gif_animation_frames():
-    """Full GIF89a animation semantics: per-frame delays, transparent-
-    delta compositing, sub-rect placement, and all three disposal
-    methods — every path driven by the multi-frame encoder's bytes."""
-    import numpy as np
-
-    from rlr_spark.functions.gif import (
-        decode_gif,
-        decode_gif_frames,
-        encode_gif,
-        encode_gif_frames,
-    )
-
-    rng = np.random.default_rng(5)
-    # still image through the frames API
-    img = (rng.integers(0, 6, (9, 7, 3)) * 40).astype(np.uint8)
-    f, d = decode_gif_frames(encode_gif(img))
-    assert f.shape == (1, 9, 7, 3) and np.array_equal(f[0], img)
-
-    # full-rect animation: exact frames and delays
-    frames = [(rng.integers(0, 4, (6, 8, 3)) * 60).astype(np.uint8) for _ in range(4)]
-    p = encode_gif_frames(frames, delays_ms=[50, 100, 150, 200])
-    got, delays = decode_gif_frames(p)
-    assert delays == [50, 100, 150, 200]
-    for k in range(4):
-        assert np.array_equal(got[k], frames[k]), k
-    assert np.array_equal(decode_gif(p), frames[0])  # first frame API
-    got2, _ = decode_gif_frames(p, max_frames=2)
-    assert got2.shape[0] == 2
-
-    # transparent-delta frames reconstruct exactly
-    base = np.zeros((5, 5, 3), dtype=np.uint8)
-    f2 = base.copy(); f2[2, 2] = (200, 0, 0)
-    f3 = f2.copy(); f3[0, 4] = (0, 200, 0)
-    got, _ = decode_gif_frames(
-        encode_gif_frames([base, f2, f3], transparent_delta=True)
-    )
-    for k, exp in enumerate((base, f2, f3)):
-        assert np.array_equal(got[k], exp), k
-
-    # sub-rect + disposal methods; palette slot 0 (= background) pinned
-    # to black via a black pixel in frame 0
-    red = np.full((4, 4, 3), (200, 10, 10), dtype=np.uint8)
-    red[0, 0] = (0, 0, 0)
-    green = np.full((1, 1, 3), (10, 200, 10), dtype=np.uint8)
-    tiny = np.full((1, 1, 3), (250, 250, 10), dtype=np.uint8)
-    p = encode_gif_frames(
-        [red, green, tiny], rects=[(0, 0), (1, 1), (3, 3)], disposals=[1, 2, 1]
-    )
-    got, _ = decode_gif_frames(p)
-    assert np.array_equal(got[1][1, 1], (10, 200, 10))  # drawn
-    assert np.array_equal(got[2][1, 1], (0, 0, 0))  # disposal 2: background
-    assert np.array_equal(got[2][3, 3], (250, 250, 10))
-    p = encode_gif_frames(
-        [red, green, tiny], rects=[(0, 0), (1, 1), (3, 3)], disposals=[1, 3, 1]
-    )
-    got, _ = decode_gif_frames(p)
-    assert np.array_equal(got[2][1, 1], (200, 10, 10))  # disposal 3: restored
-
-
-def test_animation_frame_stats_operator(spark):
-    """The operator path: sampled frames of a planted animation land as
-    per-frame rows with golden means; a malformed payload yields one
-    decoded=false row."""
-    import numpy as np
-
-    from rlr_spark.functions.gif import encode_gif_frames
-    from rlr_spark.functions.multimodal import MEDIA_SCHEMA, animation_frame_stats
-
-    f0 = np.full((4, 6, 3), (200, 100, 50), dtype=np.uint8)
-    f1 = np.full((4, 6, 3), (100, 200, 10), dtype=np.uint8)
-    rows = [
-        (1, "image", bytearray(encode_gif_frames([f0, f1], delays_ms=[40, 80])),
-         (6, 4, None, "image/gif")),
-        (2, "video", bytearray(b"GIF89a garbage"), (0, 0, None, "image/gif")),
-        # non-GIF payload: not an animation container -> NO rows (6-byte
-        # signature check, not a decode failure)
-        (3, "image", bytearray(b"\x89PNG\r\n\x1a\n not an animation"),
-         (0, 0, None, "image/png")),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = animation_frame_stats(media).collect()
-    anim = sorted([r for r in got if r.media_id == 1], key=lambda r: r.frame_idx)
-    assert len(anim) == 2 and [r.delay_ms for r in anim] == [40, 80]
-    assert (anim[0].mean_r, anim[0].mean_g, anim[0].mean_b) == (200.0, 100.0, 50.0)
-    assert (anim[1].mean_r, anim[1].mean_g, anim[1].mean_b) == (100.0, 200.0, 10.0)
-    bad = [r for r in got if r.media_id == 2]
-    assert len(bad) == 1 and not bad[0].decoded
-    assert not [r for r in got if r.media_id == 3]

@@ -94,48 +94,6 @@ def test_fs_labels_are_total_and_exclusive(spark, sims, upper):
 
 
 @given(
-    h=st.integers(1, 21),
-    w=st.integers(1, 23),
-    seed=st.integers(0, 2**31 - 1),
-    quality=st.integers(25, 95),
-    sub=st.sampled_from(["444", "422", "420"]),
-    ri=st.sampled_from([0, 0, 1, 3]),
-)
-@settings(max_examples=25, deadline=None)
-def test_jpeg_progressive_equals_baseline_property(h, w, seed, quality, sub, ri):
-    """For ANY image/quality/subsampling/restart combination, the
-    progressive and non-interleaved multi-scan serializations must
-    reconstruct bit-identically to the baseline serialization — they
-    encode the same quantized coefficients, so any divergence is an
-    entropy-coding bug (EOB runs, refinement bit order, restarts)."""
-    import numpy as np
-
-    from rlr_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_multiscan_baseline,
-        encode_jpeg_progressive,
-    )
-
-    img = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
-    base = decode_jpeg(
-        encode_jpeg(img, quality=quality, subsampling=sub, restart_interval=ri)
-    )
-    prog = decode_jpeg(
-        encode_jpeg_progressive(
-            img, quality=quality, subsampling=sub, restart_interval=ri
-        )
-    )
-    assert np.array_equal(prog, base)
-    ms = decode_jpeg(
-        encode_jpeg_multiscan_baseline(
-            img, quality=quality, subsampling=sub, restart_interval=ri
-        )
-    )
-    assert np.array_equal(ms, base)
-
-
-@given(
     h=st.integers(1, 20),
     w=st.integers(1, 20),
     seed=st.integers(0, 2**31 - 1),

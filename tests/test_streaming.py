@@ -381,7 +381,9 @@ def test_streaming_state_compaction(spark, tmp_path):
     bounded, logical content is identical, and a post-compaction epoch
     still finds cross-epoch pairs (state probing intact). Two
     pre-compaction batches are the fewest that give a cross-batch pair
-    and a fold of more than one source."""
+    and a fold of more than one source. Both docs hash to one ``_ub``
+    bucket, so the fold reads two source files (two splits) into it:
+    without the fold's bucket shuffle that bucket would get two files."""
     import os
 
     from rlr_spark.streaming.ingest import compact_state, incremental_neardup_stream
@@ -390,8 +392,9 @@ def test_streaming_state_compaction(spark, tmp_path):
     near = base.replace("kappa", "lambda")
     src = str(tmp_path / "cmp_src")
     _nd_batch(spark, [("u0", base)]).coalesce(1).write.parquet(f"{src}/f00")
-    # the near-dup arrives in the last pre-compaction batch
-    _nd_batch(spark, [("u_near", near)]).coalesce(1).write.parquet(f"{src}/f01")
+    # the near-dup arrives in the last pre-compaction batch; "u35" shares
+    # u0's docs bucket (pmod(xxhash64(url), 64) == 47 for both)
+    _nd_batch(spark, [("u35", near)]).coalesce(1).write.parquet(f"{src}/f01")
     n_batches = 2
 
     work = str(tmp_path / "cmp_work")
@@ -418,9 +421,16 @@ def test_streaming_state_compaction(spark, tmp_path):
             for f in files if f.endswith(".parquet")
         )
 
+    def bucket_dirs(table, col):
+        return {
+            d for _r, dirs, _f in os.walk(f"{work}/{table}")
+            for d in dirs if d.startswith(f"{col}=")
+        }
+
     before = {t: snapshot(t) for t in ("keys", "docs", "pairs")}
-    assert [p[:2] for p in before["pairs"]] == [("u0", "u_near")]
+    assert [p[:2] for p in before["pairs"]] == [("u0", "u35")]
     assert len(set(batch_dirs("docs"))) == n_batches  # one partition per batch
+    assert len(bucket_dirs("docs", "_ub")) == 1  # both docs share a bucket
 
     res = compact_state(spark, work)
     assert res["docs"]["sources"] == n_batches and res["docs"]["cid"] == -1
@@ -432,11 +442,8 @@ def test_streaming_state_compaction(spark, tmp_path):
     # so there was nothing to fold yet — single partition either way
     assert len(set(batch_dirs("pairs"))) == 1
     # one file per touched bucket directory for the bucketed tables
-    n_doc_buckets = len(
-        {d for _r, dirs, _f in os.walk(f"{work}/docs") for d in dirs
-         if d.startswith("_ub=")}
-    )
-    assert parquet_files("docs") == n_doc_buckets
+    assert parquet_files("docs") == len(bucket_dirs("docs", "_ub"))
+    assert parquet_files("keys") == len(bucket_dirs("keys", "_kb"))
 
     # idempotent second call: single consolidated partition -> no-op
     res2 = compact_state(spark, work)
@@ -453,8 +460,8 @@ def test_streaming_state_compaction(spark, tmp_path):
         q2.stop()
     got = {(r.l_id, r.r_id) for r in spark.read.parquet(f"{work}/pairs").collect()}
     # u_post differs from u0 in one token (9/11 = 0.818 >= 0.8) but from
-    # u_near in two (8/12 = 0.667 < 0.8)
-    assert got == {("u0", "u_near"), ("u0", "u_post")}
+    # u35 in two (8/12 = 0.667 < 0.8)
+    assert got == {("u0", "u35"), ("u0", "u_post")}
 
     # second compaction folds the consolidated partition + the new epoch
     res3 = compact_state(spark, work)
@@ -677,22 +684,21 @@ def test_streaming_wiped_checkpoint_over_retained_state(spark, tmp_path):
 def test_streaming_auto_compaction(spark, tmp_path):
     """compact_every=N folds state partitions from inside foreachBatch
     (synchronous, so the source-batch set cannot move under the fold):
-    after 6 single-file batches with compact_every=3 the live
-    non-negative batch-partition count stays < 3, a consolidated
-    negative partition exists, and results are identical to the
-    uncompacted stream — including cross-epoch pair discovery."""
+    after 3 single-file batches with compact_every=2 exactly batches 0
+    and 1 are folded into a consolidated negative partition, batch 2 is
+    live, and results are identical to the uncompacted stream —
+    including cross-epoch pair discovery (batch 2 pairs with the folded
+    u0). Three batches are the fewest that give a post-fold batch; a
+    trigger one batch late would fold all three."""
     import glob
     import re
 
     from rlr_spark.streaming.ingest import incremental_neardup_stream
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    near = base.replace("kappa", "lambda")
     batches = [
-        [("u0", base)], [("u1", "one two three four five")],
-        [("u2", "six seven eight nine ten")], [("u3", near)],
-        [("u4", "eleven twelve thirteen fourteen")],
-        [("u5", base.replace("alpha", "omega"))],
+        [("u0", base)], [("u1", base.replace("kappa", "lambda"))],
+        [("u2", base.replace("alpha", "omega"))],
     ]
     src = str(tmp_path / "ac_src")
     for i, rows in enumerate(batches):
@@ -713,19 +719,21 @@ def test_streaming_auto_compaction(spark, tmp_path):
 
     plain = run(str(tmp_path / "ac_plain"))
     auto_work = str(tmp_path / "ac_auto")
-    auto = run(auto_work, compact_every=3)
-    assert auto == plain and len(auto) >= 2  # u0-u3, u0-u5, u3-u5 family
+    auto = run(auto_work, compact_every=2)
+    # u1 and u2 each differ from u0 in one token (9/11 = 0.818 >= 0.8),
+    # from each other in two (8/12 = 0.667 < 0.8)
+    assert auto == plain == {("u0", "u1"), ("u0", "u2")}
 
     ids = set()
     for d in glob.glob(auto_work + "/keys/**/_batch_id=*", recursive=True):
         ids.add(int(re.search(r"_batch_id=(-?\d+)", d).group(1)))
-    assert len([b for b in ids if b >= 0]) < 3, ids
+    assert {b for b in ids if b >= 0} == {2}, ids  # folded at batch 1
     assert any(b < 0 for b in ids), ids  # the consolidated fold
 
-    # docs table intact (anti-join state) — all six urls, exactly once
+    # docs table intact (anti-join state) — all three urls, exactly once
     docs = spark.read.parquet(auto_work + "/docs")
     assert sorted(r.url for r in docs.select("url").collect()) == [
-        f"u{i}" for i in range(6)
+        f"u{i}" for i in range(3)
     ]
 
 
@@ -822,8 +830,11 @@ def test_state_writes_one_file_per_bucket_leaf(spark, tmp_path):
 
     src = str(tmp_path / "of_src")
     work = str(tmp_path / "of_work")
-    rows = [(f"u{i}", f"some distinct text number {i} here") for i in range(400)]
-    _nd_batch(spark, rows).repartition(8).write.parquet(src + "/f0")
+    # 4 docs on 2 source files: the batch's key relation spans several
+    # tasks whose keys share _kb leaves, so a write that is not
+    # pre-shuffled leaves more than one file in a leaf (1 doc does not)
+    rows = [(f"u{i}", f"some distinct text number {i} here") for i in range(4)]
+    _nd_batch(spark, rows).repartition(2).write.parquet(src + "/f0")
     q = incremental_neardup_stream(spark, src + "/*", work, jaccard_threshold=0.8)
     try:
         q.processAllAvailable()

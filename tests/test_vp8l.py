@@ -1,7 +1,7 @@
 """VP8L (WebP lossless) codec tests.
 
 Validation strategy (the sandbox has no libwebp and no wild WebP
-bytes — documented boundary, same class as progressive JPEG):
+bytes — a documented boundary):
 
 1. the LZ77 distance map is pinned by TWO independent derivations —
    the literal spec table vs its generation rule — which must agree;
