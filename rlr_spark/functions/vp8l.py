@@ -1,10 +1,10 @@
 """Pure-Python WebP-lossless (VP8L) codec — decoder AND encoder.
 
-Sits next to P6 PPM and PNG (``decode_png``) in
-:func:`rlr_spark.functions.multimodal.decode_image`: VP8L is Huffman +
-LZ77 + four spatial transforms, no DCT and no arithmetic coder, so it
-is pure-Python tractable. Lossy VP8 (boolean arithmetic coder +
-prediction DSP) remains out of scope and still raises.
+The one image codec left in the package, entered through
+:func:`decode_webp`: VP8L is Huffman + LZ77 + four spatial transforms,
+no DCT and no arithmetic coder, so it is pure-Python tractable. Lossy
+VP8 (boolean arithmetic coder + prediction DSP) remains out of scope
+and still raises.
 
 Format (public: "WebP Lossless Bitstream Specification", Google):
 

@@ -67,14 +67,11 @@ _ENTRY_GLOBS = [
 ]
 _ENTRY_MODULES = ["rlr_spark.pipeline", "rlr_spark.cli", "rlr_spark.webui"]
 
-# Unreached and still to delete (ROADMAP direction 1): the image-codec
-# subsystem. No linkage stage decodes an image; its removal, with its
-# tests, is split off into changes of its own. Drop each name here as
-# its module goes.
-_UNREACHED_OK = {
-    "rlr_spark.functions.multimodal",
-    "rlr_spark.functions.vp8l",
-}
+# Unreached and still to delete (ROADMAP direction 1): the last image
+# codec, lossless WebP. No linkage stage decodes an image; its removal,
+# with its tests, is split off into changes of its own. Drop the name
+# here when the module goes.
+_UNREACHED_OK = {"rlr_spark.functions.vp8l"}
 
 
 def _package_modules() -> dict[str, str]:
@@ -140,7 +137,7 @@ def test_every_module_is_reached():
     )
 
 
-# named by no caller on purpose: the unreached codec modules (see
+# named by no caller on purpose: the unreached codec module (see
 # _UNREACHED_OK), and the numpy reference hash that test_blocking.py
 # checks Spark's xxhash64 against (a test oracle: only tests call it)
 _UNNAMED_OK = {"rlr_spark.functions.xxh64_np.xxhash64_longs"}
@@ -171,7 +168,7 @@ def test_every_public_function_is_reached():
     tests call is dead code, as a module nothing imports is. The walk
     parses source only; it imports nothing and starts no Spark."""
     mods = _package_modules()
-    # what only the unreached codec modules name is dead too
+    # what only the unreached codec module names is dead too
     files = {path for m, path in mods.items() if m not in _UNREACHED_OK} | {
         os.path.join(_ROOT, p)
         for pattern in _ENTRY_GLOBS

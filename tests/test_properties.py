@@ -90,71 +90,6 @@ def test_fs_labels_are_total_and_exclusive(spark, sims, upper):
         assert r.rlr_label_ind == 1
 
 
-# --- codec invariants (pure numpy; no Spark session touched) -----------
-
-
-@given(
-    h=st.integers(1, 20),
-    w=st.integers(1, 20),
-    seed=st.integers(0, 2**31 - 1),
-    layout=st.sampled_from(
-        ["rgb8", "rgba8", "grey8", "ga8", "ga16", "grey16", "rgb16",
-         "pal8", "pal4", "pal1", "grey4"]
-    ),
-    interlace=st.booleans(),
-    filt=st.sampled_from([None, [0], [1], [2], [3], [4], [0, 1, 2, 3, 4]]),
-)
-@settings(max_examples=30, deadline=None)
-def test_png_roundtrip_property(h, w, seed, layout, interlace, filt):
-    """Every PNG layout x filter x interlace combination must round-trip
-    exactly (after the documented projections: 16-bit -> high byte,
-    sub-byte grey -> scaled, palette -> looked-up RGB)."""
-    import numpy as np
-
-    from rlr_spark.functions.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(seed)
-    kw = {"interlace": interlace, "row_filters": filt}
-    if layout == "rgb8":
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        exp = img
-        got = decode_png(encode_png(img, **kw))
-    elif layout == "rgba8":
-        img = rng.integers(0, 256, (h, w, 4), dtype=np.uint8)
-        exp = img[:, :, :3]
-        got = decode_png(encode_png(img, **kw))
-    elif layout == "grey8":
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        exp = np.repeat(img[:, :, None], 3, axis=2)
-        got = decode_png(encode_png(img, **kw))
-    elif layout in ("ga8", "ga16"):  # grey+alpha (color type 4)
-        depth = 8 if layout == "ga8" else 16
-        hi = 256 if depth == 8 else 65536
-        dt = np.uint8 if depth == 8 else np.uint16
-        img = rng.integers(0, hi, (h, w, 2), dtype=dt)
-        g = (img[:, :, 0] if depth == 8 else (img[:, :, 0] >> 8)).astype(np.uint8)
-        exp = np.repeat(g[:, :, None], 3, axis=2)
-        got = decode_png(encode_png(img, depth=depth, **kw))
-    elif layout in ("grey16", "rgb16"):
-        shape = (h, w) if layout == "grey16" else (h, w, 3)
-        img = rng.integers(0, 65536, shape, dtype=np.uint16)
-        hi = (img >> 8).astype(np.uint8)
-        exp = np.repeat(hi[:, :, None], 3, axis=2) if layout == "grey16" else hi
-        got = decode_png(encode_png(img, depth=16, **kw))
-    elif layout == "grey4":
-        img = rng.integers(0, 16, (h, w), dtype=np.uint8)
-        exp = np.repeat((img * 17)[:, :, None], 3, axis=2)
-        got = decode_png(encode_png(img, depth=4, **kw))
-    else:  # palette at depth 8/4/1
-        depth = int(layout[3:])
-        n = min(1 << depth, 7)
-        pal = rng.integers(0, 256, (n, 3), dtype=np.uint8)
-        img = rng.integers(0, n, (h, w), dtype=np.uint8)
-        exp = pal[img]
-        got = decode_png(encode_png(img, palette=pal, depth=depth, **kw))
-    assert np.array_equal(got, exp), layout
-
-
 # ---------------------------------------------------------------------------
 # round-6 comparators: metric/bound properties (pure Python, no Spark)
 # ---------------------------------------------------------------------------

@@ -822,7 +822,14 @@ def test_state_writes_one_file_per_bucket_leaf(spark, tmp_path):
     """Perf regression pin: per-batch state writes are pre-shuffled onto
     their bucket column, so each (bucket, _batch_id) leaf holds exactly
     ONE parquet file — not one per write task (profiled at 5.3s median
-    task wall vs 0.25s CPU when tasks each opened files in every leaf)."""
+    task wall vs 0.25s CPU when tasks each opened files in every leaf).
+
+    Only the ``keys`` half pins the pre-shuffle. A micro-batch is one
+    source file, and AQE coalesces its url ``groupBy`` (under the 1 MB
+    minimum partition size) to one partition, so one task writes every
+    ``docs`` leaf with or without it (one batch of 12,000 docs, 1.4 MB
+    of text and ~35 s, still wrote them from one task). The ``docs``
+    check stays as a guard on the result."""
     import glob
     import os
 

@@ -10,9 +10,7 @@ bytes — a documented boundary):
 3. encoder round-trips cover the full feature matrix: every predictor
    mode, subtract-green, cross-color, palette at all four bundling
    widths, color cache, LZ77 (2D and linear distances), meta-Huffman
-   groups, and their legal combinations;
-4. the operator surface (image_stats) decodes planted files to golden
-   channel means.
+   groups, and their legal combinations.
 """
 
 import numpy as np
@@ -166,26 +164,3 @@ def test_malformed_streams_raise_value_error():
     good = encode_webp_lossless(np.zeros((4, 4, 3), np.uint8))
     with pytest.raises(ValueError):
         decode_vp8l_stream(good[20:25])  # truncated mid-stream
-
-
-def test_image_stats_decodes_real_webp(spark):
-    from rlr_spark.functions.multimodal import MEDIA_SCHEMA, decode_image, image_stats
-
-    img = np.zeros((10, 20, 3), dtype=np.uint8)
-    img[..., 0] = 200
-    img[..., 1] = 100
-    data = encode_webp_lossless(img, use_lz77=True)
-    assert np.array_equal(decode_image(data), img)
-    rows = [
-        (1, "image", bytearray(data), (20, 10, None, "image/webp")),
-        (2, "image", bytearray(b"RIFF\x00\x00\x00\x00WEBPbad!"), (1, 1, None, "image/webp")),
-    ]
-    got = {
-        r.media_id: r
-        for r in image_stats(spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()
-    }
-    assert got[1].decoded and (got[1].height, got[1].width) == (10, 20)
-    assert abs(got[1].mean_r - 200.0) < 1e-6
-    assert abs(got[1].mean_g - 100.0) < 1e-6
-    assert abs(got[1].mean_b - 0.0) < 1e-6
-    assert not got[2].decoded  # malformed container -> decoded=false, no crash
