@@ -21,7 +21,7 @@ from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -232,7 +232,15 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         token_count,
     )
     from rlr_spark.operators.cluster import connected_components
-    from rlr_spark.operators.review import existence_flags, label_counts
+    from rlr_spark.operators.review import (
+        dense_pair_ids,
+        existence_flags,
+        goto_pair,
+        label_counts,
+        label_percentages,
+        next_unlabeled,
+        prev_pair,
+    )
 
     # -- V1: key-uniqueness check (rlr.py:95,106) ---------------------------
     def v1_key_uniqueness(spark, sf_dir):
@@ -271,22 +279,17 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     # -- A1+A2: label counts (rlr.py:341-368) + percentages (pages/01:267-
-    # 270) in one row — the count column IS A1's output, so one driver row
-    # value-checks both (registry budget: the driver checks 50 queries) ------
-    def a1_label_counts(spark, sf_dir):
-        d = _t(spark, sf_dir, "documents").withColumn(
+    # 270) in one row — label_percentages' count column IS label_counts'
+    # output, so one row value-checks both (registry budget: the driver
+    # checks 50 queries) -----------------------------------------------------
+    def labeled_documents(spark, sf_dir):
+        # "en" documents are the unlabeled ones; the rest carry their lang
+        return _t(spark, sf_dir, "documents").withColumn(
             "rlr_label", F.when(F.col("lang") == "en", F.lit("")).otherwise(F.col("lang"))
         )
-        return label_counts(d)
 
     def a2_label_percent(spark, sf_dir):
-        counts = a1_label_counts(spark, sf_dir)
-        total = counts.agg(F.sum("count").alias("t"))
-        return counts.crossJoin(F.broadcast(total)).select(
-            "label",
-            "count",
-            F.round(F.col("count") / F.col("t") * 100, 1).alias("pct"),
-        )
+        return label_percentages(labeled_documents(spark, sf_dir))
 
     # -- A3: completion check (pages/02:185-191) -----------------------------
     def a3_completion(spark, sf_dir):
@@ -385,25 +388,16 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (pages/02:25-36), goto / point access (rlr.py:627-633) ------------------
     def nav_cursor(spark, sf_dir):
         d = _t(spark, sf_dir, "documents")
-        n1 = (
-            d.where(F.col("doc_id") < 200)
-            .orderBy(F.col("doc_id").desc())
-            .limit(1)
-            .select(
-                F.lit("n1_prev").alias("op"), "doc_id",
-                F.lit("").alias("source"), F.lit("").alias("lang"),
-            )
+        n1 = prev_pair(d, "doc_id", 200).select(
+            F.lit("n1_prev").alias("op"), "doc_id",
+            F.lit("").alias("source"), F.lit("").alias("lang"),
         )
-        n2 = (
-            d.where((F.col("lang") == "en") & (F.col("doc_id") > 100))
-            .orderBy("doc_id")
-            .limit(1)
-            .select(
-                F.lit("n2_next").alias("op"), "doc_id",
-                F.lit("").alias("source"), "lang",
-            )
+        # rlr_label == "" on the labeled frame selects lang == "en"
+        n2 = next_unlabeled(labeled_documents(spark, sf_dir), "doc_id", 100).select(
+            F.lit("n2_next").alias("op"), "doc_id",
+            F.lit("").alias("source"), "lang",
         )
-        n3 = d.where(F.col("doc_id") == 123).select(
+        n3 = goto_pair(d, "doc_id", 123).select(
             F.lit("n3_goto").alias("op"), "doc_id", "source", "lang"
         )
         return n1.unionAll(n2).unionAll(n3)
@@ -417,11 +411,8 @@ def _primary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = init_review_columns(
             _t(spark, sf_dir, "documents").select("doc_id").where(F.col("doc_id") < 50)
         )
-        w = Window.orderBy("doc_id")
-        return d.select(
-            "doc_id",
-            (F.row_number().over(w) - 1).alias("pair_id"),
-            "rlr_label", "rlr_label_ind", "rlr_note",
+        return dense_pair_ids(d, ["doc_id"]).select(
+            "doc_id", "pair_id", "rlr_label", "rlr_label_ind", "rlr_note",
             "rlr_l_id_exists", "rlr_r_id_exists",
         )
 

@@ -1,10 +1,12 @@
 """Pure-Python WebP-lossless (VP8L) codec — decoder AND encoder.
 
 The one image codec left in the package, entered through
-:func:`decode_webp`: VP8L is Huffman + LZ77 + four spatial transforms,
-no DCT and no arithmetic coder, so it is pure-Python tractable. Lossy
-VP8 (boolean arithmetic coder + prediction DSP) remains out of scope
-and still raises.
+:func:`decode_webp`: VP8L is Huffman + LZ77 + a color cache, no DCT
+and no arithmetic coder, so it is pure-Python tractable. Two kinds of
+valid WebP raise ``NotImplementedError`` instead of decoding: lossy
+VP8 (boolean arithmetic coder + prediction DSP), and a VP8L stream
+whose transform-present bit is set (the predictor, cross-color,
+subtract-green and color-indexing transforms are not implemented).
 
 Format (public: "WebP Lossless Bitstream Specification", Google):
 
@@ -14,20 +16,16 @@ Format (public: "WebP Lossless Bitstream Specification", Google):
 - VP8L stream: signature byte 0x2F, then an LSB-first bitstream:
   14-bit width-1, 14-bit height-1, 1 alpha-hint bit, 3 version bits
   (must be 0), then the image stream.
-- Image stream = optional transforms (main image only), optional
-  color cache, optional meta-Huffman image (main image only), Huffman
-  code headers (5 codes per group: green+length+cache / red / blue /
-  alpha / distance), then the pixel stream: literals, LZ77
+- Image stream = optional transforms (main image only; they raise
+  here), optional color cache, optional meta-Huffman image (main image
+  only), Huffman code headers (5 codes per group: green+length+cache /
+  red / blue / alpha / distance), then the pixel stream: literals, LZ77
   backward references (prefix-coded lengths, distances through a
   120-entry 2D-neighborhood map), and color-cache references.
-- Transforms (applied inversely in reverse read order): PREDICTOR
-  (14 spatial modes on a block grid), COLOR (cross-color deltas),
-  SUBTRACT_GREEN, COLOR_INDEXING (palette, with sub-byte pixel
-  bundling for palettes <= 16 entries).
 
 Validation boundary: no libwebp and no wild WebP bytes
 exist in this sandbox, so the decoder is validated against (a) this
-module's own encoder across the full feature matrix — a symmetric
+module's own encoder across each of its options — a symmetric
 convention bug would survive that, and is documented as the residual
 risk — (b) hand-assembled bit-exact micro-streams, and (c) the 2D
 distance map cross-checked against an independent algorithmic
@@ -496,46 +494,11 @@ def _color_cache_key(pix: int, bits: int) -> int:
     return ((_HASH_MUL * pix) & 0xFFFFFFFF) >> (32 - bits)
 
 
-def _decode_entropy_image(br: _BitReader, w: int, h: int, level0: bool,
-                          transforms: list | None = None):
+def _decode_entropy_image(br: _BitReader, w: int, h: int, level0: bool):
     """Decode one entropy-coded ARGB image of w x h into a uint32 array.
 
-    ``level0`` gates transform and meta-Huffman headers (main image
-    only). ``transforms`` (level0 only) collects (type, data) tuples in
-    read order; reading a color-indexing transform shrinks the working
-    width for everything after it, exactly as the spec prescribes.
+    ``level0`` gates the meta-Huffman header (main image only).
     """
-    if level0:
-        while br.read_bit():
-            ttype = br.read(2)
-            if transforms is not None and any(t[0] == ttype for t in transforms):
-                raise ValueError("vp8l: duplicate transform")
-            if ttype == 0 or ttype == 1:  # PREDICTOR / COLOR
-                size_bits = br.read(3) + 2
-                tw = _subsample_size(w, size_bits)
-                th = _subsample_size(h, size_bits)
-                data = _decode_entropy_image(br, tw, th, False)
-                transforms.append((ttype, (size_bits, data)))
-            elif ttype == 2:  # SUBTRACT_GREEN
-                transforms.append((2, None))
-            else:  # COLOR_INDEXING
-                n_colors = br.read(8) + 1
-                pal_deltas = _decode_entropy_image(br, n_colors, 1, False)
-                palette = np.cumsum(
-                    pal_deltas.view(np.uint8).reshape(-1, 4), axis=0, dtype=np.uint32
-                ).astype(np.uint8)
-                palette = palette.reshape(-1, 4).copy().view(np.uint32).reshape(-1)
-                if n_colors <= 2:
-                    width_bits = 3
-                elif n_colors <= 4:
-                    width_bits = 2
-                elif n_colors <= 16:
-                    width_bits = 1
-                else:
-                    width_bits = 0
-                transforms.append((3, (width_bits, palette, w)))
-                w = _subsample_size(w, width_bits)
-
     cache_bits = 0
     cache = None
     if br.read_bit():
@@ -613,7 +576,7 @@ def _decode_entropy_image(br: _BitReader, w: int, h: int, level0: bool,
 
 
 # ---------------------------------------------------------------------------
-# Inverse transforms
+# ARGB packing
 # ---------------------------------------------------------------------------
 
 def _argb_channels(img: np.ndarray):
@@ -624,154 +587,8 @@ def _pack_argb(a, r, g, b):
     return ((a & 0xFF) << 24) | ((r & 0xFF) << 16) | ((g & 0xFF) << 8) | (b & 0xFF)
 
 
-def _inv_subtract_green(img: np.ndarray) -> np.ndarray:
-    a, r, g, b = _argb_channels(img)
-    return _pack_argb(a, (r + g) & 0xFF, g, (b + g) & 0xFF).astype(np.uint32)
-
-
-def _color_delta(pred: int, ch: int) -> int:
-    """(int8)pred * (int8)ch >> 5, C-style (arithmetic shift)."""
-    p = pred - 256 if pred >= 128 else pred
-    c = ch - 256 if ch >= 128 else ch
-    return (p * c) >> 5
-
-
-def _inv_color_transform(img: np.ndarray, size_bits: int, data: np.ndarray) -> np.ndarray:
-    h, w = img.shape
-    out = img.copy()
-    for y in range(h):
-        drow = data[y >> size_bits]
-        for x in range(w):
-            elem = int(drow[x >> size_bits])
-            g2r = elem & 0xFF            # blue byte
-            g2b = (elem >> 8) & 0xFF     # green byte
-            r2b = (elem >> 16) & 0xFF    # red byte
-            pix = int(out[y, x])
-            a = (pix >> 24) & 0xFF
-            r = (pix >> 16) & 0xFF
-            g = (pix >> 8) & 0xFF
-            b = pix & 0xFF
-            r = (r + _color_delta(g2r, g)) & 0xFF
-            b = (b + _color_delta(g2b, g)) & 0xFF
-            b = (b + _color_delta(r2b, r)) & 0xFF
-            out[y, x] = (a << 24) | (r << 16) | (g << 8) | b
-    return out
-
-
-def _avg2(p, q):
-    return tuple((pi + qi) >> 1 for pi, qi in zip(p, q))
-
-
-def _clamp_add_sub_full(l, t, tl):
-    return tuple(min(255, max(0, li + ti - tli)) for li, ti, tli in zip(l, t, tl))
-
-
-def _clamp_add_sub_half(l, t, tl):
-    out = []
-    for li, ti, tli in zip(l, t, tl):
-        ave = (li + ti) >> 1
-        d = ave - tli
-        # C integer division truncates toward zero
-        half = d // 2 if d >= 0 else -((-d) // 2)
-        out.append(min(255, max(0, ave + half)))
-    return tuple(out)
-
-
-def _select(l, t, tl):
-    p = tuple(li + ti - tli for li, ti, tli in zip(l, t, tl))
-    pl = sum(abs(pi - li) for pi, li in zip(p, l))
-    pt = sum(abs(pi - ti) for pi, ti in zip(p, t))
-    return l if pl < pt else t
-
-
 def _split(pix: int):
     return ((pix >> 24) & 0xFF, (pix >> 16) & 0xFF, (pix >> 8) & 0xFF, pix & 0xFF)
-
-
-def _join(t) -> int:
-    return (t[0] << 24) | (t[1] << 16) | (t[2] << 8) | t[3]
-
-
-def _predict(mode: int, l, t, tr, tl):
-    if mode == 0:
-        return (0xFF, 0, 0, 0)
-    if mode == 1:
-        return l
-    if mode == 2:
-        return t
-    if mode == 3:
-        return tr
-    if mode == 4:
-        return tl
-    if mode == 5:
-        return _avg2(_avg2(l, tr), t)
-    if mode == 6:
-        return _avg2(l, tl)
-    if mode == 7:
-        return _avg2(l, t)
-    if mode == 8:
-        return _avg2(tl, t)
-    if mode == 9:
-        return _avg2(t, tr)
-    if mode == 10:
-        return _avg2(_avg2(l, tl), _avg2(t, tr))
-    if mode == 11:
-        return _select(l, t, tl)
-    if mode == 12:
-        return _clamp_add_sub_full(l, t, tl)
-    if mode == 13:
-        return _clamp_add_sub_half(l, t, tl)
-    raise ValueError(f"vp8l: predictor mode {mode} out of range")
-
-
-def _inv_predictor(img: np.ndarray, size_bits: int, modes: np.ndarray) -> np.ndarray:
-    h, w = img.shape
-    out = img.copy()
-    for y in range(h):
-        mrow = modes[y >> size_bits]
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = (0xFF, 0, 0, 0)
-            elif y == 0:
-                pred = _split(int(out[0, x - 1]))  # first row: L
-            elif x == 0:
-                pred = _split(int(out[y - 1, 0]))  # first col: T
-            else:
-                mode = (int(mrow[x >> size_bits]) >> 8) & 0xFF
-                l = _split(int(out[y, x - 1]))
-                t = _split(int(out[y - 1, x]))
-                tl = _split(int(out[y - 1, x - 1]))
-                # TR at the last column: the row-above buffer read one
-                # past its end lands on the CURRENT row's first pixel
-                # (already reconstructed) — libwebp's contiguous-buffer
-                # semantics, which the spec inherits.
-                tr = _split(int(out[y - 1, x + 1])) if x + 1 < w else _split(int(out[y, 0]))
-                pred = _predict(mode, l, t, tr, tl)
-            res = _split(int(out[y, x]))
-            out[y, x] = _join(tuple((ri + pi) & 0xFF for ri, pi in zip(res, pred)))
-    return out
-
-
-def _inv_color_indexing(img: np.ndarray, width_bits: int, palette: np.ndarray,
-                        full_w: int) -> np.ndarray:
-    h, pw = img.shape
-    n_colors = palette.shape[0]
-    if width_bits == 0:
-        idx = (img >> 8) & 0xFF
-    else:
-        per = 1 << width_bits          # pixels per packed byte
-        bits = 8 >> width_bits         # bits per pixel
-        mask = (1 << bits) - 1
-        green = ((img >> 8) & 0xFF).astype(np.uint32)
-        cols = np.arange(full_w)
-        src = green[:, cols >> width_bits]
-        shift = (cols % per) * bits
-        idx = (src >> shift[None, :]) & mask
-    idx = idx[:, :full_w] if idx.shape[1] >= full_w else idx
-    safe = np.where(idx < n_colors, idx, 0)
-    out = palette[safe.astype(np.int64)]
-    out = np.where(idx < n_colors, out, 0)
-    return out.astype(np.uint32)
 
 
 # ---------------------------------------------------------------------------
@@ -788,23 +605,19 @@ def decode_vp8l_stream(payload: bytes) -> np.ndarray:
     br.read_bit()  # alpha hint (informational)
     if br.read(3) != 0:
         raise ValueError("vp8l: unsupported version")
-    transforms: list = []
-    img = _decode_entropy_image(br, w, h, True, transforms)
-    for ttype, tdata in reversed(transforms):
-        if ttype == 0:
-            img = _inv_predictor(img, tdata[0], tdata[1])
-        elif ttype == 1:
-            img = _inv_color_transform(img, tdata[0], tdata[1])
-        elif ttype == 2:
-            img = _inv_subtract_green(img)
-        else:
-            img = _inv_color_indexing(img, tdata[0], tdata[1], tdata[2])
+    if br.read_bit():
+        raise NotImplementedError(
+            "vp8l: transformed streams (predictor, cross-color, "
+            "subtract-green, color-indexing) are not decoded here"
+        )
+    img = _decode_entropy_image(br, w, h, True)
     a, r, g, b = _argb_channels(img)
     return np.stack([r, g, b], axis=2).astype(np.uint8)
 
 
 def decode_webp(payload: bytes) -> np.ndarray:
-    """Decode a WebP file. Lossless (VP8L) decodes; lossy (VP8) raises."""
+    """Decode a WebP file. Untransformed lossless (VP8L) decodes; lossy
+    VP8 and transformed VP8L raise ``NotImplementedError``."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("webp: not a RIFF/WEBP container")
     pos = 12
@@ -829,38 +642,6 @@ def decode_webp(payload: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # Encoder (drives every decode path with real bytes)
 # ---------------------------------------------------------------------------
-
-def _forward_subtract_green(img: np.ndarray) -> np.ndarray:
-    a, r, g, b = _argb_channels(img)
-    return _pack_argb(a, (r - g) & 0xFF, g, (b - g) & 0xFF).astype(np.uint32)
-
-
-def _forward_predictor(img: np.ndarray, size_bits: int, modes: np.ndarray) -> np.ndarray:
-    """Residuals under the same neighbor rules the decoder replays."""
-    h, w = img.shape
-    out = np.zeros_like(img)
-    for y in range(h):
-        mrow = modes[y >> size_bits]
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = (0xFF, 0, 0, 0)
-            elif y == 0:
-                pred = _split(int(img[0, x - 1]))
-            elif x == 0:
-                pred = _split(int(img[y - 1, 0]))
-            else:
-                mode = int(mrow[x >> size_bits])
-                l = _split(int(img[y, x - 1]))
-                t = _split(int(img[y - 1, x]))
-                tl = _split(int(img[y - 1, x - 1]))
-                # same last-column TR rule as the decoder (current row,
-                # x=0); reconstruction is lossless so img == decoded
-                tr = _split(int(img[y - 1, x + 1])) if x + 1 < w else _split(int(img[y, 0]))
-                pred = _predict(mode, l, t, tr, tl)
-            cur = _split(int(img[y, x]))
-            out[y, x] = _join(tuple((ci - pi) & 0xFF for ci, pi in zip(cur, pred)))
-    return out
-
 
 class _SymbolStream:
     """Token stream + frequency tables for one entropy-coded image."""
@@ -1019,43 +800,18 @@ def _write_entropy_image(bw: _BitWriter, pixels: np.ndarray, w: int,
     _emit_tokens(bw, ss.tokens, hdr)
 
 
-def _forward_color_transform(img: np.ndarray, g2r: int, g2b: int, r2b: int) -> np.ndarray:
-    """Forward cross-color transform with one element for the image."""
-    h, w = img.shape
-    out = img.copy()
-    for y in range(h):
-        for x in range(w):
-            pix = int(out[y, x])
-            a = (pix >> 24) & 0xFF
-            r = (pix >> 16) & 0xFF
-            g = (pix >> 8) & 0xFF
-            b = pix & 0xFF
-            new_r = (r - _color_delta(g2r, g)) & 0xFF
-            # inverse adds delta(r2b, restored_r) == delta(r2b, original r)
-            new_b = (b - _color_delta(g2b, g) - _color_delta(r2b, r)) & 0xFF
-            out[y, x] = (a << 24) | (new_r << 16) | (g << 8) | new_b
-    return out
-
-
 def encode_webp_lossless(
     img: np.ndarray,
     *,
     cache_bits: int = 0,
     use_lz77: bool = False,
-    subtract_green: bool = False,
-    predictor_mode: int | None = None,
-    predictor_size_bits: int = 9,
-    color_transform: tuple[int, int, int] | None = None,
     meta_bits: int | None = None,
-    palette: bool = False,
 ) -> bytes:
-    """Encode HxWx3 RGB uint8 to a lossless WebP file.
+    """Encode HxWx3 RGB uint8 to a lossless WebP file, untransformed.
 
-    Feature flags map one-to-one onto decoder paths; combinations
-    compose the way the spec orders them (palette is mutually
-    exclusive with the spatial transforms here to keep the width
-    bookkeeping obvious — the decoder supports arbitrary legal
-    combinations).
+    Each option maps onto one decoder path: ``cache_bits`` the color
+    cache, ``use_lz77`` backward references, ``meta_bits`` a two-group
+    meta-Huffman image.
     """
     img = np.asarray(img, dtype=np.uint8)
     if img.ndim != 3 or img.shape[2] != 3:
@@ -1075,81 +831,10 @@ def encode_webp_lossless(
     bw.write(h - 1, 14)
     bw.write(0, 1)  # no alpha
     bw.write(0, 3)  # version
-
-    work = argb
-    out_w = w
-    if palette:
-        if subtract_green or predictor_mode is not None:
-            raise ValueError("palette composes with other transforms only on decode")
-        colors, inv = np.unique(work.reshape(-1), return_inverse=True)
-        if colors.shape[0] > 256:
-            raise ValueError("palette mode needs <= 256 distinct colors")
-        n_colors = colors.shape[0]
-        bw.write(1, 1)
-        bw.write(3, 2)  # COLOR_INDEXING
-        bw.write(n_colors - 1, 8)
-        # palette entries are delta-coded per byte lane
-        pal = colors.astype(np.uint32).reshape(1, -1)
-        pal_bytes = pal.view(np.uint8).reshape(-1, 4).astype(np.int16)
-        deltas = np.diff(np.vstack([np.zeros((1, 4), np.int16), pal_bytes]), axis=0) % 256
-        pal_img = deltas.astype(np.uint8).reshape(-1, 4).copy().view(np.uint32).reshape(1, -1)
-        _write_entropy_image(bw, pal_img.astype(np.uint32), n_colors)
-        if n_colors <= 2:
-            width_bits = 3
-        elif n_colors <= 4:
-            width_bits = 2
-        elif n_colors <= 16:
-            width_bits = 1
-        else:
-            width_bits = 0
-        idx = inv.reshape(h, w).astype(np.uint32)
-        if width_bits:
-            per = 1 << width_bits
-            bits = 8 >> width_bits
-            pw = _subsample_size(w, width_bits)
-            packed = np.zeros((h, pw), dtype=np.uint32)
-            for x in range(w):
-                packed[:, x >> width_bits] |= idx[:, x] << ((x % per) * bits)
-            work = _pack_argb(np.full((h, pw), 0xFF, np.uint32), 0, packed, 0).astype(np.uint32)
-            out_w = pw
-        else:
-            work = _pack_argb(np.full((h, w), 0xFF, np.uint32), 0, idx, 0).astype(np.uint32)
-    else:
-        # Transforms are INVERTED in reverse read order, so the stream
-        # lists them in the order they are applied forward: a stream of
-        # [SUBTRACT_GREEN, PREDICTOR] means encode = pred(sg(img)) and
-        # decode = inv(pred) then inv(sg) — libwebp's layout.
-        if subtract_green:
-            bw.write(1, 1)
-            bw.write(2, 2)  # SUBTRACT_GREEN
-            work = _forward_subtract_green(work)
-        if color_transform is not None:
-            g2r, g2b, r2b = color_transform
-            bw.write(1, 1)
-            bw.write(1, 2)  # COLOR (cross-color)
-            bw.write(9 - 2, 3)  # one 512-px block covers test sizes
-            tw = _subsample_size(w, 9)
-            th = _subsample_size(h, 9)
-            elem = (0xFF << 24) | ((r2b & 0xFF) << 16) | ((g2b & 0xFF) << 8) | (g2r & 0xFF)
-            elem_img = np.full((th, tw), elem, dtype=np.uint32)
-            _write_entropy_image(bw, elem_img, tw)
-            work = _forward_color_transform(work, g2r & 0xFF, g2b & 0xFF, r2b & 0xFF)
-        if predictor_mode is not None:
-            bw.write(1, 1)
-            bw.write(0, 2)  # PREDICTOR
-            bw.write(predictor_size_bits - 2, 3)
-            tw = _subsample_size(w, predictor_size_bits)
-            th = _subsample_size(h, predictor_size_bits)
-            modes = np.full((th, tw), predictor_mode, dtype=np.uint32)
-            mode_img = _pack_argb(
-                np.full((th, tw), 0xFF, np.uint32), 0, modes, 0
-            ).astype(np.uint32)
-            _write_entropy_image(bw, mode_img, tw)
-            work = _forward_predictor(work, predictor_size_bits, modes)
-    bw.write(0, 1)  # end of transforms
+    bw.write(0, 1)  # no transforms
 
     _write_entropy_image(
-        bw, work, out_w, cache_bits=cache_bits, use_lz77=use_lz77,
+        bw, argb, w, cache_bits=cache_bits, use_lz77=use_lz77,
         level0=True, meta_bits=meta_bits,
     )
 

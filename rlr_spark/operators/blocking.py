@@ -48,28 +48,16 @@ def with_domain_key(df: DataFrame, url_col: str = "url", out_col: str = "blk_key
 # MinHash-LSH banding
 # ---------------------------------------------------------------------------
 
-def shingle_col(text: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles of lower-cased whitespace tokens
-    (string form — kept for readability/tests; the LSH hot path uses
-    :func:`hashed_shingle_col`, which never builds the strings)."""
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    full = F.array(F.concat_ws(" ", toks))  # short-doc fallback: one shingle
-    windows = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return F.array_distinct(F.when(F.size(toks) >= k, windows).otherwise(full))
-
-
 def hashed_shingle_col(text: Column, k: int = 3) -> Column:
     """Distinct 8-byte shingle identities WITHOUT building shingle
     strings: tokens are hashed once, a shingle's identity is
     ``xxhash64`` of its k-slice of token hashes (xxhash64 accepts array
     input). Equal windows <-> equal identities (modulo 64-bit
     collisions, which only ever ADD candidates), so the minhash
-    statistics are those of :func:`shingle_col` — at a third of the
-    cost (measured 19.0s -> 8.9s for the 300k-page key job; string
-    concat of ~58 windows x ~20 chars per doc was half the stage)."""
+    statistics are those of the k-token string shingles — at a third
+    of the cost of building them (measured 19.0s -> 8.9s for the
+    300k-page key job; string concat of ~58 windows x ~20 chars per
+    doc was half the stage)."""
     toks = F.split(F.lower(F.trim(text)), r"\s+")
     th = F.transform(toks, lambda t: F.xxhash64(t))
     windows = F.transform(
@@ -78,17 +66,6 @@ def hashed_shingle_col(text: Column, k: int = 3) -> Column:
     )
     full = F.array(F.xxhash64(th))  # short-doc fallback: one shingle
     return F.array_distinct(F.when(F.size(th) >= k, windows).otherwise(full))
-
-
-def _perm_min(shingles: Column, j: int) -> Column:
-    # single-arg lambda: a two-arg lambda would make F.transform pass the
-    # array *index* as the second argument instead of the permutation seed
-    return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(j))))
-
-
-def minhash_signature(shingles: Column, num_perm: int) -> list[Column]:
-    """num_perm min-hashes; permutation j = xxhash64(shingle, j). Deterministic."""
-    return [_perm_min(shingles, j) for j in range(num_perm)]
 
 
 def _arrow_minhash_kernel(

@@ -73,11 +73,3 @@ def pushed_filters(df: DataFrame) -> list[str]:
 def has_python_udf(df: DataFrame) -> bool:
     plan = physical_plan(df)
     return "PythonUDF" in plan or "BatchEvalPython" in plan or "ArrowEvalPython" in plan
-
-
-def join_kinds(df: DataFrame) -> list[str]:
-    plan = physical_plan(df)
-    return re.findall(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)",
-        plan,
-    )

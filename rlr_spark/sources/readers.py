@@ -40,15 +40,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
-) -> DataFrame:
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.json(path)
-
-
 def read_stata(spark: SparkSession, path: str) -> DataFrame:
     """Stata scan (S2: rlr.py:68,136) — driver-side pandas, Arrow upload.
 

@@ -198,6 +198,31 @@ def test_every_public_function_is_reached():
     assert not unnamed, f"public functions only tests name: {sorted(unnamed)}"
 
 
+def test_every_top_level_def_is_named():
+    """Every top-level def/class in rlr_spark, private ones included, is
+    named outside its own definition by some .py file in the repo, tests
+    included: a def nothing names is not even tested, so it is deleted
+    rather than carried. Looser than the check above (a test counts as a
+    namer) but wider (the whole package, private helpers too)."""
+    trees = {}
+    for p in glob.glob("**/*.py", root_dir=_ROOT, recursive=True):
+        path = os.path.join(_ROOT, p)
+        with open(path) as f:
+            trees[path] = ast.parse(f.read(), path)
+    used = {path: _names_used(tree) for path, tree in trees.items()}
+
+    unnamed = []
+    for mod, path in _package_modules().items():
+        for node in trees[path].body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            if node.name in _names_used(trees[path], skip=node):
+                continue
+            if not any(node.name in names for p, names in used.items() if p != path):
+                unnamed.append(f"{mod}.{node.name}")
+    assert not unnamed, f"top-level defs no file names: {sorted(unnamed)}"
+
+
 def _unused_imports(path: str) -> list[str]:
     """Top-level imports of ``path`` whose bound name the file never
     reads. ``__all__`` entries count as read; ``from __future__`` and a
