@@ -147,6 +147,22 @@ class Catalog:
             for i, f in enumerate(files)
         ]
 
+    def table_bytes(self, name: str) -> int | None:
+        """On-disk bytes of table ``name``'s data files, from a directory
+        listing — no Spark job. None in Iceberg mode and for a table with
+        no data files at the top level (a partitioned write)."""
+        if self.iceberg_catalog:
+            return None
+        p = self.path(name)
+        if not os.path.isdir(p):
+            return None
+        sizes = [
+            os.path.getsize(os.path.join(p, f))
+            for f in os.listdir(p)
+            if f.endswith(".parquet")
+        ]
+        return sum(sizes) if sizes else None
+
     def write_rows_local(self, name: str, rows: list[tuple]) -> bool:
         """Driver-side parquet write of a tiny (_pid, rows, stage)
         lineage table — the metrics tables are <= a few hundred rows

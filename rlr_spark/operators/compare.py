@@ -15,7 +15,9 @@ pandas UDF (functions/similarity.py).
 Joins: pairs ⋈ L ⋈ R replaces the reference's per-pair ``.loc`` point
 lookups (rlr.py:317,322 — the row-at-a-time form of a hash join,
 SURVEY.md J1). The record side is keyed and shuffled once per side;
-broadcast when it fits, AQE handles residual skew.
+broadcast when it fits, AQE handles residual skew. The web-pages fast
+path (:func:`text_pair_similarity`) joins one record relation on both
+sides, so both joins share one records exchange.
 """
 
 from __future__ import annotations
@@ -195,6 +197,7 @@ def text_pair_similarity(
     id_col: str = "url",
     text_col: str = "text",
     use_jaro_winkler: bool = False,
+    broadcast_records: bool = False,
 ) -> DataFrame:
     """Specialized fast path for the web-pages pipeline: one var group (text).
 
@@ -214,6 +217,12 @@ def text_pair_similarity(
     array op runs per pair. A 64-bit hash collision within one *pair's*
     union (~10^2 tokens) has probability ~1e-16 — immaterial against
     the similarity threshold.
+
+    ``broadcast_records`` hints the record side for broadcast, as in
+    :func:`comparison_vectors`; the caller sets it when the records fit
+    the session's ``spark.sql.autoBroadcastJoinThreshold``. Unhinted,
+    the planner chooses, and a shuffled record side is reused by the
+    second join the same way a broadcast one is.
     """
     from rlr_spark.functions.similarity import norm_tokens
 
@@ -226,23 +235,18 @@ def text_pair_similarity(
         F.md5(F.lower(F.trim(F.col(text_col)))).alias("_norm_md5"),
         *( [F.col(text_col).alias("_raw")] if use_jaro_winkler else [] ),
     ).withColumn("_ntok", F.size("_toks"))
-    lh = recs.select(
-        F.col("_rid").alias("l_id"),
-        F.col("_toks").alias("_lt"),
-        F.col("_norm_md5").alias("_lmd5"),
-        F.col("_ntok").alias("_ln"),
-        *( [F.col("_raw").alias("_lraw")] if use_jaro_winkler else [] ),
+    if broadcast_records:
+        recs = F.broadcast(recs)
+    # ONE record relation joined on both sides: the planner builds one
+    # records exchange (broadcast or shuffle) and reuses it for the
+    # second join, so the records are scanned and tokenized once and
+    # the pairs stream through both probes
+    lrec, rrec = recs.alias("L"), recs.alias("R")
+    df = pairs.join(lrec, pairs["l_id"] == F.col("L._rid")).join(
+        rrec, pairs["r_id"] == F.col("R._rid")
     )
-    rh = recs.select(
-        F.col("_rid").alias("r_id"),
-        F.col("_toks").alias("_rt"),
-        F.col("_norm_md5").alias("_rmd5"),
-        F.col("_ntok").alias("_rn"),
-        *( [F.col("_raw").alias("_rraw")] if use_jaro_winkler else [] ),
-    )
-    df = pairs.join(lh, "l_id").join(rh, "r_id")
-    inter = F.size(F.array_intersect(F.col("_lt"), F.col("_rt"))).cast("double")
-    union = (F.col("_ln") + F.col("_rn")).cast("double") - inter
+    inter = F.size(F.array_intersect(F.col("L._toks"), F.col("R._toks"))).cast("double")
+    union = (F.col("L._ntok") + F.col("R._ntok")).cast("double") - inter
     # BRANCH-FREE division on purpose: a `when(union == 0).otherwise
     # (inter/union)` form re-evaluates the array_intersect per branch
     # reference — codegen subexpression elimination EXCLUDES conditional
@@ -250,15 +254,15 @@ def text_pair_similarity(
     # for the 26M-pair score projection at 300k pages). try_divide
     # yields NULL on union == 0 (both docs empty), coalesced to 0.0 —
     # value-identical to the conditional form.
-    df = df.withColumn(
-        "sim_jaccard", F.coalesce(F.try_divide(inter, union), F.lit(0.0))
-    )
-    # exact bit via the precomputed normalized-text md5: equality of the
-    # 16-byte digest, not of two page-sized strings
-    df = df.withColumn(
-        "cmp_text_exact", (F.col("_lmd5") == F.col("_rmd5")).cast("double")
-    )
+    out = [
+        F.coalesce(F.try_divide(inter, union), F.lit(0.0)).alias("sim_jaccard"),
+        # exact bit via the precomputed normalized-text md5: equality of
+        # the 16-byte digest, not of two page-sized strings
+        (F.col("L._norm_md5") == F.col("R._norm_md5")).cast("double").alias("cmp_text_exact"),
+    ]
     if use_jaro_winkler:
-        df = df.withColumn("sim_jw", jaro_winkler(F.col("_lraw"), F.col("_rraw")))
-        df = df.drop("_lraw", "_rraw")
-    return df.drop("_lt", "_rt", "_lmd5", "_rmd5", "_ln", "_rn")
+        out.append(jaro_winkler(F.col("L._raw"), F.col("R._raw")).alias("sim_jw"))
+    # the column order of the two using-joins this replaced: r_id, l_id,
+    # then the rest of the pair columns
+    rest = [pairs[c] for c in pairs.columns if c not in ("l_id", "r_id")]
+    return df.select(pairs["r_id"], pairs["l_id"], *rest, *out)

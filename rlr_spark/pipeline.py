@@ -31,6 +31,7 @@ from rlr_spark.operators.compare import text_pair_similarity
 from rlr_spark.operators.extract import extract_text
 from rlr_spark.operators.review import init_review_columns
 from rlr_spark.operators.scoring import FSWeights, score_and_label
+from rlr_spark.session import byte_size
 
 
 @dataclass
@@ -143,8 +144,10 @@ class Pipeline:
         parallelism is instead left to AQE's coalescing floor
         (``coalescePartitions.parallelismFirst``, on by default, keeps
         shuffle outputs at the session parallelism unless partitions are
-        tiny), and stage INPUTS are rebalanced in ``run()`` where the
-        probe is a metadata-only file-scan split count.
+        tiny). Only the extract stage's input is rebalanced in ``run()``,
+        where the probe is a metadata-only file-scan split count; later
+        stages read the files the previous write left, already at its
+        parallelism.
 
         The read-back after the write runs no job: ``Catalog.read``
         passes the schema sidecar the write just left (parquet mode) or
@@ -243,6 +246,15 @@ class Pipeline:
             df = pages
             if cfg.langs:
                 df = df.where(F.col("lang").isin(cfg.langs))
+            if cfg.uid_bits == 128:
+                uid_expr = F.struct(
+                    F.xxhash64(F.col(cfg.id_col)).alias("h1"),
+                    F.xxhash64(F.col(cfg.id_col), F.lit(1)).alias("h2"),
+                )
+            else:
+                uid_expr = F.xxhash64(F.col(cfg.id_col))
+            df = df.withColumn("uid", uid_expr)
+            uid_obs = None
             # a compact input can land in fewer splits than we have
             # cores (on a real cluster that is tuned with
             # spark.sql.files.maxPartitionBytes). Rebalance only REAL
@@ -253,29 +265,46 @@ class Pipeline:
             # imbalance it fixed.
             par = self.spark.sparkContext.defaultParallelism
             if df.rdd.getNumPartitions() < max(par // 3, 4):
-                df = df.repartition(par)
-            if cfg.uid_bits == 128:
-                uid_expr = F.struct(
-                    F.xxhash64(F.col(cfg.id_col)).alias("h1"),
-                    F.xxhash64(F.col(cfg.id_col), F.lit(1)).alias("h2"),
-                )
-            else:
-                uid_expr = F.xxhash64(F.col(cfg.id_col))
-            extracted = (
-                extract_text(df.drop(cfg.text_col), out_col=cfg.text_col)
-                .drop("html")
-                .withColumn("uid", uid_expr)
+                # hash on the uid, not round-robin: rows sharing a uid
+                # meet in one partition, so at 64 bits the collision
+                # check is an observed window over this same exchange,
+                # collected by the write's own job
+                df = df.repartition(par, "uid")
+                if cfg.uid_bits == 64:
+                    uid_obs = Observation()
+                    df = (
+                        df.withColumn("_uid_rows", F.count("*").over(Window.partitionBy("uid")))
+                        .observe(
+                            uid_obs,
+                            F.count("*").alias("n"),
+                            F.max("_uid_rows").alias("max_rows"),
+                        )
+                        .drop("_uid_rows")
+                    )
+            extracted = extract_text(df.drop(cfg.text_col), out_col=cfg.text_col).drop("html")
+            extracted = extracted.select(
+                *[c for c in extracted.columns if c != "uid"], "uid"
             )
             # 64-bit mode: the check runs BEFORE the manifest is written —
             # a collision aborts the stage and a restarted run re-checks,
             # instead of resuming past a 'complete' manifest with
-            # colliding uids. One exchange (key_counts, shared with the
-            # node dictionary); the map-side partial count keeps the
-            # shuffle to one row per uid.
+            # colliding uids. A rebalanced input reads the observation
+            # above (no job of its own); any other input takes one
+            # exchange (key_counts, shared with the node dictionary),
+            # whose map-side partial count keeps the shuffle to one row
+            # per uid, so the html is never shuffled just for the check.
             # 128-bit mode: NO validator job — the birthday bound at
             # 10^12 rows is ~1e-15, below any hardware error rate, so a
             # corpus-wide aggregation to check it would be pure cost.
             def _check_uid_collisions(out: DataFrame) -> str:
+                if uid_obs is not None:
+                    got = uid_obs.get
+                    n, max_rows = int(got["n"]), got["max_rows"] or 0
+                    if max_rows > 1:
+                        raise RuntimeError(
+                            f"uid hash collision: {n} rows, up to {max_rows} per uid"
+                        )
+                    return f"uid_unique:{n}"
                 n, nu = key_counts(out, "uid")
                 if n != nu:
                     raise RuntimeError(f"uid hash collision: {n} rows, {nu} distinct uids")
@@ -313,9 +342,20 @@ class Pipeline:
             t0 = time.time()
             # no input repartition: the pairs table lands in the pair
             # join's defaultParallelism files (blocking emits each pair
-            # once, so no dedup exchange coalesces it first)
+            # once, so no dedup exchange coalesces it first). The
+            # records are broadcast when the extract table's files fit
+            # the session's broadcast threshold: the planner would
+            # otherwise build on the pairs, the larger relation.
+            threshold = byte_size(
+                self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+            )
+            extract_bytes = self.catalog.table_bytes("extract")
             simmed = text_pair_similarity(
-                pairs, extracted, id_col="uid", text_col=cfg.text_col
+                pairs,
+                extracted,
+                id_col="uid",
+                text_col=cfg.text_col,
+                broadcast_records=extract_bytes is not None and extract_bytes <= threshold,
             )
             weights = cfg.weights()
             if cfg.weights_mode == "em":

@@ -10,8 +10,11 @@ similarity stage.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_BYTE_UNITS = {"b": 0, "k": 1, "m": 2, "g": 3, "t": 4, "p": 5}
 
 
 def get_spark(
@@ -128,6 +131,16 @@ def _driver_memory(phys_bytes: int) -> str:
     on a smaller host, so the driver heap never claims the whole box
     (``RLR_DRIVER_MEM`` overrides)."""
     return f"{min(16 * 1024, phys_bytes // 2**20 // 2)}m"
+
+
+def byte_size(text: str) -> int:
+    """A Spark byte-size setting in bytes: ``"67108864"``, ``"10MB"``,
+    ``"64m"``, ``"-1"`` (Spark's rules: binary units, case free, an
+    optional ``b`` after the letter, a bare number in bytes)."""
+    m = re.fullmatch(r"\s*(-?\d+)\s*([bkmgtp]?)b?\s*", text.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {text!r}")
+    return int(m.group(1)) * 1024 ** _BYTE_UNITS[m.group(2) or "b"]
 
 
 def _master_cores(master: str) -> int:

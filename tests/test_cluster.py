@@ -91,6 +91,21 @@ def test_known_edge_count_matches_sizing_path(spark, name):
     assert over == want
 
 
+def test_local_components_upload_is_one_slice(spark):
+    """The driver-built assignment reaches Spark as ONE partition, so a
+    join that broadcasts it (the cluster write) runs one task for it,
+    not ``defaultParallelism`` (the entities update consumes the same
+    assignment)."""
+    edges = [(i, i + 1) for i in range(0, 200, 2)]
+    df = spark.createDataFrame(edges, "u long, v long")
+    assign = connected_components(df, edge_count=len(edges))
+    assert spark.sparkContext.defaultParallelism > 1
+    assert assign.rdd.getNumPartitions() == 1
+    assert {r.node: r.entity_id for r in assign.collect()} == {
+        n: n - n % 2 for n in range(200)
+    }
+
+
 def test_key_counts_detects_duplicates(spark):
     """The shared collision check: exact (rows, distinct keys), NULL keys
     counted as rows but not as keys (countDistinct's rule), empty input

@@ -1,5 +1,6 @@
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
@@ -72,3 +73,70 @@ def test_text_pair_similarity(spark):
     assert math.isclose(rows[("u1", "u2")].sim_jaccard, 3 / 5, abs_tol=1e-9)
     assert rows[("u1", "u2")].cmp_text_exact == 0.0
     assert rows[("u1", "u3")].sim_jaccard == 0.0
+
+
+def _two_projection_similarity(pairs, pages):
+    """The score join text_pair_similarity replaced: two separate record
+    projections, one using-join per side."""
+    from rlr_spark.functions.similarity import norm_tokens
+
+    toks = F.array_sort(F.transform(norm_tokens(F.col("text")), lambda t: F.xxhash64(t)))
+    recs = pages.select(
+        F.col("uid").alias("_rid"),
+        toks.alias("_toks"),
+        F.md5(F.lower(F.trim(F.col("text")))).alias("_norm_md5"),
+    ).withColumn("_ntok", F.size("_toks"))
+    lh = recs.select(
+        F.col("_rid").alias("l_id"), F.col("_toks").alias("_lt"),
+        F.col("_norm_md5").alias("_lmd5"), F.col("_ntok").alias("_ln"),
+    )
+    rh = recs.select(
+        F.col("_rid").alias("r_id"), F.col("_toks").alias("_rt"),
+        F.col("_norm_md5").alias("_rmd5"), F.col("_ntok").alias("_rn"),
+    )
+    df = pairs.join(lh, "l_id").join(rh, "r_id")
+    inter = F.size(F.array_intersect(F.col("_lt"), F.col("_rt"))).cast("double")
+    union = (F.col("_ln") + F.col("_rn")).cast("double") - inter
+    df = df.withColumn("sim_jaccard", F.coalesce(F.try_divide(inter, union), F.lit(0.0)))
+    df = df.withColumn("cmp_text_exact", (F.col("_lmd5") == F.col("_rmd5")).cast("double"))
+    return df.drop("_lt", "_rt", "_lmd5", "_rmd5", "_ln", "_rn")
+
+
+@pytest.fixture(scope="module")
+def small_run(spark, tmp_path_factory, web_pages_small):
+    from rlr_spark.catalog import Catalog
+    from rlr_spark.pipeline import Pipeline, PipelineConfig
+
+    pages, _ = web_pages_small
+    root = str(tmp_path_factory.mktemp("compare_wh"))
+    pipe = Pipeline(spark, Catalog(spark, root), PipelineConfig(salt_k=2))
+    pipe.run(pages)
+    return pipe.catalog
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["hint", "planner"])
+def test_score_join_matches_two_projection_join(spark, small_run, threshold):
+    """One record relation joined on both sides gives the rows, types and
+    column order (r_id, l_id, ...) of the two-projection form, with the
+    records broadcast by hint and with broadcasts off (the planner's
+    shuffled path); the score table starts with the same columns."""
+    extract, pairs = small_run.read("extract"), small_run.read("pairs")
+    old = _two_projection_similarity(pairs, extract)
+    want = sorted(old.collect())
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        new = text_pair_similarity(
+            pairs, extract, id_col="uid", broadcast_records=threshold is None
+        )
+        assert new.schema == old.schema
+        assert sorted(new.collect()) == want
+    finally:
+        spark.conf.set(key, saved)
+    assert old.columns[:2] == ["r_id", "l_id"]
+    score = small_run.read("score")
+    assert score.dtypes[: len(old.columns)] == old.dtypes
+    assert sorted(score.select(old.columns).collect()) == want
+    assert len(want) > 0

@@ -156,12 +156,33 @@ def test_score_manifest_label_counts(spark, pipeline_out, tmp_path):
     assert probe.read_manifest("probe")["n"] == {"rows": m["rows"]}
 
 
-def test_uid_collision_aborts_extract_and_rechecks(spark, tmp_path, web_pages_small):
+def _count_key_counts(monkeypatch) -> list:
+    """Record each call of the pipeline's ``key_counts`` uid check."""
+    import rlr_spark.pipeline as pl
+
+    calls = []
+    real = pl.key_counts
+
+    def counted(df, key):
+        calls.append(key)
+        return real(df, key)
+
+    monkeypatch.setattr(pl, "key_counts", counted)
+    return calls
+
+
+def test_uid_collision_aborts_extract_and_rechecks(
+    spark, tmp_path, web_pages_small, monkeypatch
+):
     """Two pages with the same url get the same uid. The extract stage's
     uid check must abort the run before the extract manifest exists, so
-    a rerun checks again instead of resuming past the collision."""
+    a rerun checks again instead of resuming past the collision. This
+    input has 2 partitions, so ``run()`` rebalances it on the uid and
+    the check is the observation riding that exchange (no
+    ``key_counts`` job)."""
     pages, _ = web_pages_small
     dup = pages.unionByName(pages.limit(1))
+    calls = _count_key_counts(monkeypatch)
     pipe = Pipeline(
         spark, Catalog(spark, str(tmp_path / "wh")), PipelineConfig(salt_k=2)
     )
@@ -169,6 +190,47 @@ def test_uid_collision_aborts_extract_and_rechecks(spark, tmp_path, web_pages_sm
         with pytest.raises(RuntimeError, match="uid hash collision"):
             pipe.run(dup)
         assert pipe.read_manifest("extract") is None
+    assert calls == []
+
+
+def test_uid_collision_aborts_unrebalanced_input(
+    spark, tmp_path, web_pages_small, monkeypatch
+):
+    """The same abort and recheck on an input of 4 partitions, which
+    ``run()`` does not rebalance (the html is not shuffled just for the
+    check): the uid check is the ``key_counts`` exchange."""
+    pages, _ = web_pages_small
+    dup = pages.unionByName(pages.limit(1)).repartition(4)
+    calls = _count_key_counts(monkeypatch)
+    pipe = Pipeline(
+        spark, Catalog(spark, str(tmp_path / "wh")), PipelineConfig(salt_k=2)
+    )
+    for _ in range(2):
+        with pytest.raises(RuntimeError, match="uid hash collision"):
+            pipe.run(dup)
+        assert pipe.read_manifest("extract") is None
+    assert calls == ["uid", "uid"]
+    # without the duplicate the same path validates every row
+    pipe.run(pages.repartition(4))
+    assert pipe.read_manifest("extract")["validated"] == "uid_unique:300"
+
+
+@pytest.mark.parametrize("uid_bits", [64, 128])
+def test_empty_input_zero_row_stages(spark, tmp_path, web_pages_small, uid_bits):
+    """A language filter that matches nothing: every stage lands with 0
+    rows, and the 64-bit uid check validates the empty set."""
+    pages, _ = web_pages_small
+    pipe = Pipeline(
+        spark,
+        Catalog(spark, str(tmp_path / "wh")),
+        PipelineConfig(salt_k=2, langs=["xx"], uid_bits=uid_bits),
+    )
+    out = pipe.run(pages)
+    for stage, df in out.items():
+        assert df.count() == 0, stage
+        assert pipe.read_manifest(stage)["rows"] == 0, stage
+    validated = pipe.read_manifest("extract").get("validated")
+    assert validated == ("uid_unique:0" if uid_bits == 64 else None)
 
 
 def test_config_change_invalidates(spark, pipeline_out, run_dir):

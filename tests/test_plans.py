@@ -64,6 +64,62 @@ def test_score_uses_hash_join_not_nested_loop(spark, staged):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
 
+def _final_plan_lines(df) -> list[str]:
+    """The executed adaptive plan of ``df`` after running it, final part only."""
+    df.collect()
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan, plan
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Line ``i`` of a plan tree string and the lines of its children."""
+    depth = len(lines[i]) - len(lines[i].lstrip(" :|+-"))
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if len(line) - len(line.lstrip(" :|+-")) <= depth:
+            break
+        out.append(line)
+    return out
+
+
+def _table_scans(lines: list[str], table: str) -> int:
+    return sum(bool(re.search(rf"FileScan parquet .*/{table}\]", ln)) for ln in lines)
+
+
+def test_score_builds_one_record_relation(spark, staged):
+    """The score join builds on the records, not the pairs: with the
+    broadcast hint, one records BroadcastExchange serves both joins (the
+    second is a ReusedExchange) and the pairs scan streams; with
+    broadcasts off, the records are scanned and tokenized once and their
+    shuffle is reused by the second join."""
+    from rlr_spark.operators.compare import text_pair_similarity
+
+    extract, pairs = staged.read("extract"), staged.read("pairs")
+    lines = _final_plan_lines(
+        text_pair_similarity(pairs, extract, id_col="uid", broadcast_records=True)
+    )
+    bcast = [i for i, ln in enumerate(lines) if re.match(r"[\s:|+-]*BroadcastExchange ", ln)]
+    reused = [ln for ln in lines if "ReusedExchange" in ln]
+    assert len(bcast) == 1 and len(reused) == 1, "\n".join(lines)
+    assert "BroadcastExchange" in reused[0]
+    under = _subtree(lines, bcast[0])
+    assert _table_scans(under, "extract") == 1 and _table_scans(under, "pairs") == 0
+    assert _table_scans(lines, "extract") == 1 and _table_scans(lines, "pairs") == 1
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        lines = _final_plan_lines(text_pair_similarity(pairs, extract, id_col="uid"))
+    finally:
+        spark.conf.set(key, saved)
+    text = "\n".join(lines)
+    assert "BroadcastExchange" not in text, text
+    assert _table_scans(lines, "extract") == 1, text
+    assert re.search(r"ReusedExchange .*Exchange hashpartitioning\(_rid", text), text
+
+
 def test_filter_pushdown_to_parquet(spark, staged):
     extract = staged.read("extract").where(F.col("lang") == "en").select("url")
     plan = _plan(extract)
@@ -413,13 +469,15 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     pipe = Pipeline(spark, Catalog(spark, str(tmp_path / "wh")), PipelineConfig(salt_k=2))
     pipe.run(pages, force=True)
     run_jobs, _ = count_jobs(sc, lambda: pipe.run(pages, force=True))
-    # extract: write 2 + uid check 2; pairs: blocking checkpoint 2 +
-    # write 4; score: write 3; cluster: CC collect 1 + write 3
+    # extract: write 2 (the uid-keyed rebalance exchange, which the uid
+    # check rides, + the write); pairs: blocking checkpoint 2 + write 4;
+    # score: write 2 (one records broadcast, reused by both joins, +
+    # the write); cluster: CC collect 1 + write 3
     stage_jobs = {}
     for s in STAGES:
         os.remove(pipe._manifest_path(s))
         stage_jobs[s], _ = count_jobs(sc, lambda: pipe.run(pages))
-    assert stage_jobs == {"extract": 4, "pairs": 6, "score": 3, "cluster": 4}, stage_jobs
+    assert stage_jobs == {"extract": 2, "pairs": 6, "score": 2, "cluster": 4}, stage_jobs
     assert sum(stage_jobs.values()) == run_jobs
 
     data_l, data_r, pairs = generate_firm_fixtures()
@@ -448,4 +506,4 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     render_jobs, _ = count_jobs(sc, reviewer.render_current)
     save_jobs, _ = count_jobs(sc, lambda: reviewer.process_choice("2"))
     got = {"pipeline_run": run_jobs, "review_render": render_jobs, "review_save": save_jobs}
-    assert got == {"pipeline_run": 17, "review_render": 1, "review_save": 1}, got
+    assert got == {"pipeline_run": 14, "review_render": 1, "review_save": 1}, got

@@ -24,6 +24,24 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
+def capture_writes(catalog, names: set[str]) -> dict[str, str]:
+    """Make ``catalog`` record the final (adaptive) plan of each named
+    table's write: the plan is run once through ``collect()`` before the
+    write runs it again, so the joins AQE chose at runtime (and the
+    exchanges it reused) show in the dump."""
+    plans: dict[str, str] = {}
+    write = catalog.write
+
+    def recording_write(df, name):
+        if name in names:
+            df.collect()
+            plans[name] = formatted(df)
+        write(df, name)
+
+    catalog.write = recording_write
+    return plans
+
+
 def main() -> None:
     out_md = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "PLANS.md")
 
@@ -46,6 +64,7 @@ def main() -> None:
     pages_path, _ = write_web_pages(os.path.join(tmp, "data"), n_pages=300, seed=42)
     pages = spark.read.parquet(pages_path)
     pipe = Pipeline(spark, Catalog(spark, os.path.join(tmp, "wh")), PipelineConfig(salt_k=4))
+    writes = capture_writes(pipe.catalog, {"extract", "score"})
     pipe.run(pages)
 
     extracted = pipe.catalog.read("extract")
@@ -61,6 +80,12 @@ def main() -> None:
         "extract (html -> text, Arrow UDF; narrow, no shuffle)": formatted(
             extract_text(pages.drop("text"))
         ),
+        "extract write (the pipeline's extract stage: rebalance + uid check)": writes[
+            "extract"
+        ],
+        "score write (the pipeline's score stage: pairs x records + FS label)": writes[
+            "score"
+        ],
         "blocking + salted pair generation": formatted(
             candidate_pairs(extracted, id_col="uid", url_col="url")[0]
         ),
