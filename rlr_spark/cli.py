@@ -15,8 +15,11 @@ over the Spark-backed :class:`~rlr_spark.sources.packet.ReviewSession`:
 
 Driver-side by design: a review slice is human-sized, so the ordered
 pair *keys* are collected once (the reference collects the entire table
-into pandas); each render is one key-filtered scan and each label write
-one projected rewrite of the pair table — one Spark job each — so the
+into pandas). Renders are served from a driver cache of one page of
+``RENDER_PAGE`` keys: entering a page is one Spark job (a range-filtered
+scan of the pair table and ``isin`` scans of the two record tables,
+collected as one union), a render inside the cached page runs none, and
+each label write is one projected rewrite of the pair table — so the
 same loop works unchanged when the pair table is a big catalog table.
 
 ``input_fn`` / ``print_fn`` are injectable for tests (monkeypatched
@@ -48,6 +51,11 @@ ADDTL_OPTIONS = [
     ("s", "Summary"),
     ("e", "Exit"),
 ]
+
+#: pairs of the key-sorted cursor order fetched by one render job; the
+#: driver caches one page (at most this many pair rows and twice as
+#: many records, projected to the var-schema fields)
+RENDER_PAGE = 64
 
 
 def _key_match(cols: list[str], values) -> Column:
@@ -126,42 +134,113 @@ class CLReviewer:
             tuple(r) for r in self.pairs.select(*self.key_cols).orderBy(*self.key_cols).collect()
         ]
         self.n = len(self.keys)
+        #: (page, pair values, L records, R records) of the last page
+        #: rendered; _save patches it, so it mirrors the saved table
+        self._page: tuple[int, dict, dict, dict] | None = None
 
-    # -- the current pair: one key-filtered scan ------------------------------
+    # -- the current pair: served from a cached page -------------------------
     def _grouped_row(self, idx: int) -> Row | None:
         """The pair at ``idx`` as an ``operators.compare.grouped_projection``
-        row (its ``grp_*`` values, label and note), in ONE Spark job: the
-        pair row, the L record and the R record are key-filtered scans,
-        each projected to a string map, collected as one union — no
-        join, no exchange. ``None`` when the pair key is not in the
-        table."""
+        row (its ``grp_*`` values, label and note), read from the cached
+        page of ``RENDER_PAGE`` keys that holds ``idx``. Only a render
+        that leaves the cached page runs a Spark job (:meth:`_fetch_page`).
+        ``None`` when the pair key is not in the table."""
+        page = idx // RENDER_PAGE
+        if self._page is None or self._page[0] != page:
+            self._page = (page, *self._fetch_page(page))
+        _, pair_vals, l_vals, r_vals = self._page
         key = self.keys[idx]
-        schema = self.packet.var_group_schema
+        if key not in pair_vals:
+            return None
+        nl = len(self.packet.file_L_ids)
+        return Row(
+            **pair_vals[key],
+            **grouped_values(
+                l_vals.get(key[:nl]), r_vals.get(key[nl:]), self.packet.var_group_schema
+            ),
+        )
 
-        def scan(side: str, df: DataFrame, cols: list[str], values, fields) -> DataFrame:
-            # values cast to string exactly as grouped_projection casts them
+    def _fetch_page(self, page: int) -> tuple[dict, dict, dict]:
+        """One page's pair values (key -> label and note) and records
+        (L ids -> values, R ids -> values), in ONE Spark job: the union
+        of :meth:`_page_query`, matched to the page's keys as typed
+        tuples on the driver (the first row of each key, as scanned)."""
+        # a NULL key part matches nothing, as in the equi-joins of
+        # upsert_labels and grouped_projection
+        keys = [
+            k for k in self.keys[page * RENDER_PAGE : (page + 1) * RENDER_PAGE] if None not in k
+        ]
+        pair_vals: dict[tuple, dict] = {}
+        l_vals: dict[tuple, dict] = {}
+        r_vals: dict[tuple, dict] = {}
+        if not keys:
+            return pair_vals, l_vals, r_vals
+        nl = len(self.packet.file_L_ids)
+        want = set(keys)
+        want_l, want_r = {k[:nl] for k in keys}, {k[nl:] for k in keys}
+        for r in self._page_query(keys).collect():
+            k = tuple(r[1:-1])
+            if r.side == "pair" and k in want:
+                pair_vals.setdefault(k, r.vals)
+            elif r.side == "l" and k[:nl] in want_l:
+                l_vals.setdefault(k[:nl], r.vals)
+            elif r.side == "r" and k[nl:] in want_r:
+                r_vals.setdefault(k[nl:], r.vals)
+        return pair_vals, l_vals, r_vals
+
+    def _page_query(self, keys: list[tuple]) -> DataFrame:
+        """The union of three scans for sorted, NULL-free pair ``keys``:
+        the pair rows in the keys' range (a pushable ``between`` on the
+        first key column plus the exact range on the whole key tuple),
+        and the L and R records whose ids are ``isin`` the keys' ids.
+        Each branch is ``side``, its ids cast to the pair table's key
+        types (``_k0`` ...; NULL where the side has no such id) and a
+        string map of its values, cast as grouped_projection casts them.
+        No join, no exchange."""
+        types = [self.pairs.schema[c].dataType for c in self.key_cols]
+
+        def scan(side: str, df: DataFrame, cols: list[str], at: int, fields, cond) -> DataFrame:
+            ids = [F.lit(None).cast(t) for t in types]
+            for i, c in enumerate(cols, at):
+                ids[i] = F.col(c).cast(types[i])
             vals = F.create_map(
                 *[x for c in fields for x in (F.lit(c), F.col(c).cast("string"))]
             ).cast("map<string,string>")
-            return df.where(_key_match(cols, values)).select(
-                F.lit(side).alias("side"), vals.alias("vals")
+            return df.where(cond).select(
+                F.lit(side).alias("side"),
+                *[v.alias(f"_k{i}") for i, v in enumerate(ids)],
+                vals.alias("vals"),
             )
 
+        def ids_in(df: DataFrame, cols: list[str], at: int) -> Column:
+            cond = F.lit(True)
+            for i, c in enumerate(cols, at):
+                # cast only where the types differ: a bare column keeps
+                # the In pushable
+                col = F.col(c) if df.schema[c].dataType == types[i] else F.col(c).cast(types[i])
+                cond = cond & col.isin(sorted({k[i] for k in keys}))
+            return cond
+
+        def bound(key: tuple) -> Column:
+            return F.struct(
+                *[F.lit(v).cast(t).alias(c) for c, v, t in zip(self.key_cols, key, types)]
+            )
+
+        lo, hi = keys[0], keys[-1]
+        in_range = F.col(self.key_cols[0]).between(
+            F.lit(lo[0]).cast(types[0]), F.lit(hi[0]).cast(types[0])
+        ) & F.struct(*self.key_cols).between(bound(lo), bound(hi))
+        schema = self.packet.var_group_schema
         ids_l, ids_r = self.packet.file_L_ids, self.packet.file_R_ids
+        data_l, data_r = self.session.data_l, self.session.data_r
         lvars = sorted({c for g in schema for c in g["lvars"]})
         rvars = sorted({c for g in schema for c in g["rvars"]})
-        union = (
-            scan("pair", self.pairs, self.key_cols, key, [REV_LABEL_COL, REV_NOTE_COL])
-            .unionAll(scan("l", self.session.data_l, ids_l, key[: len(ids_l)], lvars))
-            .unionAll(scan("r", self.session.data_r, ids_r, key[len(ids_l):], rvars))
-        )
-        found: dict[str, dict] = {}
-        for r in union.collect():
-            found.setdefault(r.side, r.vals)
-        if "pair" not in found:
-            return None
-        return Row(
-            **found["pair"], **grouped_values(found.get("l"), found.get("r"), schema)
+        return (
+            scan("pair", self.pairs, self.key_cols, 0, [REV_LABEL_COL, REV_NOTE_COL], in_range)
+            .unionAll(scan("l", data_l, ids_l, 0, lvars, ids_in(data_l, ids_l, 0)))
+            .unionAll(
+                scan("r", data_r, ids_r, len(ids_l), rvars, ids_in(data_r, ids_r, len(ids_l)))
+            )
         )
 
     # -- rendering (fresh implementations of the CL_* surfaces) ----------------
@@ -208,9 +287,10 @@ class CLReviewer:
         """save_label_or_note (rlr.py:698-744) for one known key: the
         :func:`upsert_labels` column rules applied under the key
         predicate — a projection of the pair table, no join — then
-        autosave."""
+        autosave, then the same update on the cached page."""
         check_label(label, list(self.packet.label_choices))
-        hit = _key_match(self.key_cols, self.keys[idx])
+        key = self.keys[idx]
+        hit = _key_match(self.key_cols, key)
 
         def new(v: str | None) -> Column:
             return F.lit(None).cast("string") if v is None else F.when(hit, F.lit(v))
@@ -220,12 +300,23 @@ class CLReviewer:
         self.pairs = self.pairs.select(*self.key_cols, *rest).withColumns(
             label_update_columns(new(label), new(note), F.current_timestamp())
         )
+        # self.pairs holds the update now: until it is saved, a render
+        # reads it, not the cache
+        page, self._page = self._page, None
         if self.autosave:
             self._persist()
         else:
             # truncate the update lineage so a long session doesn't grow
             # an unbounded plan
             self.pairs = self.pairs.localCheckpoint(eager=True)
+        # a CSV re-read differs from what was written in every row (""
+        # reads back NULL, surrounding blanks are trimmed): refetch
+        if page is not None and (not self.autosave or self.comp_pairs_path.endswith(".parquet")):
+            if key in page[1]:
+                page[1][key].update(
+                    {c: v for c, v in ((REV_LABEL_COL, label), (REV_NOTE_COL, note)) if v is not None}
+                )
+            self._page = page
         if self.packet_path:
             self.session.cursor = idx
             self.session.save_packet(self.packet_path)

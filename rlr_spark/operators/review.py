@@ -136,11 +136,17 @@ def label_counts(pairs: DataFrame, label_choices: list[str] | None = None) -> Da
         .agg(F.count("*").alias("count"))
     )
     if label_choices is not None:
-        expected = set(label_choices) | {_UNLABELED}
-        unexpected = [r.label for r in out.select("label").collect() if r.label not in expected]
-        if unexpected:
-            warnings.warn(f"Unexpected labels present: {unexpected}", stacklevel=2)
+        warn_unexpected_labels([r.label for r in out.select("label").collect()], label_choices)
     return out
+
+
+def warn_unexpected_labels(labels: list[str], label_choices: list[str]) -> None:
+    """Warn, at the caller's caller, about collected :func:`label_counts`
+    labels that are neither a choice nor "Unlabeled"."""
+    expected = set(label_choices) | {_UNLABELED}
+    unexpected = [label for label in labels if label not in expected]
+    if unexpected:
+        warnings.warn(f"Unexpected labels present: {unexpected}", stacklevel=3)
 
 
 def label_percentages(pairs: DataFrame) -> DataFrame:

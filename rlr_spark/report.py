@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from rlr_spark.operators.review import label_counts
+from rlr_spark.operators.review import label_counts, warn_unexpected_labels
 
 
 def render_pair(
@@ -42,8 +42,12 @@ def render_pair(
 
 
 def render_label_summary(pairs: DataFrame, label_choices: list[str] | None = None) -> str:
-    """Label summary box (≈ CL_print_label_summary, rlr.py:479-512)."""
-    counts = {r.label: r["count"] for r in label_counts(pairs, label_choices).collect()}
+    """Label summary box (≈ CL_print_label_summary, rlr.py:479-512).
+    One collect of :func:`label_counts`; the unexpected-label warning is
+    checked on the collected rows."""
+    counts = {r.label: r["count"] for r in label_counts(pairs).collect()}
+    if label_choices is not None:
+        warn_unexpected_labels(list(counts), label_choices)
     total = sum(counts.values())
     width = max([len(k) for k in counts] + [10]) + 14
     lines = ["+" + "-" * width + "+", "|" + "Label Summary".center(width) + "|"]

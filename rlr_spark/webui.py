@@ -6,8 +6,8 @@ mismatch highlighting, a label radio, a note box, prev/next/goto, and a
 progress summary). Streamlit is not installable in this environment, so
 the same surface is served with the standard library's ``http.server``
 over the SAME session machinery the CLI reviewer uses
-(:class:`~rlr_spark.cli.CLReviewer` — one key-filtered scan per render,
-one projected rewrite per label save, autosave, packet-cursor
+(:class:`~rlr_spark.cli.CLReviewer` — renders served from a cached page
+of pairs, one projected rewrite per label save, autosave, packet-cursor
 persistence). No JavaScript framework, no
 dependency: plain HTML forms, one POST per action.
 

@@ -114,10 +114,10 @@ def test_review_loop_validates_choices_and_bounds(spark, packet_session):
     assert session.cursor == 0
 
 
-def test_composite_key_session(spark, tmp_path):
-    """The RLR_Home.py:96-119 packet shape: composite ids
-    ['year','ein'] vs ['ref_year','ui_num'] — flags computed on the FULL
-    tuple (fixing the reference's single-column TODO, rlr.py:175-178)."""
+def _composite_session(spark, tmp_path):
+    """The RLR_Home.py:96-119 packet shape: composite ids ['year','ein']
+    vs ['ref_year','ui_num']. The pair table's year columns are INT, the
+    records' BIGINT."""
     data_l, data_r, pairs = generate_firm_fixtures()
     pairs = pairs.drop_duplicates().reset_index(drop=True)
     pairs["year"] = 2020
@@ -126,6 +126,7 @@ def test_composite_key_session(spark, tmp_path):
     # first-column-only check (year) would flag it found; the full-tuple
     # check must not
     pairs.loc[len(pairs)] = {"ein": 100, "ui_num": 500, "year": 1999, "ref_year": 2020}
+    pairs = pairs.astype({"year": "int32", "ref_year": "int32"})
 
     l_path, r_path, p_path = (
         str(tmp_path / n) for n in ("L.parquet", "R.parquet", "P.parquet")
@@ -142,7 +143,13 @@ def test_composite_key_session(spark, tmp_path):
         var_group_schema=VAR_SCHEMA_FIRM,
         label_choices=["Match", "Not a Match"],
     )
-    session = ReviewSession(spark, packet)
+    return ReviewSession(spark, packet)
+
+
+def test_composite_key_session(spark, tmp_path):
+    """Composite-id packets: existence flags computed on the FULL tuple
+    (fixing the reference's single-column TODO, rlr.py:175-178)."""
+    session = _composite_session(spark, tmp_path)
     flags = {
         (r.year, r.ein, r.ui_num): (r.rlr_l_id_exists, r.rlr_r_id_exists)
         for r in session.pairs.collect()
@@ -184,33 +191,170 @@ def _by_key(rows, key_cols):
     return {tuple(r[c] for c in key_cols): r for r in rows}
 
 
-def test_render_equals_grouped_projection(spark, tmp_path):
-    """The one-scan render returns exactly grouped_projection's grp_*
-    values, label and note: a found pair, a pair whose L id is absent
-    ("no data found") and a pair with a NULL field ("nan")."""
+_FIELDS = ["rlr_label", "rlr_note"] + [
+    f"grp_{g['name'].lower()}_{side}vals" for g in VAR_SCHEMA_FIRM for side in "lr"
+]
+
+
+def _projection(r):
+    """grouped_projection of the reviewer's pair table, keyed by pair key."""
     from rlr_spark.operators.compare import grouped_projection
 
+    ids_l, ids_r = r.packet.file_L_ids, r.packet.file_R_ids
+    rows = grouped_projection(
+        r.pairs, r.session.data_l, r.session.data_r, ids_l, ids_r,
+        VAR_SCHEMA_FIRM, l_pair_col=ids_l, r_pair_col=ids_r,
+    ).collect()
+    return {k: {f: row[f] for f in _FIELDS} for k, row in _by_key(rows, r.key_cols).items()}
+
+
+def _rendered(r, idx):
+    row = r._grouped_row(idx)
+    return {f: row[f] for f in _FIELDS}
+
+
+def test_render_equals_grouped_projection(spark, tmp_path):
+    """The page render returns exactly grouped_projection's grp_* values,
+    label and note for every pair: among them a pair whose L id is
+    absent ("no data found") and a pair with a NULL field ("nan")."""
     session, _, _ = _firm_session(spark, tmp_path, keep_missing_id=True)
     r = CLReviewer(session, autosave=False, print_fn=lambda _t: None)
     r._save(0, label="Match")
     r._save(0, note="seen")
-    want = _by_key(
-        grouped_projection(
-            r.pairs, session.data_l, session.data_r, ["ein"], ["ui_num"],
-            VAR_SCHEMA_FIRM, l_pair_col=["ein"], r_pair_col=["ui_num"],
-        ).collect(),
-        r.key_cols,
-    )
-    fields = ["rlr_label", "rlr_note"] + [
-        f"grp_{g['name'].lower()}_{side}vals" for g in VAR_SCHEMA_FIRM for side in "lr"
-    ]
-    for key in [(100, 500), (999, 507), (105, 505)]:
-        got = r._grouped_row(r.keys.index(key))
-        assert {f: got[f] for f in fields} == {f: want[key][f] for f in fields}, key
+    want = _projection(r)
+    assert (999, 507) in r.keys and (105, 505) in r.keys
+    for idx, key in enumerate(r.keys):
+        assert _rendered(r, idx) == want[key], key
     rows = {k: r._grouped_row(r.keys.index(k)) for k in [(100, 500), (999, 507), (105, 505)]}
     assert (rows[(100, 500)].rlr_label, rows[(100, 500)].rlr_note) == ("Match", "seen")
     assert rows[(999, 507)].grp_name_lvals == ["no data found"]
     assert rows[(105, 505)].grp_address_rvals == ["nan", "il"]
+
+
+def test_composite_render_equals_grouped_projection(spark, tmp_path):
+    """Composite keys whose pair-table types (INT year) differ from the
+    records' (BIGINT): the page matches rows to keys on the pair table's
+    types, so every render equals grouped_projection, the missing-year
+    pair ("no data found" on the left) included."""
+    r = CLReviewer(_composite_session(spark, tmp_path), autosave=False, print_fn=lambda _t: None)
+    r._save(1, label="Not a Match")
+    want = _projection(r)
+    for idx, key in enumerate(r.keys):
+        assert _rendered(r, idx) == want[key], key
+    assert _rendered(r, r.keys.index((1999, 100, 2020, 500)))["grp_name_lvals"] == ["no data found"]
+
+
+def _cross_session(spark, tmp_path):
+    """Every L x R firm pair: 144 pairs, three render pages."""
+    from rlr_spark.cli import RENDER_PAGE
+
+    data_l, data_r, _ = generate_firm_fixtures()
+    pairs = data_l[["ein"]].merge(data_r[["ui_num"]], how="cross")
+    assert 2 * RENDER_PAGE < len(pairs) < 3 * RENDER_PAGE
+    paths = {n: str(tmp_path / f"{n}.parquet") for n in ("L", "R", "pairs")}
+    for n, pdf in zip(paths, (data_l, data_r, pairs)):
+        spark.createDataFrame(pdf).write.parquet(paths[n])
+    packet = ReviewPacket(
+        file_L=paths["L"],
+        file_L_ids=["ein"],
+        file_R=paths["R"],
+        file_R_ids=["ui_num"],
+        file_comps=paths["pairs"],
+        var_group_schema=VAR_SCHEMA_FIRM,
+        label_choices=["Match", "Not a Match", "Maybe a Match"],
+    )
+    return ReviewSession(spark, packet)
+
+
+def test_render_crosses_page_edges(spark, tmp_path):
+    """``p`` and ``n`` across a page edge and ``g`` jumps land on the
+    right pair: each render equals grouped_projection's row of the key
+    at the cursor, and only a render on a new page runs a job."""
+    from rlr_spark.cli import RENDER_PAGE
+    from rlr_spark.plans import count_jobs
+
+    r = CLReviewer(
+        _cross_session(spark, tmp_path),
+        autosave=False,
+        input_fn=_scripted([str(RENDER_PAGE), str(2 * RENDER_PAGE + 1), "2"]),
+        print_fn=lambda _t: None,
+    )
+    want = _projection(r)
+    sc = spark.sparkContext
+    # (choice, cursor after it, jobs of the render there)
+    steps = [
+        (None, 0, 1),
+        ("g", RENDER_PAGE - 1, 0),
+        ("n", RENDER_PAGE, 1),
+        ("n", RENDER_PAGE + 1, 0),
+        ("p", RENDER_PAGE, 0),
+        ("p", RENDER_PAGE - 1, 1),
+        ("g", 2 * RENDER_PAGE, 1),
+        ("p", 2 * RENDER_PAGE - 1, 1),
+        ("g", 1, 1),
+    ]
+    for choice, cursor, jobs in steps:
+        if choice:
+            r.process_choice(choice)
+        assert r.session.cursor == cursor, choice
+        got_jobs, text = count_jobs(sc, r.render_current)
+        assert got_jobs == jobs, (choice, cursor)
+        assert f"Record Pair {cursor + 1}/{r.n}" in text
+        assert _rendered(r, cursor) == want[r.keys[cursor]], (choice, cursor)
+
+
+@pytest.mark.parametrize("mode", ["parquet", "csv", "memory"])
+def test_cached_render_follows_saves(spark, tmp_path, mode):
+    """After a label, a clear ("0") and a note, the cached page renders
+    what a fresh reviewer renders from the saved table (the parquet or
+    CSV autosave, or the checkpointed table when autosave is off), at the
+    saved pair and at its neighbours. A CSV re-read trims the padded
+    note, so the page is refetched after a CSV save."""
+    import copy
+
+    session = _cross_session(spark, tmp_path)
+    out_path = str(tmp_path / "reviewed") + (".parquet" if mode == "parquet" else "")
+    r = CLReviewer(
+        session,
+        comp_pairs_path=out_path,
+        autosave=mode != "memory",
+        input_fn=_scripted(["  a note  ", "66", "", "2"]),
+        print_fn=lambda _t: None,
+    )
+    for choice in ["1", "n", "0", "a", "g", "3", "p", "a", "g", "1", "0"]:
+        r.render_current()
+        r.process_choice(choice)
+        if choice in "npg":
+            continue
+        fresh_session = copy.copy(session)
+        fresh_session.pairs = r.pairs
+        fresh = CLReviewer(fresh_session, autosave=False, print_fn=lambda _t: None)
+        cursor = r.session.cursor
+        for idx in (max(cursor - 1, 0), cursor, cursor + 1):
+            fresh.session.cursor = r.session.cursor = idx
+            assert r.render_current() == fresh.render_current(), (choice, idx)
+            assert _rendered(r, idx) == _rendered(fresh, idx), (choice, idx)
+        r.session.cursor = cursor
+    labels = {x.rlr_label or "" for x in r.pairs.collect()}
+    assert labels == {"", "Match", "Maybe a Match"}
+
+
+def test_invalid_label_leaves_cache_and_table(spark, tmp_path):
+    """An invalid label raises before anything is written: the cached
+    page and the saved table are both unchanged."""
+    import copy
+
+    out_path = str(tmp_path / "reviewed.parquet")
+    r = CLReviewer(_cross_session(spark, tmp_path), comp_pairs_path=out_path, print_fn=lambda _t: None)
+    r.render_current()
+    r.process_choice("1")
+    page = copy.deepcopy(r._page)
+    table = sorted(spark.read.parquet(out_path).collect())
+    with pytest.raises(ValueError, match="Bogus"):
+        r._save(0, label="Bogus")
+    assert r._page == page
+    assert sorted(spark.read.parquet(out_path).collect()) == table
+    assert r._grouped_row(0).rlr_label == "Match"
 
 
 def test_point_save_equals_upsert_labels(spark, packet_session):

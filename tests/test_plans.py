@@ -453,8 +453,10 @@ def test_catalog_read_falls_back_to_inference(spark, tmp_path):
 def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     """Total Spark jobs of a forced warm ``Pipeline.run``, of each stage
     run alone (its manifest deleted, so the resumed run re-enters that
-    stage only), and of one review render and one label save (with
-    autosave to parquet). A change may lower a count, never raise it."""
+    stage only), of a review render that enters a new page and of one
+    inside the cached page, of one label save (with autosave to
+    parquet) and of the label summary. A change may lower a count,
+    never raise it."""
     import os
 
     from rlr_spark.catalog import Catalog
@@ -462,6 +464,7 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
     from rlr_spark.pipeline import STAGES, Pipeline, PipelineConfig
     from rlr_spark.plans import count_jobs
+    from rlr_spark.report import render_label_summary
     from rlr_spark.sources.packet import ReviewPacket, ReviewSession
 
     sc = spark.sparkContext
@@ -480,8 +483,9 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     assert stage_jobs == {"extract": 2, "pairs": 6, "score": 2, "cluster": 4}, stage_jobs
     assert sum(stage_jobs.values()) == run_jobs
 
-    data_l, data_r, pairs = generate_firm_fixtures()
-    pairs = pairs.drop_duplicates().query("ein != 999").reset_index(drop=True)
+    data_l, data_r, _ = generate_firm_fixtures()
+    # every L x R pair: 144 pairs, three render pages
+    pairs = data_l[["ein"]].merge(data_r[["ui_num"]], how="cross")
     paths = {n: str(tmp_path / f"{n}.parquet") for n in ("L", "R", "pairs")}
     for n, pdf in zip(paths, (data_l, data_r, pairs)):
         spark.createDataFrame(pdf).write.parquet(paths[n])
@@ -497,13 +501,33 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     reviewer = CLReviewer(
         ReviewSession(spark, packet),
         comp_pairs_path=str(tmp_path / "reviewed.parquet"),
+        input_fn=lambda _prompt: "66",
         print_fn=lambda _text: None,
     )
     # warm: the first save replaces the packet's scan with the saved table
     reviewer.render_current()
     reviewer.process_choice("1")
     reviewer.process_choice("n")
-    render_jobs, _ = count_jobs(sc, reviewer.render_current)
+    reviewer.process_choice("g")  # to index 65, the second page
+    assert reviewer.session.cursor == 65
+    page_jobs, _ = count_jobs(sc, reviewer.render_current)
+    reviewer.process_choice("n")
+    cached_jobs, _ = count_jobs(sc, reviewer.render_current)
     save_jobs, _ = count_jobs(sc, lambda: reviewer.process_choice("2"))
-    got = {"pipeline_run": run_jobs, "review_render": render_jobs, "review_save": save_jobs}
-    assert got == {"pipeline_run": 14, "review_render": 1, "review_save": 1}, got
+    summary_jobs, _ = count_jobs(
+        sc, lambda: render_label_summary(reviewer.pairs, packet.label_choices)
+    )
+    got = {
+        "pipeline_run": run_jobs,
+        "review_render_new_page": page_jobs,
+        "review_render_cached": cached_jobs,
+        "review_save": save_jobs,
+        "label_summary": summary_jobs,
+    }
+    assert got == {
+        "pipeline_run": 14,
+        "review_render_new_page": 1,
+        "review_render_cached": 0,
+        "review_save": 1,
+        "label_summary": 2,
+    }, got

@@ -1,4 +1,5 @@
-"""Dump formatted physical plans of every pipeline stage to PLANS.md.
+"""Dump formatted physical plans of every pipeline stage, and of a
+review render, to PLANS.md.
 
 Evidence artifact: shows pushdown, pruning, join strategies, salt keys,
 and codegen spans for each stage of the ER pipeline at a small scale.
@@ -40,6 +41,59 @@ def capture_writes(catalog, names: set[str]) -> dict[str, str]:
 
     catalog.write = recording_write
     return plans
+
+
+def capture_collect(spark, fn) -> str:
+    """Run ``fn()`` and return the final plan of the last DataFrame it
+    collected (a review render collects one query)."""
+    # the session's concrete DataFrame class, which defines collect()
+    DataFrame = type(spark.range(0))
+    plans: list[str] = []
+    collect = DataFrame.collect
+
+    def recording_collect(df):
+        rows = collect(df)
+        plans.append(formatted(df))
+        return rows
+
+    DataFrame.collect = recording_collect
+    try:
+        fn()
+    finally:
+        DataFrame.collect = collect
+    return plans[-1]
+
+
+def review_render_plan(spark, tmp: str) -> str:
+    """The query of a ``CLReviewer`` render at cursor 64 of the firm
+    fixture's 144 L x R pairs, after one parquet-autosaved label (so the
+    pair table is the saved table, as in a warm review loop)."""
+    from rlr_spark.cli import CLReviewer
+    from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
+    from rlr_spark.sources.packet import ReviewPacket, ReviewSession
+
+    data_l, data_r, _ = generate_firm_fixtures()
+    pairs = data_l[["ein"]].merge(data_r[["ui_num"]], how="cross")
+    paths = {n: os.path.join(tmp, "review", f"{n}.parquet") for n in ("L", "R", "pairs")}
+    for n, pdf in zip(paths, (data_l, data_r, pairs)):
+        spark.createDataFrame(pdf).write.parquet(paths[n])
+    packet = ReviewPacket(
+        file_L=paths["L"],
+        file_L_ids=["ein"],
+        file_R=paths["R"],
+        file_R_ids=["ui_num"],
+        file_comps=paths["pairs"],
+        var_group_schema=VAR_SCHEMA_FIRM,
+        label_choices=["Match", "Not a Match"],
+    )
+    reviewer = CLReviewer(
+        ReviewSession(spark, packet),
+        comp_pairs_path=os.path.join(tmp, "review", "reviewed.parquet"),
+        print_fn=lambda _text: None,
+    )
+    reviewer.process_choice("1")
+    reviewer.session.cursor = 64
+    return capture_collect(spark, reviewer.render_current)
 
 
 def main() -> None:
@@ -107,6 +161,9 @@ def main() -> None:
         ),
         "pruned scan example (filter pushdown)": formatted(
             extracted.where(F.col("lang") == "en").select("url")
+        ),
+        "review render (CLReviewer at cursor 64: pair rows + L and R records)": (
+            review_render_plan(spark, tmp)
         ),
     }
 
