@@ -309,8 +309,7 @@ class CLReviewer:
             # truncate the update lineage so a long session doesn't grow
             # an unbounded plan
             self.pairs = self.pairs.localCheckpoint(eager=True)
-        # a CSV re-read differs from what was written in every row (""
-        # reads back NULL, surrounding blanks are trimmed): refetch
+        # a CSV re-read turns "" into NULL: refetch
         if page is not None and (not self.autosave or self.comp_pairs_path.endswith(".parquet")):
             if key in page[1]:
                 page[1][key].update(
@@ -344,7 +343,10 @@ class CLReviewer:
                 REV_DATE_COL, F.date_format(REV_DATE_COL, "yyyy-MM-dd HH:mm:ss")
             )
             write_csv(out, tmp, mode="overwrite")
-            read = spark.read.option("header", "true").schema(schema).csv
+            # a quoted note may hold a newline: read whole records
+            read = (
+                spark.read.option("header", "true").option("multiLine", "true").schema(schema).csv
+            )
         shutil.rmtree(old, ignore_errors=True)
         if os.path.exists(path):
             os.rename(path, old)

@@ -40,10 +40,6 @@ def normalized_domain(url: Column) -> Column:
     return F.regexp_replace(host, r"^www\.", "")
 
 
-def with_domain_key(df: DataFrame, url_col: str = "url", out_col: str = "blk_key") -> DataFrame:
-    return df.withColumn(out_col, normalized_domain(F.col(url_col)))
-
-
 # ---------------------------------------------------------------------------
 # MinHash-LSH banding
 # ---------------------------------------------------------------------------

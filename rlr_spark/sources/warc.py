@@ -15,12 +15,11 @@ prunes on path, one task parses one file's gzip members with stdlib
 ``zlib`` + header parsing inside ``mapInPandas`` (Arrow batches out).
 At 100 TB that is ~10^5 independent tasks, each bounded by one segment
 file; no shuffle anywhere — the output feeds straight into the extract
-stage. Per-payload Python is the right shape here for the same reason
-as the codecs: records are opaque byte blobs no column expression can
-parse.
+stage. Per-payload Python is the right shape here because records are
+opaque byte blobs no column expression can parse.
 
-The writer exists for test synthesis (same policy as the codecs: every
-layout the reader claims is driven with real bytes).
+The writer exists for test synthesis: every layout the reader claims is
+driven with real bytes.
 """
 
 from __future__ import annotations

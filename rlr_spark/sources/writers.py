@@ -16,10 +16,18 @@ from rlr_spark.catalog import Catalog
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    """CSV sink (S4: rlr.py:692). Note the reference's 'Download dta'
-    button actually serves CSV bytes (pages/02:97-102) — there is no
-    real .dta sink to reproduce; ``write_stata`` below documents that."""
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
+    """CSV sink (S4: rlr.py:692). Values keep their surrounding blanks,
+    as pandas' ``to_csv`` keeps them (Spark's writer trims by default).
+    Note the reference's 'Download dta' button actually serves CSV
+    bytes (pages/02:97-102) — there is no real .dta sink to reproduce;
+    ``write_stata`` below documents that."""
+    (
+        df.write.mode(mode)
+        .option("header", str(header).lower())
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .csv(path)
+    )
 
 
 def write_stata(df: DataFrame, path: str) -> None:

@@ -147,42 +147,6 @@ class WebReviewer:
             "<body>" + "".join(body) + "</body></html>"
         )
 
-    # -- server -----------------------------------------------------------
-    def make_server(self, host: str = "127.0.0.1", port: int = 0) -> HTTPServer:
-        web = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # quiet
-                pass
-
-            def _respond_html(self, content: str, status: int = 200) -> None:
-                data = content.encode("utf-8")
-                self.send_response(status)
-                self.send_header("Content-Type", "text/html; charset=utf-8")
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
-
-            def do_GET(self):
-                self._respond_html(web.page())
-
-            def do_POST(self):
-                length = int(self.headers.get("Content-Length", 0))
-                # keep_blank_values: an EMPTY note box must still arrive
-                # ('note': ['']) so clearing a note works — parse_qs
-                # silently drops blank values by default
-                form = parse_qs(
-                    self.rfile.read(length).decode("utf-8"),
-                    keep_blank_values=True,
-                )
-                web.apply(form)
-                # POST-redirect-GET so refresh never re-submits
-                self.send_response(303)
-                self.send_header("Location", "/")
-                self.end_headers()
-
-        return HTTPServer((host, port), Handler)
-
 
 class PacketBuilderUI:
     """Browser packet-builder — the reference's data-input page
@@ -460,24 +424,25 @@ def make_app_server(
     ``/build``; the builder's "Save packet" writes the JSON and the
     review page loads it lazily on first visit — the reference's
     two-page Streamlit flow (01_data_input -> 02_Linkage_Review) over
-    one stdlib server."""
+    one stdlib server.
+
+    Given ``packet_path``, the reviewer is built here, so a bad packet
+    raises before the server binds. The server's ``web`` attribute holds
+    the :class:`WebReviewer` once a packet is loaded."""
     from rlr_spark.sources.packet import ReviewPacket, ReviewSession
 
     builder = PacketBuilderUI(spark, packet_out_path=packet_out_path)
-    state: dict = {"web": None, "packet_path": packet_path}
+
+    def _load(p: str) -> WebReviewer:
+        session = ReviewSession(spark, ReviewPacket.load(p))
+        return WebReviewer(CLReviewer(session, packet_path=p, **reviewer_kwargs))
+
+    web = _load(packet_path) if packet_path else None
 
     def _reviewer() -> WebReviewer | None:
-        if state["web"] is None:
-            p = state["packet_path"] or (
-                builder.packet_out_path if "saved to" in builder.saved_msg else None
-            )
-            if p is None:
-                return None
-            session = ReviewSession(spark, ReviewPacket.load(p))
-            state["web"] = WebReviewer(
-                CLReviewer(session, packet_path=p, **reviewer_kwargs)
-            )
-        return state["web"]
+        if server.web is None and "saved to" in builder.saved_msg:
+            server.web = _load(builder.packet_out_path)
+        return server.web
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
@@ -492,6 +457,7 @@ def make_app_server(
             self.wfile.write(data)
 
         def _redirect(self, to: str) -> None:
+            # POST-redirect-GET so refresh never re-submits
             self.send_response(303)
             self.send_header("Location", to)
             self.end_headers()
@@ -519,6 +485,9 @@ def make_app_server(
 
         def do_POST(self):
             length = int(self.headers.get("Content-Length", 0))
+            # keep_blank_values: an EMPTY note box must still arrive
+            # ('note': ['']) so clearing a note works — parse_qs
+            # silently drops blank values by default
             form = parse_qs(
                 self.rfile.read(length).decode("utf-8"), keep_blank_values=True
             )
@@ -537,7 +506,9 @@ def make_app_server(
                 web.apply(form)
                 self._redirect("/")
 
-    return HTTPServer((host, port), Handler)
+    server = HTTPServer((host, port), Handler)
+    server.web = web
+    return server
 
 
 def serve_packet(packet_path: str, host: str = "127.0.0.1", port: int = 8501, **kwargs):
@@ -545,19 +516,15 @@ def serve_packet(packet_path: str, host: str = "127.0.0.1", port: int = 8501, **
     packet, serve the review UI until interrupted. Cursor and labels
     persist exactly as in the CLI loop (autosave + packet rewrite)."""
     from rlr_spark.session import get_spark
-    from rlr_spark.sources.packet import ReviewPacket, ReviewSession
 
     spark = kwargs.pop("spark", None) or get_spark(app_name="rlr_webui")
-    packet = ReviewPacket.load(packet_path)
-    session = ReviewSession(spark, packet)
-    reviewer = CLReviewer(session, packet_path=packet_path, **kwargs)
-    server = WebReviewer(reviewer).make_server(host, port)
+    server = make_app_server(spark, packet_path=packet_path, host=host, port=port, **kwargs)
+    reviewer = server.web.r
     print(f"review UI at http://{host}:{server.server_address[1]}/")
     try:
         server.serve_forever()
     finally:
-        if reviewer.packet_path:
-            reviewer.session.save_packet(reviewer.packet_path)
+        reviewer.session.save_packet(packet_path)
     return reviewer
 
 

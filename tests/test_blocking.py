@@ -5,7 +5,7 @@ from rlr_spark.operators.blocking import (
     block_pairs,
     candidate_pairs,
     lsh_band_keys,
-    with_domain_key,
+    normalized_domain,
 )
 
 
@@ -18,7 +18,8 @@ def test_normalized_domain(spark):
         ],
         "url string",
     )
-    got = [r.blk_key for r in with_domain_key(df).collect()]
+    keyed = df.withColumn("blk_key", normalized_domain(F.col("url")))
+    got = [r.blk_key for r in keyed.collect()]
     assert got == ["example.com", "sub.site.org", "mega-site.com"]
 
 
@@ -312,8 +313,9 @@ def _union_dedup_pairs(pages, **kw):
     """The two-pass candidate set as built before the domain key joined
     the minhash kernel: domain keys ∪ band keys, every shared key
     emitting, one dropDuplicates."""
-    domain = with_domain_key(pages).select(
-        "url", F.xxhash64(F.lit("domain"), "blk_key").alias("blk_key")
+    domain = pages.select(
+        "url",
+        F.xxhash64(F.lit("domain"), normalized_domain(F.col("url"))).alias("blk_key"),
     )
     keyed = domain.unionByName(lsh_band_keys(pages, "url", "text"))
     return block_pairs(keyed, "url", pass_name="domain+lsh", **kw)

@@ -308,8 +308,8 @@ def test_cached_render_follows_saves(spark, tmp_path, mode):
     """After a label, a clear ("0") and a note, the cached page renders
     what a fresh reviewer renders from the saved table (the parquet or
     CSV autosave, or the checkpointed table when autosave is off), at the
-    saved pair and at its neighbours. A CSV re-read trims the padded
-    note, so the page is refetched after a CSV save."""
+    saved pair and at its neighbours. A CSV re-read turns "" into NULL,
+    so the page is refetched after a CSV save."""
     import copy
 
     session = _cross_session(spark, tmp_path)
@@ -430,6 +430,20 @@ def test_default_csv_autosave_survives_repeated_saves(spark, packet_session):
     assert [got[k] for k in r.keys[:3]] == [("Match", 1), ("Not a Match", 1), ("Maybe a Match", 1)]
     assert all(v == ("", 0) for k, v in got.items() if k not in r.keys[:3])
     assert not any(os.path.exists(r.comp_pairs_path + s) for s in (".tmp", ".old"))
+
+
+def test_csv_autosave_keeps_notes_exact(spark, packet_session):
+    """A CSV-autosaved note with a newline, surrounding blanks, quotes
+    and a backslash reads back exact, and the newline adds no row."""
+    session, _, _ = packet_session
+    r = CLReviewer(session, print_fn=lambda _t: None)
+    notes = ["first line\nsecond line", "  padded  ", 'say "hi" \\ bye']
+    for idx, note in enumerate(notes):
+        r._save(idx, note=note)
+    got = {(x.ein, x.ui_num): x.rlr_note for x in r.pairs.collect()}
+    assert len(got) == r.pairs.count() == r.n == 7
+    assert [got[k] for k in r.keys[:3]] == notes
+    assert [r._grouped_row(i).rlr_note for i in range(3)] == notes
 
 
 def test_swap_leftovers_from_an_interrupted_save(spark, packet_session):

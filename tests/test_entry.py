@@ -67,13 +67,6 @@ _ENTRY_GLOBS = [
 ]
 _ENTRY_MODULES = ["rlr_spark.pipeline", "rlr_spark.cli", "rlr_spark.webui"]
 
-# Unreached and still to delete (ROADMAP direction 1): the last image
-# codec, lossless WebP. No linkage stage decodes an image; its removal,
-# with its tests, is split off into changes of its own. Drop the name
-# here when the module goes.
-_UNREACHED_OK = {"rlr_spark.functions.vp8l"}
-
-
 def _package_modules() -> dict[str, str]:
     """Every ``rlr_spark`` module name -> its file."""
     mods = {}
@@ -131,16 +124,41 @@ def test_every_module_is_reached():
         for name in _imported_names(todo.pop()):
             visit(name)
     unreached = set(mods) - reached
-    assert unreached == _UNREACHED_OK, (
-        f"modules no entry point reaches: {sorted(unreached - _UNREACHED_OK)}; "
-        f"now reached, drop from _UNREACHED_OK: {sorted(_UNREACHED_OK - unreached)}"
-    )
+    assert not unreached, f"modules no entry point reaches: {sorted(unreached)}"
 
 
-# named by no caller on purpose: the unreached codec module (see
-# _UNREACHED_OK), and the numpy reference hash that test_blocking.py
-# checks Spark's xxhash64 against (a test oracle: only tests call it)
-_UNNAMED_OK = {"rlr_spark.functions.xxh64_np.xxhash64_longs"}
+# Public defs only tests name, kept on purpose. Tags: *support* = test
+# support (a fixture builder or a reference oracle), *parity* = a
+# reference-RLR surface, *contract* = the Iceberg or streaming/WARC
+# source contract. A *parity* or *contract* name either gains a caller
+# (a query row, a stage) or goes with its tests (ROADMAP direction 1).
+_UNNAMED_OK = {
+    # support: the numpy reference test_blocking.py checks Spark's
+    # xxhash64 against
+    "rlr_spark.functions.xxh64_np.xxhash64_longs",
+    # support: WARC segments for the pipeline and stream e2e tests
+    "rlr_spark.datagen.write_web_pages_warc",
+    # parity: the comparison vector frame (backend/rlr.py)
+    "rlr_spark.operators.compare.comparison_vectors",
+    # parity: review progress (pages/02:185-191)
+    "rlr_spark.operators.review.completion",
+    # parity: the next unlabeled pair (rlr.py:615-626)
+    "rlr_spark.operators.review.next_pair",
+    # parity: m/u from labeled pairs
+    "rlr_spark.operators.scoring.estimate_mu",
+    # parity: Stata export (rlr.py:693)
+    "rlr_spark.sources.writers.write_stata",
+    # contract: Iceberg MERGE INTO
+    "rlr_spark.sources.writers.merge_upsert",
+    # contract: the WARC/WET readers
+    "rlr_spark.sources.warc.read_warc_pages",
+    "rlr_spark.sources.warc.read_wet_text",
+    # contract: the streaming sources
+    "rlr_spark.streaming.ingest.stream_pages",
+    "rlr_spark.streaming.ingest.extract_and_key",
+    "rlr_spark.streaming.ingest.stream_warc_pages",
+    "rlr_spark.streaming.ingest.windowed_event_counts",
+}
 
 
 def _names_used(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
@@ -163,13 +181,13 @@ def _names_used(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
 
 
 def test_every_public_function_is_reached():
-    """Every public top-level def/class in rlr_spark/functions is named
-    outside its own definition by a non-test file: a function only its
-    tests call is dead code, as a module nothing imports is. The walk
-    parses source only; it imports nothing and starts no Spark."""
+    """Every public top-level def/class in rlr_spark is named outside
+    its own definition by a non-test file, unless _UNNAMED_OK lists it:
+    a function only its tests call is dead code, as a module nothing
+    imports is. The walk parses source only; it imports nothing and
+    starts no Spark."""
     mods = _package_modules()
-    # what only the unreached codec module names is dead too
-    files = {path for m, path in mods.items() if m not in _UNREACHED_OK} | {
+    files = set(mods.values()) | {
         os.path.join(_ROOT, p)
         for pattern in _ENTRY_GLOBS
         for p in glob.glob(pattern, root_dir=_ROOT)
@@ -181,21 +199,22 @@ def test_every_public_function_is_reached():
             trees[path] = ast.parse(f.read(), path)
     used = {path: _names_used(tree) for path, tree in trees.items()}
 
-    unnamed = []
+    unnamed = set()
     for mod, path in mods.items():
-        if not mod.startswith("rlr_spark.functions.") or mod in _UNREACHED_OK:
-            continue
         for node in trees[path].body:
             if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
                 continue
-            if node.name.startswith("_") or f"{mod}.{node.name}" in _UNNAMED_OK:
+            if node.name.startswith("_"):
                 continue
             # its own module counts only outside the definition itself
             if node.name in _names_used(trees[path], skip=node):
                 continue
             if not any(node.name in names for p, names in used.items() if p != path):
-                unnamed.append(f"{mod}.{node.name}")
-    assert not unnamed, f"public functions only tests name: {sorted(unnamed)}"
+                unnamed.add(f"{mod}.{node.name}")
+    assert unnamed == _UNNAMED_OK, (
+        f"public functions only tests name: {sorted(unnamed - _UNNAMED_OK)}; "
+        f"now named, drop from _UNNAMED_OK: {sorted(_UNNAMED_OK - unnamed)}"
+    )
 
 
 def test_every_top_level_def_is_named():
@@ -203,7 +222,7 @@ def test_every_top_level_def_is_named():
     named outside its own definition by some .py file in the repo, tests
     included: a def nothing names is not even tested, so it is deleted
     rather than carried. Looser than the check above (a test counts as a
-    namer) but wider (the whole package, private helpers too)."""
+    namer) but wider (private helpers too)."""
     trees = {}
     for p in glob.glob("**/*.py", root_dir=_ROOT, recursive=True):
         path = os.path.join(_ROOT, p)

@@ -143,9 +143,11 @@ def test_existence_flags_no_python_udf(spark, staged):
 def test_blocking_pairs_partition_by_key_and_salt(spark, staged):
     """The salted self-join must key its exchange on (blk_key, salt) so a
     hot block spreads across reducers."""
-    from rlr_spark.operators.blocking import block_pairs, with_domain_key
+    from rlr_spark.operators.blocking import block_pairs, normalized_domain
 
-    keyed = with_domain_key(staged.read("extract")).select("url", "blk_key")
+    keyed = staged.read("extract").select(
+        "url", normalized_domain(F.col("url")).alias("blk_key")
+    )
     pairs, _ = block_pairs(keyed, "url", salt_k=4, max_block_size=None)
     plan = _plan(pairs)
     # the pair join's keys must include the salt (AQE may turn the

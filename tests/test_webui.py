@@ -10,14 +10,14 @@ import urllib.request
 
 import pytest
 
-from rlr_spark.cli import CLReviewer
 from rlr_spark.datagen import VAR_SCHEMA_FIRM, generate_firm_fixtures
-from rlr_spark.sources.packet import ReviewPacket, ReviewSession
-from rlr_spark.webui import WebReviewer
+from rlr_spark.sources.packet import ReviewPacket
+from rlr_spark.webui import make_app_server
 
 
-@pytest.fixture()
-def served(spark, tmp_path):
+def _firm_packet(spark, tmp_path) -> str:
+    """The firm fixtures as parquet plus a packet naming them; returns
+    the packet's path."""
     data_l, data_r, pairs = generate_firm_fixtures()
     pairs = pairs.drop_duplicates().query("ein != 999").reset_index(drop=True)
     l_path, r_path, p_path = (
@@ -39,13 +39,19 @@ def served(spark, tmp_path):
     )
     packet_path = str(tmp_path / "packet.json")
     packet.save(packet_path)
-    session = ReviewSession(spark, packet)
-    reviewer = CLReviewer(
-        session,
-        comp_pairs_path=str(tmp_path / "reviewed.parquet"),
+    return packet_path
+
+
+@pytest.fixture()
+def served(spark, tmp_path):
+    packet_path = _firm_packet(spark, tmp_path)
+    server = make_app_server(
+        spark,
         packet_path=packet_path,
+        port=0,
+        comp_pairs_path=str(tmp_path / "reviewed.parquet"),
     )
-    server = WebReviewer(reviewer).make_server(port=0)
+    reviewer = server.web.r
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     base = f"http://127.0.0.1:{server.server_address[1]}"
@@ -120,13 +126,40 @@ def test_note_can_be_cleared_and_goto_is_own_form(served, spark):
     assert page.count("<form") >= 4
 
 
+def test_serve_packet_fails_fast_and_saves_cursor(spark, tmp_path, monkeypatch):
+    """serve_packet builds the reviewer before it serves, so a bad packet
+    raises at once, and it writes the cursor to the packet on exit."""
+    from http.server import HTTPServer
+
+    from rlr_spark.webui import serve_packet
+
+    packet_path = _firm_packet(spark, tmp_path)
+    bad = ReviewPacket.load(packet_path)
+    bad.file_L_ids = ["no_such_column"]
+    bad_path = str(tmp_path / "bad.json")
+    bad.save(bad_path)
+    with pytest.raises(AssertionError, match="missing id columns"):
+        serve_packet(bad_path, port=0, spark=spark)
+
+    def serve_then_quit(server, *a, **kw):
+        # what a browser "goto 3" then Ctrl-C would leave behind
+        server.web.apply({"goto": ["3"]})
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(HTTPServer, "serve_forever", serve_then_quit)
+    with pytest.raises(KeyboardInterrupt):
+        serve_packet(
+            packet_path, port=0, spark=spark,
+            comp_pairs_path=str(tmp_path / "reviewed.parquet"),
+        )
+    assert json.load(open(packet_path))["curr_comp_pair_index"] == 2
+
+
 def test_packet_builder_end_to_end(spark, tmp_path):
     """Build a packet FROM SCRATCH in the browser UI (the reference's
     01_data_input flow: dataset paths, id multiselect with live
     uniqueness validation, var-group editor, comps load, packet save)
     and then review pair 0 with it on the same server."""
-    from rlr_spark.webui import make_app_server
-
     data_l, data_r, pairs = generate_firm_fixtures()
     pairs = pairs.drop_duplicates().query("ein != 999").reset_index(drop=True)
     l_path = str(tmp_path / "dataL.parquet")
