@@ -31,6 +31,7 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
@@ -40,6 +41,7 @@ from rlr_spark.operators.compare import grouped_values
 from rlr_spark.operators.review import check_label, label_update_columns
 from rlr_spark.report import render_label_summary, render_pair
 from rlr_spark.sources.packet import ReviewSession
+from rlr_spark.sources.readers import read_csv
 from rlr_spark.sources.writers import write_csv
 
 #: extra options after the numeric label choices (rlr.py:24-25 analogue)
@@ -119,19 +121,26 @@ class CLReviewer:
         # resumes at the same ORDINAL position but possibly a different
         # pair; packets round-trip exactly within this tool.
         #
-        # guard BEFORE collecting: count() is distributed and cheap,
-        # the key collect is driver-memory-bound
-        n_pairs = self.pairs.count()
-        if n_pairs > max_pairs:
+        # guard BEFORE collecting: the bounded count moves no row to the
+        # driver, while the sorted collect below gathers each partition's
+        # top keys there (RDD.takeOrdered), so on an oversized table it
+        # could hold partitions x max_pairs tuples
+        if self.pairs.limit(max_pairs + 1).count() > max_pairs:
             raise ValueError(
-                f"pair table has {n_pairs:,} rows, above the review limit "
-                f"of {max_pairs:,}. The reviewer keeps every pair key on "
-                "the driver; filter the table first (e.g. the uncertain "
-                "band: pairs.where(\"rlr_label = ''\")) or pass a larger "
-                "max_pairs explicitly."
+                f"pair table has more than {max_pairs:,} rows, the review "
+                "limit. The reviewer keeps every pair key on the driver; "
+                "filter the table first (e.g. the uncertain band: "
+                "pairs.where(\"rlr_label = ''\")) or pass a larger max_pairs "
+                "explicitly."
             )
+        # the limit drops nothing (the table is within it) but plans the
+        # sort as one TakeOrderedAndProject job, not a 3-job range sort
         self.keys = [
-            tuple(r) for r in self.pairs.select(*self.key_cols).orderBy(*self.key_cols).collect()
+            tuple(r)
+            for r in self.pairs.select(*self.key_cols)
+            .orderBy(*self.key_cols)
+            .limit(max_pairs)
+            .collect()
         ]
         self.n = len(self.keys)
         #: (page, pair values, L records, R records) of the last page
@@ -343,10 +352,7 @@ class CLReviewer:
                 REV_DATE_COL, F.date_format(REV_DATE_COL, "yyyy-MM-dd HH:mm:ss")
             )
             write_csv(out, tmp, mode="overwrite")
-            # a quoted note may hold a newline: read whole records
-            read = (
-                spark.read.option("header", "true").option("multiLine", "true").schema(schema).csv
-            )
+            read = partial(read_csv, spark, schema=schema)
         shutil.rmtree(old, ignore_errors=True)
         if os.path.exists(path):
             os.rename(path, old)

@@ -84,32 +84,45 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row.n), int(row.h)
 
 
-def _local_components(edges: DataFrame) -> DataFrame:
+#: Arrow bytes of the local assignment per uploaded slice
+_UPLOAD_SLICE_BYTES = 64 << 20
+
+
+def _local_components(edges: DataFrame, key_col: str | None = None) -> DataFrame:
     """Driver-side connected components for edge sets that fit in memory.
 
     ``edges`` may be raw: duplicates, both orientations and self-loops
     give the same assignment as their :func:`_canonical` form. Arrow
-    collect (toPandas), then fully-vectorized min-label
+    collect (``toArrow``), then fully-vectorized min-label
     propagation in numpy: hook every edge endpoint to the min label,
     pointer-jump (``L = L[L]``) to a fixpoint, repeat until every edge
     is monochrome. entity_id = min node id of the component --
     bit-identical to the distributed path's output. A row-at-a-time
     Python union-find was seconds at 10^6 edges; this is ~0.2 s.
+
+    With ``key_col``, each node also gets ``entity_key``, the min key
+    over its component's edges (self-loops excluded, NULLs skipped):
+    one Arrow ``group_by(component).aggregate(min)`` over the edges,
+    taken back to the nodes by component.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     spark = edges.sparkSession
-    pdf = edges.toPandas()
-    u = pdf["u"].to_numpy(np.int64, copy=False)
-    v = pdf["v"].to_numpy(np.int64, copy=False)
+    tbl = edges.select("u", "v", *([key_col] if key_col is not None else [])).toArrow()
+    u = np.asarray(tbl["u"].to_numpy(), dtype=np.int64)
+    v = np.asarray(tbl["v"].to_numpy(), dtype=np.int64)
     # raw edges are fine: propagation ignores duplicates and orientation;
     # a self-loop alone must not make a node appear (as in _canonical)
-    loop = u == v
-    if loop.any():
-        u, v = u[~loop], v[~loop]
+    keep = u != v
+    if not keep.all():
+        u, v = u[keep], v[keep]
+        tbl = tbl.filter(pa.array(keep))
     if len(u) == 0:
-        return spark.createDataFrame([], "node long, entity_id long")
+        schema = "node long, entity_id long"
+        if key_col is not None:
+            schema += f", entity_key {edges.schema[key_col].dataType.simpleString()}"
+        return spark.createDataFrame([], schema)
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     ui, vi = inv[: len(u)], inv[len(u):]
     label = np.arange(len(nodes), dtype=np.int64)
@@ -124,12 +137,41 @@ def _local_components(edges: DataFrame) -> DataFrame:
             label = jumped
         if np.array_equal(label[ui], label[vi]):
             break
-    assign = pd.DataFrame({"node": nodes, "entity_id": nodes[label]})
-    # Arrow upload: two int64 buffers, not 10^6 pickled rows. One
-    # slice: the driver holds the whole table anyway, and a
-    # defaultParallelism-sliced upload made every consumer (the
-    # cluster write's broadcast of it) run that many tiny tasks
-    return spark.createDataFrame(assign).coalesce(1)
+    assign = {"node": nodes, "entity_id": nodes[label]}
+    if key_col is not None:
+        mins = pa.table({"c": label[ui], "k": tbl[key_col]}).group_by("c").aggregate(
+            [("k", "min")]
+        )
+        # every component has an edge, so every root label has a row
+        row_of = np.empty(len(nodes), dtype=np.int64)
+        row_of[mins["c"].to_numpy()] = np.arange(mins.num_rows)
+        assign["entity_key"] = mins["k_min"].take(pa.array(row_of[label]))
+    # Arrow upload: columnar buffers, not 10^6 pickled rows. Spark
+    # slices it finely (a LocalTableScan of up to defaultParallelism
+    # slices; above spark.sql.execution.arrow.localRelationThreshold, an
+    # RDD of one partition per maxRecordsPerBatch rows: 120 at 1.2M
+    # nodes), so every consumer (the cluster write's broadcast of it)
+    # would run that many tiny tasks. The coalesce keeps one slice per
+    # _UPLOAD_SLICE_BYTES (one at bench sizes; 2 at 1.2M keyed nodes):
+    # a slice travels inside its serialized task, and one slice of a
+    # keyed assignment at millions of nodes overflowed the driver heap
+    # while the task was serialized
+    table = pa.table(assign)
+    return spark.createDataFrame(table).coalesce(table.nbytes // _UPLOAD_SLICE_BYTES + 1)
+
+
+def _with_entity_keys(assign: DataFrame, edges: DataFrame, key_col: str) -> DataFrame:
+    """``entity_key`` for the distributed path: the min ``key_col`` over
+    each component's edges (self-loops excluded, NULLs skipped), one
+    groupBy over the edges tagged with their component, joined back to
+    the assignment — the value :func:`_local_components` computes."""
+    keys = (
+        edges.where(F.col("u") != F.col("v"))
+        .join(assign, F.col("u") == F.col("node"))
+        .groupBy("entity_id")
+        .agg(F.min(key_col).alias("entity_key"))
+    )
+    return assign.join(keys, "entity_id", "left").select("node", "entity_id", "entity_key")
 
 
 def connected_components(
@@ -138,11 +180,22 @@ def connected_components(
     rounds_per_check: int = 2,
     local_threshold: int = 8_000_000,
     edge_count: int | None = None,
+    key_col: str | None = None,
 ) -> DataFrame:
     """edges(u long, v long) -> assignment(node long, entity_id long).
 
     Singleton nodes (no edges) are the caller's concern — join the
     result back with a coalesce to self (see :func:`cluster_pairs`).
+
+    ``key_col`` names an edge column (the pipeline passes each Match
+    edge's ``match_key``, the pair's smaller url); the assignment then
+    gains ``entity_key``, the min key over the component's edges
+    (NULL keys skipped, as ``min`` skips them; self-loops excluded).
+    The local path computes it with one Arrow
+    ``group_by(component).aggregate(min)`` over the collected edges,
+    the distributed path with one groupBy over the edges tagged with
+    their component (:func:`_with_entity_keys`). Without ``key_col``
+    the assignment is as before.
 
     Size-gated hybrid (the CC analogue of AQE's broadcast-join cutover):
     when the deduped edge set is at most ``local_threshold`` rows
@@ -158,10 +211,19 @@ def connected_components(
     The default fits a 4 GiB driver, the smallest the benchmark runs.
     Measured on a 4-core host (``local[4]``, ``spark.driver.memory=4g``)
     at 8M raw edges with ``edge_count`` given, collect to a materialized
-    one-slice assignment: 8M disjoint edges (16M nodes, the largest
-    assignment) took 8.1 s with a JVM heap peak of 1.3 GiB (sum of the
-    heap pools' peaks), 2.1 GiB JVM RSS and 1.3 GiB Python RSS; 8M edges
-    in 6-node chains (9.6M nodes) peaked at 1.3-1.6 GiB heap.
+    assignment. Without keys: 8M disjoint edges (16M nodes, the largest
+    assignment) took 6.3 s with a JVM heap peak of 1.6 GiB (sum of the
+    heap pools' peaks), 2.2 GiB JVM RSS and 1.2 GiB Python RSS. With
+    64-byte keys (every node then carries its component's key): 8M
+    disjoint edges took 19.8 s, heap peak 4.2 GiB, 4.3 GiB JVM RSS and
+    5.6 GiB Python RSS; the same run completes with a 3 GiB driver
+    (heap peak 3.3 GiB) and fails with 2 GiB. 8M keyed edges in 6-node
+    chains (9.6M nodes) took 13.4 s, heap peak 3.9 GiB, 2.8 GiB Python
+    RSS. The keyed upload is what needs the heap: the assignment travels
+    as slices of at most ``_UPLOAD_SLICE_BYTES`` of Arrow (one at bench
+    sizes). The keyed 16M-node table is 1.3 GB of Arrow, uploaded as
+    1,600 partitions of 10,000 rows and coalesced to 21 slices; as one
+    slice it overflowed the heap while its task was serialized.
 
     Known-count path: ``edge_count`` is the raw row count of ``edges``
     when the caller has already measured it (the pipeline observes the
@@ -180,7 +242,16 @@ def connected_components(
     extra round is harmless.
     """
     if edge_count is not None and edge_count <= local_threshold:
-        return _local_components(edges)
+        return _local_components(edges, key_col)
+    assign = _star_components(edges, max_iter, rounds_per_check, local_threshold)
+    return assign if key_col is None else _with_entity_keys(assign, edges, key_col)
+
+
+def _star_components(
+    edges: DataFrame, max_iter: int, rounds_per_check: int, local_threshold: int
+) -> DataFrame:
+    """The deduped path of :func:`connected_components`: canonical edges,
+    measured, then the local path or the large-star/small-star loop."""
     spark = edges.sparkSession
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
 

@@ -198,12 +198,14 @@ def text_pair_similarity(
     text_col: str = "text",
     use_jaro_winkler: bool = False,
     broadcast_records: bool = False,
+    key_col: str | None = None,
 ) -> DataFrame:
     """Specialized fast path for the web-pages pipeline: one var group (text).
 
-    Returns pairs + sim_jaccard (+ sim_jw) + exact bit. Kept separate
-    from the general var-schema path so the hot loop at 100 TB is pure
-    column ops with a single join per side and no UDF unless asked.
+    Returns pairs + sim_jaccard (+ sim_jw) + exact bit (+ pair_key).
+    Kept separate from the general var-schema path so the hot loop at
+    100 TB is pure column ops with a single join per side and no UDF
+    unless asked.
 
     Each document is tokenized ONCE on the record side before the join —
     tokenization is O(docs), set-intersection is O(pairs). Tokenizing
@@ -223,6 +225,13 @@ def text_pair_similarity(
     the session's ``spark.sql.autoBroadcastJoinThreshold``. Unhinted,
     the planner chooses, and a shuffled record side is reused by the
     second join the same way a broadcast one is.
+
+    ``key_col`` names a record column (the pipeline passes the url)
+    whose smaller value per pair, ``least(L.key, R.key)`` (NULLs
+    skipped, as ``least`` skips them), lands as a last ``pair_key``
+    column. It rides the same record relation, so it costs no join:
+    the pipeline keeps it on Match rows as the cluster stage's entity
+    key.
     """
     from rlr_spark.functions.similarity import norm_tokens
 
@@ -234,6 +243,7 @@ def text_pair_similarity(
         tok_hashes.alias("_toks"),
         F.md5(F.lower(F.trim(F.col(text_col)))).alias("_norm_md5"),
         *( [F.col(text_col).alias("_raw")] if use_jaro_winkler else [] ),
+        *( [F.col(key_col).alias("_key")] if key_col is not None else [] ),
     ).withColumn("_ntok", F.size("_toks"))
     if broadcast_records:
         recs = F.broadcast(recs)
@@ -262,6 +272,8 @@ def text_pair_similarity(
     ]
     if use_jaro_winkler:
         out.append(jaro_winkler(F.col("L._raw"), F.col("R._raw")).alias("sim_jw"))
+    if key_col is not None:
+        out.append(F.least(F.col("L._key"), F.col("R._key")).alias("pair_key"))
     # the column order of the two using-joins this replaced: r_id, l_id,
     # then the rest of the pair columns
     rest = [pairs[c] for c in pairs.columns if c not in ("l_id", "r_id")]

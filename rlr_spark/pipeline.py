@@ -113,6 +113,10 @@ class Pipeline:
             m.get("status") == "complete"
             and m.get("config_fingerprint") == self.config.fingerprint()
             and self.catalog.exists(stage)
+            # a score table written before match_key existed is
+            # recomputed, not resumed past (the read passes the schema
+            # sidecar: no job)
+            and (stage != "score" or "match_key" in self.catalog.read(stage).columns)
         )
 
     def _write_stage(
@@ -356,6 +360,7 @@ class Pipeline:
                 id_col="uid",
                 text_col=cfg.text_col,
                 broadcast_records=extract_bytes is not None and extract_bytes <= threshold,
+                key_col=cfg.id_col,
             )
             weights = cfg.weights()
             if cfg.weights_mode == "em":
@@ -368,12 +373,19 @@ class Pipeline:
                     simmed, ["sim_jaccard"], agree_threshold=cfg.agree_threshold
                 )
                 weights.groups = mu
-            labeled = init_review_columns(
-                score_and_label(simmed, weights)
-            ).withColumn("rlr_modified", F.current_timestamp())
+            label = F.col("rlr_label")
+            # the pair's smaller id (read from the records the score join
+            # already broadcasts) is kept on Match rows only, as the last
+            # column: the cluster stage takes entity_key = min(id) from
+            # the Match edges instead of an exchange of every page
+            labeled = (
+                init_review_columns(score_and_label(simmed, weights))
+                .withColumn("rlr_modified", F.current_timestamp())
+                .withColumn("match_key", F.when(label == LABEL_MATCH, F.col("pair_key")))
+                .drop("pair_key")
+            )
             # the label mix rides the write; the cluster stage sizes its
             # connected components from the Match count
-            label = F.col("rlr_label")
             self._write_stage(
                 "score",
                 labeled,
@@ -391,7 +403,7 @@ class Pipeline:
         if not self._stage_done("cluster"):
             t0 = time.time()
             edges = scored.where(F.col("rlr_label") == LABEL_MATCH).select(
-                F.col("l_id").alias("u"), F.col("r_id").alias("v")
+                F.col("l_id").alias("u"), F.col("r_id").alias("v"), "match_key"
             )
             ids = extracted.select("uid", cfg.id_col)
             # the Match count the score write observed (None in a
@@ -425,9 +437,11 @@ class Pipeline:
                     edges.join(hashed.withColumnRenamed("_id", "u"), "u")
                     .withColumnRenamed("_nid", "un")
                     .join(hashed.withColumnRenamed("_id", "v"), "v")
-                    .select(F.col("un").alias("u"), F.col("_nid").alias("v"))
+                    .select(F.col("un").alias("u"), F.col("_nid").alias("v"), "match_key")
                 )
-                assign_n = connected_components(edges_l, edge_count=n_match)
+                assign_n = connected_components(
+                    edges_l, edge_count=n_match, key_col="match_key"
+                )
                 # component label -> representative node's struct uid
                 rep = hashed.select(
                     F.col("_nid").alias("entity_id"), F.col("_id").alias("_rep_uid")
@@ -443,24 +457,22 @@ class Pipeline:
                     .select(
                         F.col("_node_uid").alias("node"),
                         F.col("_rep_uid").alias("entity_id"),
+                        "entity_key",
                     )
                 )
             else:
-                # edges are already longs (uid): CC runs on 16-byte
+                # edges are already longs (uid): CC runs on the Match
                 # edges; urls only rejoin for the final output table
-                assign = connected_components(edges, edge_count=n_match)
-            # entity_key = min member url: a window over one exchange,
-            # not a groupBy joined back (two exchanges of the same rows)
-            clusters = (
-                ids.join(assign, ids["uid"] == assign["node"], "left")
-                .select(
-                    cfg.id_col,
-                    F.coalesce(F.col("entity_id"), F.col("uid")).alias("entity_id"),
-                )
-                .withColumn(
-                    "entity_key",
-                    F.min(cfg.id_col).over(Window.partitionBy("entity_id")),
-                )
+                assign = connected_components(edges, edge_count=n_match, key_col="match_key")
+            # entity_key = min member url: a matched page's comes with its
+            # component (the min match_key of its edges, the least url of
+            # each pair), a singleton's is its own url. At 64 bits that is
+            # one broadcast of the uploaded assignment and a map-only
+            # write: no exchange of the pages
+            clusters = ids.join(assign, ids["uid"] == assign["node"], "left").select(
+                cfg.id_col,
+                F.coalesce(F.col("entity_id"), F.col("uid")).alias("entity_id"),
+                F.coalesce(F.col("entity_key"), F.col(cfg.id_col)).alias("entity_key"),
             )
             self._write_stage("cluster", clusters, t0)
         clusters = self.catalog.read("cluster")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rlr_spark import DEFAULT_LABELS
+from rlr_spark.operators.cluster import key_counts
 from rlr_spark.operators.review import (
     coverage_ratio,
     existence_flags,
@@ -87,19 +88,18 @@ def _read_any(spark: SparkSession, path: str) -> DataFrame:
 
 
 def ids_uniquely_identify(df: DataFrame, ids: list[str]) -> bool:
-    """One aggregation: do ``ids`` uniquely identify rows? (the
+    """One exchange: do ``ids`` uniquely identify rows? (the
     reference's dataset-acceptance check, rlr.py:95,106; also driven
     live by the packet-builder UI's id multiselect,
-    pages/01_data_input.py:110-126). The key is struct-wrapped: bare
-    ``countDistinct(*ids)`` SKIPS rows with a NULL in any id column
-    (SQL distinct-agg semantics), which would reject tables the
+    pages/01_data_input.py:110-126). The engine's collision check,
+    :func:`~rlr_spark.operators.cluster.key_counts`, over the
+    struct-wrapped key: a bare key would not count rows with a NULL in
+    an id column (SQL semantics), which would reject tables the
     reference tool accepts — a struct with null fields is itself
-    non-null and counts."""
-    counts = df.agg(
-        F.count("*").alias("n"),
-        F.countDistinct(F.struct(*ids)).alias("nd"),
-    ).collect()[0]
-    return int(counts.n) == int(counts.nd)
+    non-null and counts, and the groupBy puts equal NULL-bearing keys
+    in one group."""
+    n, nd = key_counts(df.select(F.struct(*ids).alias("_key")), "_key")
+    return n == nd
 
 
 class ReviewSession:

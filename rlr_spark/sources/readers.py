@@ -27,8 +27,11 @@ def read_csv(
     infer: bool = False,
 ) -> DataFrame:
     """CSV scan (S1: rlr.py:67,135). Explicit schema preferred; pass
-    ``infer=True`` only for small interactive loads."""
-    r = spark.read.option("header", str(header).lower())
+    ``infer=True`` only for small interactive loads. A quoted value's
+    newlines stay inside its row (``multiLine``), as in pandas'
+    ``read_csv``; a file is then read by one task, which suits the
+    review-sized files this reads."""
+    r = spark.read.option("header", str(header).lower()).option("multiLine", "true")
     if schema is not None:
         r = r.schema(schema)
     elif infer:

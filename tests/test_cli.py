@@ -187,6 +187,24 @@ def test_reviewer_refuses_oversized_pair_table(spark, packet_session):
     assert r.n > 2
 
 
+def test_reviewer_refuses_before_collecting(spark, packet_session, monkeypatch):
+    """The refusal is a bounded count: no key reaches the driver. The
+    sorted key collect gathers each partition's top ``max_pairs`` keys
+    there (``RDD.takeOrdered``), so on a table spread over partitions it
+    must not run before the guard."""
+    session, packet_path, _ = packet_session
+    session.pairs = session.pairs.repartition(4)
+
+    def no_collect(self):
+        raise AssertionError("pair keys collected before the review-limit guard")
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # only its interface)
+    monkeypatch.setattr(type(session.pairs), "collect", no_collect)
+    with pytest.raises(ValueError, match="review limit"):
+        CLReviewer(session, packet_path=packet_path, max_pairs=2)
+
+
 def _by_key(rows, key_cols):
     return {tuple(r[c] for c in key_cols): r for r in rows}
 

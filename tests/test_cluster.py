@@ -106,6 +106,61 @@ def test_local_components_upload_is_one_slice(spark):
     }
 
 
+def _keyed_cc(spark, edges, **kw):
+    df = spark.createDataFrame(edges, "u long, v long, k string")
+    out = connected_components(df, key_col="k", **kw).collect()
+    return {r.node: (r.entity_id, r.entity_key) for r in out}
+
+
+_KEYED_EDGES = [
+    # a chain whose min key sits on its last edge
+    (1, 2, "m"), (2, 3, "k"), (3, 4, "c"),
+    # a component with a NULL key and a duplicate edge
+    (10, 11, None), (11, 12, "q"), (12, 11, "p"),
+    # every key NULL
+    (20, 21, None),
+    # a self-loop's key counts for nothing, and alone it makes no node
+    (30, 31, "z"), (30, 30, "a"), (40, 40, "b"),
+]
+_KEYED_WANT = {
+    **{n: (1, "c") for n in (1, 2, 3, 4)},
+    **{n: (10, "p") for n in (10, 11, 12)},
+    20: (20, None), 21: (20, None),
+    30: (30, "z"), 31: (30, "z"),
+}
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"edge_count": len(_KEYED_EDGES)}, {"local_threshold": 0}],
+    ids=["sized", "known_count", "distributed"],
+)
+def test_key_col_min_key_per_component(spark, kw):
+    """``key_col``: every node gets ``entity_key``, the min key over its
+    component's edges (NULLs skipped, as ``min`` skips them; self-loops
+    excluded), the same on the known-count local path, the sizing path
+    and the distributed star loop; the assignment is the keyless one."""
+    assert _keyed_cc(spark, _KEYED_EDGES, **kw) == _KEYED_WANT
+    keyless = _cc(spark, [(u, v) for u, v, _ in _KEYED_EDGES], **kw)
+    assert keyless == {n: eid for n, (eid, _) in _KEYED_WANT.items()}
+
+
+def test_key_col_empty_and_one_slice(spark):
+    """No edges (or only self-loops) give an empty keyed assignment with
+    the key's type; the local path uploads one slice, keys included."""
+    df = spark.createDataFrame([(4, 4, "a")], "u long, v long, k string")
+    empty = connected_components(df, edge_count=1, key_col="k")
+    assert empty.collect() == []
+    assert empty.dtypes == [("node", "bigint"), ("entity_id", "bigint"), ("entity_key", "string")]
+    edges = [(i, i + 1, f"k{i:03d}") for i in range(0, 200, 2)]
+    df = spark.createDataFrame(edges, "u long, v long, k string")
+    assign = connected_components(df, edge_count=len(edges), key_col="k")
+    assert assign.rdd.getNumPartitions() == 1
+    assert {r.node: r.entity_key for r in assign.collect()} == {
+        n: f"k{n - n % 2:03d}" for n in range(200)
+    }
+
+
 def test_key_counts_detects_duplicates(spark):
     """The shared collision check: exact (rows, distinct keys), NULL keys
     counted as rows but not as keys (countDistinct's rule), empty input

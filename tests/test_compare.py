@@ -75,6 +75,23 @@ def test_text_pair_similarity(spark):
     assert rows[("u1", "u3")].sim_jaccard == 0.0
 
 
+def test_text_pair_similarity_pair_key(spark):
+    """``key_col`` adds ``pair_key`` = least of the two records' keys as
+    the last column, NULLs skipped as ``least`` skips them; without it
+    the columns are the plain form's."""
+    pages = spark.createDataFrame(
+        [(1, "b", "x y"), (2, "a", "x z"), (3, None, "x"), (4, None, "y")],
+        "uid long, url string, text string",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (3, 4)], "l_id long, r_id long")
+    plain = text_pair_similarity(pairs, pages, id_col="uid")
+    keyed = text_pair_similarity(pairs, pages, id_col="uid", key_col="url")
+    assert keyed.columns == plain.columns + ["pair_key"]
+    got = {(r.l_id, r.r_id): r.pair_key for r in keyed.collect()}
+    assert got == {(1, 2): "a", (1, 3): "b", (3, 4): None}
+    assert sorted(keyed.drop("pair_key").collect()) == sorted(plain.collect())
+
+
 def _two_projection_similarity(pairs, pages):
     """The score join text_pair_similarity replaced: two separate record
     projections, one using-join per side."""

@@ -156,6 +156,51 @@ def test_score_manifest_label_counts(spark, pipeline_out, tmp_path):
     assert probe.read_manifest("probe")["n"] == {"rows": m["rows"]}
 
 
+def test_score_table_match_key(pipeline_out):
+    """The score table ends with ``match_key``: the smaller url of the
+    pair on Match rows, NULL on every other row."""
+    from pyspark.sql import functions as F
+
+    from rlr_spark import LABEL_MATCH
+
+    pipe, _, _ = pipeline_out
+    scored = pipe.catalog.read("score")
+    assert scored.columns[-1] == "match_key"
+    urls = pipe.catalog.read("extract").select("uid", "url")
+    joined = scored.join(
+        urls.select(F.col("uid").alias("l_id"), F.col("url").alias("_lu")), "l_id"
+    ).join(urls.select(F.col("uid").alias("r_id"), F.col("url").alias("_ru")), "r_id")
+    want = F.when(F.col("rlr_label") == LABEL_MATCH, F.least("_lu", "_ru"))
+    assert joined.where(~F.col("match_key").eqNullSafe(want)).count() == 0
+    n_match = pipe.read_manifest("score")["label_counts"][LABEL_MATCH]
+    assert n_match > 0
+    assert scored.where(F.col("match_key").isNotNull()).count() == n_match
+    assert joined.count() == scored.count()
+
+
+def test_score_table_without_match_key_is_recomputed(pipeline_out):
+    """A warehouse whose score table was written before ``match_key``
+    existed (complete manifest, same config) re-enters the score stage
+    instead of failing in the cluster stage, and the clusters are the
+    same."""
+    import shutil
+
+    pipe, _, _ = pipeline_out
+    cat = pipe.catalog
+    want = _rows(cat.read("cluster"))
+    cat.write(cat.read("score").drop("match_key"), "score_old")
+    shutil.rmtree(cat.path("score"))
+    shutil.copytree(cat.path("score_old"), cat.path("score"))
+    cat.drop("score_old")
+    assert "match_key" not in cat.read("score").columns
+    score_mtime = os.path.getmtime(pipe._manifest_path("score"))
+    os.remove(pipe._manifest_path("cluster"))
+    out = pipe.run(cat.read("extract"))
+    assert os.path.getmtime(pipe._manifest_path("score")) > score_mtime
+    assert out["score"].columns[-1] == "match_key"
+    assert _rows(out["cluster"]) == want
+
+
 def _count_key_counts(monkeypatch) -> list:
     """Record each call of the pipeline's ``key_counts`` uid check."""
     import rlr_spark.pipeline as pl

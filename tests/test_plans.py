@@ -452,10 +452,51 @@ def test_catalog_read_falls_back_to_inference(spark, tmp_path):
         assert sorted(got.collect()) == want, name
 
 
+@pytest.mark.parametrize("uid_bits", [64, 128])
+def test_cluster_write_has_no_window(spark, tmp_path, web_pages_small, uid_bits):
+    """The cluster write's final adaptive plan: the pages scan joined to
+    the broadcast CC assignment, whose entity_key came with the Match
+    edges, so no Window re-shuffles the pages for min(url). At 64 bits
+    the assignment is the driver's one-slice upload, so the write is
+    one broadcast plus the scan, with no shuffle. At 128 bits the
+    assignment is joined to the node dictionary first (see the
+    pipeline's cluster stage), and that join still plans as a
+    sort-merge join that exchanges the pages (an open item in
+    ROADMAP.md), so only the Window's absence is checked there."""
+    from rlr_spark.catalog import Catalog
+    from rlr_spark.pipeline import Pipeline, PipelineConfig
+
+    pages, _ = web_pages_small
+    pipe = Pipeline(
+        spark,
+        Catalog(spark, str(tmp_path / "wh")),
+        PipelineConfig(salt_k=2, uid_bits=uid_bits),
+    )
+    plans = {}
+    write = pipe.catalog.write
+
+    def recording_write(df, name):
+        if name == "cluster":
+            df.collect()  # the final adaptive plan, as the write runs it
+            plans[name] = _plan(df)
+        write(df, name)
+
+    pipe.catalog.write = recording_write
+    pipe.run(pages)
+    plan = plans["cluster"]
+    assert "isFinalPlan=true" in plan
+    assert "Window" not in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    if uid_bits == 64:
+        assert re.findall(r"(\w*)Exchange ", plan) == ["Broadcast"], plan
+        assert "FileScan parquet" in plan and "LocalTableScan" in plan, plan
+
+
 def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     """Total Spark jobs of a forced warm ``Pipeline.run``, of each stage
     run alone (its manifest deleted, so the resumed run re-enters that
-    stage only), of a review render that enters a new page and of one
+    stage only), of a review open (``ReviewSession`` + ``CLReviewer``),
+    of a review render that enters a new page and of one
     inside the cached page, of one label save (with autosave to
     parquet) and of the label summary. A change may lower a count,
     never raise it."""
@@ -477,12 +518,13 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     # extract: write 2 (the uid-keyed rebalance exchange, which the uid
     # check rides, + the write); pairs: blocking checkpoint 2 + write 4;
     # score: write 2 (one records broadcast, reused by both joins, +
-    # the write); cluster: CC collect 1 + write 3
+    # the write); cluster: CC collect 1 + write 2 (the assignment
+    # broadcast + the map-only write)
     stage_jobs = {}
     for s in STAGES:
         os.remove(pipe._manifest_path(s))
         stage_jobs[s], _ = count_jobs(sc, lambda: pipe.run(pages))
-    assert stage_jobs == {"extract": 2, "pairs": 6, "score": 2, "cluster": 4}, stage_jobs
+    assert stage_jobs == {"extract": 2, "pairs": 6, "score": 2, "cluster": 3}, stage_jobs
     assert sum(stage_jobs.values()) == run_jobs
 
     data_l, data_r, _ = generate_firm_fixtures()
@@ -500,11 +542,14 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
         var_group_schema=VAR_SCHEMA_FIRM,
         label_choices=["Match", "Not a Match", "Maybe a Match"],
     )
-    reviewer = CLReviewer(
-        ReviewSession(spark, packet),
-        comp_pairs_path=str(tmp_path / "reviewed.parquet"),
-        input_fn=lambda _prompt: "66",
-        print_fn=lambda _text: None,
+    open_jobs, reviewer = count_jobs(
+        sc,
+        lambda: CLReviewer(
+            ReviewSession(spark, packet),
+            comp_pairs_path=str(tmp_path / "reviewed.parquet"),
+            input_fn=lambda _prompt: "66",
+            print_fn=lambda _text: None,
+        ),
     )
     # warm: the first save replaces the packet's scan with the saved table
     reviewer.render_current()
@@ -521,13 +566,18 @@ def test_pipeline_and_review_job_counts(spark, tmp_path, web_pages_small):
     )
     got = {
         "pipeline_run": run_jobs,
+        "review_open": open_jobs,
         "review_render_new_page": page_jobs,
         "review_render_cached": cached_jobs,
         "review_save": save_jobs,
         "label_summary": summary_jobs,
     }
     assert got == {
-        "pipeline_run": 14,
+        "pipeline_run": 13,
+        # session 15 (3 key_counts uniqueness checks at 2 jobs each among
+        # them); reviewer 3: the bounded count of the review-limit guard
+        # (2) and the TakeOrderedAndProject key collect (1)
+        "review_open": 18,
         "review_render_new_page": 1,
         "review_render_cached": 0,
         "review_save": 1,

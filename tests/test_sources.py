@@ -88,6 +88,35 @@ def test_review_session_warns_on_duplicate_pair_keys(spark, packet_env, tmp_path
         assert got == want, name
 
 
+@pytest.mark.parametrize("writer", ["write_csv", "pandas"])
+def test_review_session_reads_multiline_csv_values(spark, packet_env, tmp_path, writer):
+    """A packet's CSV pair file keeps a quoted value's newlines inside
+    its row, whether Spark's ``write_csv`` or pandas' ``to_csv`` wrote
+    it: the session sees every row once, with exact values."""
+    import warnings
+
+    pkt_path, _ = packet_env
+    packet = ReviewPacket.load(pkt_path)
+    rows = [(100, 500, "x\ny"), (101, 501, "plain"), (102, 502, "two\nline\nnote")]
+    packet.file_comps = str(tmp_path / "comps.csv")
+    if writer == "pandas":
+        import pandas as pd
+
+        pd.DataFrame(rows, columns=["ein", "ui_num", "rlr_note"]).to_csv(
+            packet.file_comps, index=False
+        )
+    else:
+        write_csv(
+            spark.createDataFrame(rows, "ein long, ui_num long, rlr_note string").coalesce(1),
+            packet.file_comps,
+        )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # coverage warning: 3 of the pairs
+        session = ReviewSession(spark, packet)
+    got = sorted(tuple(r) for r in session.pairs.select("ein", "ui_num", "rlr_note").collect())
+    assert got == rows
+
+
 def test_review_session_rejects_overlapping_ids(spark, packet_env, tmp_path):
     pkt_path, _ = packet_env
     p = ReviewPacket.load(pkt_path)

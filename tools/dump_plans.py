@@ -118,7 +118,7 @@ def main() -> None:
     pages_path, _ = write_web_pages(os.path.join(tmp, "data"), n_pages=300, seed=42)
     pages = spark.read.parquet(pages_path)
     pipe = Pipeline(spark, Catalog(spark, os.path.join(tmp, "wh")), PipelineConfig(salt_k=4))
-    writes = capture_writes(pipe.catalog, {"extract", "score"})
+    writes = capture_writes(pipe.catalog, {"extract", "score", "cluster"})
     pipe.run(pages)
 
     extracted = pipe.catalog.read("extract")
@@ -140,6 +140,9 @@ def main() -> None:
         "score write (the pipeline's score stage: pairs x records + FS label)": writes[
             "score"
         ],
+        "cluster write (the pipeline's cluster stage: pages x CC assignment)": writes[
+            "cluster"
+        ],
         "blocking + salted pair generation": formatted(
             candidate_pairs(extracted, id_col="uid", url_col="url")[0]
         ),
@@ -157,7 +160,7 @@ def main() -> None:
             )[0]
         ),
         "similarity scoring (pairs x records, hashed token sets)": formatted(
-            text_pair_similarity(pairs, extracted, id_col="uid")
+            text_pair_similarity(pairs, extracted, id_col="uid", key_col="url")
         ),
         "pruned scan example (filter pushdown)": formatted(
             extracted.where(F.col("lang") == "en").select("url")
